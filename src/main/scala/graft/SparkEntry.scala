@@ -1327,7 +1327,7 @@ object SparkEntry {
     "q96_frequent_pairs" -> ((s, dir) => {
       // pre-distinct + count support build (the q102/q108 A/B'd rewrite)
       // + co-partition by order BEFORE the self-join (r17, the
-      // BasketEdges EdgeProf A/D finding): without it the planner
+      // BasketEdges A/D finding in OPTIMIZATION_r17.md): without it the planner
       // broadcasts one full pair side (driver-serialized build) and
       // RECOMPUTES the distinct under the BroadcastExchange, with the
       // probe at AQE-coalesced 3-5 task parallelism; with it both join
@@ -2761,13 +2761,13 @@ object SparkEntry {
     // components runs on the same capture path — q44/q162 gate it; its
     // all-pairs-reachability oracle is infeasible in DuckDB on the
     // co-purchase GIANT component, so the composite pins the three
-    // bounded-round ops. GraphFamilyDrill pins all FOUR bit-identical
-    // to their direct forms at sf1 edge volume.)
+    // bounded-round ops. The r17 sf1-edge-volume drill pinned all FOUR
+    // bit-identical to their direct forms: PLANS.md, "Directive #2".)
     "q205_graph_family_shared" -> ((s, dir) => {
       val edges = graft.ops.BasketEdges.edges(
         t(s, dir, "lineitem"), "l_orderkey", "l_partkey")
       val g = graft.ops.GraphCapture.capture(edges, "src", "dst",
-        symmetrize = false) // BasketEdges contract: both directions, distinct
+        graft.ops.GraphCapture.Symmetric) // BasketEdges contract: both directions, distinct
       val lp = graft.ops.LabelProp.labelPropagation(g, iterations = 3)
       val pr = graft.ops.PageRank.pageRank(g, iterations = 2)
       val sources = t(s, dir, "part").filter(col("p_partkey") % 50 === 0)

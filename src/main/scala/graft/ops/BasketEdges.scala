@@ -50,7 +50,7 @@ object BasketEdges {
     // the planner broadcast one full side of the self-join (it fits),
     // which serializes the build through the driver and leaves the
     // probe at the scan's file-layout parallelism — A/B'd 4.4 s vs
-    // 1.5 s at sf0.1 (tools/EdgeProf, variants A/D). At 100 TB the
+    // 1.5 s at sf0.1 (variants A/D, OPTIMIZATION_r17.md). At 100 TB the
     // broadcast can't fire and a shuffle on __b happens anyway, so the
     // explicit repartition IS the scale plan, stated once: both join
     // sides share the one exchange (same subtree), pairs generate

@@ -27,7 +27,11 @@ import org.apache.spark.sql.functions._
   * and SELF-CONTAINED (its lineage is cut before the internal edge
   * checkpoint is released, so block loss never chases freed blocks);
   * a checkpointed frame ignores `Dataset.unpersist`, so the caller
-  * disposes it with `CacheHygiene.release(result)` when done.
+  * disposes it with `CacheHygiene.release(result)` when done. Every
+  * other checkpoint is recorded in the call's own
+  * [[CacheHygiene.scope]], so RDDs persisted by concurrent queries are
+  * never released here; the operator is sequential-only solely through
+  * [[ShuffleSizing]]'s session-wide conf writes (AQE flip, width).
   *
   * Determinism: pure integer set algebra — hop numbers are the
   * superstep index; min-hop per node is implied by first discovery.
@@ -46,81 +50,41 @@ object Bfs {
     * callers who can assert distinctness should. Duplicate edges would
     * NOT change results (BFS is set algebra per superstep — the
     * frontier distinct absorbs them), only waste join work, so the flag
-    * is a pure plan choice, not a correctness trap. */
+    * is a pure plan choice, not a correctness trap. It picks the
+    * capture shape: [[GraphCapture.OneWay]], else [[GraphCapture.Pairs]]. */
   def hopDistance(edges: DataFrame, sources: DataFrame, src: String,
                   dst: String, maxHops: Int,
                   edgesDistinct: Boolean = false): DataFrame = {
-    // r18: flat-cut the DIRECTED list once before the undirected union —
-    // the union's two branches otherwise re-execute the caller's edge
-    // plan twice (exchange reuse shares the shuffle WRITE, but both
-    // branches re-read it and re-run every post-shuffle stage: q108's
-    // sf1 shuffle read rows ran 42.0M against 24.0M written, the
-    // +12M being the pair-support aggregate executed a second time).
-    // The cut is |E|-sized and its blocks are released with the
-    // capture's stale ids as soon as the partitioned relation exists.
-    val sc0 = edges.sparkSession.sparkContext
-    val beforeFlat = sc0.getPersistentRDDs.keySet
-    val dirE = edges.select(col(src).as("u"), col(dst).as("v")).localCheckpoint()
-    val flatIds = (sc0.getPersistentRDDs.keySet -- beforeFlat).toSet
-    val undRaw = dirE.union(dirE.select(col("v").as("u"), col("u").as("v")))
-    val undPlain = if (edgesDistinct) undRaw else undRaw.distinct()
-    // r15, the exchange-free graph-round recipe applied to BFS: the
-    // superstep's distinct keys on v, so a V-partitioned edge
-    // checkpoint (AQE-off capture — a CACHED repartition does NOT
-    // surface its partitioning, probed) plus an explicitly-broadcast
-    // frontier (its size is the `reached` count the loop already
-    // computes) make the frontier expansion exchange-free: edges never
-    // re-shuffle per hop, the neighbor distinct is partition-local,
-    // and only the |frontier|-sized anti-join side moves. Beyond the
-    // broadcast bound a hop falls back to the prior shuffling join.
-    // r17: captured in ONE materialization (partition-first-and-count,
-    // [[ShuffleSizing.partitionedMaterializeCounted]]) — the old
-    // cache()d flat cut existed only to feed the count. The
-    // checkpoint's backing blocks are released on exit (the cache-
-    // hygiene contract: only the returned frame stays persisted) — a
-    // checkpointed Dataset exposes no unpersist, so the new RDDs are
-    // found by diffing the persistent-RDD registry around the capture
-    val sc = edges.sparkSession.sparkContext
-    val beforeIds = sc.getPersistentRDDs.keySet
-    val (und, n, staleIds) = ShuffleSizing.partitionedMaterializeCounted(
-      undPlain, col("v"), _.localCheckpoint())
-    val undRddIds = sc.getPersistentRDDs.keySet -- beforeIds -- staleIds -- flatIds
-    CacheHygiene.quietRelease {
-      (staleIds ++ flatIds).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    ShuffleSizing.withEdgeBoundedShuffle(edges.sparkSession, n) {
-      supersteps(und, sources, maxHops, releaseEdges = () => CacheHygiene.quietRelease {
-        undRddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      })
-    } // withEdgeBoundedShuffle
+    val g = GraphCapture.capture(edges, src, dst,
+      if (edgesDistinct) GraphCapture.OneWay else GraphCapture.Pairs)
+    try hopDistance(g, sources, maxHops) finally g.release()
   }
 
   /** [[hopDistance]] over a SHARED [[GraphCapture]] — the capture's
-    * v(=s)-partitioned layout drives the same exchange-free supersteps
-    * (the neighbor distinct keys on v; symmetry makes the (v, u)
-    * relabeling of the capture the identical undirected edge set), and
-    * the capture blocks stay caller-owned: this call releases only its
-    * own per-hop state. Bit-identical to the direct form (spec-pinned). */
+    * v(=s)-partitioned layout drives exchange-free supersteps (the
+    * neighbor distinct keys on v; symmetry makes the (v, u) relabeling
+    * of the capture the identical undirected edge set), and the
+    * capture blocks stay caller-owned: this call releases only its own
+    * per-hop state.
+    *
+    * r15, the exchange-free graph-round recipe applied to BFS: a
+    * V-partitioned edge capture plus an explicitly-broadcast frontier
+    * (its size is the `reached` count the loop already computes) make
+    * the frontier expansion exchange-free: edges never re-shuffle per
+    * hop, the neighbor distinct is partition-local, and only the
+    * |frontier|-sized anti-join side moves. Beyond the broadcast bound
+    * a hop falls back to the prior shuffling join. */
   def hopDistance(g: GraphCapture, sources: DataFrame, maxHops: Int): DataFrame =
-    ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-      supersteps(g.keyed("v", "u"), sources, maxHops, releaseEdges = () => ())
+    CacheHygiene.scope { ck =>
+      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
+        supersteps(ck, g.keyed("v", "u"), sources, maxHops)
+      }
     }
 
   /** The frontier-expansion supersteps over a v-partitioned undirected
-    * edge relation; `releaseEdges` runs after the result is cut
-    * self-contained (a no-op for shared captures). */
-  private def supersteps(und: DataFrame, sources: DataFrame, maxHops: Int,
-                         releaseEdges: () => Unit): DataFrame = {
-    // per-superstep wall breakdown on stderr (scale-drill aid)
-    val debug = sys.env.get("GRAFT_BFS_DEBUG").contains("1")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      System.err.println(f"[bfs] $label%-24s ${(now - tMark) / 1e9}%6.2f s")
-      tMark = now
-    }
-    val sc = und.sparkSession.sparkContext
+    * edge relation. */
+  private def supersteps(ck: CacheHygiene.Arena, und: DataFrame, sources: DataFrame,
+                         maxHops: Int): DataFrame = {
     // per-hop LINEAGE CUT (r17): the old supersteps cache()d each
     // hop's `next` and the growing `visited` union — so every hop's
     // action re-analyzed, re-optimized and AQE-replanned the WHOLE
@@ -131,27 +95,16 @@ object Bfs {
     // they localCheckpoint each round; BFS now does the same: ONE
     // eager checkpoint per hop materializes union(visited, next), the
     // frontier is a filter over that shallow LogicalRDD, and the hop
-    // count is a cheap scan of the checkpoint blocks. Checkpointed
-    // frames ignore unpersist, so each hop's blocks are tracked by
-    // registry diff and the previous hop's are released once replaced.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      (out, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    def releaseIds(ids: Set[Int]): Unit = CacheHygiene.quietRelease {
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    val (visited0, visited0Ids) = checkpointTracked(
+    // count is a cheap scan of the checkpoint blocks. The previous
+    // hop's blocks are freed once replaced.
+    def checkpoint(df: DataFrame): DataFrame = ck.cut(df, _.localCheckpoint())
+    var visited = checkpoint(
       sources.select(col(sources.columns.head).as("id"))
         .distinct().withColumn("hops", lit(0)))
-    var visited = visited0
-    var visitedIds = visited0Ids
     var frontier = visited.select(col("id"))
     var frontierRows = visited.count()
     // running |visited| — the per-hop count delta needs it
     var frontierTotal = frontierRows
-    mark("init sources")
     var hop = 0
     var exhausted = false
     while (hop < maxHops && !exhausted) {
@@ -168,27 +121,23 @@ object Bfs {
       // size is the count DELTA over the materialized blocks — the
       // anti-join guarantees next ∩ visited = ∅ and next is distinct,
       // so |nv| − |visited| IS next.count().
-      val (nv, nvIds) = checkpointTracked(visited.union(next))
+      val nv = checkpoint(visited.union(next))
       val nvCount = nv.count()
-      mark(s"hop $hop count")
       val reached = nvCount - frontierTotal
       if (reached == 0) {
         // reachable set exhausted — remaining hops would be no-ops
-        releaseIds(nvIds)
+        ck.free(nv)
         exhausted = true
       } else {
-        releaseIds(visitedIds)
-        visited = nv; visitedIds = nvIds
+        ck.free(visited)
+        visited = nv
         frontierTotal = nvCount
         frontier = nv.filter(col("hops") === hop).select(col("id"))
         frontierRows = reached
       }
     }
-    mark("loop done")
-    // `visited` is already a self-contained checkpoint (its lineage
-    // was cut before the edge relation below is released), so it IS
-    // the result — no extra final cut needed.
-    releaseEdges()
+    // `visited` is already a self-contained checkpoint, so it IS the
+    // result — no extra final cut needed; the scope keeps it
     visited // checkpoint-backed — caller-owned, see scaladoc
   }
 }

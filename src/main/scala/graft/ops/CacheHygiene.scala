@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Persistence bookkeeping for the iterative graph operators
-  * ([[PageRank]] / [[LabelProp]] / [[Bfs]] / the CC rounds in Dedup).
+  * ([[PageRank]] / [[LabelProp]] / [[Bfs]] / [[GraphCapture]] / the CC
+  * rounds in Dedup).
   *
   * Those loops materialize per-round state (localCheckpoint by
   * default) plus an |E|-sized partitioned edge checkpoint
@@ -16,12 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * released, so a recomputed partition never chases freed checkpoint
   * blocks (the r15 Bfs lineage finding).
   *
-  * Sequential-only, like the AQE flip in
-  * [[ShuffleSizing.partitionedMaterialize]]: the registry diff would
-  * misattribute RDDs persisted concurrently by other queries on the
-  * same session. Fine under the strictly-sequential harnesses
-  * (Verify/Bench/tests); a shared-session concurrent caller should
-  * pass an identity/parquet `materialize` instead. */
+  * Ownership is recorded per cut ([[Arena]]), never by diffing the
+  * session's persistent-RDD registry: an RDD that another query
+  * persists on the same session while an operator runs is not the
+  * operator's and is never released by it. What still makes the graph
+  * family sequential-only is [[ShuffleSizing]]'s session-wide conf
+  * writes (the AQE flip in [[ShuffleSizing.partitionedMaterialize]],
+  * the width pinning around the round loops). */
 private[graft] object CacheHygiene {
 
   /** Run a DELIBERATE checkpoint-release block with the known
@@ -41,22 +45,62 @@ private[graft] object CacheHygiene {
     finally org.apache.logging.log4j.core.config.Configurator.setLevel(logger, prev)
   }
 
-  /** Run `body`, cut the returned frame's lineage with `finalCut`
-    * (must be EAGER when it persists — the default localCheckpoint
-    * is), then release every persistent RDD `body` registered. With a
-    * non-persisting `materialize` (identity, parquet checkpoint) the
-    * diff is empty and this is a pass-through. */
-  def scoped(spark: SparkSession)(body: => DataFrame)(
-      finalCut: DataFrame => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out0 = body
-    val mid = sc.getPersistentRDDs.keySet.toSet
-    val out = finalCut(out0)
-    quietRelease {
-      (mid -- before).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+  /** The RDD behind a frame's own LogicalRDD root — what
+    * `localCheckpoint` (eager, lazy or over a repartition) registers as
+    * persisted. None for any other root. */
+  private def rootRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l.rdd)
+      case _ => None
     }
+
+  /** Ids of the RDDs at the frame's LogicalRDD leaves. */
+  private def reads(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
+
+  /** The checkpoints one operator call (or one [[GraphCapture]]) made.
+    * Single-threaded: one arena belongs to one call. A persisting
+    * `materialize` must be EAGER (the default localCheckpoint is):
+    * [[free]] and the scope exit drop blocks that a lazy cut would
+    * still have to compute from. */
+  final class Arena private[graft] () {
+    private val owned = scala.collection.mutable.HashMap.empty[Int, RDD[_]]
+
+    /** `materialize(df)`, recording the RDD behind the result's
+      * LogicalRDD root. `materialize` returns a new cut or a plain plan
+      * (identity, a parquet round trip), whose root records nothing. */
+    def cut(df: DataFrame, materialize: DataFrame => DataFrame): DataFrame = {
+      val out = materialize(df)
+      rootRdd(out).foreach(r => owned(r.id) = r)
+      out
+    }
+
+    /** Release the cut behind `df` now (a round loop dropping the
+      * previous round); a no-op for frames this arena did not cut. */
+    def free(df: DataFrame): Unit =
+      rootRdd(df).flatMap(r => owned.remove(r.id)).foreach(r => quietRelease(r.unpersist(false)))
+
+    /** Release every recorded cut except the RDDs in `keep`, which pass
+      * to the caller. */
+    private[CacheHygiene] def closeExcept(keep: Set[Int]): Unit = quietRelease {
+      owned.valuesIterator.filterNot(r => keep(r.id)).foreach(_.unpersist(false))
+      owned.clear()
+    }
+
+    /** Release every recorded cut. */
+    def close(): Unit = closeExcept(Set.empty)
+  }
+
+  /** Run `body` with a fresh [[Arena]]. On return, every cut it recorded
+    * is released except those the returned frame still reads (its
+    * final cut, caller-owned: dispose with [[release]]); on an
+    * exception, all of them. */
+  def scope(body: Arena => DataFrame): DataFrame = {
+    val ck = new Arena
+    val out =
+      try body(ck)
+      catch { case e: Throwable => ck.close(); throw e }
+    ck.closeExcept(reads(out))
     out
   }
 
@@ -68,8 +112,7 @@ private[graft] object CacheHygiene {
   def release(df: DataFrame): Unit = quietRelease {
     df.unpersist(blocking = true)
     df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true)
+      case l: LogicalRDD => l.rdd.unpersist(blocking = true)
       case _ => ()
     }
   }

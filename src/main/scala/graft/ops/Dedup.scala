@@ -385,8 +385,8 @@ object Dedup {
     * they are NOT unpersisted here; they are freed by the session's
     * ContextCleaner once the returned frame's plan is GC'd. Long-lived
     * sessions ingesting many arrival batches should not hold references
-    * to consumed result frames (the bench path's per-iteration
-    * `getPersistentRDDs...unpersist` sweep — see ScaleProbe — is the
+    * to consumed result frames (the bench path's per-iteration sweep
+    * that unpersists every persistent RDD — see ScaleProbe — is the
     * explicit-release pattern). */
   def incrementalFuzzyDedup(index: DataFrame, batch: DataFrame,
                             idCol: String, textCol: String, threshold: Double,
@@ -883,32 +883,28 @@ object Dedup {
       require(!f.exists(p) || f.listStatus(p).isEmpty,
         s"checkpointDir must be empty/nonexistent (this run owns it): $base")
     }
+    // every local-checkpoint block this call cuts is recorded in the
+    // arena and released before return — per round as soon as the next
+    // round lands, the rest behind a final self-contained cut of the
+    // result (the r15 LabelProp/PageRank discipline), all of it on
+    // failure
+    CacheHygiene.scope { ck =>
     def cut(df: DataFrame, name: String, lazyLocal: Boolean): DataFrame = ckptBase match {
       case Some(base) =>
         val p = s"$base/$name"
         created += name
         df.write.mode("overwrite").parquet(p)
         spark.read.parquet(p)
-      case None => df.localCheckpoint(!lazyLocal)
+      case None => ck.cut(df, _.localCheckpoint(!lazyLocal))
     }
-    def drop(name: String): Unit = ckptBase.foreach { base =>
-      val p = new org.apache.hadoop.fs.Path(s"$base/$name")
-      created -= name
-      fs(p).delete(p, true)
+    // a dead cut: its local blocks, or its checkpoint files
+    def done(df: DataFrame, name: String): Unit = ckptBase match {
+      case Some(base) =>
+        val p = new org.apache.hadoop.fs.Path(s"$base/$name")
+        created -= name
+        fs(p).delete(p, true)
+      case None => ck.free(df)
     }
-    var edges: DataFrame = null
-    var labels: DataFrame = null
-    // cache-hygiene ledger (the r15 LabelProp/PageRank discipline):
-    // every local-checkpoint block this call registers is released
-    // before return — per-round as soon as the next round lands, the
-    // rest behind a final self-contained cut of the result
-    val sc = spark.sparkContext
-    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
-    def releaseIds(ids: Set[Int]): Unit = CacheHygiene.quietRelease {
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    def newPersisted(since: Set[Int]): Set[Int] =
-      sc.getPersistentRDDs.keySet.toSet -- since
     try {
       // materialize the edge list once — every propagation round joins
       // against it, and without the cut each round would re-run the
@@ -933,18 +929,18 @@ object Dedup {
       // post-shuffle stage: q44's sf1 shuffle read rows ran 75.1M
       // against q26's 46.2M for the same 38.2M written — the +29M is
       // the pair-count aggregate executed a second time). The cut is
-      // |pairs|-sized (tiny next to the candidate shuffle) and its
-      // blocks/file are dropped with the edge cut's.
-      edges = cut(
-        if (assumeSymmetric)
-          pairs.select(col("id_a").as("s"), col("id_b").as("t"))
+      // |pairs|-sized (tiny next to the candidate shuffle) and is
+      // dropped as soon as the edge cut lands.
+      val directed = pairs.select(col("id_a").as("s"), col("id_b").as("t"))
+      val edges =
+        if (assumeSymmetric) cut(directed, "edges", lazyLocal = false)
         else {
-          val p0 = cut(pairs.select(col("id_a").as("s"), col("id_b").as("t")),
-            "pairs0", lazyLocal = false)
-          p0.unionByName(p0.select(col("t").as("s"), col("s").as("t")))
-            .distinct()
-        }, "edges", lazyLocal = false)
-      drop("pairs0")
+          val p0 = cut(directed, "pairs0", lazyLocal = false)
+          val e = cut(p0.unionByName(p0.select(col("t").as("s"), col("s").as("t")))
+            .distinct(), "edges", lazyLocal = false)
+          done(p0, "pairs0")
+          e
+        }
       // initial labels fuse round 1: starting from identity, the first
       // round's neighbor-min over identity labels IS min(v, min
       // neighbor) — computable directly as one aggregate over the edge
@@ -953,11 +949,11 @@ object Dedup {
       val edgeCount = edges.count()
       if (edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
           edgeCount <= driverMaxEdges) {
+        // a collected result: the scope releases the edge blocks
         val out = driverComponents(edges, sOnlyVertices = assumeSymmetric)
-        drop("edges")
-        releaseIds(newPersisted(persistedBefore)) // the edge checkpoint blocks
-        return out
-      }
+        done(edges, "edges")
+        out
+      } else
       // distributed rounds: shuffle partitions scale with the edge
       // relation ([[ShuffleSizing]] — the count above is a free scan
       // on the materialized cut)
@@ -974,37 +970,32 @@ object Dedup {
       // round falls back to exactly the prior plan too.
       val parted =
         if (ckptBase.isEmpty) {
-          val edgeIds = newPersisted(persistedBefore)
-          val p = ShuffleSizing.partitionedMaterialize(edges, col("s"), _.localCheckpoint())
+          val p = ShuffleSizing.partitionedMaterialize(edges, col("s"),
+            ck.cut(_, _.localCheckpoint()))
           // the unpartitioned first cut is dead once the capture is
           // materialized — releasing it halves the standing edge
           // footprint for the whole round loop (sf10 drill: two
           // 240M-row block sets otherwise live simultaneously)
-          releaseIds(edgeIds)
+          ck.free(edges)
           p
         } else edges
-      labels = ccRounds(parted, maxIter, cut, drop)
-      drop("edges")
+      val labels = ccRounds(parted, maxIter, cut, done)
+      done(edges, "edges")
       val out0 = labels.select(col("v").as("doc_id"), col("comp").as("component_id"))
       // self-contained result BEFORE the intermediates are released
       // (the Bfs lineage rule): on the local path the final cut owns
       // its own blocks; on the parquet path the final round's files
       // back the result already (caller-owned directory)
-      val preFinal = sc.getPersistentRDDs.keySet.toSet
-      val out = if (ckptBase.isEmpty) out0.localCheckpoint() else out0
-      releaseIds(preFinal -- persistedBefore) // edges, parted, last round
-      out
+      if (ckptBase.isEmpty) ck.cut(out0, _.localCheckpoint()) else out0
       } // withEdgeBoundedShuffle
     } catch {
-      // on failure nothing of the run is consumable — free the local
-      // blocks and remove exactly what this run wrote: every round file
-      // it created, plus the base dir only when the run invented it
-      // (an explicit caller dir may live inside shared scratch where a
-      // recursive base delete would take unrelated data with it).
-      // Fatal errors propagate untouched.
+      // on failure nothing of the run is consumable — the scope frees
+      // the local blocks; remove exactly what this run wrote: every
+      // round file it created, plus the base dir only when the run
+      // invented it (an explicit caller dir may live inside shared
+      // scratch where a recursive base delete would take unrelated
+      // data with it). Fatal errors propagate untouched.
       case scala.util.control.NonFatal(e) =>
-        Seq(edges, labels).filter(_ != null).foreach(df => df.unpersist(false))
-        releaseIds(newPersisted(persistedBefore)) // checkpoint blocks too
         ckptBase.foreach { base =>
           val victims =
             if (baseOwned) Seq(new org.apache.hadoop.fs.Path(base))
@@ -1014,6 +1005,7 @@ object Dedup {
           }
         }
         throw e
+    }
     }
   }
 
@@ -1027,58 +1019,40 @@ object Dedup {
     * set as the rounds. Bit-identical to the direct form on the same
     * graph (spec-pinned). */
   def connectedComponents(g: GraphCapture, maxIter: Int,
-                          driverMaxEdges: Long): DataFrame = {
-    val spark = g.spark
-    val sc = spark.sparkContext
+                          driverMaxEdges: Long): DataFrame =
     if (g.longIds && g.edgeCount <= driverMaxEdges)
-      return driverComponents(g.keyed("s", "t"), sOnlyVertices = true)
-    val persistedBefore = sc.getPersistentRDDs.keySet.toSet
-    ShuffleSizing.withEdgeBoundedShuffle(spark, g.edgeCount) {
-      val labels = ccRounds(g.keyed("s", "t"), maxIter,
-        cut = (df, _, lazyLocal) => df.localCheckpoint(!lazyLocal),
-        drop = _ => ())
-      val out0 = labels.select(col("v").as("doc_id"), col("comp").as("component_id"))
-      // self-contained result BEFORE the round intermediates are
-      // released; the capture blocks predate persistedBefore and stay
-      // caller-owned
-      val preFinal = sc.getPersistentRDDs.keySet.toSet
-      val out = out0.localCheckpoint()
-      CacheHygiene.quietRelease {
-        (preFinal -- persistedBefore).foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      driverComponents(g.keyed("s", "t"), sOnlyVertices = true)
+    else CacheHygiene.scope { ck =>
+      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
+        val labels = ccRounds(g.keyed("s", "t"), maxIter,
+          cut = (df, _, lazyLocal) => ck.cut(df, _.localCheckpoint(!lazyLocal)),
+          done = (df, _) => ck.free(df))
+        // self-contained result BEFORE the round intermediates are
+        // released; the capture blocks stay caller-owned
+        ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")),
+          _.localCheckpoint())
       }
-      out
     }
-  }
 
   def connectedComponents(g: GraphCapture): DataFrame =
     connectedComponents(g, maxIter = 50, driverMaxEdges = 1000000L)
 
   /** The neighbor-min + pointer-jump rounds over an s-partitioned
     * symmetric edge relation: returns the converged (v, comp) labels
-    * (throws past `maxIter`). `cut`/`drop` are the caller's
-    * lineage-cut and checkpoint-file-disposal hooks — parquet or
-    * localCheckpoint in [[connectedComponents]]'s direct form, pure
-    * localCheckpoint with a no-op drop for shared captures. Per-round
-    * intermediate blocks are released inside as soon as the next
-    * round lands. */
+    * (throws past `maxIter`). `cut`/`done` are the caller's
+    * lineage-cut and dead-cut disposal hooks — parquet files or
+    * localCheckpoint blocks in [[connectedComponents]]'s direct form,
+    * localCheckpoint blocks for shared captures. Each round's cut is
+    * disposed of as soon as the next round lands. */
   private def ccRounds(parted: DataFrame, maxIter: Int,
                        cut: (DataFrame, String, Boolean) => DataFrame,
-                       drop: String => Unit): DataFrame = {
-    val sc = parted.sparkSession.sparkContext
-    def newPersisted(since: Set[Int]): Set[Int] =
-      sc.getPersistentRDDs.keySet.toSet -- since
-    def releaseIds(ids: Set[Int]): Unit = CacheHygiene.quietRelease {
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    val preR0 = sc.getPersistentRDDs.keySet.toSet
+                       done: (DataFrame, String) => Unit): DataFrame = {
     var labels = cut(parted.groupBy(col("s").as("v"))
       .agg(least(min(col("s")), min(col("t"))).as("comp")), // min(s)=s per group
       "r0", false)
     val smallV = labels.count() <= ShuffleSizing.BroadcastNodeLimit
     def labelSide(df: DataFrame): DataFrame =
       if (smallV) org.apache.spark.sql.functions.broadcast(df) else df
-    var labelsIds = newPersisted(preR0) // this round's blocks (local path)
     var iter = 0
     var converged = false
     // convergence detector: per-vertex labels are monotonically
@@ -1086,7 +1060,6 @@ object Dedup {
     // no join) is strictly decreasing until the fixpoint
     var prevSum: java.math.BigDecimal = null
     while (!converged && iter < maxIter) {
-      val preRound = sc.getPersistentRDDs.keySet.toSet
       val viaNeighbors = parted
         .join(labelSide(
           labels.withColumnRenamed("v", "t").withColumnRenamed("comp", "ncomp")), Seq("t"))
@@ -1106,9 +1079,7 @@ object Dedup {
         .getOrElse(java.math.BigDecimal.ZERO)
       converged = prevSum != null && s.compareTo(prevSum) == 0
       prevSum = s
-      releaseIds(labelsIds)   // previous round's local blocks are dead now
-      drop(s"r$iter")         // ... and so are its checkpoint files
-      labelsIds = newPersisted(preRound)
+      done(labels, s"r$iter") // the previous round is dead now
       labels = jumped
       iter += 1
     }

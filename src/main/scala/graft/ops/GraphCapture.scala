@@ -33,14 +33,18 @@ import org.apache.spark.sql.functions._
   * count per s group (out-degree = in-degree).
   *
   * Hygiene: the capture's checkpoint blocks are CALLER-owned — the
-  * operators release only their own per-round intermediates (their
-  * registry diffs start after this capture exists) and never the
-  * shared relation; call [[release]] when the last consumer is done.
-  * Sequential-only, like [[ShuffleSizing.partitionedMaterialize]]. */
+  * operators release only their own per-round intermediates (each in
+  * its own [[CacheHygiene.scope]]) and never the shared relation; call
+  * [[release]] when the last consumer is done. The capture records
+  * its cuts in its own [[CacheHygiene.Arena]], so concurrent queries'
+  * persisted RDDs are never mistaken for its own; the session-wide
+  * conf writes of [[ShuffleSizing]] (the AQE flip of
+  * [[ShuffleSizing.partitionedMaterialize]]) still make the capture
+  * sequential-only. */
 final class GraphCapture private[graft] (
     private[graft] val edges: DataFrame,
     val edgeCount: Long,
-    private val ownedIds: Set[Int]) {
+    ck: CacheHygiene.Arena) {
 
   private[graft] def spark = edges.sparkSession
 
@@ -55,63 +59,57 @@ final class GraphCapture private[graft] (
   private[graft] def longIds: Boolean =
     edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
 
-  /** Release the capture's checkpoint blocks (the hygiene ledger's
-    * caller-owned entry). Consumers planned but not yet executed
-    * against this capture become invalid — release LAST. */
-  def release(): Unit = CacheHygiene.quietRelease {
-    val sc = edges.sparkSession.sparkContext
-    ownedIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
+  /** Release the capture's checkpoint blocks. Consumers planned but not
+    * yet executed against this capture become invalid — release LAST. */
+  def release(): Unit = ck.close()
 }
 
 object GraphCapture {
 
-  /** Capture `pairs` as a shared symmetric edge relation.
+  /** What the input pair list already is — decides how much of the
+    * symmetrize the capture runs. */
+  sealed trait Shape
+  /** Both directions, distinct, self-loop-free (e.g. [[BasketEdges]]
+    * output): captured as is, no symmetrize shuffle. A violated
+    * contract narrows results exactly like `assumeSymmetric` on the
+    * operators. */
+  case object Symmetric extends Shape
+  /** Each undirected edge once with a consistent orientation (e.g. a
+    * groupBy-produced `p1 < p2` pair list): the union of both
+    * directions is disjoint by construction, so it runs without the
+    * |E|-row dedup shuffle (self-loops are not dropped either). */
+  case object OneWay extends Shape
+  /** Any pair list: union both directions, drop self-loops, distinct. */
+  case object Pairs extends Shape
+
+  /** Capture `pairs` as a shared symmetric edge relation — the one
+    * symmetrize-and-capture path of the graph family (the direct forms
+    * of [[LabelProp]] and [[Bfs]] run through it too).
     *
-    * `symmetrize = true` (default, the near-dup-pair-list shape):
-    * union both directions, drop self-loops, distinct. Pass `false`
-    * ONLY when the input already carries both directions, distinct,
-    * self-loop-free (e.g. [[BasketEdges]] output) — that skips the
-    * |E|-row symmetrize shuffle, and a violated contract narrows
-    * results exactly like `assumeSymmetric` on the operators.
-    *
-    * Cost: one materialization of the flat edge list (its count sizes
-    * the partitioning — [[ShuffleSizing]]), one s-partitioned
-    * re-materialization, flat blocks released immediately. Everything
-    * after is rounds-only for every consumer. */
+    * Cost: one flat cut of the directed list before the union (r18: the
+    * union's two branches otherwise re-execute the caller's pair plan
+    * twice — the CC/BFS double-read finding; skipped for `Symmetric`),
+    * one s-partitioned materialization that also counts the edges
+    * ([[ShuffleSizing.partitionedMaterializeCounted]]), flat blocks
+    * released as soon as the capture exists. Everything after is
+    * rounds-only for every consumer. */
   def capture(pairs: DataFrame, aCol: String, bCol: String,
-              symmetrize: Boolean = true,
+              shape: Shape = Pairs,
               materialize: DataFrame => DataFrame = _.localCheckpoint()): GraphCapture = {
-    val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    // guarded rename: a redundant self-alias here would erase the
-    // capture's recorded partitioning ([[ShuffleSizing.renameForCapture]])
-    val dir = ShuffleSizing.renameForCapture(pairs, aCol, "s", bCol, "t")
-    // r18: flat-cut before the symmetrize union — its two branches
-    // otherwise re-execute the caller's pair plan twice (the CC/BFS
-    // double-read finding); the cut's blocks are released with the
-    // capture's stale ids below
-    val beforeSym = sc.getPersistentRDDs.keySet
-    val sym =
-      if (symmetrize) {
-        val d0 = materialize(dir)
-        d0.unionByName(d0.select(col("t").as("s"), col("s").as("t")))
-          .filter(col("s") =!= col("t")).distinct()
-      } else dir
-    val symFlatIds = (sc.getPersistentRDDs.keySet -- beforeSym).toSet
-    // ONE materialization (r17): partition-first-and-count instead of
-    // the old flat-cut-then-repartition two-pass — see
-    // [[ShuffleSizing.partitionedMaterializeCounted]].
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val (parted, n, staleIds) =
-      ShuffleSizing.partitionedMaterializeCounted(sym, col("s"), materialize)
-    val partedIds = sc.getPersistentRDDs.keySet.toSet -- before -- staleIds
-    // the narrow first cut is dead if the re-cut branch re-materialized,
-    // and the symmetrize flat cut is dead once the capture exists
-    CacheHygiene.quietRelease {
-      (staleIds ++ symFlatIds).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    }
-    new GraphCapture(parted, n, partedIds)
+    val ck = new CacheHygiene.Arena
+    try {
+      // guarded rename: a redundant self-alias here would erase the
+      // capture's recorded partitioning ([[ShuffleSizing.renameForCapture]])
+      val dir = ShuffleSizing.renameForCapture(pairs, aCol, "s", bCol, "t")
+      val flat = if (shape == Symmetric) None else Some(ck.cut(dir, materialize))
+      val sym = flat.fold(dir) { d0 =>
+        val both = d0.unionByName(d0.select(col("t").as("s"), col("s").as("t")))
+        if (shape == OneWay) both else both.filter(col("s") =!= col("t")).distinct()
+      }
+      val (parted, n) =
+        ShuffleSizing.partitionedMaterializeCounted(ck, sym, col("s"), materialize)
+      flat.foreach(ck.free)
+      new GraphCapture(parted, n, ck)
+    } catch { case e: Throwable => ck.close(); throw e }
   }
 }

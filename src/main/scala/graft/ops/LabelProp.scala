@@ -33,68 +33,48 @@ object LabelProp {
     * added and self-loops/duplicates dropped; pass
     * `assumeSymmetric = true` when the input already satisfies that
     * contract (e.g. [[BasketEdges.edges]]) to skip the redundant
-    * symmetrize+distinct shuffle. */
+    * symmetrize+distinct shuffle. A one-call [[GraphCapture]]: capture,
+    * the shared-capture rounds, release. */
   def labelPropagation(edges0: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int, assumeSymmetric: Boolean = false,
                        materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // every intermediate (edge materializations, per-round label
-    // checkpoints) is released on exit; only the returned frame stays
-    // persisted, self-contained behind one final cut (r15 advice —
-    // the partitioned edge checkpoint used to leak per call)
-    CacheHygiene.scoped(edges0.sparkSession) {
-    // guarded rename: a redundant self-alias here would erase the
-    // capture's recorded partitioning ([[ShuffleSizing.renameForCapture]])
-    val dir = ShuffleSizing.renameForCapture(edges0, srcCol, "src", dstCol, "dst")
-    // r18: flat-cut before the symmetrize union — its two branches
-    // otherwise re-execute the caller's edge plan twice (the CC/BFS
-    // double-read finding; blocks released by the hygiene scope)
-    val sym =
-      if (assumeSymmetric) dir
-      else {
-        val d0 = materialize(dir)
-        d0.union(d0.select(col("dst").as("src"), col("src").as("dst")))
-          .filter(col("src") =!= col("dst"))
-          .distinct()
-      }
-    // r15: the per-round (src, label) count and the per-node argmax
-    // both key on src, so a SRC-partitioned edge checkpoint makes
-    // every round's aggregates partition-local — PROVIDED the label
-    // map rides the join as an explicit broadcast: the loop's
-    // relations are stats-free checkpoints, so without the hint the
-    // static plan re-exchanges the edges on the JOIN key (dst) and
-    // the layout never reaches the aggregate. r17: captured in ONE
-    // materialization (partition-first-and-count,
-    // [[ShuffleSizing.partitionedMaterializeCounted]]) — the old flat
-    // cut existed only to feed the count. Beyond the broadcast bound
-    // the op falls back to exactly the pre-r15 shuffling plan.
-    val (parted, n, _) =
-      ShuffleSizing.partitionedMaterializeCounted(sym, col("src"), materialize)
-    ShuffleSizing.withEdgeBoundedShuffle(edges0.sparkSession, n) {
-      rounds(parted, iterations, materialize)
-    }
-    }(materialize)
+    val g = GraphCapture.capture(edges0, srcCol, dstCol,
+      if (assumeSymmetric) GraphCapture.Symmetric else GraphCapture.Pairs, materialize)
+    try labelPropagation(g, iterations, materialize) finally g.release()
   }
 
   /** [[labelPropagation]] over a SHARED [[GraphCapture]] — the capture
     * (symmetrize + materialize + partition) is paid once by the caller
     * and reused across the graph family; this call is rounds-only.
-    * Bit-identical to the direct form on the same graph (spec-pinned). */
+    *
+    * r15: the per-round (src, label) count and the per-node argmax
+    * both key on src, so a SRC-partitioned edge capture makes every
+    * round's aggregates partition-local — PROVIDED the label map rides
+    * the join as an explicit broadcast: the loop's relations are
+    * stats-free checkpoints, so without the hint the static plan
+    * re-exchanges the edges on the JOIN key (dst) and the layout never
+    * reaches the aggregate. Beyond the broadcast bound the op falls
+    * back to exactly the pre-r15 shuffling plan.
+    *
+    * Every per-round label checkpoint is released on exit; only the
+    * returned frame stays persisted, self-contained behind one final
+    * cut (r15 advice). */
   def labelPropagation(g: GraphCapture, iterations: Int,
                        materialize: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    CacheHygiene.scoped(g.spark) {
+    CacheHygiene.scope { ck =>
       ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-        rounds(g.keyed("src", "dst"), iterations, materialize)
+        ck.cut(rounds(ck, g.keyed("src", "dst"), iterations, materialize), materialize)
       }
-    }(materialize)
+    }
   }
 
   def labelPropagation(g: GraphCapture, iterations: Int): DataFrame =
     labelPropagation(g, iterations, _.localCheckpoint())
 
   /** The synchronous rounds over a src-partitioned edge relation. */
-  private def rounds(parted: DataFrame, iterations: Int,
+  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, iterations: Int,
                      materialize: DataFrame => DataFrame): DataFrame = {
     var labels = parted.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -102,7 +82,8 @@ object LabelProp {
     def labelSide(df: DataFrame): DataFrame =
       if (smallV) broadcast(df) else df
     for (_ <- 1 to iterations) {
-      labels = materialize(
+      val prev = labels
+      labels = ck.cut(
         parted.join(labelSide(labels.withColumnRenamed("id", "__nid")),
             col("dst") === col("__nid"))
           .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
@@ -111,7 +92,9 @@ object LabelProp {
           // smallest label among the tied-most-frequent
           .groupBy(col("src"))
           .agg(max(struct(col("n"), (-col("label")).as("__neg"))).as("__m"))
-          .select(col("src").as("id"), (-col("__m.__neg")).as("label")))
+          .select(col("src").as("id"), (-col("__m.__neg")).as("label")),
+        materialize)
+      ck.free(prev)
     }
     labels
   }

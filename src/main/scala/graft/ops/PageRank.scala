@@ -49,11 +49,12 @@ object PageRank {
                iterations: Int,
                materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // every intermediate (edges, degrees, nodes, the dst-partitioned
-    // edge checkpoint, per-iteration rank checkpoints) is released on
-    // exit; only the returned frame stays persisted, self-contained
-    // behind one final cut (r15 advice — `parted` used to leak)
-    CacheHygiene.scoped(edges0.sparkSession) {
+    // every intermediate (the dst-partitioned edge checkpoint, degrees,
+    // nodes, per-iteration rank checkpoints) is released on exit; only
+    // the returned frame stays persisted, self-contained behind one
+    // final cut (r15 advice — `parted` used to leak). Its own cut
+    // sequence, not a [[GraphCapture]]: the input is DIRECTED.
+    CacheHygiene.scope { ck =>
     // r15: every round's contribution sum keys on __dst, so a
     // DST-partitioned edge checkpoint makes that |E|-row aggregate
     // partition-local — PROVIDED the |V|-row (src, contribution)
@@ -67,7 +68,7 @@ object PageRank {
     // now read the partitioned capture (same multiset, identical
     // aggregates). Beyond the broadcast bound the op falls back to
     // exactly the pre-r15 shuffling plan.
-    val (parted, n, _) = ShuffleSizing.partitionedMaterializeCounted(
+    val (parted, n) = ShuffleSizing.partitionedMaterializeCounted(ck,
       ShuffleSizing.renameForCapture(edges0, srcCol, "__src", dstCol, "__dst"),
       col("__dst"), materialize)
     ShuffleSizing.withEdgeBoundedShuffle(edges0.sparkSession, n) {
@@ -81,13 +82,13 @@ object PageRank {
       // one ready decimal per edge — bit-identical values (the same
       // floor division, evaluated once instead of per edge), half the
       // big-join width, no |E|-row materialization at all.
-      val degrees = materialize(
-        parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")))
-      val nodes = materialize(parted.select(col("__src").as("id"))
-        .union(parted.select(col("__dst"))).distinct())
-      rounds(parted, degrees, nodes, iterations, materialize)
+      val degrees = ck.cut(
+        parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), materialize)
+      val nodes = ck.cut(parted.select(col("__src").as("id"))
+        .union(parted.select(col("__dst"))).distinct(), materialize)
+      ck.cut(rounds(ck, parted, degrees, nodes, iterations, materialize), materialize)
     }
-    }(materialize)
+    }
   }
 
   /** [[pageRank]] over a SHARED [[GraphCapture]] (an UNDIRECTED rank:
@@ -101,18 +102,18 @@ object PageRank {
   def pageRank(g: GraphCapture, iterations: Int,
                materialize: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    CacheHygiene.scoped(g.spark) {
+    CacheHygiene.scope { ck =>
       ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
         // the round aggregate keys on __dst — land the partition
         // column there (symmetry makes the rename a relabeling of the
         // same edge set, so values are unchanged)
         val parted = g.keyed("__dst", "__src")
-        val degrees = materialize(parted
-          .groupBy(col("__dst").as("__src")).agg(count(lit(1)).as("__deg")))
-        val nodes = materialize(parted.select(col("__dst").as("id")).distinct())
-        rounds(parted, degrees, nodes, iterations, materialize)
+        val degrees = ck.cut(parted
+          .groupBy(col("__dst").as("__src")).agg(count(lit(1)).as("__deg")), materialize)
+        val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct(), materialize)
+        ck.cut(rounds(ck, parted, degrees, nodes, iterations, materialize), materialize)
       }
-    }(materialize)
+    }
   }
 
   def pageRank(g: GraphCapture, iterations: Int): DataFrame =
@@ -120,7 +121,8 @@ object PageRank {
 
   /** The damped-rank rounds over a __dst-partitioned edge relation
     * with pre-materialized degrees (keyed __src) and node set. */
-  private def rounds(parted: DataFrame, degrees: DataFrame, nodes: DataFrame,
+  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame,
+                     degrees: DataFrame, nodes: DataFrame,
                      iterations: Int,
                      materialize: DataFrame => DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -136,8 +138,11 @@ object PageRank {
           expr("CAST((__r * CAST(85 AS DECIMAL(38,0))) DIV (CAST(100 AS DECIMAL(38,0)) * __deg) AS DECIMAL(38,0))").as("__c"))
       val contribs = parted.join(contribSide(perSrc), Seq("__src"))
         .groupBy(col("__dst").as("id")).agg(sum(col("__c")).as("__in"))
-      ranks = materialize(nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"), (base + coalesce(col("__in"), lit(0).cast(dec))).as("__r")))
+      val prev = ranks
+      ranks = ck.cut(nodes.join(contribs, Seq("id"), "left")
+        .select(col("id"), (base + coalesce(col("__in"), lit(0).cast(dec))).as("__r")),
+        materialize)
+      ck.free(prev)
     }
     ranks.select(col("id"), col("__r").cast("long").as("pr"))
   }

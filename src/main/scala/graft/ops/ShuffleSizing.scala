@@ -13,10 +13,9 @@ import org.apache.spark.sql.SparkSession
   * it), so its count is a free scan — partitions then scale with the
   * data.
   *
-  * The session value is a FLOOR, never shrunk: small graphs keep the
-  * caller's parallelism (and AQE coalesces undersized shuffles on its
-  * own); the rule only engages when the edge relation outgrows the
-  * session setting. On a real cluster, executor count and AQE absorb
+  * The session value is honored between two edge-derived bounds
+  * ([[boundedWidth]]): widened when the edge relation outgrows it,
+  * narrowed when it over-fans a small graph. On a real cluster, executor count and AQE absorb
   * this axis — in local mode the conf IS the knob, which is why the
   * operators own it rather than documenting a tuning footnote. */
 private[graft] object ShuffleSizing {
@@ -41,8 +40,8 @@ private[graft] object ShuffleSizing {
     * the floor protects the no-spill envelope (partitions must not be
     * TOO BIG), this cap protects fixed-cost amortization (partitions
     * must not be TOO SMALL); between the two bounds the session width
-    * is honored. Value confirmed by tools/GraphWidthDrill (width sweep
-    * at fixed data/cores; see plans/r18). */
+    * is honored. Value confirmed by the r18 width sweep at fixed
+    * data/cores (plans/r18/GRAPH_WIDTH_DRILL.md). */
   val CapRowsPerPartition = 400000L
 
   /** Hysteresis for the narrow direction of [[boundedWidth]]: the cap
@@ -64,7 +63,8 @@ private[graft] object ShuffleSizing {
     * slower on 32 cores than 8 at sf0.1). Both directions are derived
     * from the measured edge count — never from the local core count —
     * so the same rule serves local[32] on a toy graph and a 1000-core
-    * session on a 6B-edge one (drill table: tools/GraphWidthDrill). */
+    * session on a 6B-edge one (drill table:
+    * plans/r18/GRAPH_WIDTH_DRILL.md). */
   def boundedWidth(edgeRows: Long, session: Int): Int = {
     val floor = targetPartitions(edgeRows)
     if (floor > session) floor
@@ -87,8 +87,9 @@ private[graft] object ShuffleSizing {
     * Found in the r17 opt round: q137's sf1 shuffle rows went
     * 54M → 141M (3 rounds × |E| re-exchanged) because LabelProp's
     * `select(col("src").as("src"), ...)` rode inside the one-pass
-    * capture; probed in tools/LpaBisect (E0 exchange-free vs E1
-    * re-exchanging, only the self-rename differing). Renames to a
+    * capture; bisected in OPTIMIZATION_r17.md §Regression 1 (E0
+    * exchange-free vs E1 re-exchanging, only the self-rename
+    * differing). Renames to a
     * DIFFERENT name keep real aliases in the plan and survive the
     * rewrite (PageRank's __src/__dst never regressed).
     *
@@ -124,17 +125,21 @@ private[graft] object ShuffleSizing {
     * NOT-YET-FINAL adaptive plan's partitioning — Unknown — and the
     * benefit silently vanishes (probed r15, tools/PartProbe: 2
     * exchanges captured under AQE vs 0 captured with it off; AQE-ON
-    * consumers honor the preserved partitioning either way). Call
-    * INSIDE [[withEdgeScaledShuffle]] so the partition count is the
-    * edge-scaled one.
+    * consumers honor the preserved partitioning either way). The
+    * partition count is the session's `spark.sql.shuffle.partitions`
+    * ([[partitionedMaterializeCounted]] re-cuts at [[boundedWidth]]).
     *
     * SEQUENTIAL-ONLY: the AQE flip is session-global, so any query
     * planned concurrently on the same SparkSession during the capture
-    * window would silently lose AQE (r15 advice). Safe under the
-    * strictly-sequential harnesses (Verify/Bench/tests); a concurrent
-    * caller must serialize graph-operator invocations or give them
-    * their own session (`spark.newSession()` shares the cache but
-    * isolates the conf). */
+    * window would silently lose AQE (r15 advice); the width pinning of
+    * [[withShufflePartitions]] / [[withEdgeBoundedShuffle]] is
+    * session-global the same way. Checkpoint ownership is not a
+    * constraint (each cut is recorded in its caller's
+    * [[CacheHygiene.Arena]]); these conf writes are the graph family's
+    * only one. Safe under the strictly-sequential harnesses
+    * (Verify/Bench/tests); a concurrent caller must serialize
+    * graph-operator invocations or give them their own session
+    * (`spark.newSession()` shares the cache but isolates the conf). */
   def partitionedMaterialize(df: org.apache.spark.sql.DataFrame,
                              key: org.apache.spark.sql.Column,
                              materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
@@ -149,43 +154,39 @@ private[graft] object ShuffleSizing {
 
   /** [[partitionedMaterialize]] + the edge count in ONE materialization
     * (r17): the graph family used to materialize its edge relation
-    * TWICE — a flat cut (to count, so [[withEdgeScaledShuffle]] could
-    * size the partitioning) and then the partitioned re-cut. But the
-    * count is only needed to decide whether the session width is WIDE
-    * ENOUGH, so: materialize partitioned at the session width, count
-    * the result (a free scan), and re-materialize wider ONLY when the
-    * edge-scaled target exceeds the session value — at bench SFs (and
-    * on any properly-sized cluster session) that branch never fires
-    * and the whole capture is one pass. Returns (parted, edgeRows,
-    * staleIds) — staleIds are the narrow first cut's checkpoint RDDs
-    * when the widen branch fired (the caller releases them; empty
-    * otherwise). The AQE-off window of [[partitionedMaterialize]] now
-    * covers the upstream edge-build plan too (it used to run under the
-    * flat cut with AQE on) — a static-width distinct/join at capture
-    * time, the documented price of a recorded partitioning. */
-  def partitionedMaterializeCounted(df: org.apache.spark.sql.DataFrame,
+    * TWICE — a flat cut (to count, so the edge-scaled width could size
+    * the partitioning) and then the partitioned re-cut. But the count
+    * is only needed to decide whether the session width fits, so:
+    * materialize partitioned at the session width, count the result (a
+    * free scan), and re-materialize at [[boundedWidth]] ONLY when that
+    * differs from the session value. Returns (parted, edgeRows); both
+    * cuts are recorded in `ck`, and the narrow first cut is freed as
+    * soon as a re-cut replaces it. The AQE-off window of
+    * [[partitionedMaterialize]] covers the upstream edge-build plan
+    * too — a static-width distinct/join at capture time, the
+    * documented price of a recorded partitioning. */
+  def partitionedMaterializeCounted(ck: CacheHygiene.Arena,
+      df: org.apache.spark.sql.DataFrame,
       key: org.apache.spark.sql.Column,
       materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Long, Set[Int]) = {
+      : (org.apache.spark.sql.DataFrame, Long) = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val first = partitionedMaterialize(df, key, materialize)
-    val firstIds = (sc.getPersistentRDDs.keySet -- before).toSet
+    val first = partitionedMaterialize(df, key, ck.cut(_, materialize))
     val n = first.count()
     val current = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val width = boundedWidth(n, current)
-    // r18: the re-cut now fires in BOTH directions — wider when the
+    // r18: the re-cut fires in BOTH directions — wider when the
     // session width risks spill (the r17 behavior), NARROWER when the
     // session over-fans a small graph (the cap mirror; the re-cut is
     // an |E|-row exchange of a by-construction-small relation, paid
     // once, against per-round fixed costs paid every iteration).
-    if (width == current) (first, n, Set.empty)
+    if (width == current) (first, n)
     else {
       val recut = withShufflePartitions(spark, width) {
-        partitionedMaterialize(first, key, materialize)
+        partitionedMaterialize(first, key, ck.cut(_, materialize))
       }
-      (recut, n, firstIds)
+      ck.free(first)
+      (recut, n)
     }
   }
 
@@ -204,42 +205,16 @@ private[graft] object ShuffleSizing {
     * the aggregate's partitioning). */
   val BroadcastNodeLimit = 4000000L
 
-  /** Run `body` with `spark.sql.shuffle.partitions` raised to the
-    * edge-scaled target (restored after); a no-op when the session
-    * value already covers it. `body` must EXECUTE its jobs inside the
+  /** Run `body` with `spark.sql.shuffle.partitions` at [[boundedWidth]]
+    * (restored after, throw-safe): raised to the edge-scaled floor for
+    * big graphs, LOWERED when the session over-fans a small one (r18),
+    * so the round loops' fallback shuffles and per-round
+    * materializations track the capture's data-derived width instead
+    * of a session constant. `body` must EXECUTE its jobs inside the
     * call (the graph loops do — each round materializes eagerly). */
-  def withEdgeScaledShuffle[T](spark: SparkSession, edgeRows: Long)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val current = spark.conf.get(key).toInt
-    val target = targetPartitions(edgeRows)
-    if (target <= current) body
-    else {
-      // one quiet operational note per engagement — this knob moving is
-      // exactly what a scale drill needs to see in its log
-      System.err.println(s"[shuffle-sizing] $edgeRows edge rows -> " +
-        s"$key $current -> $target (restored after)")
-      spark.conf.set(key, target.toString)
-      try body finally spark.conf.set(key, current.toString)
-    }
-  }
-
-  /** [[withEdgeScaledShuffle]] with the cap mirror (r18): run `body`
-    * at [[boundedWidth]] — raised for big graphs exactly as before,
-    * LOWERED when the session over-fans a small one, so the round
-    * loops' fallback shuffles and per-round materializations track the
-    * capture's data-derived width instead of a session constant. */
-  def withEdgeBoundedShuffle[T](spark: SparkSession, edgeRows: Long)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val current = spark.conf.get(key).toInt
-    val width = boundedWidth(edgeRows, current)
-    if (width == current) body
-    else {
-      System.err.println(s"[shuffle-sizing] $edgeRows edge rows -> " +
-        s"$key $current -> $width (restored after)")
-      spark.conf.set(key, width.toString)
-      try body finally spark.conf.set(key, current.toString)
-    }
-  }
+  def withEdgeBoundedShuffle[T](spark: SparkSession, edgeRows: Long)(body: => T): T =
+    withShufflePartitions(spark,
+      boundedWidth(edgeRows, spark.conf.get("spark.sql.shuffle.partitions").toInt))(body)
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n` in
     * either direction (restored after, throw-safe). */

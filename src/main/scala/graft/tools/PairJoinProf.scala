@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * side at bench SFs and RECOMPUTES the distinct under the
   * BroadcastExchange) vs the r17 explicit co-partition on the basket
   * key before the self-join (one shared exchange, partition-local pair
-  * generation — the BasketEdges EdgeProf A/D finding applied to the
+  * generation — the BasketEdges A/D finding (OPTIMIZATION_r17.md) applied to the
   * inline sites). Noop-sink timings (§1.4), warm second run, plus the
   * run-independent shuffle rows.
   *

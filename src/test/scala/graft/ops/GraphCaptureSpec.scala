@@ -73,16 +73,31 @@ class GraphCaptureSpec extends SparkSpecBase {
     assert(leaked.isEmpty, s"leaked persistent RDDs: $leaked")
   }
 
-  test("capture(symmetrize = false) honors the pre-symmetrized contract") {
+  test("capture(Symmetric) honors the pre-symmetrized contract") {
     val sym = pairs.select(col("a"), col("b"))
       .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-    val g = GraphCapture.capture(sym, "a", "b", symmetrize = false)
+    val g = GraphCapture.capture(sym, "a", "b", GraphCapture.Symmetric)
     assert(g.edgeCount == 26L)
     val ccDirect = m(Dedup.connectedComponents(
       pairs.select(col("a").as("id_a"), col("b").as("id_b")), driverMaxEdges = 0))
     assert(m(Dedup.connectedComponents(g, maxIter = 50, driverMaxEdges = 0)) == ccDirect)
     g.release()
+  }
+
+  test("capture(OneWay) on p1 < p2 pairs matches Pairs: edge count and BFS hops") {
+    // the q108 shape: each undirected edge once, smaller id first
+    val oneWay = pairs.select(least(col("a"), col("b")).as("p1"),
+      greatest(col("a"), col("b")).as("p2"))
+    val sources = Seq(1L, 20L).toDF("id")
+    val gOne = GraphCapture.capture(oneWay, "p1", "p2", GraphCapture.OneWay)
+    val gPairs = GraphCapture.capture(oneWay, "p1", "p2", GraphCapture.Pairs)
+    assert(gOne.edgeCount == gPairs.edgeCount)
+    val hopsOne = Bfs.hopDistance(gOne, sources, maxHops = 4)
+    val hopsPairs = Bfs.hopDistance(gPairs, sources, maxHops = 4)
+    assert(m(hopsOne) == m(hopsPairs))
+    Seq(hopsOne, hopsPairs).foreach(CacheHygiene.release)
+    gOne.release(); gPairs.release()
   }
 
   test("the capture's partitioning reaches the round aggregate (no per-round edge exchange)") {

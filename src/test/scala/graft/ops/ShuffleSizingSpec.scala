@@ -72,22 +72,9 @@ class ShuffleSizingSpec extends SparkSpecBase {
       assert(spark.conf.get(key) == "100")
     }
     assert(spark.conf.get(key) == before)
-  }
-
-  test("withEdgeScaledShuffle raises during the body, restores after; session is a floor") {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    // small graph: session value is a floor, body sees it unchanged
-    ShuffleSizing.withEdgeScaledShuffle(spark, 10L) {
-      assert(spark.conf.get(key) == before)
-    }
-    // big graph: raised inside, restored outside (even on throw)
-    ShuffleSizing.withEdgeScaledShuffle(spark, 100L * ShuffleSizing.RowsPerPartition) {
-      assert(spark.conf.get(key).toInt == 100)
-    }
-    assert(spark.conf.get(key) == before)
+    // restored on throw too
     intercept[RuntimeException] {
-      ShuffleSizing.withEdgeScaledShuffle(spark, 100L * ShuffleSizing.RowsPerPartition) {
+      ShuffleSizing.withEdgeBoundedShuffle(spark, 100L * ShuffleSizing.RowsPerPartition) {
         throw new RuntimeException("boom")
       }
     }
