@@ -5810,10 +5810,11 @@ object SparkEntry {
          WHERE bit_count(xor(a.afp, b.afp)) <= 3
          ORDER BY id_a, id_b""",
 
-    // Recomputes the 8-token window hashes (md5 over the space-joined
-    // slice — bytes-identical to Spark), keeps hashes occurring >= 2
-    // times corpus-wide, and merges duplicated starts into spans with
-    // the same overlap-or-abut rule (next start <= prev start + 8).
+    // Recomputes the 8-token window hashes (the engine's 60-bit md5Long:
+    // the first 15 hex digits of md5 over the space-joined slice), keeps
+    // hashes occurring >= 2 times corpus-wide, and merges duplicated
+    // starts into spans with the same overlap-or-abut rule (next start
+    // <= prev start + 8).
     // Intermediate window-SUM is HUGEINT but never reaches the final
     // select; emitted aggregates are CAST to BIGINT.
     "q117_dup_window_spans" ->
@@ -5822,8 +5823,9 @@ object SparkEntry {
                                           t -> length(t) > 0) AS ts
                        FROM documents),
          win AS (SELECT doc_id, CAST(i AS BIGINT) AS start,
-                        md5(array_to_string(list_slice(ts, CAST(i AS INTEGER),
-                                                       CAST(i + 7 AS INTEGER)), ' ')) AS wh
+                        CAST(('0x' || substr(md5(array_to_string(
+                               list_slice(ts, CAST(i AS INTEGER), CAST(i + 7 AS INTEGER)), ' ')),
+                             1, 15)) AS BIGINT) AS wh
                  FROM toks, UNNEST(range(1, len(ts) - 8 + 2)) r(i)),
          dup AS (SELECT wh FROM win GROUP BY wh HAVING COUNT(*) >= 2),
          hit AS (SELECT w.doc_id, w.start FROM win w JOIN dup d ON d.wh = w.wh),
@@ -5849,8 +5851,9 @@ object SparkEntry {
                                           t -> length(t) > 0) AS ts
                        FROM documents),
          win AS (SELECT doc_id, CAST(i AS BIGINT) AS start,
-                        md5(array_to_string(list_slice(ts, CAST(i AS INTEGER),
-                                                       CAST(i + 7 AS INTEGER)), ' ')) AS wh
+                        CAST(('0x' || substr(md5(array_to_string(
+                               list_slice(ts, CAST(i AS INTEGER), CAST(i + 7 AS INTEGER)), ' ')),
+                             1, 15)) AS BIGINT) AS wh
                  FROM toks, UNNEST(range(1, len(ts) - 8 + 2)) r(i)),
          dup AS (SELECT wh FROM win GROUP BY wh HAVING COUNT(*) >= 2),
          hit AS (SELECT w.doc_id, w.start FROM win w JOIN dup d ON d.wh = w.wh),

@@ -2,14 +2,24 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.core.FsUtils
 import graft.ops.{NestedFlatten, Relational}
 import graft.sources.RestPager
 
 /** The reference's incremental order sync, end-to-end (SURVEY.md §3.1;
   * reference: woo-sync/main.py:1262-1334):
   *
-  *   1. watermark read — max sync_timestamp of the target (A1);
+  *   1. watermark read — from the newest commit record under
+  *      `_events/` (A1), one listing and one small read, no Spark job.
+  *      A record is written only after BOTH appends land, so a sync
+  *      that fails between them never advances the watermark: the next
+  *      sync re-extracts its orders and keep-latest absorbs the
+  *      re-appended versions (reading max(sync_timestamp) off `orders`
+  *      instead would skip the failed sync's line items forever). No
+  *      record means no watermark: a full extract;
   *   2. extract — page-number REST scan with the watermark pushed as
   *      the `modified_after` query param (S1 + P5);
   *   3. transform — nested flatten + EAV + typed money/dates (P1/P2/P4)
@@ -17,7 +27,8 @@ import graft.sources.RestPager
   *   4. load — append to the target, stamping sync_timestamp (K1, T8:
   *      re-modified rows append as new versions, resolved by the
   *      keep-latest view);
-  *   5. completion event (T7).
+  *   5. completion event (T7) — the commit record carrying the
+  *      watermark the next sync pushes.
   */
 object WooIncremental {
 
@@ -33,43 +44,62 @@ object WooIncremental {
            targetRoot: String,
            syncTimestamp: String,
            perPage: Int = 100): SyncResult = {
-    val ordersPath = s"$targetRoot/orders"
+    val events = new Path(s"$targetRoot/_events")
+    val fs = events.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // 1. watermark (empty target -> full extract). Probed through the
+    // 1. watermark (no commit record -> full extract). Through the
     // Hadoop FileSystem API, not java.io.File: the target may be an
     // object store (s3a://, gs://) where a local-FS check is always
     // false and would silently degrade every sync to a full extract.
-    val ordersHPath = new Path(ordersPath)
-    val fs = ordersHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val watermark: Option[String] =
-      if (fs.exists(ordersHPath)) {
-        val row = Relational.maxWatermark(spark.read.parquet(ordersPath), "sync_timestamp").head()
-        if (row.isNullAt(0)) None else Some(row.getString(0))
-      } else None
+    val last = lastCommit(fs, events)
+    val watermark = last.map(_._2)
 
     // 2. extract with pushed watermark predicate
     val params = watermark.map(w => Map("modified_after" -> w)).getOrElse(Map.empty)
     val pages = RestPager.pageNumber(transport, url, perPage, params).toSeq
     val raw = RestPager.toDf(spark, pages)
-    if (raw.isEmpty) return SyncResult(0, 0, watermark)
+    if (RestPager.noRows(raw)) return SyncResult(0, 0, watermark)
 
     // 3+4. transform + versioned append (landBatch: stamp, observe the
     // write for the batch count — no re-read of the accumulated table)
     val n = landBatch(NestedFlatten.flattenOrders(raw), targetRoot, "orders", syncTimestamp)
     val m = landBatch(NestedFlatten.explodeLineItems(raw), targetRoot, "order_items", syncTimestamp)
 
-    // 5. completion event (T7): append to the control topic dir
-    // (Hadoop FS like the watermark probe — the target may not be local)
-    val done = s"""{"job_id":"84393","sync_timestamp":"$syncTimestamp"}"""
-    val topic = new Path(s"$targetRoot/_events")
-    fs.mkdirs(topic)
-    // ':' in a path segment parses as a URI scheme under Hadoop Path —
-    // keep the timestamp in the payload, sanitize it in the filename
-    val out = fs.create(new Path(topic, s"done-${syncTimestamp.replace(':', '-')}.json"), true)
-    try out.write(done.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // 5. commit record (T7): the next watermark is what max(sync_timestamp)
+    // over `orders` now is — compared as Spark compares strings (UTF-8 bytes)
+    val next = (watermark.toSeq :+ syncTimestamp).maxBy(UTF8String.fromString)
+    commit(fs, events, last.fold(0L)(_._1 + 1), syncTimestamp, next)
 
     SyncResult(n, m, watermark)
+  }
+
+  private val mapper = new ObjectMapper()
+  private val RecordName = "^done-(\\d{19})\\.json$".r
+
+  /** (seq, watermark) of the newest commit record under `events`. Names
+    * carry a zero-padded seq, so name order is commit order. */
+  private def lastCommit(fs: FileSystem, events: Path): Option[(Long, String)] =
+    if (!fs.exists(events)) None
+    else fs.listStatus(events).iterator.map(_.getPath.getName).collect {
+      case RecordName(seq) => seq.toLong
+    }.maxOption.map { seq =>
+      seq -> mapper.readTree(FsUtils.readUtf8(fs, recordPath(events, seq))).get("watermark").asText()
+    }
+
+  private def recordPath(events: Path, seq: Long) = new Path(events, "done-%019d.json".format(seq))
+
+  /** Write the record to a `.tmp-` file and rename it to the fresh seq
+    * name: the rename is the commit point, so a crash never leaves a torn
+    * record for the next sync to read. */
+  private def commit(fs: FileSystem, events: Path, seq: Long,
+                     syncTimestamp: String, watermark: String): Unit = {
+    val record = mapper.createObjectNode()
+      .put("job_id", "84393").put("sync_timestamp", syncTimestamp).put("watermark", watermark)
+    fs.mkdirs(events)
+    val tmp = new Path(events, s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    FsUtils.writeUtf8(fs, tmp, mapper.writeValueAsString(record))
+    require(fs.rename(tmp, recordPath(events, seq)),
+      s"commit record $seq already exists under $events — concurrent syncs on one target")
   }
 
   /** Append the stamped batch and return ITS row count via an
@@ -101,7 +131,7 @@ object WooIncremental {
                    targetRoot: String, syncTimestamp: String,
                    perPage: Int = 100): ProductSyncResult = {
     val raw = RestPager.toDf(spark, RestPager.pageNumber(transport, url, perPage).toSeq)
-    if (raw.isEmpty) return ProductSyncResult(0, 0, 0, 0)
+    if (RestPager.noRows(raw)) return ProductSyncResult(0, 0, 0, 0)
     def land(df: DataFrame, name: String): Long =
       landBatch(df, targetRoot, name, syncTimestamp)
     ProductSyncResult(
@@ -153,7 +183,7 @@ object WooIncremental {
                   targetRoot: String, syncTimestamp: String,
                   perPage: Int = 100): RefundSyncResult = {
     val raw = RestPager.toDf(spark, RestPager.pageNumber(transport, url, perPage).toSeq)
-    if (raw.isEmpty) return RefundSyncResult(0, 0)
+    if (RestPager.noRows(raw)) return RefundSyncResult(0, 0)
     def land(df: DataFrame, name: String): Long =
       landBatch(df, targetRoot, name, syncTimestamp)
     RefundSyncResult(

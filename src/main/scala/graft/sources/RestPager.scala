@@ -144,6 +144,12 @@ object RestPager {
     spark.read.json(bodies.map(stripBom).toDS)
   }
 
+  /** Whether a [[toDf]] batch has no rows. Schema inference reads every
+    * row, so a non-empty inferred schema already proves a row exists;
+    * the emptiness job runs only when the schema is empty (all-`[]`
+    * pages, or rows that are all `{}`). */
+  def noRows(raw: DataFrame): Boolean = raw.schema.isEmpty && raw.isEmpty
+
   /** S3 — lateral fan-out: for each parent id fetch its (cursor-
     * paginated) children, tagging rows with the parent id. Returns
     * (parentId, pageBody) pairs; the caller joins the tag in as a

@@ -67,9 +67,8 @@ class WooIncrementalSpec extends SparkSpecBase {
     assert(o2.getAs[java.math.BigDecimal]("total").doubleValue() == 25.0) // new version wins
     assert(o2.getAs[String]("sync_timestamp") == "2026-06-07T00:00:00")
 
-    // completion events emitted per sync (T7; ignore local-FS .crc sidecars)
-    assert(new java.io.File(s"$root/_events").list()
-      .count(f => f.startsWith("done-") && f.endsWith(".json")) == 2)
+    // completion events emitted per sync (T7)
+    assert(doneRecords(root).size == 2)
   }
 
   test("watermark is found through the Hadoop FS API on a scheme-qualified target") {
@@ -85,6 +84,91 @@ class WooIncrementalSpec extends SparkSpecBase {
     val r2 = WooIncremental.sync(spark, api2, "http://api/orders", root, "2026-06-05T00:00:00")
     assert(r2.watermark.contains("2026-06-03T00:00:00")) // found, not None
     assert(api2.calls.head("modified_after") == "2026-06-03T00:00:00")
+  }
+
+  /** Commit-record names under `_events` (not the local-FS .crc sidecars). */
+  private def doneRecords(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/_events").list()).toSeq.flatten
+      .filter(f => f.startsWith("done-") && f.endsWith(".json")).sorted
+
+  test("a sync that fails after landing orders does not advance the watermark; the next one re-lands its items") {
+    val root = Files.createTempDirectory("graft-woo-partial").toString
+    val t1 = "2026-06-04T00:00:00"
+    WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
+      "http://api/orders", root, t1)
+
+    // sync 2: `orders` lands, then the `order_items` append hits a plain
+    // file where its directory goes
+    val items = new java.io.File(s"$root/order_items")
+    val aside = new java.io.File(s"$root/order_items.aside")
+    assert(items.renameTo(aside) && items.createNewFile())
+    val later = Seq((2, "2026-06-05T00:00:00", "20.00"), (3, "2026-06-06T00:00:00", "30.00"))
+    intercept[Exception] {
+      WooIncremental.sync(spark, new Api(later), "http://api/orders", root, "2026-06-07T00:00:00")
+    }
+    assert(spark.read.parquet(s"$root/orders").count() == 3) // orders did land
+    assert(items.delete() && aside.renameTo(items))
+
+    // sync 3 pushes sync 1's stamp, so orders 2 and 3 come back
+    val api3 = new Api(later)
+    val r3 = WooIncremental.sync(spark, api3, "http://api/orders", root, "2026-06-08T00:00:00")
+    assert(api3.calls.head("modified_after") == t1)
+    assert(r3.watermark.contains(t1) && r3.ordersAppended == 2)
+    val latest = WooIncremental.latestOrders(spark.read.parquet(s"$root/orders"))
+    assert(latest.count() == 3)
+    val itemless = latest.join(spark.read.parquet(s"$root/order_items"), Seq("order_id"), "left_anti")
+    assert(itemless.isEmpty, s"orders without line items: ${itemless.select("order_id").collect().mkString}")
+    assert(doneRecords(root).size == 2)
+  }
+
+  test("a delta sync runs at most 3 Spark jobs; an all-[] delta lands nothing and commits nothing") {
+    val root = Files.createTempDirectory("graft-woo-jobs").toString
+    WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
+      "http://api/orders", root, "2026-06-03T00:00:00")
+
+    val group = s"woo-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val r2 = try {
+      sc.setJobGroup(group, "delta sync")
+      try WooIncremental.sync(spark, new Api(Seq((2, "2026-06-04T00:00:00", "20.00"))),
+        "http://api/orders", root, "2026-06-05T00:00:00")
+      finally sc.clearJobGroup()
+    } finally {
+      assert(org.apache.spark.graftbridge.ListenerDrain.waitUntilEmpty(sc, 10000L))
+      sc.removeSparkListener(listener)
+    }
+    assert(r2.ordersAppended == 1 && r2.itemsAppended == 1)
+    assert(jobs.get() <= 3, s"delta sync ran ${jobs.get()} Spark jobs")
+
+    // every page `[]`: nothing appended, no commit record, watermark kept
+    val empty = new Api(Seq.empty)
+    val r3 = WooIncremental.sync(spark, empty, "http://api/orders", root, "2026-06-06T00:00:00")
+    assert(r3 == WooIncremental.SyncResult(0, 0, Some("2026-06-05T00:00:00")))
+    assert(spark.read.parquet(s"$root/orders").count() == 2)
+    assert(doneRecords(root).size == 2)
+  }
+
+  test("the commit record is real JSON: a stamp with quotes and backslashes round-trips") {
+    val root = Files.createTempDirectory("graft-woo-json").toString
+    val stamp = "2026-06-03T00:00:00 \"q\" \\ \\\""
+    WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
+      "http://api/orders", root, stamp)
+    val record = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new java.io.File(s"$root/_events/${doneRecords(root).head}"))
+    assert(record.get("sync_timestamp").asText() == stamp)
+    assert(record.get("watermark").asText() == stamp)
+
+    val api2 = new Api(Seq.empty)
+    val r2 = WooIncremental.sync(spark, api2, "http://api/orders", root, "2026-06-05T00:00:00")
+    assert(r2.watermark.contains(stamp))
+    assert(api2.calls.head("modified_after") == stamp)
   }
 
   /** Static one-page transport for the full-scan product/refund syncs. */
@@ -129,6 +213,12 @@ class WooIncrementalSpec extends SparkSpecBase {
     assert(latest.count() == 1)
     assert(latest.head().getAs[String]("status") == "Draft") // str.title()
     assert(spark.read.parquet(s"$root/product_bundles").count() == 1) // v1's child rows remain
+
+    // an all-`[]` page: zeros, and nothing appended
+    val r3 = WooIncremental.syncProducts(spark, new FullApi("[]"),
+      "http://api/products", root, "2026-06-05T00:00:00")
+    assert(r3 == WooIncremental.ProductSyncResult(0, 0, 0, 0))
+    assert(spark.read.parquet(s"$root/products").count() == 2)
   }
 
   test("fullSync gates refund+product scans to UTC hours 11 and 17 (T6)") {
