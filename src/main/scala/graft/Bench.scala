@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.bench.{Harness, QueryMetricsListener}
 
 /** Benchmark main. Prints the driver's single JSON line on stdout and
   * ALSO writes the full per-query record (every run's timing, the
@@ -47,90 +47,40 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_FULL.json")
     val (ambientStart, quiesceWait) = quiesce()
     val ambientNoisy = ambientStart > ambientThreshold
     if (ambientNoisy) System.err.println(
       f"[bench] STILL loaded after ${quiesceWait}s (loadavg $ambientStart%.2f) — run stamped ambient_noisy")
     val loadBefore = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // default 100 entries evicts shared plan fragments across ~50
-      // queries; a larger generated-code cache lets later queries reuse
-      // the compiled text/vector pipeline stages of earlier ones
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM on the smoke SF: run the WHOLE catalog once at
-    // sf0.001 (sub-second per query) so janino compilation and JIT of
-    // every plan's generated code happen before timing — the measured
-    // numbers are then warm-path throughput at the bench SF, not
-    // first-compile latency. Generated code is structure-dependent
-    // only, so the compile cache carries across scale factors.
-    // prefer the smoke SF next to the bench dir; fall back to the bench
-    // dir itself so warming never silently no-ops on other layouts
-    val warmDir = {
-      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (sibling.isDirectory) sibling.getPath else sfDir
-    }
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try { fn(spark, warmDir).count() } catch { case _: Throwable => }
-      graft.ops.CacheHygiene.quietRelease {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    }
-    System.gc()
-    // Reset session state between timed runs (outside the timers) so
-    // each measurement reflects the query, not leftovers: drop storage
-    // blocks (localCheckpoints of the iterative operators), release
-    // dead broadcast/shuffle state via the ContextCleaner (which only
-    // acts on GC), and let the JIT queue drain — without this, heap
-    // pressure from prior plans inflates later heavy queries 2-3x.
-    def reset(): Unit = {
-      graft.ops.CacheHygiene.quietRelease {
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.catalog.clearCache()
-      }
-      System.gc()
-    }
+    val spark = Harness.session()
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    // warm the WHOLE catalog at the smoke SF before any timing
+    Harness.warm(spark, sfDir, ordered)
     // Deterministic per-run execution metrics (r14 directive #1): shuffle
     // ROW counts are a pure function of (plan, data) — run-independent —
     // so they adjudicate wall-time drift: rows moved → code-shaped;
     // rows identical → ambient. Recorded per run; committed next to the
     // seconds in the full record.
-    val mx = graft.bench.QueryMetricsListener.install(spark)
-    def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Boolean, Double, graft.bench.QueryMetrics) = {
-      mx.reset()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val m = mx.read(spark)
-      reset()
-      (ok, dt, m)
-    }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val mx = QueryMetricsListener.install(spark)
+    def timedRun(name: String, fn: Harness.Query): Harness.Run =
+      Harness.timed(spark, mx, sfDir, name, fn)
     // Pass 1: two timed runs per query. Plans are already warm, so
     // run-to-run spread is GC/OS jitter; min over SUCCESSFUL runs is
     // the stable estimate (a failed run's elapsed must never win).
-    val firstPass: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                        Vector[(Boolean, Double, graft.bench.QueryMetrics)])] =
+    val firstPass: Seq[(String, Harness.Query, Vector[Harness.Run])] =
       ordered.map { case (name, fn) => (name, fn, (1 to 2).map(_ => timedRun(name, fn)).toVector) }
     // Pass 2: the 10 most expensive queries dominate the total AND the
     // round-over-round drift signal, so they get a third run and report
     // the MEDIAN of three — robust to a single GC/load spike in either
     // direction, which min-of-2 is not.
     val top10 = firstPass
-      .map { case (n, _, rs) => n -> rs.filter(_._1).map(_._2).minOption.getOrElse(-1.0) }
+      .map { case (n, _, rs) => n -> rs.filter(_.ok).map(_.sec).minOption.getOrElse(-1.0) }
       .filter(_._2 >= 0).sortBy(-_._2).take(10).map(_._1).toSet
     val finished = firstPass.map { case (name, fn, rs0) =>
       val rs = if (top10(name)) rs0 :+ timedRun(name, fn) else rs0
-      val good = rs.filter(_._1).map(_._2).sorted
+      val good = rs.filter(_.ok).map(_.sec).sorted
       val dt =
         if (good.isEmpty) -1.0
         else if (good.size >= 3) good(good.size / 2)
@@ -162,15 +112,15 @@ object Bench {
     val fullRecords = finished.sortBy(_._1).map { case (n, dt, rule, rs, noisy) =>
       // Locale.ROOT: a comma-decimal default locale would render the
       // runs array as unparseable JSON
-      val raw = rs.map { case (ok, t, _) =>
-        if (ok) String.format(java.util.Locale.ROOT, "%.4f", Double.box(t))
+      val raw = rs.map { r =>
+        if (r.ok) String.format(java.util.Locale.ROOT, "%.4f", Double.box(r.sec))
         else s""""FAIL""""
       }.mkString("[", ",", "]")
       // metrics of the last successful run; `shuffle_rows_stable` asserts
       // the pinned signal (read+write row counts) was identical across
       // every successful run of this query in THIS bench — the in-run
       // half of the determinism claim MetricsPinSpec makes across JVMs.
-      val goodRuns = rs.filter(_._1).map(_._3)
+      val goodRuns = rs.filter(_.ok).map(_.metrics)
       val metricsJson = goodRuns.lastOption.map(_.json).getOrElse("null")
       val rowsStable = goodRuns.map(m => (m.shuffleReadRows, m.shuffleWriteRows)).distinct.size <= 1
       s"""  "$n": {"sec": $dt, "rule": "$rule", "noisy": $noisy, "runs": $raw,

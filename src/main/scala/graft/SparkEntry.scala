@@ -1283,7 +1283,8 @@ object SparkEntry {
       // BasketEdges with the skew cap OFF: TPC-H orders hold ≤ 7 lines,
       // so capping would only change results at mega-basket scale — at
       // 100 TB pass maxBasketSize to bound a hot order's k² pair blowup
-      // (BasketSkewProbe measures the effect; PLANS.md r8).
+      // (the effect is measured in PLANS.md, Round-8 "q93 mega-basket
+      // skew bound").
       val edges = graft.ops.BasketEdges.edges(
         t(s, dir, "lineitem"), "l_orderkey", "l_partkey")
       graft.ops.PageRank.pageRank(edges, "src", "dst", iterations = 2)
@@ -2449,17 +2450,15 @@ object SparkEntry {
       val outDir = new java.io.File(base, "out").toString
       // join state is keyed per shuffle partition; 32 partitions × a
       // handful of micro-batches is pure state-store file overhead at
-      // gate scale, so pin the stream to 8 (restored after — batch
-      // queries in this session keep the session default)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = joined.writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // gate scale, so pin the stream to 8 (restored after, even when
+      // start() throws — batch queries in this session keep the
+      // session default)
+      graft.ops.ShuffleSizing.withShufflePartitions(s, 8) {
+        val q = joined.writeStream.format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
       }
       s.read.schema("user_id LONG, trigger_ts TIMESTAMP, response_ts TIMESTAMP")
         .parquet(outDir)

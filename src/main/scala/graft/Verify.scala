@@ -2,21 +2,27 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   ./run_local.sh graft.Verify <sfDir> <outDir> [nameRegex]
+  *
+  * `nameRegex` (full-match, default all) restricts the dump — the fast
+  * local loop when iterating on a few gates (tools/adjudicate.sh). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3, "usage: Verify <sfDir> <outDir> [nameRegex]")
+    val spark = graft.bench.Harness.session()
+    try dump(spark, args(0), args(1), if (args.length == 3) args(2) else ".*")
+    finally spark.stop()
+  }
+
+  /** Write every catalog query whose name fully matches `rx` to
+    * `outDir/<name>` and their oracle SQL to `outDir/oracle_sql.json`.
+    * A failing query is logged and leaves no parquet dir. The session
+    * stays open. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, rx: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(_._1.matches(rx)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -35,9 +41,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(_._1.matches(rx))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -60,10 +60,11 @@ case class HllRegisterExpr(child: Expression, m: Int) extends UnaryExpression {
   * materializing the 32-char hex string, the substring copy, or
   * `conv`'s per-row string parse. Found in the r17 opt round: the q171
   * KMV pass spent ~3.7 of its ~5.7 s sf1 wall inside the hex chain
-  * (tools/KmvProf) — and the same chain fronts every shingle/sampling/
-  * sketch hash in the engine. Same Expression-tier preference and
-  * ThreadLocal-digest reuse as [[HllRegisterExpr]]; value equivalence
-  * is spec-pinned across the full input domain (Md5WindowSpec). */
+  * (OPTIMIZATION_r17.md §2) — and the same chain fronts every
+  * shingle/sampling/sketch hash in the engine. Same Expression-tier
+  * preference and ThreadLocal-digest reuse as [[HllRegisterExpr]];
+  * value equivalence is spec-pinned across the full input domain
+  * (Md5WindowSpec). */
 case class Md5WindowLongExpr(child: Expression, startDigit: Int)
     extends UnaryExpression
     with org.apache.spark.sql.GraftStringInputCast {

@@ -71,8 +71,8 @@ object BpeTrain {
     * of that map (no Spark job), so per-step cluster cost tracks the
     * affected-word mass: at a real 32K-merge vocab, late merges touch
     * tiny slices and cost accordingly, instead of 32K full aggregates
-    * over the word table (PrepScaleProbe records the 64/256-merge
-    * series).
+    * over the word table (PLANS.md, "r10 directive #3 (delta-maintained
+    * BPE pair counts)", records the 64/256-merge series).
     *
     * Word-table replaces stay map-only pure lineage with a cut every
     * `checkpointInterval` steps; the per-step delta (affected-slice
@@ -101,8 +101,9 @@ object BpeTrain {
   final case class StepStat(step: Int, affectedWords: Long, sec: Double)
 
   /** [[learnMerges]] with per-step instrumentation (affected-word mass
-    * + wall time) — the PrepScaleProbe/BpeMergeProbe surface proving
-    * per-step cost tracks the affected slice, not the word table.
+    * + wall time) — the surface that proved per-step cost tracks the
+    * affected slice, not the word table (PLANS.md, "r10 directive #3"
+    * and its Round 12 driver-fast-path follow-up); BpeTrainSpec pins it.
     * Always takes the DISTRIBUTED path (the thing being measured),
     * regardless of corpus size. */
   def learnMergesInstrumented(docs: DataFrame, textCol: String, nMerges: Int,

@@ -124,10 +124,11 @@ object Dedup {
     // Sizes then ride through the pair groupBy (functionally dependent
     // on the ids), replacing the two post-aggregation size joins.
     //
-    // Measured default (r13 adjudication, tools/JaccardProf, identical
-    // outputs pinned): vs the post-agg-join shape this costs ~35% at
-    // sf0.1 (1.5 → 2.0 s isolated — the two posting-side size joins
-    // exceed what the small candidate set saves) and WINS ~11% at sf1
+    // Measured default (PLANS.md, Round 13 "q26_jaccard_pairs
+    // adjudication", item 2; identical outputs pinned): vs the
+    // post-agg-join shape this costs ~35% at sf0.1 (1.5 → 2.0 s
+    // isolated — the two posting-side size joins exceed what the
+    // small candidate set saves) and WINS ~11% at sf1
     // (19.6 → 17.5 s), with the gap growing in the prefilter's favor
     // as candidate volume outpaces posting count — the 100 TB
     // direction, so posting-carry stays the default. (The r12 bench's
@@ -385,9 +386,9 @@ object Dedup {
     * they are NOT unpersisted here; they are freed by the session's
     * ContextCleaner once the returned frame's plan is GC'd. Long-lived
     * sessions ingesting many arrival batches should not hold references
-    * to consumed result frames (the bench path's per-iteration sweep
-    * that unpersists every persistent RDD — see ScaleProbe — is the
-    * explicit-release pattern). */
+    * to consumed result frames (the bench harness's sweep between
+    * runs, `graft.bench.Harness.reset`, is the explicit-release
+    * pattern; PLANS.md Round 9, "ScaleProbe incfuzzy series"). */
   def incrementalFuzzyDedup(index: DataFrame, batch: DataFrame,
                             idCol: String, textCol: String, threshold: Double,
                             n: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
@@ -425,7 +426,7 @@ object Dedup {
     * minDocs times makes the boiler set corpus_lines/minDocs rows — too
     * big to broadcast, and AQE degrades the anti-join to a shuffle join
     * (corpus lines exchange once; correct, just not line-stationary —
-    * probed in CurationScaleProbe's worst-case entry). Real web corpora
+    * PLANS.md, "Round-6 boilerplate worst-case probe"). Real web corpora
     * sit far from this: boilerplate is heavy-tailed repetition.
     *
     * Returns (idCol, clean_text, n_kept, n_lines). */

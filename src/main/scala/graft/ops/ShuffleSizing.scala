@@ -123,9 +123,10 @@ private[graft] object ShuffleSizing {
     * AQE must be OFF while the checkpoint is captured (restored
     * after): under AQE the checkpoint's LogicalRDD records the
     * NOT-YET-FINAL adaptive plan's partitioning — Unknown — and the
-    * benefit silently vanishes (probed r15, tools/PartProbe: 2
-    * exchanges captured under AQE vs 0 captured with it off; AQE-ON
-    * consumers honor the preserved partitioning either way). The
+    * benefit silently vanishes (probed r15: 2 exchanges captured
+    * under AQE vs 0 captured with it off; AQE-ON consumers honor the
+    * preserved partitioning either way — PLANS.md, "Round 15 addendum
+    * — exchange-free graph rounds", item 1). The
     * partition count is the session's `spark.sql.shuffle.partitions`
     * ([[partitionedMaterializeCounted]] re-cuts at [[boundedWidth]]).
     *
@@ -200,9 +201,10 @@ private[graft] object ShuffleSizing {
     * stats (the loop's relations are checkpoints with no size
     * estimate): the static SMJ re-exchanges the edge side on the JOIN
     * key and the [[partitionedMaterialize]] layout never reaches the
-    * aggregate (observed r15, tools/RoundPlanProbe — AQE even picked
-    * the EDGE side to broadcast at small scale, which still strands
-    * the aggregate's partitioning). */
+    * aggregate (observed r15 — AQE even picked the EDGE side to
+    * broadcast at small scale, which still strands the aggregate's
+    * partitioning; PLANS.md, "Round 15 addendum — exchange-free graph
+    * rounds"). */
   val BroadcastNodeLimit = 4000000L
 
   /** Run `body` with `spark.sql.shuffle.partitions` at [[boundedWidth]]

@@ -22,7 +22,7 @@ class MetricsPinSpec extends SparkSpecBase {
   private lazy val mx = QueryMetricsListener.install(spark, Some("metrics-pin"))
 
   private def shuffleRowsOf(name: String): (Long, Long) = {
-    // same reset discipline as Bench.reset(): iterative operators leave
+    // same reset discipline as Harness.reset(): iterative operators leave
     // localCheckpoint blocks that would make a second run read cached
     // partials instead of re-executing the same plan
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

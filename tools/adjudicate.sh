@@ -16,15 +16,18 @@ sf="${2:-/root/testdata/sf0.01}"
 out="$(mktemp -d /tmp/adjudicate.XXXXXX)"
 trap 'rm -rf "$out"' EXIT
 # Capture the run first and check its exit status separately, so a
-# VerifySubset crash surfaces as a run failure instead of masquerading
-# as "no query matched" under pipefail.
-runlog="$out/verify_subset.log"
+# Verify crash surfaces as a run failure instead of masquerading as
+# "no query matched" under pipefail.
+runlog="$out/verify.log"
 st=0
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" ./run_local.sh \
-    graft.tools.VerifySubset "$sf" "$out" "$rx" >"$runlog" 2>&1 || st=$?
+    graft.Verify "$sf" "$out" "$rx" >"$runlog" 2>&1 || st=$?
 if [ "$st" -ne 0 ]; then
-  echo "VerifySubset FAILED (exit $st); last 30 lines:"; tail -30 "$runlog"; exit 3
+  echo "Verify FAILED (exit $st); last 30 lines:"; tail -30 "$runlog"; exit 3
 fi
-grep '\[subset\]' "$runlog" || {
-  echo "no query matched regex '$rx' (note: full-match semantics)"; exit 2; }
+# oracle_sql.json lists the matched gates; an empty object = no match
+if [ "$(cat "$out/oracle_sql.json")" = "{}" ]; then
+  echo "no query matched regex '$rx' (note: full-match semantics)"; exit 2
+fi
+grep '\[verify\]' "$runlog" || true
 python3 tools/compare_oracle.py "$sf" "$out" --detail --max-rows=20
