@@ -40,6 +40,18 @@ object SparkEntry {
     base
   }
 
+  /** Run `body` (a stream's start and drain) at shuffle width `n`,
+    * restored after, also on a throw. Streams still need this conf
+    * write: Spark fixes a stateful operator's partition count from
+    * `spark.sql.shuffle.partitions` when the stream first starts, and
+    * has no per-query form of it. */
+  private def withStreamWidth[T](s: SparkSession, n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, n.toString)
+    try body finally s.conf.set(key, prev)
+  }
+
   /** One PQ fit per fixture dir — training is a pure deterministic
     * function of the corpus (ProductQuantizerSpec pins bit-parity), so
     * q169/q170 share it the way a deployed index shares one trained
@@ -2450,10 +2462,9 @@ object SparkEntry {
       val outDir = new java.io.File(base, "out").toString
       // join state is keyed per shuffle partition; 32 partitions × a
       // handful of micro-batches is pure state-store file overhead at
-      // gate scale, so pin the stream to 8 (restored after, even when
-      // start() throws — batch queries in this session keep the
-      // session default)
-      graft.ops.ShuffleSizing.withShufflePartitions(s, 8) {
+      // gate scale, so pin the stream to 8 (batch queries in this
+      // session keep the session default)
+      withStreamWidth(s, 8) {
         val q = joined.writeStream.format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", new java.io.File(base, "ckpt").toString)

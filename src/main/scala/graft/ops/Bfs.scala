@@ -30,8 +30,7 @@ import org.apache.spark.sql.functions._
   * disposes it with `CacheHygiene.release(result)` when done. Every
   * other checkpoint is recorded in the call's own
   * [[CacheHygiene.scope]], so RDDs persisted by concurrent queries are
-  * never released here; the operator is sequential-only solely through
-  * [[ShuffleSizing]]'s session-wide conf writes (AQE flip, width).
+  * never released here.
   *
   * Determinism: pure integer set algebra — hop numbers are the
   * superstep index; min-hop per node is implied by first discovery.
@@ -73,18 +72,15 @@ object Bfs {
     * the frontier expansion exchange-free: edges never re-shuffle per
     * hop, the neighbor distinct is partition-local, and only the
     * |frontier|-sized anti-join side moves. Beyond the broadcast bound
-    * a hop falls back to the prior shuffling join. */
+    * a hop falls back to the prior shuffling join, exchanged at the
+    * capture's width. */
   def hopDistance(g: GraphCapture, sources: DataFrame, maxHops: Int): DataFrame =
-    CacheHygiene.scope { ck =>
-      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-        supersteps(ck, g.keyed("v", "u"), sources, maxHops)
-      }
-    }
+    CacheHygiene.scope { ck => supersteps(ck, g.keyed("v", "u"), g.width, sources, maxHops) }
 
   /** The frontier-expansion supersteps over a v-partitioned undirected
-    * edge relation. */
-  private def supersteps(ck: CacheHygiene.Arena, und: DataFrame, sources: DataFrame,
-                         maxHops: Int): DataFrame = {
+    * edge relation cut `width` wide. */
+  private def supersteps(ck: CacheHygiene.Arena, und: DataFrame, width: Int,
+                         sources: DataFrame, maxHops: Int): DataFrame = {
     // per-hop LINEAGE CUT (r17): the old supersteps cache()d each
     // hop's `next` and the growing `visited` union — so every hop's
     // action re-analyzed, re-optimized and AQE-replanned the WHOLE
@@ -109,10 +105,9 @@ object Bfs {
     var exhausted = false
     while (hop < maxHops && !exhausted) {
       hop += 1
-      val fSide =
-        if (frontierRows <= ShuffleSizing.BroadcastNodeLimit) broadcast(frontier)
-        else frontier
-      val next = und.join(fSide, fSide("id") === und("u"))
+      val (edges, fSide) = ShuffleSizing.roundSides(und, "u", frontier, "id",
+        frontierRows <= ShuffleSizing.BroadcastNodeLimit, width)
+      val next = edges.join(fSide, fSide("id") === edges("u"))
         .select(col("v").as("id")).distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
         .withColumn("hops", lit(hop))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Those loops materialize per-round state (localCheckpoint by
   * default) plus an |E|-sized partitioned edge checkpoint
-  * ([[ShuffleSizing.partitionedMaterialize]]). A checkpointed Dataset
+  * ([[ShuffleSizing.partitionedCut]]). A checkpointed Dataset
   * exposes no `unpersist`, so without explicit disposal every call
   * leaked the edge footprint for the session lifetime (r15 advice).
   * The contract enforced here: ONLY the returned frame stays
@@ -22,10 +22,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Ownership is recorded per cut ([[Arena]]), never by diffing the
   * session's persistent-RDD registry: an RDD that another query
   * persists on the same session while an operator runs is not the
-  * operator's and is never released by it. What still makes the graph
-  * family sequential-only is [[ShuffleSizing]]'s session-wide conf
-  * writes (the AQE flip in [[ShuffleSizing.partitionedMaterialize]],
-  * the width pinning around the round loops). */
+  * operator's and is never released by it. */
 private[graft] object CacheHygiene {
 
   /** Run a DELIBERATE checkpoint-release block with the known

@@ -822,7 +822,7 @@ object Dedup {
     * Exchange-free rounds (r16, the LabelProp/PageRank recipe): the
     * neighbor-min aggregate keys on `s`, so on the localCheckpoint
     * path the edge relation is captured hash-partitioned on `s`
-    * ([[ShuffleSizing.partitionedMaterialize]]) and the |V|-row label
+    * ([[ShuffleSizing.partitionedCut]]) and the |V|-row label
     * table rides the round's join as an explicit broadcast (bounded by
     * [[ShuffleSizing.BroadcastNodeLimit]], counted once off r0) — the
     * per-round |E|-row join + aggregate then plans NO exchange at all;
@@ -954,11 +954,10 @@ object Dedup {
         val out = driverComponents(edges, sOnlyVertices = assumeSymmetric)
         done(edges, "edges")
         out
-      } else
-      // distributed rounds: shuffle partitions scale with the edge
-      // relation ([[ShuffleSizing]] — the count above is a free scan
-      // on the materialized cut)
-      ShuffleSizing.withEdgeBoundedShuffle(spark, edgeCount) {
+      } else {
+      // distributed rounds: one partitioned cut, at the width the
+      // edge count above derives ([[ShuffleSizing.boundedWidth]])
+      val width = ShuffleSizing.boundedWidth(edgeCount, ShuffleSizing.sessionWidth(spark))
       // r16: the exchange-free graph-round recipe (LabelProp/PageRank,
       // r15) applied to CC. Every round's neighbor-min aggregate keys
       // on s, so an S-partitioned edge checkpoint plus an explicitly
@@ -968,11 +967,11 @@ object Dedup {
       // localCheckpoint path — a parquet cut cannot carry partitioning
       // (no bucketing on scratch files); the reliable-checkpoint mode
       // keeps the prior shuffling plan. Beyond the broadcast bound the
-      // round falls back to exactly the prior plan too.
+      // round falls back to the prior plan too, its join exchanged at
+      // `width`.
       val parted =
         if (ckptBase.isEmpty) {
-          val p = ShuffleSizing.partitionedMaterialize(edges, col("s"),
-            ck.cut(_, _.localCheckpoint()))
+          val p = ShuffleSizing.partitionedCut(ck, edges, "s", width, _.localCheckpoint())
           // the unpartitioned first cut is dead once the capture is
           // materialized — releasing it halves the standing edge
           // footprint for the whole round loop (sf10 drill: two
@@ -980,7 +979,7 @@ object Dedup {
           ck.free(edges)
           p
         } else edges
-      val labels = ccRounds(parted, maxIter, cut, done)
+      val labels = ccRounds(parted, width, maxIter, cut, done)
       done(edges, "edges")
       val out0 = labels.select(col("v").as("doc_id"), col("comp").as("component_id"))
       // self-contained result BEFORE the intermediates are released
@@ -988,7 +987,7 @@ object Dedup {
       // its own blocks; on the parquet path the final round's files
       // back the result already (caller-owned directory)
       if (ckptBase.isEmpty) ck.cut(out0, _.localCheckpoint()) else out0
-      } // withEdgeBoundedShuffle
+      }
     } catch {
       // on failure nothing of the run is consumable — the scope frees
       // the local blocks; remove exactly what this run wrote: every
@@ -1024,36 +1023,32 @@ object Dedup {
     if (g.longIds && g.edgeCount <= driverMaxEdges)
       driverComponents(g.keyed("s", "t"), sOnlyVertices = true)
     else CacheHygiene.scope { ck =>
-      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-        val labels = ccRounds(g.keyed("s", "t"), maxIter,
-          cut = (df, _, lazyLocal) => ck.cut(df, _.localCheckpoint(!lazyLocal)),
-          done = (df, _) => ck.free(df))
-        // self-contained result BEFORE the round intermediates are
-        // released; the capture blocks stay caller-owned
-        ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")),
-          _.localCheckpoint())
-      }
+      val labels = ccRounds(g.keyed("s", "t"), g.width, maxIter,
+        cut = (df, _, lazyLocal) => ck.cut(df, _.localCheckpoint(!lazyLocal)),
+        done = (df, _) => ck.free(df))
+      // self-contained result BEFORE the round intermediates are
+      // released; the capture blocks stay caller-owned
+      ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")),
+        _.localCheckpoint())
     }
 
   def connectedComponents(g: GraphCapture): DataFrame =
     connectedComponents(g, maxIter = 50, driverMaxEdges = 1000000L)
 
   /** The neighbor-min + pointer-jump rounds over an s-partitioned
-    * symmetric edge relation: returns the converged (v, comp) labels
-    * (throws past `maxIter`). `cut`/`done` are the caller's
+    * symmetric edge relation cut `width` wide: returns the converged
+    * (v, comp) labels (throws past `maxIter`). `cut`/`done` are the caller's
     * lineage-cut and dead-cut disposal hooks — parquet files or
     * localCheckpoint blocks in [[connectedComponents]]'s direct form,
     * localCheckpoint blocks for shared captures. Each round's cut is
     * disposed of as soon as the next round lands. */
-  private def ccRounds(parted: DataFrame, maxIter: Int,
+  private def ccRounds(parted: DataFrame, width: Int, maxIter: Int,
                        cut: (DataFrame, String, Boolean) => DataFrame,
                        done: (DataFrame, String) => Unit): DataFrame = {
     var labels = cut(parted.groupBy(col("s").as("v"))
       .agg(least(min(col("s")), min(col("t"))).as("comp")), // min(s)=s per group
       "r0", false)
     val smallV = labels.count() <= ShuffleSizing.BroadcastNodeLimit
-    def labelSide(df: DataFrame): DataFrame =
-      if (smallV) org.apache.spark.sql.functions.broadcast(df) else df
     var iter = 0
     var converged = false
     // convergence detector: per-vertex labels are monotonically
@@ -1061,9 +1056,10 @@ object Dedup {
     // no join) is strictly decreasing until the fixpoint
     var prevSum: java.math.BigDecimal = null
     while (!converged && iter < maxIter) {
-      val viaNeighbors = parted
-        .join(labelSide(
-          labels.withColumnRenamed("v", "t").withColumnRenamed("comp", "ncomp")), Seq("t"))
+      val (edges, labelSide) = ShuffleSizing.roundSides(parted, "t",
+        labels.withColumnRenamed("v", "t").withColumnRenamed("comp", "ncomp"), "t",
+        smallV, width)
+      val viaNeighbors = edges.join(labelSide, Seq("t"))
         .groupBy(col("s").as("v")).agg(min(col("ncomp")).as("mincomp"))
       val stepped = labels.join(viaNeighbors, Seq("v"), "left")
         .select(col("v"), least(col("comp"), coalesce(col("mincomp"), col("comp"))).as("comp"))
@@ -1090,9 +1086,6 @@ object Dedup {
     labels
   }
 
-  /** Exact union-find (path compression, union-by-min so the root IS
-    * the component's min id) over a collected edge list — the
-    * small-graph path of [[connectedComponents]]. */
   /** Driver union-find fast path. `sOnlyVertices` mirrors the
     * distributed rounds' vertex contract under `assumeSymmetric`:
     * labels initialize from the s column, so a vertex appearing only

@@ -37,16 +37,14 @@ import org.apache.spark.sql.functions._
   * its own [[CacheHygiene.scope]]) and never the shared relation; call
   * [[release]] when the last consumer is done. The capture records
   * its cuts in its own [[CacheHygiene.Arena]], so concurrent queries'
-  * persisted RDDs are never mistaken for its own; the session-wide
-  * conf writes of [[ShuffleSizing]] (the AQE flip of
-  * [[ShuffleSizing.partitionedMaterialize]]) still make the capture
-  * sequential-only. */
+  * persisted RDDs are never mistaken for its own. Its plan carries
+  * its `width` ([[ShuffleSizing.partitionedCut]]), which the rounds
+  * inherit. */
 final class GraphCapture private[graft] (
     private[graft] val edges: DataFrame,
     val edgeCount: Long,
+    private[graft] val width: Int,
     ck: CacheHygiene.Arena) {
-
-  private[graft] def spark = edges.sparkSession
 
   /** The captured relation with the consumer's column names; the FIRST
     * name lands on the partition column (the consumer's aggregation
@@ -106,10 +104,10 @@ object GraphCapture {
         val both = d0.unionByName(d0.select(col("t").as("s"), col("s").as("t")))
         if (shape == OneWay) both else both.filter(col("s") =!= col("t")).distinct()
       }
-      val (parted, n) =
-        ShuffleSizing.partitionedMaterializeCounted(ck, sym, col("s"), materialize)
+      val (parted, n, width) =
+        ShuffleSizing.partitionedMaterializeCounted(ck, sym, "s", materialize)
       flat.foreach(ck.free)
-      new GraphCapture(parted, n, ck)
+      new GraphCapture(parted, n, width, ck)
     } catch { case e: Throwable => ck.close(); throw e }
   }
 }

@@ -55,7 +55,8 @@ object LabelProp {
     * stats-free checkpoints, so without the hint the static plan
     * re-exchanges the edges on the JOIN key (dst) and the layout never
     * reaches the aggregate. Beyond the broadcast bound the op falls
-    * back to exactly the pre-r15 shuffling plan.
+    * back to the pre-r15 shuffling plan, its join exchanged at the
+    * capture's width.
     *
     * Every per-round label checkpoint is released on exit; only the
     * returned frame stays persisted, self-contained behind one final
@@ -64,28 +65,26 @@ object LabelProp {
                        materialize: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     CacheHygiene.scope { ck =>
-      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-        ck.cut(rounds(ck, g.keyed("src", "dst"), iterations, materialize), materialize)
-      }
+      ck.cut(rounds(ck, g.keyed("src", "dst"), g.width, iterations, materialize), materialize)
     }
   }
 
   def labelPropagation(g: GraphCapture, iterations: Int): DataFrame =
     labelPropagation(g, iterations, _.localCheckpoint())
 
-  /** The synchronous rounds over a src-partitioned edge relation. */
-  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, iterations: Int,
+  /** The synchronous rounds over a src-partitioned edge relation cut
+    * `width` wide. */
+  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int, iterations: Int,
                      materialize: DataFrame => DataFrame): DataFrame = {
     var labels = parted.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     val smallV = labels.count() <= ShuffleSizing.BroadcastNodeLimit
-    def labelSide(df: DataFrame): DataFrame =
-      if (smallV) broadcast(df) else df
     for (_ <- 1 to iterations) {
       val prev = labels
+      val (edges, labelSide) = ShuffleSizing.roundSides(parted, "dst",
+        labels.withColumnRenamed("id", "__nid"), "__nid", smallV, width)
       labels = ck.cut(
-        parted.join(labelSide(labels.withColumnRenamed("id", "__nid")),
-            col("dst") === col("__nid"))
+        edges.join(labelSide, col("dst") === col("__nid"))
           .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
           // argmax by (n desc, label asc) as one struct-max: labels
           // enter negated so the lexicographic max lands on the

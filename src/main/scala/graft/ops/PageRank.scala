@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.DecimalType
   * relation with the floor division already done per SOURCE (r14 —
   * the previous |E|-row edges⋈degrees materialisation was the largest
   * single stage of the sf10 drill, and per-edge division tripled the
-  * big join's width). At cluster scale, pre-partition edges by src so
-  * the per-iteration join co-locates; shuffle partitions auto-scale
-  * with the measured edge count ([[ShuffleSizing]]). Rank lineage is
+  * big join's width). The edge capture is partitioned by `__dst`, the
+  * round aggregate's key, into a width derived from the measured edge
+  * count ([[ShuffleSizing.partitionedCut]]); the rounds inherit that
+  * width from the capture's plan. Rank lineage is
   * cut per iteration via `materialize` (default localCheckpoint; swap
   * in reliable checkpoint() for long chains on real clusters, as with
   * [[Sampling.budgetSelect]]). */
@@ -55,23 +56,23 @@ object PageRank {
     // final cut (r15 advice — `parted` used to leak). Its own cut
     // sequence, not a [[GraphCapture]]: the input is DIRECTED.
     CacheHygiene.scope { ck =>
-    // r15: every round's contribution sum keys on __dst, so a
-    // DST-partitioned edge checkpoint makes that |E|-row aggregate
-    // partition-local — PROVIDED the |V|-row (src, contribution)
-    // side rides the join as an explicit broadcast (the loop's
-    // relations are stats-free checkpoints; without the hint the
-    // static plan re-exchanges the edges on __src and the layout
-    // never reaches the aggregate). r17: the edge relation is captured
-    // in ONE materialization (partition-first-and-count,
-    // [[ShuffleSizing.partitionedMaterializeCounted]]) — the old flat
-    // cut existed to feed the count and the degree/node builds, which
-    // now read the partitioned capture (same multiset, identical
-    // aggregates). Beyond the broadcast bound the op falls back to
-    // exactly the pre-r15 shuffling plan.
-    val (parted, n) = ShuffleSizing.partitionedMaterializeCounted(ck,
-      ShuffleSizing.renameForCapture(edges0, srcCol, "__src", dstCol, "__dst"),
-      col("__dst"), materialize)
-    ShuffleSizing.withEdgeBoundedShuffle(edges0.sparkSession, n) {
+      // r15: every round's contribution sum keys on __dst, so a
+      // DST-partitioned edge checkpoint makes that |E|-row aggregate
+      // partition-local — PROVIDED the |V|-row (src, contribution)
+      // side rides the join as an explicit broadcast (the loop's
+      // relations are stats-free checkpoints; without the hint the
+      // static plan re-exchanges the edges on __src and the layout
+      // never reaches the aggregate). r17: the edge relation is captured
+      // in ONE materialization (partition-first-and-count,
+      // [[ShuffleSizing.partitionedMaterializeCounted]]) — the old flat
+      // cut existed to feed the count and the degree/node builds, which
+      // now read the partitioned capture (same multiset, identical
+      // aggregates). Beyond the broadcast bound the op falls back to
+      // the pre-r15 shuffling plan, its join exchanged at the capture's
+      // width.
+      val (parted, _, width) = ShuffleSizing.partitionedMaterializeCounted(ck,
+        ShuffleSizing.renameForCapture(edges0, srcCol, "__src", dstCol, "__dst"),
+        "__dst", materialize)
       // |V|-sized relations only beyond the edge list itself: the r14
       // sf10 dissection found the old edges⋈degrees MATERIALIZATION
       // (an |E|-row copy carrying the degree) was the single biggest
@@ -82,12 +83,12 @@ object PageRank {
       // one ready decimal per edge — bit-identical values (the same
       // floor division, evaluated once instead of per edge), half the
       // big-join width, no |E|-row materialization at all.
-      val degrees = ck.cut(
-        parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")), materialize)
+      val degrees = ShuffleSizing.partitionedCut(ck,
+        parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")),
+        "__src", width, materialize)
       val nodes = ck.cut(parted.select(col("__src").as("id"))
         .union(parted.select(col("__dst"))).distinct(), materialize)
-      ck.cut(rounds(ck, parted, degrees, nodes, iterations, materialize), materialize)
-    }
+      ck.cut(rounds(ck, parted, width, degrees, nodes, iterations, materialize), materialize)
     }
   }
 
@@ -103,25 +104,27 @@ object PageRank {
                materialize: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     CacheHygiene.scope { ck =>
-      ShuffleSizing.withEdgeBoundedShuffle(g.spark, g.edgeCount) {
-        // the round aggregate keys on __dst — land the partition
-        // column there (symmetry makes the rename a relabeling of the
-        // same edge set, so values are unchanged)
-        val parted = g.keyed("__dst", "__src")
-        val degrees = ck.cut(parted
-          .groupBy(col("__dst").as("__src")).agg(count(lit(1)).as("__deg")), materialize)
-        val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct(), materialize)
-        ck.cut(rounds(ck, parted, degrees, nodes, iterations, materialize), materialize)
-      }
+      // the round aggregate keys on __dst — land the partition
+      // column there (symmetry makes the rename a relabeling of the
+      // same edge set, so values are unchanged)
+      val parted = g.keyed("__dst", "__src")
+      val degrees = ShuffleSizing.partitionedCut(ck,
+        parted.groupBy(col("__dst").as("__src")).agg(count(lit(1)).as("__deg")),
+        "__src", g.width, materialize)
+      val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct(), materialize)
+      ck.cut(rounds(ck, parted, g.width, degrees, nodes, iterations, materialize), materialize)
     }
   }
 
   def pageRank(g: GraphCapture, iterations: Int): DataFrame =
     pageRank(g, iterations, _.localCheckpoint())
 
-  /** The damped-rank rounds over a __dst-partitioned edge relation
-    * with pre-materialized degrees (keyed __src) and node set. */
-  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame,
+  /** The damped-rank rounds over a __dst-partitioned edge relation cut
+    * `width` wide, with pre-materialized node set and degrees. Degrees
+    * are cut on __src at `width` too, so ranks⋈degrees exchanges only
+    * ranks, at `width`: in round 1 the same node-set exchange as the
+    * rank update's, which Spark runs once (ReusedExchange). */
+  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
                      degrees: DataFrame, nodes: DataFrame,
                      iterations: Int,
                      materialize: DataFrame => DataFrame): DataFrame = {
@@ -129,14 +132,14 @@ object PageRank {
     val scale = lit(1000000000000L).cast(dec)
     val base = lit(150000000000L).cast(dec)
     val smallV = nodes.count() <= ShuffleSizing.BroadcastNodeLimit
-    def contribSide(df: DataFrame): DataFrame =
-      if (smallV) broadcast(df) else df
     var ranks = nodes.withColumn("__r", scale)
     for (_ <- 1 to iterations) {
       val perSrc = ranks.join(degrees, ranks("id") === degrees("__src"))
         .select(col("__src"),
           expr("CAST((__r * CAST(85 AS DECIMAL(38,0))) DIV (CAST(100 AS DECIMAL(38,0)) * __deg) AS DECIMAL(38,0))").as("__c"))
-      val contribs = parted.join(contribSide(perSrc), Seq("__src"))
+      val (edges, contribSide) =
+        ShuffleSizing.roundSides(parted, "__src", perSrc, "__src", smallV, width)
+      val contribs = edges.join(contribSide, Seq("__src"))
         .groupBy(col("__dst").as("id")).agg(sum(col("__c")).as("__in"))
       val prev = ranks
       ranks = ck.cut(nodes.join(contribs, Seq("id"), "left")

@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Edge-count-derived shuffle sizing for the iterative graph family
   * (PageRank / label propagation / connected components) — the r13
@@ -15,9 +18,11 @@ import org.apache.spark.sql.SparkSession
   *
   * The session value is honored between two edge-derived bounds
   * ([[boundedWidth]]): widened when the edge relation outgrows it,
-  * narrowed when it over-fans a small graph. On a real cluster, executor count and AQE absorb
-  * this axis — in local mode the conf IS the knob, which is why the
-  * operators own it rather than documenting a tuning footnote. */
+  * narrowed when it over-fans a small graph. The chosen width is a
+  * fact about the captured data, so it rides the capture's plan
+  * ([[partitionedCut]]) and the rounds inherit it from there; no
+  * operator writes session conf, and the graph family is safe next to
+  * concurrent queries on the same session. */
 private[graft] object ShuffleSizing {
 
   /** ~1.5M edge-sized rows per shuffle partition ≈ 200 MB through the
@@ -102,92 +107,71 @@ private[graft] object ShuffleSizing {
     * attribute Project is not an Alias, so RemoveRedundantAliases
     * leaves it alone and the executed plan's output attributes keep
     * matching the Dataset's logical output. */
-  def renameForCapture(df: org.apache.spark.sql.DataFrame,
-                       a: String, aNew: String,
-                       b: String, bNew: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+  def renameForCapture(df: DataFrame, a: String, aNew: String,
+                       b: String, bNew: String): DataFrame =
     df.select(
       if (a == aNew) col(a) else col(a).as(aNew),
       if (b == bNew) col(b) else col(b).as(bNew))
+
+  /** Materialize `df` hash-partitioned on `key` into exactly `width`
+    * partitions that DOWNSTREAM plans see: the graph family's
+    * per-round |E|-row aggregate keys on one edge column, so it runs
+    * partition-local (no exchange when the round's small side
+    * broadcasts), and a join with an unpartitioned relation shuffles
+    * only that side, at `width`.
+    *
+    * The cut runs `repartition(width, key)` under the session's own
+    * AQE (an explicit width is never coalesced); width 1 needs no
+    * exchange, since pmod(hash(key), 1) = 0 for every row, so it is a
+    * `coalesce(1)`. The root `LogicalRDD`, which under AQE records
+    * Unknown partitioning, is re-stamped `HashPartitioning(key, width)`,
+    * checked against the RDD's partition count (a wrong stamp would
+    * silently corrupt joins). A result without a `LogicalRDD` root (identity,
+    * a parquet round trip) is returned as is. Recorded in `ck`. */
+  def partitionedCut(ck: CacheHygiene.Arena, df: DataFrame, key: String, width: Int,
+                     materialize: DataFrame => DataFrame): DataFrame = {
+    val out = ck.cut(
+      if (width == 1) df.coalesce(1) else df.repartition(width, col(key)), materialize)
+    out.queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        require(l.rdd.getNumPartitions == width,
+          s"cut on $key has ${l.rdd.getNumPartitions} partitions, not $width")
+        val k = l.output.find(_.name == key).getOrElse(
+          throw new IllegalArgumentException(s"no column $key in ${l.output}"))
+        GraftPlanBridge.ofRows(out.sparkSession, l.makeCopy(Array(l.output, l.rdd,
+          HashPartitioning(Seq(k), width), l.outputOrdering,
+          java.lang.Boolean.valueOf(l.isStreaming), l.stream)))
+      case _ => out
+    }
   }
 
-  /** Materialize `df` hash-partitioned on `key` so that DOWNSTREAM
-    * plans see the partitioning and skip their exchanges — the
-    * iterative graph family's per-round aggregate keys on one column
-    * of the static edge relation, so a pre-partitioned checkpoint
-    * turns every round's |E|-row partial-aggregate exchange into a
-    * partition-local aggregate (zero exchange when the small side of
-    * the round's join broadcasts; never worse when it doesn't, the
-    * round then re-shuffles exactly as before).
-    *
-    * AQE must be OFF while the checkpoint is captured (restored
-    * after): under AQE the checkpoint's LogicalRDD records the
-    * NOT-YET-FINAL adaptive plan's partitioning — Unknown — and the
-    * benefit silently vanishes (probed r15: 2 exchanges captured
-    * under AQE vs 0 captured with it off; AQE-ON consumers honor the
-    * preserved partitioning either way — PLANS.md, "Round 15 addendum
-    * — exchange-free graph rounds", item 1). The
-    * partition count is the session's `spark.sql.shuffle.partitions`
-    * ([[partitionedMaterializeCounted]] re-cuts at [[boundedWidth]]).
-    *
-    * SEQUENTIAL-ONLY: the AQE flip is session-global, so any query
-    * planned concurrently on the same SparkSession during the capture
-    * window would silently lose AQE (r15 advice); the width pinning of
-    * [[withShufflePartitions]] / [[withEdgeBoundedShuffle]] is
-    * session-global the same way. Checkpoint ownership is not a
-    * constraint (each cut is recorded in its caller's
-    * [[CacheHygiene.Arena]]); these conf writes are the graph family's
-    * only one. Safe under the strictly-sequential harnesses
-    * (Verify/Bench/tests); a concurrent caller must serialize
-    * graph-operator invocations or give them their own session
-    * (`spark.newSession()` shares the cache but isolates the conf). */
-  def partitionedMaterialize(df: org.apache.spark.sql.DataFrame,
-                             key: org.apache.spark.sql.Column,
-                             materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try materialize(df.repartition(key))
-    finally spark.conf.set(k, prev)
-  }
+  /** The session's shuffle width, which [[boundedWidth]] adjusts. */
+  def sessionWidth(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** [[partitionedMaterialize]] + the edge count in ONE materialization
-    * (r17): the graph family used to materialize its edge relation
-    * TWICE — a flat cut (to count, so the edge-scaled width could size
-    * the partitioning) and then the partitioned re-cut. But the count
-    * is only needed to decide whether the session width fits, so:
-    * materialize partitioned at the session width, count the result (a
-    * free scan), and re-materialize at [[boundedWidth]] ONLY when that
-    * differs from the session value. Returns (parted, edgeRows); both
-    * cuts are recorded in `ck`, and the narrow first cut is freed as
-    * soon as a re-cut replaces it. The AQE-off window of
-    * [[partitionedMaterialize]] covers the upstream edge-build plan
-    * too — a static-width distinct/join at capture time, the
-    * documented price of a recorded partitioning. */
-  def partitionedMaterializeCounted(ck: CacheHygiene.Arena,
-      df: org.apache.spark.sql.DataFrame,
-      key: org.apache.spark.sql.Column,
-      materialize: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    val spark = df.sparkSession
-    val first = partitionedMaterialize(df, key, ck.cut(_, materialize))
+  /** [[partitionedCut]] + the edge count in ONE materialization (r17):
+    * the count is only needed to decide whether the session width
+    * fits, so: cut at the session width, count the result (a free
+    * scan), and re-cut at [[boundedWidth]] ONLY when that differs from
+    * the session width. Returns (parted, edgeRows, width); both cuts
+    * are recorded in `ck`, and the first is freed as soon as a re-cut
+    * replaces it. */
+  def partitionedMaterializeCounted(ck: CacheHygiene.Arena, df: DataFrame, key: String,
+      materialize: DataFrame => DataFrame): (DataFrame, Long, Int) = {
+    val session = sessionWidth(df.sparkSession)
+    val first = partitionedCut(ck, df, key, session, materialize)
     val n = first.count()
-    val current = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val width = boundedWidth(n, current)
+    val width = boundedWidth(n, session)
     // r18: the re-cut fires in BOTH directions — wider when the
     // session width risks spill (the r17 behavior), NARROWER when the
     // session over-fans a small graph (the cap mirror; the re-cut is
     // an |E|-row exchange of a by-construction-small relation, paid
     // once, against per-round fixed costs paid every iteration).
-    if (width == current) (first, n)
+    if (width == session) (first, n, width)
     else {
-      val recut = withShufflePartitions(spark, width) {
-        partitionedMaterialize(first, key, ck.cut(_, materialize))
-      }
+      val recut = partitionedCut(ck, first, key, width, materialize)
       ck.free(first)
-      (recut, n)
+      (recut, n, width)
     }
   }
 
@@ -200,33 +184,20 @@ private[graft] object ShuffleSizing {
     * optimizer plans the join BEFORE the node count is knowable from
     * stats (the loop's relations are checkpoints with no size
     * estimate): the static SMJ re-exchanges the edge side on the JOIN
-    * key and the [[partitionedMaterialize]] layout never reaches the
+    * key and the [[partitionedCut]] layout never reaches the
     * aggregate (observed r15 — AQE even picked the EDGE side to
     * broadcast at small scale, which still strands the aggregate's
     * partitioning; PLANS.md, "Round 15 addendum — exchange-free graph
     * rounds"). */
   val BroadcastNodeLimit = 4000000L
 
-  /** Run `body` with `spark.sql.shuffle.partitions` at [[boundedWidth]]
-    * (restored after, throw-safe): raised to the edge-scaled floor for
-    * big graphs, LOWERED when the session over-fans a small one (r18),
-    * so the round loops' fallback shuffles and per-round
-    * materializations track the capture's data-derived width instead
-    * of a session constant. `body` must EXECUTE its jobs inside the
-    * call (the graph loops do — each round materializes eagerly). */
-  def withEdgeBoundedShuffle[T](spark: SparkSession, edgeRows: Long)(body: => T): T =
-    withShufflePartitions(spark,
-      boundedWidth(edgeRows, spark.conf.get("spark.sql.shuffle.partitions").toInt))(body)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n` in
-    * either direction (restored after, throw-safe). */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val current = spark.conf.get(key)
-    if (current.toInt == n) body
-    else {
-      spark.conf.set(key, n.toString)
-      try body finally spark.conf.set(key, current)
-    }
-  }
+  /** The sides of a graph round's |E|⋈|V| join on `edgeKey` =
+    * `nodeKey`: the node side broadcast when it fits
+    * ([[BroadcastNodeLimit]]), else both exchanged at the capture's
+    * `width` — the rounds' one |E|-row exchange with no partitioned
+    * side to inherit a width from. */
+  def roundSides(edges: DataFrame, edgeKey: String, nodes: DataFrame, nodeKey: String,
+                 broadcastNodes: Boolean, width: Int): (DataFrame, DataFrame) =
+    if (broadcastNodes) (edges, broadcast(nodes))
+    else (edges.repartition(width, col(edgeKey)), nodes.repartition(width, col(nodeKey)))
 }

@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source scans that keep session state in one place each: sessions are
   * built by the bench harness recipe (plus the three tools that must not
-  * share it), session conf is written only by the throw-safe width pin
-  * and the table loaders' tuning, and the only environment the engine
-  * reads is the bench's own three variables. */
+  * share it), session conf is written only by the table loaders' tuning
+  * and the catalog's throw-safe stream width pin, no operator touches
+  * AQE, and the only environment the engine reads is the bench's own
+  * three variables. */
 class SessionGuardSpec extends AnyFunSuite {
-  private val root = Paths.get("src/main/scala/graft")
+  private val root = Paths.get("src/main/scala")
 
   /** (path relative to `root`, 1-based line number, line) of every main source line. */
   private lazy val lines: Seq[(String, Int, String)] = {
@@ -41,15 +42,20 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"env reads outside $allowed: $bad")
   }
 
-  test("session conf is written only by ShuffleSizing and Tables") {
-    val bad = offenders("conf.set(", Set("ops/ShuffleSizing.scala", "core/Tables.scala"))
+  test("session conf is written only by Tables and the stream width pin") {
+    val bad = offenders("conf.set(", Set("graft/core/Tables.scala", "graft/SparkEntry.scala"))
     assert(bad.isEmpty,
-      s"pin widths with ShuffleSizing.withShufflePartitions, restored on throw: $bad")
+      s"carry a width in the plan (repartition(n, key), ShuffleSizing.partitionedCut): $bad")
+  }
+
+  test("no engine line names spark.sql.adaptive.enabled") {
+    val bad = offenders("spark.sql.adaptive.enabled", Set.empty)
+    assert(bad.isEmpty, s"operators run under the session's own AQE: $bad")
   }
 
   test("sessions are built only by the harness recipe, Smoke, GenSf and CodegenLint") {
-    val bad = offenders("SparkSession.builder", Set("bench/Harness.scala",
-      "tools/Smoke.scala", "tools/GenSf.scala", "tools/CodegenLint.scala"))
+    val bad = offenders("SparkSession.builder", Set("graft/bench/Harness.scala",
+      "graft/tools/Smoke.scala", "graft/tools/GenSf.scala", "graft/tools/CodegenLint.scala"))
     assert(bad.isEmpty, s"build the session with graft.bench.Harness.session(): $bad")
   }
 }

@@ -1,10 +1,22 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-class ShuffleSizingSpec extends SparkSpecBase {
+class ShuffleSizingSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  private def withArena[T](body: CacheHygiene.Arena => T): T = {
+    val ck = new CacheHygiene.Arena
+    try body(ck) finally ck.close()
+  }
+
+  /** The shuffle exchanges of `df`'s physical plan, before AQE runs it. */
+  private def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
 
   test("renameForCapture: partitioning survives every rename shape; wider frames narrow") {
     // r17 advice: the one-sided rename (a == aNew XOR b == bNew) used to
@@ -23,12 +35,59 @@ class ShuffleSizingSpec extends SparkSpecBase {
       val renamed = ShuffleSizing.renameForCapture(base, a, aNew, b, bNew)
       assert(renamed.columns.toSeq == Seq(aNew, bNew),
         s"rename ($a->$aNew, $b->$bNew) must project to exactly two columns")
-      val parted = ShuffleSizing.partitionedMaterialize(
-        renamed, col(aNew), _.localCheckpoint())
-      val plan = parted.groupBy(col(aNew)).agg(count(lit(1)))
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains(s"Exchange hashpartitioning($aNew#"),
-        s"rename ($a->$aNew, $b->$bNew) lost the capture partitioning:\n${plan.take(2000)}")
+      withArena { ck =>
+        val parted = ShuffleSizing.partitionedCut(ck, renamed, aNew, 4, _.localCheckpoint())
+        val agg = parted.groupBy(col(aNew)).agg(count(lit(1)))
+        assert(exchanges(agg).isEmpty,
+          s"rename ($a->$aNew, $b->$bNew) lost the capture partitioning:\n" +
+            agg.queryExecution.executedPlan.toString.take(2000))
+      }
+    }
+  }
+
+  test("partitionedCut: exactly `width` partitions, every row in pmod(hash(key), width)") {
+    val rows = (0L until 200L).map(i => (i * 7919L % 113L, i)).toDF("k", "v")
+    // widths under, at and over the session width (4), plus empty inputs
+    val inputs = Seq(1, 4, 8).map(w => (rows, w)) ++
+      Seq(1, 4).map(w => (rows.filter(lit(false)), w))
+    for ((in, w) <- inputs) withArena { ck =>
+      val cut = ShuffleSizing.partitionedCut(ck, in.repartition(3), "k", w, _.localCheckpoint())
+      assert(cut.rdd.getNumPartitions == w, s"width $w")
+      assert(cut.count() == in.count())
+      assert(cut.filter(spark_partition_id() =!= pmod(hash(col("k")), lit(w))).count() == 0,
+        s"width $w: rows outside their stamped partition")
+      assert(exchanges(cut.groupBy(col("k")).agg(sum(col("v")))).isEmpty, s"width $w")
+    }
+  }
+
+  test("a join with an unpartitioned relation exchanges only that side, at the capture's width") {
+    val edges = (0L until 60L).map(i => (i % 17L, i)).toDF("s", "t")
+    val other = (0L until 17L).map(i => (i, i * 10L)).toDF("s", "x").localCheckpoint()
+    for (w <- Seq(1, 2, 8)) withArena { ck =>
+      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w, _.localCheckpoint())
+      val agg = cut.groupBy(col("s")).agg(count(lit(1)).as("n"))
+      val joined = agg.join(other.hint("merge"), Seq("s"), "left")
+      val ex = exchanges(joined)
+      assert(ex.size == 1, s"width $w:\n${joined.queryExecution.executedPlan}")
+      assert(ex.head.outputPartitioning.numPartitions == w)
+      assert(ex.head.child.output.map(_.name).toSet == Set("s", "x"),
+        s"width $w: the capture side was re-exchanged")
+      val expected = (0L until 17L).map(i => (i, 4L - (if (i >= 60 % 17) 1 else 0), i * 10L)).toSet
+      assert(joined.as[(Long, Long, Long)].collect().toSet == expected)
+    }
+  }
+
+  test("roundSides past the broadcast bound: both sides exchanged once, at the capture's width") {
+    val edges = (0L until 60L).map(i => (i % 17L, i)).toDF("s", "t")
+    val nodes = (0L until 60L).map(i => (i, i % 5L)).toDF("id", "label")
+    for (w <- Seq(1, 8)) withArena { ck =>
+      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w, _.localCheckpoint())
+      val (e, n) = ShuffleSizing.roundSides(cut, "t", nodes, "id", broadcastNodes = false, w)
+      val joined = e.join(n.hint("merge"), col("t") === col("id"))
+      val ex = exchanges(joined)
+      assert(ex.size == 2 && ex.forall(_.outputPartitioning.numPartitions == w),
+        s"width $w:\n${joined.queryExecution.executedPlan}")
+      assert(joined.count() == 60L)
     }
   }
 
@@ -59,25 +118,5 @@ class ShuffleSizingSpec extends SparkSpecBase {
     // cap is CapRowsPerPartition-derived (8 partitions of ~400k rows),
     // not the 1.5M spill floor (which would serialize it onto 2)
     assert(boundedWidth(3000000L, 32) == 8)
-  }
-
-  test("withEdgeBoundedShuffle lowers AND raises during the body, restores after") {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    ShuffleSizing.withEdgeBoundedShuffle(spark, 10L) {
-      assert(spark.conf.get(key) == "1") // capped to the edge target
-    }
-    assert(spark.conf.get(key) == before)
-    ShuffleSizing.withEdgeBoundedShuffle(spark, 100L * ShuffleSizing.RowsPerPartition) {
-      assert(spark.conf.get(key) == "100")
-    }
-    assert(spark.conf.get(key) == before)
-    // restored on throw too
-    intercept[RuntimeException] {
-      ShuffleSizing.withEdgeBoundedShuffle(spark, 100L * ShuffleSizing.RowsPerPartition) {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.conf.get(key) == before)
   }
 }
