@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.CacheHygiene
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -132,7 +133,6 @@ object ProductQuantizer {
             m: Int, subDim: Int, k: Int, iters: Int): PqModel = {
     require(m >= 1 && subDim >= 1 && k >= 2 && iters >= 1,
       s"bad PQ shape m=$m subDim=$subDim k=$k iters=$iters")
-    val subs = subRelation(corpus, idCol, vecCol, m, subDim).localCheckpoint()
     val seedVecs = corpus
       .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(k)
       .select(col(vecCol)).collect()
@@ -144,7 +144,10 @@ object ProductQuantizer {
         }
         math.floor(x * 1e6).toLong
       }).toIndexedSeq
-    lloyd(subs, seedModel(seedVecs, m, subDim), iters)
+    CacheHygiene.scope { ck =>
+      lloyd(ck.cut(subRelation(corpus, idCol, vecCol, m, subDim)),
+        seedModel(seedVecs, m, subDim), iters)
+    }
   }
 
   /** PQ codes of every vector: (id, subspace, code) — map-only against
@@ -302,8 +305,10 @@ object ProductQuantizer {
       centroids, "__bucket", nprobe)
     val resid = tagged.withColumn("__r",
       ResidualE6Expr.residualE6(col(vecCol), col("__bucket"), meansE6))
-    val subs = subRelationE6(resid, idCol, "__r", m, subDim, keep = Seq("__bucket"))
-      .localCheckpoint()
+    // the result's codes read this cut: caller-owned, dispose with
+    // CacheHygiene.release
+    val subs = CacheHygiene.scope(
+      _.cut(subRelationE6(resid, idCol, "__r", m, subDim, keep = Seq("__bucket"))))
     val seedVecs = resid
       .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(kCode)
       .select(col("__r")).collect()

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.ops.CacheHygiene
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -735,27 +736,31 @@ object VectorFunctions {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall must be in (0,1], got $targetRecall")
     require(sampleSize >= 1, s"sampleSize must be positive, got $sampleSize")
-    val sample = corpus
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(sampleSize)
-      .select(col(idCol), col(vecCol))
-      .localCheckpoint() // pin the draw; every rung reuses the same queries
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = pairs(bruteForceTopK(sample, corpus, idCol, vecCol, k))
-    val nCentroids = centroids.count().toInt.max(1)
-    val ladder = Seq.newBuilder[NprobePoint]
-    var np = 1
-    while (true) {
-      val got = pairs(ivfTopK(sample, corpus, centroids, idCol, vecCol, k, np))
-      val rec = if (truth.isEmpty) 1.0 else (truth & got).size.toDouble / truth.size
-      ladder += NprobePoint(np, rec)
-      if (rec >= targetRecall || np >= nCentroids)
-        return NprobeCalibration(np, rec, targetRecall, ladder.result())
-      np = math.min(np * 2, nCentroids)
+    CacheHygiene.scope { ck =>
+      // cut the draw; every rung reuses the same queries
+      val sample = ck.cut(corpus
+        .orderBy(md5(col(idCol).cast("string")), col(idCol))
+        .limit(sampleSize)
+        .select(col(idCol), col(vecCol)))
+      def pairs(df: DataFrame): Set[(Long, Long)] =
+        df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val truth = pairs(bruteForceTopK(sample, corpus, idCol, vecCol, k))
+      val nCentroids = centroids.count().toInt.max(1)
+      def rung(np: Int): NprobePoint = {
+        val got = pairs(ivfTopK(sample, corpus, centroids, idCol, vecCol, k, np))
+        NprobePoint(np,
+          if (truth.isEmpty) 1.0 else (truth & got).size.toDouble / truth.size)
+      }
+      val ladder = Seq.newBuilder[NprobePoint]
+      var point = rung(1)
+      ladder += point
+      while (point.recall < targetRecall && point.nprobe < nCentroids) {
+        point = rung(math.min(point.nprobe * 2, nCentroids))
+        ladder += point
+      }
+      NprobeCalibration(point.nprobe, point.recall, targetRecall, ladder.result())
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** [[ivfTopK]] with AUTO nprobe: calibrate to `targetRecall` on a

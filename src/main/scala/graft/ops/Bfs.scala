@@ -13,13 +13,11 @@ import org.apache.spark.sql.functions._
   * reachable set and the visited set is the output accumulator — at
   * 1000 executors each superstep is a normal keyed join whose cost
   * tracks the frontier size, and `maxHops` is a small constant (the
-  * driver loop is over DEPTH, not data). Each superstep's frontier is
-  * cached only until the NEXT frontier materialises, then unpersisted —
-  * cached state is O(1 frontier + visited), not O(hops) — and the loop
-  * exits early once a frontier comes back empty (the reachable set is
-  * exhausted; further supersteps would be empty-join no-ops). For deep
-  * traversals on real clusters, checkpoint every ~10 hops to cut
-  * lineage (documented, not needed at maxHops ≤ 5).
+  * driver loop is over DEPTH, not data). Each superstep cuts the
+  * visited set and frees the previous hop's cut — held state is
+  * O(visited), not O(hops), and lineage never grows with depth — and
+  * the loop exits early once a frontier comes back empty (the reachable
+  * set is exhausted; further supersteps would be empty-join no-ops).
   *
   * The RETURNED frame is left persisted on purpose — callers
   * invariably iterate it more than once (join + stats) and dropping it
@@ -93,8 +91,7 @@ object Bfs {
     // frontier is a filter over that shallow LogicalRDD, and the hop
     // count is a cheap scan of the checkpoint blocks. The previous
     // hop's blocks are freed once replaced.
-    def checkpoint(df: DataFrame): DataFrame = ck.cut(df, _.localCheckpoint())
-    var visited = checkpoint(
+    var visited = ck.cut(
       sources.select(col(sources.columns.head).as("id"))
         .distinct().withColumn("hops", lit(0)))
     var frontier = visited.select(col("id"))
@@ -116,7 +113,7 @@ object Bfs {
       // size is the count DELTA over the materialized blocks — the
       // anti-join guarantees next ∩ visited = ∅ and next is distinct,
       // so |nv| − |visited| IS next.count().
-      val nv = checkpoint(visited.union(next))
+      val nv = ck.cut(visited.union(next))
       val nvCount = nv.count()
       val reached = nvCount - frontierTotal
       if (reached == 0) {

@@ -75,8 +75,9 @@ object BpeTrain {
     * BPE pair counts)", records the 64/256-merge series).
     *
     * Word-table replaces stay map-only pure lineage with a cut every
-    * `checkpointInterval` steps; the per-step delta (affected-slice
-    * pair vocab) is the only thing collected.
+    * `checkpointInterval` steps, each freeing the one before; the
+    * per-step delta (affected-slice pair vocab) is the only thing
+    * collected, and no cut outlives the call.
     *
     * SMALL-CORPUS FAST PATH: when the distinct-word table has at most
     * `driverWordLimit` rows (one cheap count on the already-cached
@@ -91,9 +92,8 @@ object BpeTrain {
     * of types) exceed the limit and take the distributed path. */
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int,
                   checkpointInterval: Int = 4,
-                  materialize: DataFrame => DataFrame = _.localCheckpoint(),
                   driverWordLimit: Long = 200000L): Seq[Merge] =
-    learnLoop(docs, textCol, nMerges, checkpointInterval, materialize,
+    learnLoop(docs, textCol, nMerges, checkpointInterval,
       collectStats = false, driverWordLimit)._1
 
   /** One learned step's probe record: the merge, how many distinct
@@ -107,10 +107,8 @@ object BpeTrain {
     * Always takes the DISTRIBUTED path (the thing being measured),
     * regardless of corpus size. */
   def learnMergesInstrumented(docs: DataFrame, textCol: String, nMerges: Int,
-                              checkpointInterval: Int = 4,
-                              materialize: DataFrame => DataFrame = _.localCheckpoint())
-      : (Seq[Merge], Seq[StepStat]) =
-    learnLoop(docs, textCol, nMerges, checkpointInterval, materialize,
+                              checkpointInterval: Int = 4): (Seq[Merge], Seq[StepStat]) =
+    learnLoop(docs, textCol, nMerges, checkpointInterval,
       collectStats = true, driverWordLimit = 0L)
 
   /** Deterministic cross-engine pair order for the argmax tie-break:
@@ -133,17 +131,26 @@ object BpeTrain {
 
   private def learnLoop(docs: DataFrame, textCol: String, nMerges: Int,
                         checkpointInterval: Int,
-                        materialize: DataFrame => DataFrame,
                         collectStats: Boolean,
                         driverWordLimit: Long): (Seq[Merge], Seq[StepStat]) = {
     require(nMerges >= 1, s"nMerges must be positive, got $nMerges")
     require(checkpointInterval >= 1, s"interval must be positive, got $checkpointInterval")
-    var words = materialize(
-      wordCounts(docs, textCol).select(encode(col("word")).as("seq"), col("freq")))
-    if (driverWordLimit > 0 && words.count() <= driverWordLimit) {
-      val arr = words.collect().map(r => (r.getString(0), r.getLong(1)))
-      return (driverLoop(arr, nMerges), Seq.empty)
+    CacheHygiene.scope { ck =>
+      val words = ck.cut(
+        wordCounts(docs, textCol).select(encode(col("word")).as("seq"), col("freq")))
+      if (driverWordLimit > 0 && words.count() <= driverWordLimit)
+        (driverLoop(words.collect().map(r => (r.getString(0), r.getLong(1))), nMerges), Seq.empty)
+      else distributedLoop(ck, words, nMerges, checkpointInterval, collectStats)
     }
+  }
+
+  /** The merge loop over the cut word table, cutting its replace chain
+    * every `checkpointInterval` steps in `ck`. */
+  private def distributedLoop(ck: CacheHygiene.Arena, words0: DataFrame, nMerges: Int,
+                              checkpointInterval: Int,
+                              collectStats: Boolean): (Seq[Merge], Seq[StepStat]) = {
+    var words = words0
+    var lastCut = words0
     // The maintained pair-count table lives in DRIVER memory: one full
     // aggregate at init, then per-step deltas folded into the map.
     // This is model-sized state, not data: the pair vocab is the
@@ -204,7 +211,7 @@ object BpeTrain {
         // localCheckpoint job (one scheduler round-trip per step
         // instead of two).
         val affected0 = words.filter(col("seq").contains(pat))
-        val affected = if (collectStats) materialize(affected0) else affected0
+        val affected = if (collectStats) ck.cut(affected0) else affected0
         val after = affected.withColumn("seq", replace(col("seq"), lit(pat), lit(rep)))
         // the after−before delta, collected (affected-pair-vocab
         // sized) and folded into the driver map
@@ -214,9 +221,15 @@ object BpeTrain {
           .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("cnt"))
           .collect())
         words = words.withColumn("seq", replace(col("seq"), lit(pat), lit(rep)))
-        if (step % checkpointInterval == 0) words = materialize(words)
-        if (collectStats)
+        if (step % checkpointInterval == 0) {
+          words = ck.cut(words)
+          ck.free(lastCut)
+          lastCut = words
+        }
+        if (collectStats) {
           stats += StepStat(step, affected.count(), (System.nanoTime() - t0) / 1e9)
+          ck.free(affected)
+        }
         step += 1
       }
     }

@@ -1,28 +1,29 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Persistence bookkeeping for the iterative graph operators
-  * ([[PageRank]] / [[LabelProp]] / [[Bfs]] / [[GraphCapture]] / the CC
-  * rounds in Dedup).
+/** The only code that cuts lineage, and the owner of every cut.
   *
-  * Those loops materialize per-round state (localCheckpoint by
-  * default) plus an |E|-sized partitioned edge checkpoint
-  * ([[ShuffleSizing.partitionedCut]]). A checkpointed Dataset
-  * exposes no `unpersist`, so without explicit disposal every call
-  * leaked the edge footprint for the session lifetime (r15 advice).
-  * The contract enforced here: ONLY the returned frame stays
-  * persisted, and that frame is SELF-CONTAINED — its lineage is cut
-  * with one final materialization BEFORE the intermediates are
-  * released, so a recomputed partition never chases freed checkpoint
-  * blocks (the r15 Bfs lineage finding).
+  * A cut is a `localCheckpoint` recorded in an [[Arena]]: the
+  * iterative operators' per-round state, the |E|-sized partitioned
+  * edge checkpoint ([[ShuffleSizing.partitionedCut]]), and every pinned
+  * frame that a plan would otherwise compute twice. A checkpointed
+  * Dataset exposes no `unpersist`, so a cut made outside an arena was
+  * held until the ContextCleaner happened to collect it (r15 advice).
+  * Here every cut belongs to the arena of one call: on return the
+  * cuts the returned frame reads pass to the caller (dispose with
+  * [[release]]) and every other cut is released; the result is
+  * SELF-CONTAINED, its lineage cut before the intermediates go, so a
+  * recomputed partition never chases freed blocks (the r15 Bfs
+  * lineage finding).
   *
-  * Ownership is recorded per cut ([[Arena]]), never by diffing the
-  * session's persistent-RDD registry: an RDD that another query
-  * persists on the same session while an operator runs is not the
-  * operator's and is never released by it. */
+  * Ownership is recorded per cut, never by diffing the session's
+  * persistent-RDD registry: an RDD that another query persists on the
+  * same session while an operator runs is not the operator's and is
+  * never released by it. Cuts are executor-local: every deployment of
+  * the engine loses an executor only with its JVM. */
 private[graft] object CacheHygiene {
 
   /** Run a DELIBERATE checkpoint-release block with the known
@@ -42,32 +43,47 @@ private[graft] object CacheHygiene {
     finally org.apache.logging.log4j.core.config.Configurator.setLevel(logger, prev)
   }
 
-  /** The RDD behind a frame's own LogicalRDD root — what
-    * `localCheckpoint` (eager, lazy or over a repartition) registers as
-    * persisted. None for any other root. */
+  /** The RDD behind a frame's own LogicalRDD root — what a cut
+    * registers as persisted. None for any other root. */
   private def rootRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed match {
       case l: LogicalRDD => Some(l.rdd)
       case _ => None
     }
 
+  /** The SparkContext local property that names a job's stages. */
+  private val CallSiteShort = "callSite.short"
+
+  /** "localCheckpoint at File.scala:N" for the first engine frame
+    * outside the cut helpers. */
+  private def callerSite(): String =
+    Thread.currentThread.getStackTrace.find { f =>
+      val c = f.getClassName
+      c.startsWith("graft.") && !c.startsWith("graft.ops.CacheHygiene") &&
+        !c.startsWith("graft.ops.ShuffleSizing")
+    }.fold("localCheckpoint")(f => s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+
   /** Ids of the RDDs at the frame's LogicalRDD leaves. */
   private def reads(df: DataFrame): Set[Int] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }.toSet
 
-  /** The checkpoints one operator call (or one [[GraphCapture]]) made.
-    * Single-threaded: one arena belongs to one call. A persisting
-    * `materialize` must be EAGER (the default localCheckpoint is):
-    * [[free]] and the scope exit drop blocks that a lazy cut would
-    * still have to compute from. */
+  /** The cuts one operator call (or one [[GraphCapture]]) made.
+    * Single-threaded: one arena belongs to one call. */
   final class Arena private[graft] () {
     private val owned = scala.collection.mutable.HashMap.empty[Int, RDD[_]]
 
-    /** `materialize(df)`, recording the RDD behind the result's
-      * LogicalRDD root. `materialize` returns a new cut or a plain plan
-      * (identity, a parquet round trip), whose root records nothing. */
-    def cut(df: DataFrame, materialize: DataFrame => DataFrame): DataFrame = {
-      val out = materialize(df)
+    /** Cut `df`'s lineage with a `localCheckpoint` and record it. Eager
+      * by default: the blocks exist on return, so anything the plan
+      * read may be freed. A lazy cut is computed by the first job that
+      * reads it (CC's rounds fold the block write into their
+      * convergence sum); free nothing it reads before that job runs. */
+    def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
+      // name an eager cut's job after the operator line that asked for
+      // it; Spark's own call site would be this line for every cut
+      val sc = df.sparkSession.sparkContext
+      val prev = sc.getLocalProperty(CallSiteShort)
+      sc.setLocalProperty(CallSiteShort, callerSite())
+      val out = try df.localCheckpoint(eager) finally sc.setLocalProperty(CallSiteShort, prev)
       rootRdd(out).foreach(r => owned(r.id) = r)
       out
     }
@@ -89,19 +105,23 @@ private[graft] object CacheHygiene {
   }
 
   /** Run `body` with a fresh [[Arena]]. On return, every cut it recorded
-    * is released except those the returned frame still reads (its
-    * final cut, caller-owned: dispose with [[release]]); on an
-    * exception, all of them. */
-  def scope(body: Arena => DataFrame): DataFrame = {
+    * is released except those a returned frame still reads (its final
+    * cut, caller-owned: dispose with [[release]]); a result of any other
+    * type (a model, a count) keeps none. On an exception, all of them
+    * are released. */
+  def scope[T](body: Arena => T): T = {
     val ck = new Arena
     val out =
       try body(ck)
       catch { case e: Throwable => ck.close(); throw e }
-    ck.closeExcept(reads(out))
+    ck.closeExcept(out match {
+      case ds: Dataset[_] => reads(ds.toDF())
+      case _ => Set.empty
+    })
     out
   }
 
-  /** Fully release a frame returned by the graph operators: the
+  /** Fully release a frame returned by a scope: the
     * CacheManager entry if it is `.cache()`-backed, plus the
     * checkpoint RDD at any LogicalRDD leaf (`Dataset.unpersist` is a
     * silent no-op on a checkpointed frame). Safe on any frame —

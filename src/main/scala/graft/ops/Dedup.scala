@@ -380,34 +380,31 @@ object Dedup {
     * shared by the cross-index and intra-batch passes; the index side
     * stays pure lineage.
     *
-    * Storage retention: each call eagerly materialises one
-    * localCheckpoint of the batch's banded signatures (~k longs per
-    * batch doc). The blocks must outlive the returned (lazy) frame, so
-    * they are NOT unpersisted here; they are freed by the session's
-    * ContextCleaner once the returned frame's plan is GC'd. Long-lived
-    * sessions ingesting many arrival batches should not hold references
-    * to consumed result frames (the bench harness's sweep between
-    * runs, `graft.bench.Harness.reset`, is the explicit-release
-    * pattern; PLANS.md Round 9, "ScaleProbe incfuzzy series"). */
+    * Storage retention: each call eagerly cuts the batch's banded
+    * signatures (~k longs per batch doc). The returned (lazy) frame
+    * reads that cut, so it is caller-owned: release it with
+    * [[CacheHygiene.release]] once the result is consumed — a
+    * long-lived session ingesting many arrival batches otherwise holds
+    * one block set per batch. */
   def incrementalFuzzyDedup(index: DataFrame, batch: DataFrame,
                             idCol: String, textCol: String, threshold: Double,
                             n: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
-                            maxBroadcastBatchDocs: Int = 20000): DataFrame = {
-    // bounded guard probe, same rule as crossMinhashMatches
-    val batchSmall =
-      batch.select(col(idCol)).limit(maxBroadcastBatchDocs + 1).count() <=
-        maxBroadcastBatchDocs
-    val batchBanded = bandedSigs(batch, idCol, textCol, n, k, rowsPerBand)
-      .localCheckpoint(true)
-    val crossDrops = crossMatchesFromBanded(
-      bandedSigs(index, idCol, textCol, n, k, rowsPerBand),
-      batchBanded, batchSmall, threshold, k)
-      .select(col("bench_id").as(idCol))
-    val intraDrops = candidatesFromBanded(batchBanded, k)
-      .filter(col("sig_agreement") >= threshold)
-      .select(col("id_b").as(idCol))
-    batch.join(crossDrops.union(intraDrops).distinct(), Seq(idCol), "left_anti")
-  }
+                            maxBroadcastBatchDocs: Int = 20000): DataFrame =
+    CacheHygiene.scope { ck =>
+      // bounded guard probe, same rule as crossMinhashMatches
+      val batchSmall =
+        batch.select(col(idCol)).limit(maxBroadcastBatchDocs + 1).count() <=
+          maxBroadcastBatchDocs
+      val batchBanded = ck.cut(bandedSigs(batch, idCol, textCol, n, k, rowsPerBand))
+      val crossDrops = crossMatchesFromBanded(
+        bandedSigs(index, idCol, textCol, n, k, rowsPerBand),
+        batchBanded, batchSmall, threshold, k)
+        .select(col("bench_id").as(idCol))
+      val intraDrops = candidatesFromBanded(batchBanded, k)
+        .filter(col("sig_agreement") >= threshold)
+        .select(col("id_b").as(idCol))
+      batch.join(crossDrops.union(intraDrops).distinct(), Seq(idCol), "left_anti")
+    }
 
   /** Corpus-level boilerplate LINE removal (CCNet / RefinedWeb style):
     * drop every line that appears verbatim in at least `minDocs`
@@ -547,8 +544,7 @@ object Dedup {
     * Output: the updated full assignment, same contract as
     * [[connectedComponents]] (nodes that appear in some pair). */
   def incrementalComponents(components: DataFrame, newPairs: DataFrame,
-                            maxIter: Int = 50,
-                            checkpointDir: Option[String] = None): DataFrame = {
+                            maxIter: Int = 50): DataFrame = {
     val compA = components.select(col("doc_id").as("__a"), col("component_id").as("__ra"))
     val compB = components.select(col("doc_id").as("__b"), col("component_id").as("__rb"))
     val mapped = newPairs
@@ -558,7 +554,7 @@ object Dedup {
       .select(coalesce(col("__ra"), col("__a")).as("id_a"),
         coalesce(col("__rb"), col("__b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
-    val superMap = connectedComponents(mapped, maxIter, checkpointDir)
+    val superMap = connectedComponents(mapped, maxIter)
     val sm = superMap.select(col("doc_id").as("__old"), col("component_id").as("__new"))
     val rerooted = components
       .join(broadcast(sm), col("component_id") === col("__old"), "left")
@@ -820,36 +816,21 @@ object Dedup {
     * previous one so storage stays O(|V|), not O(|V| * rounds).
     *
     * Exchange-free rounds (r16, the LabelProp/PageRank recipe): the
-    * neighbor-min aggregate keys on `s`, so on the localCheckpoint
-    * path the edge relation is captured hash-partitioned on `s`
+    * neighbor-min aggregate keys on `s`, so the edge relation is
+    * captured hash-partitioned on `s`
     * ([[ShuffleSizing.partitionedCut]]) and the |V|-row label
     * table rides the round's join as an explicit broadcast (bounded by
     * [[ShuffleSizing.BroadcastNodeLimit]], counted once off r0) — the
     * per-round |E|-row join + aggregate then plans NO exchange at all;
     * only the |V|-sized stepped/jumped label joins move. At a real
     * cluster this is per-round |V| broadcast traffic instead of
-    * per-round |E| shuffle traffic. The reliable (parquet-cut) mode
-    * keeps the prior shuffling plan — parquet scratch files cannot
-    * carry a partitioning — and past the broadcast bound each round
-    * falls back to exactly the prior plan as well.
+    * per-round |E| shuffle traffic. Past the broadcast bound each
+    * round falls back to the prior shuffling plan.
     *
-    * Lineage cuts: with a directory available, each round is written to
-    * and re-read from parquet at a deterministic path in that (HDFS/
-    * object-store) location — fault-tolerant the way executor-local
-    * checkpoint blocks are not, written exactly once (no lineage
-    * recomputation the way `RDD.checkpoint` without a persist
-    * recomputes), and the previous round's files are deleted as soon as
-    * the next round lands. Pass `checkpointDir` as a scratch directory
-    * THIS RUN OWNS (unique per call): the final round's files back the
-    * returned DataFrame, and the caller deletes that directory once the
-    * result is consumed. With no explicit dir, the SparkContext
-    * checkpoint dir is used under a unique `graft-cc-*` subdirectory
-    * (collision-free for concurrent runs, but then nothing can clean
-    * the final round — prefer the explicit form in long-lived
-    * sessions). Without either, rounds cut lineage via
-    * `localCheckpoint`: single-node/bench mode, where executor loss is
-    * JVM death anyway, and the LAZY cut merges block persist and
-    * convergence aggregate into one job per round.
+    * Lineage cuts come from the call's [[CacheHygiene.scope]]: each
+    * round's cut is LAZY, so its block write and the convergence
+    * aggregate run as one job per round. The returned frame is a final
+    * cut, caller-owned: dispose with [[CacheHygiene.release]].
     *
     * Small-graph fast path: after the edge list is materialized (its
     * count is then a free scan), an edge list at or under
@@ -860,53 +841,9 @@ object Dedup {
     * for graphs that genuinely need them (dedup at 100 TB: billions of
     * pairs). Results are identical on either path. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          checkpointDir: Option[String] = None,
                           driverMaxEdges: Long = 1000000L,
-                          assumeSymmetric: Boolean = false): DataFrame = {
-    val spark = pairs.sparkSession
-    // baseOwned: we invented the graft-cc-* subdir, so on failure the
-    // whole base is ours to remove; an explicit caller dir might sit
-    // inside shared scratch, so there only paths THIS run wrote go
-    val autoBase = spark.sparkContext.getCheckpointDir
-      .map(d => s"$d/graft-cc-${java.util.UUID.randomUUID()}")
-    val ckptBase = checkpointDir.orElse(autoBase)
-    val baseOwned = checkpointDir.isEmpty
-    val created = scala.collection.mutable.LinkedHashSet.empty[String]
-    def fs(p: org.apache.hadoop.fs.Path) =
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Enforce the run-owns-the-dir contract instead of trusting it: a
-    // caller who passes a shared scratch root (e.g. the session
-    // checkpoint dir itself) would otherwise have same-named files
-    // (edges, r*) overwritten here and deleted on failure cleanup.
-    checkpointDir.foreach { base =>
-      val p = new org.apache.hadoop.fs.Path(base)
-      val f = fs(p)
-      require(!f.exists(p) || f.listStatus(p).isEmpty,
-        s"checkpointDir must be empty/nonexistent (this run owns it): $base")
-    }
-    // every local-checkpoint block this call cuts is recorded in the
-    // arena and released before return — per round as soon as the next
-    // round lands, the rest behind a final self-contained cut of the
-    // result (the r15 LabelProp/PageRank discipline), all of it on
-    // failure
+                          assumeSymmetric: Boolean = false): DataFrame =
     CacheHygiene.scope { ck =>
-    def cut(df: DataFrame, name: String, lazyLocal: Boolean): DataFrame = ckptBase match {
-      case Some(base) =>
-        val p = s"$base/$name"
-        created += name
-        df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      case None => ck.cut(df, _.localCheckpoint(!lazyLocal))
-    }
-    // a dead cut: its local blocks, or its checkpoint files
-    def done(df: DataFrame, name: String): Unit = ckptBase match {
-      case Some(base) =>
-        val p = new org.apache.hadoop.fs.Path(s"$base/$name")
-        created -= name
-        fs(p).delete(p, true)
-      case None => ck.free(df)
-    }
-    try {
       // materialize the edge list once — every propagation round joins
       // against it, and without the cut each round would re-run the
       // whole upstream pair-generation pipeline
@@ -934,120 +871,63 @@ object Dedup {
       // dropped as soon as the edge cut lands.
       val directed = pairs.select(col("id_a").as("s"), col("id_b").as("t"))
       val edges =
-        if (assumeSymmetric) cut(directed, "edges", lazyLocal = false)
+        if (assumeSymmetric) ck.cut(directed)
         else {
-          val p0 = cut(directed, "pairs0", lazyLocal = false)
-          val e = cut(p0.unionByName(p0.select(col("t").as("s"), col("s").as("t")))
-            .distinct(), "edges", lazyLocal = false)
-          done(p0, "pairs0")
+          val p0 = ck.cut(directed)
+          val e = ck.cut(p0.unionByName(p0.select(col("t").as("s"), col("s").as("t"))).distinct())
+          ck.free(p0)
           e
         }
-      // initial labels fuse round 1: starting from identity, the first
-      // round's neighbor-min over identity labels IS min(v, min
-      // neighbor) — computable directly as one aggregate over the edge
-      // list, saving a full join round (the materialized cut keeps the
-      // loop's per-round plans identical from iteration one)
       val edgeCount = edges.count()
       if (edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
-          edgeCount <= driverMaxEdges) {
+          edgeCount <= driverMaxEdges)
         // a collected result: the scope releases the edge blocks
-        val out = driverComponents(edges, sOnlyVertices = assumeSymmetric)
-        done(edges, "edges")
-        out
-      } else {
-      // distributed rounds: one partitioned cut, at the width the
-      // edge count above derives ([[ShuffleSizing.boundedWidth]])
-      val width = ShuffleSizing.boundedWidth(edgeCount, ShuffleSizing.sessionWidth(spark))
-      // r16: the exchange-free graph-round recipe (LabelProp/PageRank,
-      // r15) applied to CC. Every round's neighbor-min aggregate keys
-      // on s, so an S-partitioned edge checkpoint plus an explicitly
-      // broadcast label side makes the |E|-row aggregate partition-
-      // local: edges never re-shuffle per round, and only |V|-sized
-      // relations (the stepped/jumped label joins) move. Only on the
-      // localCheckpoint path — a parquet cut cannot carry partitioning
-      // (no bucketing on scratch files); the reliable-checkpoint mode
-      // keeps the prior shuffling plan. Beyond the broadcast bound the
-      // round falls back to the prior plan too, its join exchanged at
-      // `width`.
-      val parted =
-        if (ckptBase.isEmpty) {
-          val p = ShuffleSizing.partitionedCut(ck, edges, "s", width, _.localCheckpoint())
-          // the unpartitioned first cut is dead once the capture is
-          // materialized — releasing it halves the standing edge
-          // footprint for the whole round loop (sf10 drill: two
-          // 240M-row block sets otherwise live simultaneously)
-          ck.free(edges)
-          p
-        } else edges
-      val labels = ccRounds(parted, width, maxIter, cut, done)
-      done(edges, "edges")
-      val out0 = labels.select(col("v").as("doc_id"), col("comp").as("component_id"))
-      // self-contained result BEFORE the intermediates are released
-      // (the Bfs lineage rule): on the local path the final cut owns
-      // its own blocks; on the parquet path the final round's files
-      // back the result already (caller-owned directory)
-      if (ckptBase.isEmpty) ck.cut(out0, _.localCheckpoint()) else out0
+        driverComponents(edges, sOnlyVertices = assumeSymmetric)
+      else {
+        // distributed rounds: one partitioned cut, at the width the
+        // edge count above derives ([[ShuffleSizing.boundedWidth]])
+        val width = ShuffleSizing.boundedWidth(edgeCount,
+          ShuffleSizing.sessionWidth(pairs.sparkSession))
+        val parted = ShuffleSizing.partitionedCut(ck, edges, "s", width)
+        // the unpartitioned first cut is dead once the capture is
+        // materialized — releasing it halves the standing edge
+        // footprint for the whole round loop (sf10 drill: two
+        // 240M-row block sets otherwise live simultaneously)
+        ck.free(edges)
+        ccRounds(ck, parted, width, maxIter)
       }
-    } catch {
-      // on failure nothing of the run is consumable — the scope frees
-      // the local blocks; remove exactly what this run wrote: every
-      // round file it created, plus the base dir only when the run
-      // invented it (an explicit caller dir may live inside shared
-      // scratch where a recursive base delete would take unrelated
-      // data with it). Fatal errors propagate untouched.
-      case scala.util.control.NonFatal(e) =>
-        ckptBase.foreach { base =>
-          val victims =
-            if (baseOwned) Seq(new org.apache.hadoop.fs.Path(base))
-            else created.toSeq.map(n => new org.apache.hadoop.fs.Path(s"$base/$n"))
-          victims.foreach { p =>
-            try fs(p).delete(p, true) catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-        throw e
     }
-    }
-  }
 
   /** [[connectedComponents]] over a SHARED [[GraphCapture]] — the
     * capture (symmetrize + materialize + s-partition) is paid once by
     * the caller and reused across the graph family; this call is
-    * rounds-only (localCheckpoint mode; a parquet-checkpoint run wants
-    * the direct form, whose scratch-dir contract the shared capture
-    * cannot honor). The capture satisfies the symmetric contract by
-    * construction, so the driver fast path uses the same s-only vertex
-    * set as the rounds. Bit-identical to the direct form on the same
-    * graph (spec-pinned). */
+    * rounds-only, and the capture blocks stay caller-owned. The capture
+    * satisfies the symmetric contract by construction, so the driver
+    * fast path uses the same s-only vertex set as the rounds.
+    * Bit-identical to the direct form on the same graph (spec-pinned). */
   def connectedComponents(g: GraphCapture, maxIter: Int,
                           driverMaxEdges: Long): DataFrame =
     if (g.longIds && g.edgeCount <= driverMaxEdges)
       driverComponents(g.keyed("s", "t"), sOnlyVertices = true)
-    else CacheHygiene.scope { ck =>
-      val labels = ccRounds(g.keyed("s", "t"), g.width, maxIter,
-        cut = (df, _, lazyLocal) => ck.cut(df, _.localCheckpoint(!lazyLocal)),
-        done = (df, _) => ck.free(df))
-      // self-contained result BEFORE the round intermediates are
-      // released; the capture blocks stay caller-owned
-      ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")),
-        _.localCheckpoint())
-    }
+    else CacheHygiene.scope(ccRounds(_, g.keyed("s", "t"), g.width, maxIter))
 
   def connectedComponents(g: GraphCapture): DataFrame =
     connectedComponents(g, maxIter = 50, driverMaxEdges = 1000000L)
 
   /** The neighbor-min + pointer-jump rounds over an s-partitioned
     * symmetric edge relation cut `width` wide: returns the converged
-    * (v, comp) labels (throws past `maxIter`). `cut`/`done` are the caller's
-    * lineage-cut and dead-cut disposal hooks — parquet files or
-    * localCheckpoint blocks in [[connectedComponents]]'s direct form,
-    * localCheckpoint blocks for shared captures. Each round's cut is
-    * disposed of as soon as the next round lands. */
-  private def ccRounds(parted: DataFrame, width: Int, maxIter: Int,
-                       cut: (DataFrame, String, Boolean) => DataFrame,
-                       done: (DataFrame, String) => Unit): DataFrame = {
-    var labels = cut(parted.groupBy(col("s").as("v"))
-      .agg(least(min(col("s")), min(col("t"))).as("comp")), // min(s)=s per group
-      "r0", false)
+    * (doc_id, component_id) labels behind a final cut in `ck`, read by
+    * nothing else (throws past `maxIter`). Each round's cut is freed as
+    * soon as the next round lands. */
+  private def ccRounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
+                       maxIter: Int): DataFrame = {
+    // initial labels fuse round 1: starting from identity, the first
+    // round's neighbor-min over identity labels IS min(v, min
+    // neighbor) — computable directly as one aggregate over the edge
+    // list, saving a full join round (the cut keeps the loop's
+    // per-round plans identical from iteration one)
+    var labels = ck.cut(parted.groupBy(col("s").as("v"))
+      .agg(least(min(col("s")), min(col("t"))).as("comp"))) // min(s)=s per group
     val smallV = labels.count() <= ShuffleSizing.BroadcastNodeLimit
     var iter = 0
     var converged = false
@@ -1067,23 +947,25 @@ object Dedup {
       // (comp(comp(v))) — the label table acts as its own shortcut
       // graph. Both sides of the self-join share the identical subplan,
       // so the stepped shuffle runs once (ReusedExchange), and only the
-      // jumped result is cut — one materialisation per round.
-      val jumped = cut(stepped.join(
+      // jumped result is cut — one materialisation per round, written
+      // by the convergence sum below (a lazy cut).
+      val jumped = ck.cut(stepped.join(
           stepped.select(col("v").as("comp"), col("comp").as("jcomp")), Seq("comp"), "left")
         .select(col("v"), least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp")),
-        s"r${iter + 1}", true)
+        eager = false)
       val s = Option(jumped.agg(sum(col("comp").cast(DecimalType(38, 0)))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
       converged = prevSum != null && s.compareTo(prevSum) == 0
       prevSum = s
-      done(labels, s"r$iter") // the previous round is dead now
+      ck.free(labels) // the previous round is dead now
       labels = jumped
       iter += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    labels
+    // self-contained result BEFORE the round intermediates are released
+    ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")))
   }
 
   /** Driver union-find fast path. `sOnlyVertices` mirrors the
@@ -1125,14 +1007,9 @@ object Dedup {
     * tiny next to the corpus, in which case AQE turns the anti-join
     * into a broadcast at runtime and the corpus is never shuffled (no
     * forced hint: a heavily duplicated corpus can have a huge drop
-    * list, where the shuffled anti-join is the correct plan).
-    *
-    * `checkpointDir` follows [[connectedComponents]]' contract: a
-    * scratch directory this run owns, whose surviving files back the
-    * returned frame — delete it after the result is consumed. */
-  def dedupCorpus(docs: DataFrame, idCol: String, pairs: DataFrame,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    val drops = connectedComponents(pairs, checkpointDir = checkpointDir)
+    * list, where the shuffled anti-join is the correct plan). */
+  def dedupCorpus(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val drops = connectedComponents(pairs)
       .filter(col("doc_id") =!= col("component_id"))
       .select(col("doc_id").as(idCol))
     docs.join(drops, Seq(idCol), "left_anti")
@@ -1152,11 +1029,10 @@ object Dedup {
     * the loser list ships back as a broadcast anti-join exactly like
     * [[dedupCorpus]]'s drop list — the full corpus never shuffles. */
   def dedupCorpusKeepBest(docs: DataFrame, idCol: String, pairs: DataFrame,
-                          ordering: Seq[Column],
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          ordering: Seq[Column]): DataFrame = {
     require(!docs.columns.exists(Set("component_id", "__rn")),
       "docs must not already contain component_id/__rn (internal ranking columns)")
-    val comps = connectedComponents(pairs, checkpointDir = checkpointDir)
+    val comps = connectedComponents(pairs)
       .withColumnRenamed("doc_id", idCol)
     val clustered = docs.join(comps, Seq(idCol))
     val w = org.apache.spark.sql.expressions.Window

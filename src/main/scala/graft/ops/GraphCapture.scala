@@ -92,20 +92,19 @@ object GraphCapture {
     * released as soon as the capture exists. Everything after is
     * rounds-only for every consumer. */
   def capture(pairs: DataFrame, aCol: String, bCol: String,
-              shape: Shape = Pairs,
-              materialize: DataFrame => DataFrame = _.localCheckpoint()): GraphCapture = {
+              shape: Shape = Pairs): GraphCapture = {
     val ck = new CacheHygiene.Arena
     try {
       // guarded rename: a redundant self-alias here would erase the
       // capture's recorded partitioning ([[ShuffleSizing.renameForCapture]])
       val dir = ShuffleSizing.renameForCapture(pairs, aCol, "s", bCol, "t")
-      val flat = if (shape == Symmetric) None else Some(ck.cut(dir, materialize))
+      val flat = if (shape == Symmetric) None else Some(ck.cut(dir))
       val sym = flat.fold(dir) { d0 =>
         val both = d0.unionByName(d0.select(col("t").as("s"), col("s").as("t")))
         if (shape == OneWay) both else both.filter(col("s") =!= col("t")).distinct()
       }
       val (parted, n, width) =
-        ShuffleSizing.partitionedMaterializeCounted(ck, sym, "s", materialize)
+        ShuffleSizing.partitionedMaterializeCounted(ck, sym, "s")
       flat.foreach(ck.free)
       new GraphCapture(parted, n, width, ck)
     } catch { case e: Throwable => ck.close(); throw e }

@@ -115,10 +115,19 @@ object IncrementalMinMax {
     *
     * Fails closed (raise_error) on: unknown ops, and a delete of an
     * in-threshold value deeper than its recorded multiplicity — both
-    * mean the CDC stream and the state have diverged. */
+    * mean the CDC stream and the state have diverged.
+    *
+    * With a `currentBase`, the result reads a cut of the merged state:
+    * it is caller-owned, dispose with [[CacheHygiene.release]]. */
   def mergeDelta(state: DataFrame, delta: DataFrame, groupCols: Seq[String],
                  valueCol: String, opCol: String, k: Int = 4,
-                 currentBase: Option[DataFrame] = None): DataFrame = {
+                 currentBase: Option[DataFrame] = None): DataFrame =
+    CacheHygiene.scope(merge(_, state, delta, groupCols, valueCol, opCol, k, currentBase))
+
+  /** [[mergeDelta]] with its cut recorded in `ck`. */
+  private def merge(ck: CacheHygiene.Arena, state: DataFrame, delta: DataFrame,
+                    groupCols: Seq[String], valueCol: String, opCol: String, k: Int,
+                    currentBase: Option[DataFrame]): DataFrame = {
     require(k >= 1, s"reserve size k must be >= 1, got $k")
     val grp = groupCols.map(col)
     val d = delta.withColumn("__sign", IncrementalAgg.cdcSign(opCol))
@@ -216,8 +225,8 @@ object IncrementalMinMax {
       case Some(base) =>
         // per-group rebuild: semi-join the base on the evicted keys
         // only. The stitched frame is read twice (survivors + keys) —
-        // pin it so the merge plan runs once.
-        val pinned = stitched.localCheckpoint()
+        // cut it so the merge plan runs once.
+        val pinned = ck.cut(stitched)
         val evictedKeys = pinned.filter(col("__evicted")).select(grp: _*)
         val eCond = IncrementalAgg.keyCond("__mm_b", "__mm_e", groupCols)
         val rebuilt = aggState(
@@ -240,12 +249,15 @@ object IncrementalMinMax {
     * generation discipline (committed `state_gen=<id>` directories,
     * idempotent re-delivery, reset-checkpoint refusal, two-generation
     * retention) with the min/max reserve schema; `currentBase` as in
-    * [[mergeDelta]]. */
+    * [[mergeDelta]]. The merge's cut is released once the generation
+    * lands. */
   def applyBatch(batch: DataFrame, batchId: Long, groupCols: Seq[String],
                  valueCol: String, opCol: String, stateRoot: String,
                  k: Int = 4, currentBase: Option[DataFrame] = None): Unit =
-    IncrementalAgg.landBatch(batch, batchId, stateRoot, emptyState(batch, groupCols),
-      prior => mergeDelta(prior, batch, groupCols, valueCol, opCol, k, currentBase))
+    CacheHygiene.scope { ck =>
+      IncrementalAgg.landBatch(batch, batchId, stateRoot, emptyState(batch, groupCols),
+        prior => merge(ck, prior, batch, groupCols, valueCol, opCol, k, currentBase))
+    }
 
   /** The maintained reserve state as of the newest committed
     * generation (feed to [[currentAgg]] for the aggregate view). */

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * label" in one struct comparison, so no per-round window sort ever
   * runs (a row_number argmax costs a full sort of the (node, label)
   * table every round; the struct-max partial-aggregates map-side).
-  * Label lineage cut each round (`materialize`), the q93 PageRank
-  * discipline. */
+  * Label lineage cut each round, the q93 PageRank discipline. */
 object LabelProp {
 
   /** (id, label) after `iterations` synchronous rounds over the
@@ -36,12 +35,11 @@ object LabelProp {
     * symmetrize+distinct shuffle. A one-call [[GraphCapture]]: capture,
     * the shared-capture rounds, release. */
   def labelPropagation(edges0: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int, assumeSymmetric: Boolean = false,
-                       materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+                       iterations: Int, assumeSymmetric: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val g = GraphCapture.capture(edges0, srcCol, dstCol,
-      if (assumeSymmetric) GraphCapture.Symmetric else GraphCapture.Pairs, materialize)
-    try labelPropagation(g, iterations, materialize) finally g.release()
+      if (assumeSymmetric) GraphCapture.Symmetric else GraphCapture.Pairs)
+    try labelPropagation(g, iterations) finally g.release()
   }
 
   /** [[labelPropagation]] over a SHARED [[GraphCapture]] — the capture
@@ -61,21 +59,15 @@ object LabelProp {
     * Every per-round label checkpoint is released on exit; only the
     * returned frame stays persisted, self-contained behind one final
     * cut (r15 advice). */
-  def labelPropagation(g: GraphCapture, iterations: Int,
-                       materialize: DataFrame => DataFrame): DataFrame = {
+  def labelPropagation(g: GraphCapture, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    CacheHygiene.scope { ck =>
-      ck.cut(rounds(ck, g.keyed("src", "dst"), g.width, iterations, materialize), materialize)
-    }
+    CacheHygiene.scope { ck => ck.cut(rounds(ck, g.keyed("src", "dst"), g.width, iterations)) }
   }
-
-  def labelPropagation(g: GraphCapture, iterations: Int): DataFrame =
-    labelPropagation(g, iterations, _.localCheckpoint())
 
   /** The synchronous rounds over a src-partitioned edge relation cut
     * `width` wide. */
-  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int, iterations: Int,
-                     materialize: DataFrame => DataFrame): DataFrame = {
+  private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
+                     iterations: Int): DataFrame = {
     var labels = parted.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
     val smallV = labels.count() <= ShuffleSizing.BroadcastNodeLimit
@@ -91,8 +83,7 @@ object LabelProp {
           // smallest label among the tied-most-frequent
           .groupBy(col("src"))
           .agg(max(struct(col("n"), (-col("label")).as("__neg"))).as("__m"))
-          .select(col("src").as("id"), (-col("__m.__neg")).as("label")),
-        materialize)
+          .select(col("src").as("id"), (-col("__m.__neg")).as("label")))
       ck.free(prev)
     }
     labels

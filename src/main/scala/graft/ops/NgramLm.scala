@@ -72,14 +72,13 @@ object NgramLm {
     *
     * The (id, bg, tf) table is consumed three times (scoring join,
     * bigram counts, head counts) with different pushed-down null
-    * filters, which defeats exchange reuse — so it is materialised
-    * ONCE (`materialize`, default localCheckpoint: one tokenization
-    * pass over the corpus; the retained blocks are the tf rows, the
-    * in-session analog of writing the model training table out, freed
-    * by the ContextCleaner when the result frame is GC'd). */
-  def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
-                materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val docBg = materialize(docBigrams(docs, idCol, textCol))
+    * filters, which defeats exchange reuse — so it is cut ONCE (one
+    * tokenization pass over the corpus; the retained blocks are the tf
+    * rows, the in-session analog of writing the model training table
+    * out). The result reads that cut: it is caller-owned, dispose with
+    * [[CacheHygiene.release]]. */
+  def scoreDocs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val docBg = CacheHygiene.scope(_.cut(docBigrams(docs, idCol, textCol)))
     docBg.join(model(docBg).select(col("bg"), col("q")), "bg")
       .groupBy(col(idCol))
       .agg(sum(col("tf")).as("n_bigrams"),

@@ -37,18 +37,14 @@ import org.apache.spark.sql.types.DecimalType
   * big join's width). The edge capture is partitioned by `__dst`, the
   * round aggregate's key, into a width derived from the measured edge
   * count ([[ShuffleSizing.partitionedCut]]); the rounds inherit that
-  * width from the capture's plan. Rank lineage is
-  * cut per iteration via `materialize` (default localCheckpoint; swap
-  * in reliable checkpoint() for long chains on real clusters, as with
-  * [[Sampling.budgetSelect]]). */
+  * width from the capture's plan. Rank lineage is cut per iteration. */
 object PageRank {
 
   /** Per-node scaled PageRank after `iterations` rounds. Output:
     * (id, pr) where pr ≈ rank·10^12 as a long. Edges are directed;
     * pass both directions for an undirected graph. */
   def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int,
-               materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+               iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // every intermediate (the dst-partitioned edge checkpoint, degrees,
     // nodes, per-iteration rank checkpoints) is released on exit; only
@@ -72,7 +68,7 @@ object PageRank {
       // width.
       val (parted, _, width) = ShuffleSizing.partitionedMaterializeCounted(ck,
         ShuffleSizing.renameForCapture(edges0, srcCol, "__src", dstCol, "__dst"),
-        "__dst", materialize)
+        "__dst")
       // |V|-sized relations only beyond the edge list itself: the r14
       // sf10 dissection found the old edges⋈degrees MATERIALIZATION
       // (an |E|-row copy carrying the degree) was the single biggest
@@ -85,10 +81,10 @@ object PageRank {
       // big-join width, no |E|-row materialization at all.
       val degrees = ShuffleSizing.partitionedCut(ck,
         parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")),
-        "__src", width, materialize)
+        "__src", width)
       val nodes = ck.cut(parted.select(col("__src").as("id"))
-        .union(parted.select(col("__dst"))).distinct(), materialize)
-      ck.cut(rounds(ck, parted, width, degrees, nodes, iterations, materialize), materialize)
+        .union(parted.select(col("__dst"))).distinct())
+      ck.cut(rounds(ck, parted, width, degrees, nodes, iterations))
     }
   }
 
@@ -100,8 +96,7 @@ object PageRank {
     * (degree(v) = |s-group v|, nodes = distinct s — both complete and
     * exact by symmetry) and runs rounds-only. Bit-identical to the
     * direct form on the same symmetric edge list (spec-pinned). */
-  def pageRank(g: GraphCapture, iterations: Int,
-               materialize: DataFrame => DataFrame): DataFrame = {
+  def pageRank(g: GraphCapture, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     CacheHygiene.scope { ck =>
       // the round aggregate keys on __dst — land the partition
@@ -110,14 +105,11 @@ object PageRank {
       val parted = g.keyed("__dst", "__src")
       val degrees = ShuffleSizing.partitionedCut(ck,
         parted.groupBy(col("__dst").as("__src")).agg(count(lit(1)).as("__deg")),
-        "__src", g.width, materialize)
-      val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct(), materialize)
-      ck.cut(rounds(ck, parted, g.width, degrees, nodes, iterations, materialize), materialize)
+        "__src", g.width)
+      val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct())
+      ck.cut(rounds(ck, parted, g.width, degrees, nodes, iterations))
     }
   }
-
-  def pageRank(g: GraphCapture, iterations: Int): DataFrame =
-    pageRank(g, iterations, _.localCheckpoint())
 
   /** The damped-rank rounds over a __dst-partitioned edge relation cut
     * `width` wide, with pre-materialized node set and degrees. Degrees
@@ -126,8 +118,7 @@ object PageRank {
     * rank update's, which Spark runs once (ReusedExchange). */
   private def rounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
                      degrees: DataFrame, nodes: DataFrame,
-                     iterations: Int,
-                     materialize: DataFrame => DataFrame): DataFrame = {
+                     iterations: Int): DataFrame = {
     val dec = DecimalType(38, 0)
     val scale = lit(1000000000000L).cast(dec)
     val base = lit(150000000000L).cast(dec)
@@ -143,8 +134,7 @@ object PageRank {
         .groupBy(col("__dst").as("id")).agg(sum(col("__c")).as("__in"))
       val prev = ranks
       ranks = ck.cut(nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"), (base + coalesce(col("__in"), lit(0).cast(dec))).as("__r")),
-        materialize)
+        .select(col("id"), (base + coalesce(col("__in"), lit(0).cast(dec))).as("__r")))
       ck.free(prev)
     }
     ranks.select(col("id"), col("__r").cast("long").as("pr"))

@@ -48,9 +48,10 @@ import org.apache.spark.sql.types.DecimalType
   * per round the plan is two keyed joins of that relation against the
   * items-sized ratings frame (AQE broadcasts ratings when it fits), one
   * hash aggregate, and a 1-row total broadcast via crossJoin. Rating
-  * lineage is cut per round via `materialize` (default localCheckpoint;
-  * swap in reliable checkpoint() on long chains, as with [[PageRank]]).
-  * Nothing driver-side grows with items or games. */
+  * lineage is cut per round, each cut freeing the one before; the
+  * result reads the per-item stats and the last round's cut
+  * (caller-owned, dispose with [[CacheHygiene.release]]). Nothing
+  * driver-side grows with items or games. */
 object Preference {
 
   /** Bradley–Terry ratings after `iterations` MM rounds. Input: one row
@@ -59,58 +60,61 @@ object Preference {
     * `scale` units (default micro), renormalized so the corpus mean
     * rating is exactly `scale` up to floor loss. */
   def bradleyTerry(comparisons: DataFrame, winnerCol: String, loserCol: String,
-                   iterations: Int = 5, scale: Long = 1000000L,
-                   materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+                   iterations: Int = 5, scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(scale >= 1000L && scale <= 1000000000L,
       s"scale must be in [1e3, 1e9], got $scale")
     val dec = DecimalType(38, 0)
     val big = scale * scale // precision carrier for the reciprocal sums
-    val games = materialize(comparisons
-      .filter(col(winnerCol).isNotNull && col(loserCol).isNotNull &&
-        col(winnerCol) =!= col(loserCol))
-      .select(col(winnerCol).as("__w"), col(loserCol).as("__l")))
-    // directed pair relation: (i, j, games between i and j) — both
-    // directions, so "all pairs involving i" is one equi-join on __i
-    val dirPairs = materialize(
-      games.select(col("__w").as("__i"), col("__l").as("__j"))
-        .unionByName(games.select(col("__l").as("__i"), col("__w").as("__j")))
-        .groupBy(col("__i"), col("__j"))
-        .agg(count(lit(1)).cast(dec).as("__n")))
-    val wins = games.groupBy(col("__w").as("item")).agg(count(lit(1)).as("wins"))
-    val stats = materialize(dirPairs
-      .groupBy(col("__i").as("item"))
-      .agg(sum(col("__n")).cast("long").as("n_games"))
-      .join(wins, Seq("item"), "left")
-      .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"),
-        col("n_games")))
-    val nItems = stats.count()
-    var r = stats.select(col("item"), lit(scale).cast(dec).as("__pi"))
-    for (_ <- 1 to iterations) {
-      val denom = dirPairs
-        .join(r.select(col("item").as("__i"), col("__pi").as("__pi_i")), Seq("__i"))
-        .join(r.select(col("item").as("__j"), col("__pi").as("__pi_j")), Seq("__j"))
-        .select(col("__i").as("item"),
-          expr(s"CAST((__n * CAST($big AS DECIMAL(38,0))) DIV (__pi_i + __pi_j) AS DECIMAL(38,0))")
-            .as("__t"))
-        .groupBy(col("item")).agg(sum(col("__t")).as("__d"))
-      val raw = stats.join(denom, Seq("item"))
-        .select(col("item"), col("wins"),
-          expr(s"CAST((CAST(wins AS DECIMAL(38,0)) * CAST($big AS DECIMAL(38,0))) DIV __d AS DECIMAL(38,0))")
-            .as("__raw"))
-      val tot = raw.agg(sum(col("__raw")).as("__tot"))
-      // Winner floor (header doc): both floored stages can round a
-      // low-share winner to 0 under extreme skew, and a pair of two
-      // zero-π items would zero the next round's (π_i + π_j)
-      // denominator. π ≥ 1 for every item with wins > 0 keeps each
-      // pair's winner side positive; true losers stay exactly 0.
-      r = materialize(raw.crossJoin(broadcast(tot))
-        .select(col("item"),
-          expr(s"CAST(greatest((__raw * CAST($nItems AS DECIMAL(38,0)) * CAST($scale AS DECIMAL(38,0))) DIV __tot, CASE WHEN wins > 0 THEN 1 ELSE 0 END) AS DECIMAL(38,0))")
-            .as("__pi")))
+    CacheHygiene.scope { ck =>
+      val games = ck.cut(comparisons
+        .filter(col(winnerCol).isNotNull && col(loserCol).isNotNull &&
+          col(winnerCol) =!= col(loserCol))
+        .select(col(winnerCol).as("__w"), col(loserCol).as("__l")))
+      // directed pair relation: (i, j, games between i and j) — both
+      // directions, so "all pairs involving i" is one equi-join on __i
+      val dirPairs = ck.cut(
+        games.select(col("__w").as("__i"), col("__l").as("__j"))
+          .unionByName(games.select(col("__l").as("__i"), col("__w").as("__j")))
+          .groupBy(col("__i"), col("__j"))
+          .agg(count(lit(1)).cast(dec).as("__n")))
+      val wins = games.groupBy(col("__w").as("item")).agg(count(lit(1)).as("wins"))
+      val stats = ck.cut(dirPairs
+        .groupBy(col("__i").as("item"))
+        .agg(sum(col("__n")).cast("long").as("n_games"))
+        .join(wins, Seq("item"), "left")
+        .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"),
+          col("n_games")))
+      val nItems = stats.count()
+      var r = stats.select(col("item"), lit(scale).cast(dec).as("__pi"))
+      for (_ <- 1 to iterations) {
+        val denom = dirPairs
+          .join(r.select(col("item").as("__i"), col("__pi").as("__pi_i")), Seq("__i"))
+          .join(r.select(col("item").as("__j"), col("__pi").as("__pi_j")), Seq("__j"))
+          .select(col("__i").as("item"),
+            expr(s"CAST((__n * CAST($big AS DECIMAL(38,0))) DIV (__pi_i + __pi_j) AS DECIMAL(38,0))")
+              .as("__t"))
+          .groupBy(col("item")).agg(sum(col("__t")).as("__d"))
+        val raw = stats.join(denom, Seq("item"))
+          .select(col("item"), col("wins"),
+            expr(s"CAST((CAST(wins AS DECIMAL(38,0)) * CAST($big AS DECIMAL(38,0))) DIV __d AS DECIMAL(38,0))")
+              .as("__raw"))
+        val tot = raw.agg(sum(col("__raw")).as("__tot"))
+        // Winner floor (header doc): both floored stages can round a
+        // low-share winner to 0 under extreme skew, and a pair of two
+        // zero-π items would zero the next round's (π_i + π_j)
+        // denominator. π ≥ 1 for every item with wins > 0 keeps each
+        // pair's winner side positive; true losers stay exactly 0.
+        val prev = r
+        r = ck.cut(raw.crossJoin(broadcast(tot))
+          .select(col("item"),
+            expr(s"CAST(greatest((__raw * CAST($nItems AS DECIMAL(38,0)) * CAST($scale AS DECIMAL(38,0))) DIV __tot, CASE WHEN wins > 0 THEN 1 ELSE 0 END) AS DECIMAL(38,0))")
+              .as("__pi")))
+        ck.free(prev)
+      }
+      stats.join(r, Seq("item"))
+        .select(col("item"), col("__pi").cast("long").as("rating_micro"),
+          col("wins"), col("n_games"))
     }
-    stats.join(r, Seq("item"))
-      .select(col("item"), col("__pi").cast("long").as("rating_micro"),
-        col("wins"), col("n_games"))
   }
 }

@@ -38,7 +38,7 @@ object Profiler {
     * (+ exact ndv unless approx mode, where ndv comes from
     * [[Sketches.hllProfile]] instead). Exposed at package level so
     * PlanShapeSpec can pin the plan LAZILY — profile() itself
-    * checkpoints eagerly, which hides the aggregate from the returned
+    * cuts it eagerly, which hides the aggregate from the returned
     * frame's plan. */
   private[graft] def metadataAgg(base: DataFrame, cols: Seq[(String, Column)],
                                  approxNdv: Boolean): DataFrame = {
@@ -53,7 +53,9 @@ object Profiler {
   }
 
   /** (column, n_rows, n_nulls, ndv, min_val, max_val) per named
-    * projection, in the caller's column order. */
+    * projection, in the caller's column order. The result reads the cut
+    * 1-row aggregate: it is caller-owned, dispose with
+    * [[CacheHygiene.release]]. */
   def profile(df: DataFrame, cols: Seq[(String, Column)],
               approxNdv: Boolean = false, hllP: Int = 8): DataFrame = {
     require(cols.nonEmpty, "need at least one column to profile")
@@ -71,9 +73,8 @@ object Profiler {
         projected.repartition(parallelism)
       else projected
     // one job computes every non-ndv metric; the 1-row wide result is
-    // pinned (localCheckpoint) so the per-column unpivot never
-    // re-scans the table
-    val wide = metadataAgg(base, cols, approxNdv).localCheckpoint()
+    // cut so the per-column unpivot never re-scans the table
+    val wide = CacheHygiene.scope(_.cut(metadataAgg(base, cols, approxNdv)))
     // approx mode: one more pass for the register sketch; its result
     // is cols rows — model-sized, collected like the wide row itself
     val hllNdv: Map[Int, Long] =

@@ -148,7 +148,8 @@ object Retrieval {
     * wide aggregate and unpivoted per cutoff (the Profiler pattern).
     * The qrel count arrives as a broadcast 1-row cross join, so
     * nothing here scales with the corpus — only qrel derivation
-    * upstream does. */
+    * upstream does. The result reads the cut wide row: it is
+    * caller-owned, dispose with [[CacheHygiene.release]]. */
   def evaluateRanking(ranked: DataFrame, relevant: DataFrame,
                       ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1), s"cutoffs must be >= 1: $ks")
@@ -159,9 +160,8 @@ object Retrieval {
     val aggs =
       ks.map(k => sum(when(col("rank") <= k, col("__rel"))).as(s"__hits_$k")) :+
         min(when(col("__rel") === 1L, col("rank"))).as("__first")
-    val wide = marked.agg(aggs.head, aggs.tail: _*)
-      .crossJoin(broadcast(rel.agg(count(lit(1)).as("__nrel"))))
-      .localCheckpoint()
+    val wide = CacheHygiene.scope(_.cut(marked.agg(aggs.head, aggs.tail: _*)
+      .crossJoin(broadcast(rel.agg(count(lit(1)).as("__nrel"))))))
     ks.map { k =>
       wide.select(lit(k).as("k"),
         coalesce(col(s"__hits_$k"), lit(0L)).as("hits"),

@@ -128,8 +128,7 @@ object Sampling {
     *      boundaries and the offsets join would attach wrong cells
     *      (AQE stage reuse usually saves the day, but is not
     *      guaranteed — e.g. over cached inputs). The materialised run
-    *      is the same data volume the shuffle already wrote; swap in
-    *      reliable checkpoint() for multi-hour 100 TB jobs;
+    *      is the same data volume the shuffle already wrote;
     *   2. cumulative sums within each (chunk, group) cell — a cell is
     *      at most one chunk, never one whole group;
     *   3. per-cell totals (≤ chunks × groups rows — tiny) → each cell's
@@ -144,16 +143,11 @@ object Sampling {
     * null group would silently vanish in the offsets equi-join anyway;
     * the explicit filter makes the behavior deliberate.
     *
-    * The ranged run is pinned with `materialize` — `localCheckpoint()`
-    * by default (fast, executor-local; lost on executor failure). For
-    * multi-hour 100 TB jobs pass a reliable materialiser, e.g.
-    * `_.checkpoint()` with `sparkContext.setCheckpointDir` on durable
-    * storage — the knob exists precisely so the scaladoc advice is
-    * callable without forking the operator. */
+    * The returned frame reads the ranged run's cut, so it is
+    * caller-owned: dispose with [[CacheHygiene.release]]. */
   def budgetSelect(df: DataFrame, groupCol: String, keyCol: String,
                    costCol: String, budgetPerGroup: Long,
-                   scoreCol: Option[String] = None,
-                   materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+                   scoreCol: Option[String] = None): DataFrame = {
     require(budgetPerGroup > 0, s"budget must be positive, got $budgetPerGroup")
     import org.apache.spark.sql.expressions.Window
     val tmp = Seq("__pid", "__cum", "__cell_total", "__offset")
@@ -163,10 +157,10 @@ object Sampling {
       scoreCol.map(c => col(c).desc).toSeq :+
         md5(col(keyCol).cast("string")).asc :+ col(keyCol).asc
     val nChunks = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = materialize(df
+    val parted = CacheHygiene.scope(_.cut(df
       .filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
       .repartitionByRange(nChunks, col(groupCol).asc +: ord: _*)
-      .withColumn("__pid", spark_partition_id()))
+      .withColumn("__pid", spark_partition_id())))
     val wCell = Window.partitionBy(col("__pid"), col(groupCol))
       .orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -221,11 +215,10 @@ object Sampling {
     * chunks, per-(chunk[, group]) cumulative sums, tiny per-cell totals
     * rolled into broadcast offsets; the ranged run is materialised for
     * the two consumers (same range-exchange re-evaluation hazard, same
-    * `materialize` knob). No task ever sees more than one chunk; the
+    * caller-owned cut). No task ever sees more than one chunk; the
     * grid itself is never materialised at all. */
   def weightedSystematicSample(df: DataFrame, keyCol: String, weightCol: String,
                                n: Long,
-                               materialize: DataFrame => DataFrame = _.localCheckpoint(),
                                groupCol: Option[String] = None): DataFrame = {
     require(n > 0, s"sample size must be positive, got $n")
     import org.apache.spark.sql.expressions.Window
@@ -242,10 +235,10 @@ object Sampling {
       (p, g) => p && col(g).isNotNull
     }
     val nChunks = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = materialize(df
+    val parted = CacheHygiene.scope(_.cut(df
       .filter(keep)
       .repartitionByRange(nChunks, grp.map(_.asc) ++ ord: _*)
-      .withColumn("__pid", spark_partition_id()))
+      .withColumn("__pid", spark_partition_id())))
     val wCell = Window.partitionBy(col("__pid") +: grp: _*).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = parted.withColumn("__cum", sum(w).over(wCell))
@@ -321,18 +314,23 @@ object Sampling {
     * is one row per shuffle partition (tiny), so its running-sum window
     * and the join back both stay driver-trivial/broadcast at any scale.
     *
-    * `materialize` pins the partition assignment between the rank pass
-    * and the offset pass (same contract as [[budgetSelect]]). */
+    * A cut pins the partition assignment between the rank pass and the
+    * offset pass; the result reads it (caller-owned, as with
+    * [[budgetSelect]]). */
   def globalRank(df: DataFrame, ord: Seq[Column], out: String = "global_rank",
-                 withTotal: Boolean = false,
-                 materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+                 withTotal: Boolean = false): DataFrame =
+    CacheHygiene.scope(rank(_, df, ord, out, withTotal))
+
+  /** [[globalRank]] with its cut recorded in `ck`. */
+  private def rank(ck: CacheHygiene.Arena, df: DataFrame, ord: Seq[Column], out: String,
+                   withTotal: Boolean): DataFrame = {
     require(ord.nonEmpty, "globalRank needs at least one order column")
     require(!df.columns.contains(out) && !df.columns.contains("__pid") &&
       !(withTotal && df.columns.contains("__total")),
       s"input must not already contain $out/__pid/__total")
     import org.apache.spark.sql.expressions.Window
     val nChunks = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = materialize(df
+    val parted = ck.cut(df
       .repartitionByRange(nChunks, ord: _*)
       .withColumn("__pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(ord: _*)
@@ -367,15 +365,14 @@ object Sampling {
     * window's default RANGE frame would then sum whole peer groups.
     * The weight must be non-null; sums are carried as DECIMAL(38,0). */
   def globalCumsum(df: DataFrame, ord: Seq[Column], weight: Column,
-                   out: String = "cum_weight",
-                   materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
-    globalCumsums(df, ord, Seq(weight -> out), materialize)
+                   out: String = "cum_weight"): DataFrame =
+    globalCumsums(df, ord, Seq(weight -> out))
 
   /** Multi-weight form of [[globalCumsum]]: all prefix sums share one
     * range partitioning and one offsets frame (a two-sample CDF pair
     * costs the same pass as a single cumsum). */
-  def globalCumsums(df: DataFrame, ord: Seq[Column], weights: Seq[(Column, String)],
-                    materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def globalCumsums(df: DataFrame, ord: Seq[Column],
+                    weights: Seq[(Column, String)]): DataFrame = {
     require(ord.nonEmpty, "globalCumsum needs at least one order column")
     require(weights.nonEmpty, "globalCumsums needs at least one weight")
     val wIn = weights.indices.map(i => s"__w$i")
@@ -384,11 +381,11 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     val decW = org.apache.spark.sql.types.DecimalType(38, 0)
     val nChunks = df.sparkSession.sessionState.conf.numShufflePartitions
-    val parted = materialize(weights.zip(wIn).foldLeft(df) { case (d, ((w, _), n)) =>
+    val parted = CacheHygiene.scope(_.cut(weights.zip(wIn).foldLeft(df) { case (d, ((w, _), n)) =>
         d.withColumn(n, w.cast(decW))
       }
       .repartitionByRange(nChunks, ord: _*)
-      .withColumn("__pid", spark_partition_id()))
+      .withColumn("__pid", spark_partition_id())))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(ord: _*)
     val wOff = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -468,30 +465,31 @@ object Sampling {
     * Bin sizes within each group differ by at most 1 regardless of
     * ties (rank-based, not value-cut); null key/value rows drop
     * (family rule), null GROUPS are one group (SQL semantics). The
-    * ranked frame is pinned before the extent aggregate so the rank
-    * pass runs once. */
+    * ranked frame is cut before the extent aggregate so the rank pass
+    * runs once; the rank's own ranged cut is released on return. */
   def groupEquiDepthBins(df: DataFrame, groupCol: String, keyCol: String,
-                         valueCol: String, bins: Int): DataFrame = {
-    require(bins >= 1, s"bins must be positive, got $bins")
-    require(!df.columns.exists(Set("bin", "__grank", "__g0", "__gn")),
-      "input must not already contain bin/__grank/__g0/__gn")
-    val ord = Seq(col(groupCol).asc_nulls_first, col(valueCol).asc,
-      md5(col(keyCol).cast("string")).asc, col(keyCol).asc)
-    val ranked = globalRank(
-      df.filter(col(keyCol).isNotNull && col(valueCol).isNotNull),
-      ord, out = "__grank").localCheckpoint()
-    val extents = ranked.groupBy(col(groupCol))
-      .agg(min(col("__grank")).as("__g0"), count(lit(1)).as("__gn"))
-    // null-safe (<=>) extents join: the NULL group is one SQL GROUP BY
-    // group and must match its own extents row — a plain equi-join
-    // would silently drop every NULL-group row (the IVM keyCond rule)
-    ranked.alias("__gb_r")
-      .join(broadcast(extents.alias("__gb_e")),
-        col(s"__gb_r.$groupCol") <=> col(s"__gb_e.$groupCol"))
-      .drop(col(s"__gb_e.$groupCol"))
-      .withColumn("bin", expr(s"CAST(((__grank - __g0) * $bins) DIV __gn AS INT)"))
-      .drop("__grank", "__g0", "__gn")
-  }
+                         valueCol: String, bins: Int): DataFrame =
+    CacheHygiene.scope { ck =>
+      require(bins >= 1, s"bins must be positive, got $bins")
+      require(!df.columns.exists(Set("bin", "__grank", "__g0", "__gn")),
+        "input must not already contain bin/__grank/__g0/__gn")
+      val ord = Seq(col(groupCol).asc_nulls_first, col(valueCol).asc,
+        md5(col(keyCol).cast("string")).asc, col(keyCol).asc)
+      val ranked = ck.cut(rank(ck,
+        df.filter(col(keyCol).isNotNull && col(valueCol).isNotNull),
+        ord, "__grank", withTotal = false))
+      val extents = ranked.groupBy(col(groupCol))
+        .agg(min(col("__grank")).as("__g0"), count(lit(1)).as("__gn"))
+      // null-safe (<=>) extents join: the NULL group is one SQL GROUP BY
+      // group and must match its own extents row — a plain equi-join
+      // would silently drop every NULL-group row (the IVM keyCond rule)
+      ranked.alias("__gb_r")
+        .join(broadcast(extents.alias("__gb_e")),
+          col(s"__gb_r.$groupCol") <=> col(s"__gb_e.$groupCol"))
+        .drop(col(s"__gb_e.$groupCol"))
+        .withColumn("bin", expr(s"CAST(((__grank - __g0) * $bins) DIV __gn AS INT)"))
+        .drop("__grank", "__g0", "__gn")
+    }
 
   def trainingOrder(df: DataFrame, keyCol: String, shards: Int): DataFrame = {
     require(shards > 0, s"shards must be positive, got $shards")

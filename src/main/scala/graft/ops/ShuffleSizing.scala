@@ -126,23 +126,17 @@ private[graft] object ShuffleSizing {
     * `coalesce(1)`. The root `LogicalRDD`, which under AQE records
     * Unknown partitioning, is re-stamped `HashPartitioning(key, width)`,
     * checked against the RDD's partition count (a wrong stamp would
-    * silently corrupt joins). A result without a `LogicalRDD` root (identity,
-    * a parquet round trip) is returned as is. Recorded in `ck`. */
-  def partitionedCut(ck: CacheHygiene.Arena, df: DataFrame, key: String, width: Int,
-                     materialize: DataFrame => DataFrame): DataFrame = {
-    val out = ck.cut(
-      if (width == 1) df.coalesce(1) else df.repartition(width, col(key)), materialize)
-    out.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        require(l.rdd.getNumPartitions == width,
-          s"cut on $key has ${l.rdd.getNumPartitions} partitions, not $width")
-        val k = l.output.find(_.name == key).getOrElse(
-          throw new IllegalArgumentException(s"no column $key in ${l.output}"))
-        GraftPlanBridge.ofRows(out.sparkSession, l.makeCopy(Array(l.output, l.rdd,
-          HashPartitioning(Seq(k), width), l.outputOrdering,
-          java.lang.Boolean.valueOf(l.isStreaming), l.stream)))
-      case _ => out
-    }
+    * silently corrupt joins). Recorded in `ck`. */
+  def partitionedCut(ck: CacheHygiene.Arena, df: DataFrame, key: String, width: Int): DataFrame = {
+    val out = ck.cut(if (width == 1) df.coalesce(1) else df.repartition(width, col(key)))
+    val l = out.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    require(l.rdd.getNumPartitions == width,
+      s"cut on $key has ${l.rdd.getNumPartitions} partitions, not $width")
+    val k = l.output.find(_.name == key).getOrElse(
+      throw new IllegalArgumentException(s"no column $key in ${l.output}"))
+    GraftPlanBridge.ofRows(out.sparkSession, l.makeCopy(Array(l.output, l.rdd,
+      HashPartitioning(Seq(k), width), l.outputOrdering,
+      java.lang.Boolean.valueOf(l.isStreaming), l.stream)))
   }
 
   /** The session's shuffle width, which [[boundedWidth]] adjusts. */
@@ -156,10 +150,10 @@ private[graft] object ShuffleSizing {
     * the session width. Returns (parted, edgeRows, width); both cuts
     * are recorded in `ck`, and the first is freed as soon as a re-cut
     * replaces it. */
-  def partitionedMaterializeCounted(ck: CacheHygiene.Arena, df: DataFrame, key: String,
-      materialize: DataFrame => DataFrame): (DataFrame, Long, Int) = {
+  def partitionedMaterializeCounted(ck: CacheHygiene.Arena, df: DataFrame,
+                                    key: String): (DataFrame, Long, Int) = {
     val session = sessionWidth(df.sparkSession)
-    val first = partitionedCut(ck, df, key, session, materialize)
+    val first = partitionedCut(ck, df, key, session)
     val n = first.count()
     val width = boundedWidth(n, session)
     // r18: the re-cut fires in BOTH directions — wider when the
@@ -169,7 +163,7 @@ private[graft] object ShuffleSizing {
     // once, against per-round fixed costs paid every iteration).
     if (width == session) (first, n, width)
     else {
-      val recut = partitionedCut(ck, first, key, width, materialize)
+      val recut = partitionedCut(ck, first, key, width)
       ck.free(first)
       (recut, n, width)
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.hadoop.fs.Path
 import graft.core.FsUtils
 import graft.functions.TextFunctions
-import graft.ops.{Dedup, Expectations}
+import graft.ops.{CacheHygiene, Dedup, Expectations}
 import graft.streaming.EventStream
 
 /** Streaming corpus intake — the continuous ingest pipeline a
@@ -131,7 +131,9 @@ object CorpusIngest {
 
   /** Land one reconciled micro-batch idempotently (exposed for spec
     * replay tests). Returns the number of surviving docs (via an
-    * [[Observation]] riding the corpus write — no extra pass).
+    * [[Observation]] riding the corpus write — no extra pass). The
+    * survivors' cut is released on return, so a long-running intake
+    * holds no blocks per landed batch.
     *
     * Crash contract: the corpus `batch=` dir commits before its
     * fingerprint-index dir. A caller that crashes between the two MUST
@@ -168,15 +170,17 @@ object CorpusIngest {
     val keep = Dedup.incrementalNew(batch,
         readIndex(spark, indexRoot, excludeBatchId = Some(batchId)), idCol, textCol)
       .withColumnRenamed("doc_id", idCol)
-    val survivors = batch.join(keep, Seq(idCol), "left_semi")
-      .localCheckpoint() // one computation feeds both writes below
-    val obs = Observation(s"corpus_landed_$batchId")
-    survivors.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$corpusRoot/batch=$batchId")
-    Dedup.fingerprints(survivors, textCol)
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexRoot/batch=$batchId")
-    obs.get("n").asInstanceOf[Long]
+    CacheHygiene.scope { ck =>
+      // one computation feeds both writes below
+      val survivors = ck.cut(batch.join(keep, Seq(idCol), "left_semi"))
+      val obs = Observation(s"corpus_landed_$batchId")
+      survivors.observe(obs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$corpusRoot/batch=$batchId")
+      Dedup.fingerprints(survivors, textCol)
+        .distinct()
+        .write.mode(SaveMode.Overwrite).parquet(s"$indexRoot/batch=$batchId")
+      obs.get("n").asInstanceOf[Long]
+    }
   }
 
   /** Fold every committed `batch=`/`gen=` directory under `root` into

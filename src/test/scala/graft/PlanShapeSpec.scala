@@ -291,17 +291,46 @@ class PlanShapeSpec extends SparkSpecBase {
   }
 
   test("pagerank contribution sums aggregate partially before the dst shuffle") {
-    // the gated plan hides iteration subtrees behind the localCheckpoint
-    // cuts, so pin the operator with materialization disabled: the
-    // per-iteration contribution aggregate must map-side combine — at
-    // 100 TB the edge relation is the big side and only partial sums
-    // may cross the wire keyed by dst
+    // the returned plan hides the rounds behind their cuts, so read the
+    // plans of the executions PageRank runs: each round's contribution
+    // sum must map-side combine — at 100 TB the edge relation is the
+    // big side and only partial sums may cross the wire keyed by dst
     import spark.implicits._
+    import scala.jdk.CollectionConverters._
     val edges = (1L to 100L).map(i => (i % 13, (i * 5) % 13)).filter(p => p._1 != p._2)
       .toDF("src", "dst").distinct()
-    val p = graft.ops.PageRank.pageRank(edges, "src", "dst", 2, materialize = identity)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("partial_sum"), p.take(3000))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try graft.ops.CacheHygiene.release(graft.ops.PageRank.pageRank(edges, "src", "dst", 2))
+    finally {
+      assert(org.apache.spark.graftbridge.ListenerDrain.waitUntilEmpty(sc, 10000L))
+      sc.removeSparkListener(listener)
+    }
+    val sums = plans.asScala.toSeq.filter(_.contains("sum(__c"))
+    assert(sums.size == 2, s"expected one contribution sum per round:\n${sums.mkString("\n\n")}")
+    sums.foreach { p =>
+      // formatted plan: one "(id) Operator" section per node, ids
+      // numbered children first, so an exchange above an aggregate
+      // has the larger id
+      val nodes = p.split("(?m)^(?=\\(\\d+\\) )").toSeq.flatMap { sec =>
+        "^\\((\\d+)\\) (\\w+)".r.findFirstMatchIn(sec).map(m => (m.group(1).toInt, m.group(2), sec))
+      }
+      val partial = nodes.collect { case (id, "HashAggregate", sec) if sec.contains("partial_sum(__c") => id }
+      assert(partial.nonEmpty, p.take(3000))
+      val dstExchanges = nodes.collect {
+        case (id, "Exchange", sec) if sec.contains("hashpartitioning(__dst") => id
+      }
+      assert(dstExchanges.forall(_ > partial.min),
+        s"an exchange keyed by dst sits below the partial sum:\n${p.take(3000)}")
+    }
   }
 
   test("exact global rank (zorder layout / balanced shards) windows only within range chunks") {

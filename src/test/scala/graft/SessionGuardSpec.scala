@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * built by the bench harness recipe (plus the three tools that must not
   * share it), session conf is written only by the table loaders' tuning
   * and the catalog's throw-safe stream width pin, no operator touches
-  * AQE, and the only environment the engine reads is the bench's own
-  * three variables. */
+  * AQE, lineage is cut only through the checkpoint arena, and the only
+  * environment the engine reads is the bench's own three variables. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -51,6 +51,13 @@ class SessionGuardSpec extends AnyFunSuite {
   test("no engine line names spark.sql.adaptive.enabled") {
     val bad = offenders("spark.sql.adaptive.enabled", Set.empty)
     assert(bad.isEmpty, s"operators run under the session's own AQE: $bad")
+  }
+
+  test("lineage is cut only by CacheHygiene (and the GenSf fixture writer)") {
+    val allowed = Set("graft/ops/CacheHygiene.scala", "graft/tools/GenSf.scala")
+    val bad = Seq("localCheckpoint(", ".checkpoint(", "getCheckpointDir", "materialize:")
+      .flatMap(n => offenders(n, allowed).map(o => s"$o: $n"))
+    assert(bad.isEmpty, s"cut in a CacheHygiene.scope arena (ck.cut): $bad")
   }
 
   test("sessions are built only by the harness recipe, Smoke, GenSf and CodegenLint") {

@@ -29,8 +29,8 @@ class CacheHygieneSpec extends SparkSpecBase {
     val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     intercept[IllegalStateException] {
       CacheHygiene.scope { ck =>
-        cuts += ck.cut(spark.range(10).toDF("x"), _.localCheckpoint())
-        cuts += ck.cut(spark.range(10).toDF("x").repartition($"x"), _.localCheckpoint(false))
+        cuts += ck.cut(spark.range(10).toDF("x"))
+        cuts += ck.cut(spark.range(10).toDF("x").repartition($"x"), eager = false)
         throw new IllegalStateException("boom")
       }
     }
@@ -41,9 +41,9 @@ class CacheHygieneSpec extends SparkSpecBase {
   test("a scope keeps only what the returned frame reads; free drops a cut early") {
     val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val out = CacheHygiene.scope { ck =>
-      cuts += ck.cut(spark.range(10).toDF("x"), _.localCheckpoint())
-      cuts += ck.cut(cuts(0).select(($"x" * 2).as("x")), _.localCheckpoint())
-      cuts += ck.cut(cuts(1).select(($"x" + 1).as("x")), _.localCheckpoint())
+      cuts += ck.cut(spark.range(10).toDF("x"))
+      cuts += ck.cut(cuts(0).select(($"x" * 2).as("x")))
+      cuts += ck.cut(cuts(1).select(($"x" + 1).as("x")))
       ck.free(cuts(0))
       assert(!persisted(cuts(0)) && persisted(cuts(1)))
       cuts(1).filter($"x" > 4) // a plan over the second cut
@@ -54,27 +54,15 @@ class CacheHygieneSpec extends SparkSpecBase {
     CacheHygiene.release(out)
   }
 
-  test("a foreign checkpoint made inside the operators' window survives them") {
-    // a materialize that also checkpoints an unrelated frame: the
-    // shape of another query persisting on the same session mid-call
-    val foreign = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val mat: DataFrame => DataFrame = { df =>
-      foreign += spark.range(3).toDF("x").localCheckpoint()
-      df.localCheckpoint()
+  test("a scope that returns no frame releases every cut") {
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val n = CacheHygiene.scope { ck =>
+      cuts += ck.cut(spark.range(10).toDF("x"))
+      cuts += ck.cut(cuts(0).filter($"x" > 2))
+      cuts(1).count()
     }
-    val g = GraphCapture.capture(pairs, "a", "b", materialize = mat)
-    val shared = LabelProp.labelPropagation(g, 2, mat)
-    val direct = LabelProp.labelPropagation(pairs, "a", "b", 2, materialize = mat)
-    assert(shared.collect().toSet == direct.collect().toSet)
-    CacheHygiene.release(shared)
-    CacheHygiene.release(direct)
-    g.release()
-    assert(foreign.nonEmpty)
-    foreign.foreach { f =>
-      assert(persisted(f), s"foreign checkpoint ${rddId(f)} was released by an operator")
-      assert(f.as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
-    }
-    foreign.foreach(CacheHygiene.release)
+    assert(n == 7L)
+    cuts.foreach(c => assert(!persisted(c), s"cut ${rddId(c)} outlived a count-returning scope"))
   }
 
   test("a concurrent persister keeps its RDDs; the operators leave nothing behind") {
@@ -99,8 +87,10 @@ class CacheHygieneSpec extends SparkSpecBase {
       val g = GraphCapture.capture(pairs, "a", "b")
       val outs = Seq(LabelProp.labelPropagation(g, 3), PageRank.pageRank(g, 2),
         Bfs.hopDistance(g, Seq(1L, 20L).toDF("id"), maxHops = 4))
+      val direct = LabelProp.labelPropagation(pairs, "a", "b", 3)
+      assert(outs.head.collect().toSet == direct.collect().toSet)
       outs.foreach(_.count())
-      outs.foreach(CacheHygiene.release)
+      (outs :+ direct).foreach(CacheHygiene.release)
       g.release()
     } finally {
       stop.set(true)

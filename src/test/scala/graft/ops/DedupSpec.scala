@@ -384,71 +384,24 @@ class DedupSpec extends SparkSpecBase {
     assert(noIdx == Set(10L, 11L, 13L)) // only 12 (vs 11) and 14 (vs 12) drop
   }
 
-  test("connectedComponents removes its checkpoint scratch area on failure") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-fail")
+  test("connectedComponents cuts executor-locally even with a session checkpoint dir set") {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("cc-session-ckpt")
+    sc.setCheckpointDir(dir.toString)
     try {
-      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-      // maxIter=1 can never observe convergence (needs a comparison round);
-      // driverMaxEdges=0 forces the distributed rounds under test
-      intercept[IllegalStateException] {
-        Dedup.connectedComponents(pairs, maxIter = 1,
-          checkpointDir = Some(dir.toString), driverMaxEdges = 0)
-      }
-      // the caller-owned scratch dir was removed wholesale on failure
-      assert(!java.nio.file.Files.exists(dir) ||
-        !java.nio.file.Files.list(dir).findFirst().isPresent,
-        "expected the scratch dir to be gone or empty after failure")
-    } finally {
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
-
-  test("connectedComponents refuses a non-empty scratch dir up front, touching nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-shared")
-    val bystander = dir.resolve("unrelated.txt")
-    try {
-      java.nio.file.Files.write(bystander, "keep me".getBytes)
-      val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-      // the run-owns-the-dir contract is ENFORCED, not trusted: a shared
-      // scratch root (which could hold same-named edges/r* files) is
-      // rejected before anything is written or deleted
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs, maxIter = 1,
-          checkpointDir = Some(dir.toString), driverMaxEdges = 0)
-      }
-      assert(java.nio.file.Files.exists(bystander),
-        "refusal must not delete pre-existing files")
-      import scala.jdk.CollectionConverters._
-      val leftovers = java.nio.file.Files.list(dir).iterator().asScala
-        .filterNot(_ == bystander).toSeq
-      assert(leftovers.isEmpty, s"refusal must not create files: $leftovers")
-    } finally {
-      java.nio.file.Files.deleteIfExists(bystander)
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
-
-  test("connectedComponents takes the reliable-checkpoint path when a dir is configured") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt")
-    try {
+      val before = sc.getPersistentRDDs.keySet.toSet
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      val cc = Dedup.connectedComponents(pairs,
-        checkpointDir = Some(dir.toString), driverMaxEdges = 0)
+      val cc = Dedup.connectedComponents(pairs, driverMaxEdges = 0)
+      assert(cc.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+        s"the result is not a cut:\n${cc.queryExecution.analyzed}")
       val out = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // the returned frame is backed by files in the configured (fault-
-      // tolerant) location — executor loss no longer kills the iteration
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      val files = try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
-        finally walk.close()
-      assert(files.nonEmpty, "no reliable checkpoint files written")
-      // intermediate rounds and the edge list were cleaned up: only the
-      // final round's label files remain
-      val rounds = files.flatMap("/(r\\d+|edges)/".r.findFirstMatchIn(_).map(_.group(1))).toSet
-      assert(rounds.size == 1 && rounds.head.startsWith("r"),
-        s"expected exactly the final round's files, got dirs $rounds")
+      CacheHygiene.release(cc)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"persisted after release: $left")
     } finally {
+      if (prev.isEmpty) sc.setCheckpointDir(null)
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(dir)
       val all = try walk.iterator().asScala.toList finally walk.close()

@@ -120,21 +120,6 @@ class SamplingSpec extends SparkSpecBase {
       .collect().map(_.getLong(1)).toSeq == Seq(1L))
   }
 
-  test("budgetSelect's reliable-checkpoint materialiser matches the default path") {
-    val rows = (1L to 400L).map(i => (s"g${i % 3}", i, (i * 7) % 50 + 1))
-      .toDF("grp", "id", "cost")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-budget-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    val reliable = Sampling.budgetSelect(rows, "grp", "id", "cost", 300L, Some("cost"),
-        materialize = _.checkpoint())
-      .select("grp", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val default = Sampling.budgetSelect(rows, "grp", "id", "cost", 300L, Some("cost"))
-      .select("grp", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(reliable == default && reliable.nonEmpty)
-    // the reliable run really went through the checkpoint dir
-    assert(new java.io.File(ckpt).listFiles().nonEmpty)
-  }
-
   test("budgetSelect holds its contract on a large cached input (one ranged run)") {
     // regression shape for the two-evaluation range-exchange bug: a
     // cached many-partition input large enough that the range

@@ -36,7 +36,7 @@ class ShuffleSizingSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       assert(renamed.columns.toSeq == Seq(aNew, bNew),
         s"rename ($a->$aNew, $b->$bNew) must project to exactly two columns")
       withArena { ck =>
-        val parted = ShuffleSizing.partitionedCut(ck, renamed, aNew, 4, _.localCheckpoint())
+        val parted = ShuffleSizing.partitionedCut(ck, renamed, aNew, 4)
         val agg = parted.groupBy(col(aNew)).agg(count(lit(1)))
         assert(exchanges(agg).isEmpty,
           s"rename ($a->$aNew, $b->$bNew) lost the capture partitioning:\n" +
@@ -51,7 +51,7 @@ class ShuffleSizingSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val inputs = Seq(1, 4, 8).map(w => (rows, w)) ++
       Seq(1, 4).map(w => (rows.filter(lit(false)), w))
     for ((in, w) <- inputs) withArena { ck =>
-      val cut = ShuffleSizing.partitionedCut(ck, in.repartition(3), "k", w, _.localCheckpoint())
+      val cut = ShuffleSizing.partitionedCut(ck, in.repartition(3), "k", w)
       assert(cut.rdd.getNumPartitions == w, s"width $w")
       assert(cut.count() == in.count())
       assert(cut.filter(spark_partition_id() =!= pmod(hash(col("k")), lit(w))).count() == 0,
@@ -64,7 +64,7 @@ class ShuffleSizingSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val edges = (0L until 60L).map(i => (i % 17L, i)).toDF("s", "t")
     val other = (0L until 17L).map(i => (i, i * 10L)).toDF("s", "x").localCheckpoint()
     for (w <- Seq(1, 2, 8)) withArena { ck =>
-      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w, _.localCheckpoint())
+      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w)
       val agg = cut.groupBy(col("s")).agg(count(lit(1)).as("n"))
       val joined = agg.join(other.hint("merge"), Seq("s"), "left")
       val ex = exchanges(joined)
@@ -81,7 +81,7 @@ class ShuffleSizingSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val edges = (0L until 60L).map(i => (i % 17L, i)).toDF("s", "t")
     val nodes = (0L until 60L).map(i => (i, i % 5L)).toDF("id", "label")
     for (w <- Seq(1, 8)) withArena { ck =>
-      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w, _.localCheckpoint())
+      val cut = ShuffleSizing.partitionedCut(ck, edges, "s", w)
       val (e, n) = ShuffleSizing.roundSides(cut, "t", nodes, "id", broadcastNodes = false, w)
       val joined = e.join(n.hint("merge"), col("t") === col("id"))
       val ex = exchanges(joined)
