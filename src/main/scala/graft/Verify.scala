@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.catalog result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   *   ./run_local.sh graft.Verify <sfDir> <outDir> [nameRegex]
@@ -22,11 +22,12 @@ object Verify {
     * stays open. */
   def dump(spark: SparkSession, sfDir: String, outDir: String, rx: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(_._1.matches(rx)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val picked = SparkEntry.catalog.filter(_.name.matches(rx))
+    picked.foreach { p =>
+      try p.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${p.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${p.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -41,8 +42,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(_._1.matches(rx))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = picked.map(p => s"${q(p.name)}: ${q(p.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }
