@@ -24,7 +24,7 @@ class SparkEntrySpec extends SparkSpecBase {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
-  test("the catalog holds 205 distinct names, each with an oracle, and rejects a repeated name") {
+  test("catalog holds 205 distinct names, each with an oracle; repeats are rejected") {
     val names = SparkEntry.catalog.map(_.name)
     assert(names.size == 205 && names.distinct.size == 205)
     val empty = SparkEntry.catalog.filter(_.oracle.trim.isEmpty).map(_.name)
