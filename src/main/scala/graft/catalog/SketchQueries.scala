@@ -105,11 +105,15 @@ object SketchQueries {
         .orderBy(col("event_type"))
     }),
 
-    // ANALYZE-style table profile: one-pass per-column row/null/ndv +
+    // ANALYZE-style table profile: per-column row/null/ndv +
     // native-order min/max over engine-portable projections (dates via
     // the date->string cast fast path — same 'yyyy-MM-dd' text in both
     // engines without per-row ICU pattern formatting; money
-    // pre-quantized to cents — float repr never crosses the wire).
+    // pre-quantized to cents — float repr never crosses the wire). One
+    // keyless aggregate gives rows, nulls and min/max; a second holds
+    // only the exact distinct counts, so its Expand feeds a codegen'd
+    // HashAggregate. Both 1-row results are collected and unpivoted on
+    // the driver.
     Q("q132_table_profile",
       // Per-column stats, one UNION ALL leg per profiled projection;
       // min/max on native types, stringified last.
@@ -159,8 +163,9 @@ object SketchQueries {
         .orderBy(col("column_name"))
     }),
 
-    // The same profile through the 100 TB path: ndv from the portable
-    // HLL sketch (approxNdv mode — no Expand in the plan, register
+    // The same profile through the 100 TB path: q132's metadata
+    // aggregate, with ndv from the portable HLL sketch in place of the
+    // distinct counts (approxNdv mode — no Expand in the plan, register
     // partials map-side-combine to ≤ cols·256 rows per partition
     // before the exchange; PlanShapeSpec-pinned). Fully oracle-gated:
     // the estimate's every bit, linear-counting correction included,

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.{GraftPlanBridge, GraftStreamBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Shared._
@@ -15,7 +15,10 @@ object StreamingQueries {
     * `spark.sql.shuffle.partitions` of the session the stream starts
     * on, and has no per-query form of it. The clone copies the caller's
     * SQL conf and registered functions, so only the width differs, and
-    * the caller's own conf is never written. */
+    * the caller's own conf is never written. The clone is the stream's
+    * alone: once the stream stops, [[GraftStreamBridge.releaseBuses]]
+    * takes its listener buses off the context, which would otherwise
+    * hold them (and the clone) for the life of the context. */
   private def streamSession(s: SparkSession, n: Int): SparkSession = {
     val clone = GraftPlanBridge.cloneSession(s)
     clone.conf.set("spark.sql.shuffle.partitions", n.toString)
@@ -109,7 +112,8 @@ object StreamingQueries {
         .option("path", outDir)
         .option("checkpointLocation", new java.io.File(base, "ckpt").toString)
         .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable()
+      finally { q.stop(); GraftStreamBridge.releaseBuses(q) }
       s.read.schema("user_id LONG, trigger_ts TIMESTAMP, response_ts TIMESTAMP")
         .parquet(outDir)
         .select(col("user_id"), col("trigger_ts"), col("response_ts"))

@@ -53,13 +53,14 @@ class MetricsPinSpec extends SparkSpecBase {
     (m.shuffleReadRows, m.shuffleWriteRows)
   }
 
-  // q132 joined the set in r17 (judge directive #5): the one heavy
-  // rows-unstable query in the r16 sf1 bench outside the documented
-  // AQE-flip list. Same class as q26: profile() plans the SAME orders
-  // scan subtree under both the wide metadata aggregate and the exact-
-  // NDV Expand aggregate, so whether AQE's stage reuse unifies the two
-  // scans hinges on canonicalized-plan equality — flippable between
-  // invocations of unchanged code. Pinned with reuse off like the rest.
+  // q132 joined the set in r17: the one heavy rows-unstable query in
+  // the r16 sf1 bench outside the documented AQE-flip list, when
+  // profile() planned the same orders scan under one aggregate holding
+  // both the metadata and the exact-NDV Expand. It now runs two
+  // separate 1-row aggregates (metadata, then distinct counts), each
+  // collected on its own, so no plan holds two copies of the scan for
+  // stage reuse to unify; the pin stays as the run-independence check,
+  // with reuse off like the rest.
   for (q <- Seq("q78_big_qty_orders", "q93_copurchase_pagerank",
                 "q137_label_propagation", "q26_jaccard_pairs", "q164_kmv_source_overlap",
                 "q132_table_profile")) {

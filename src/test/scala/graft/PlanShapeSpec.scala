@@ -111,19 +111,14 @@ class PlanShapeSpec extends SparkSpecBase {
     // carries one (col-id, VALUE) pair per cell with no map-side
     // reduction; the HLL mode must not contain it anywhere — its
     // register partials combine to ≤ cols·256 rows per partition.
-    // profile() checkpoints eagerly, so pin the two internal plans
-    // (the wide metadata aggregate and the register sketch) directly.
+    // profile() collects both passes eagerly, so pin the two internal
+    // plans (the metadata aggregate and the register sketch) directly.
     import org.apache.spark.sql.functions.col
-    val orders = graft.core.Tables.orders(spark, sf0001)
-    val cols = Seq("o_orderkey" -> col("o_orderkey"),
-      "o_custkey" -> col("o_custkey"), "o_orderstatus" -> col("o_orderstatus"))
-    val projected = orders.select(cols.map { case (n, c) => c.as(n) }: _*)
-    def phys(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.executedPlan.toString
-    val approxWide = phys(graft.ops.Profiler.metadataAgg(projected, cols, approxNdv = true))
+    val (projected, names) = profiledOrders
+    val approxWide = phys(graft.ops.Profiler.metadataAgg(projected, names))
     assert(!approxWide.contains("Expand"), approxWide.take(3000))
     val sketch = phys(graft.ops.Sketches.hllProfile(projected,
-      cols.zipWithIndex.map { case ((n, _), i) => (i, col(n)) }))
+      names.zipWithIndex.map { case (n, i) => (i, col(n)) }))
     assert(!sketch.contains("Expand"), sketch.take(3000))
     // the register sketch must PARTIALLY aggregate before its exchange
     // (that map-side combine is the whole scale argument)
@@ -131,8 +126,33 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(sketch.linesIterator.exists(l =>
       l.contains("HashAggregate") && l.contains("partial_max")), sketch.take(3000))
     // and the exact mode still rides Expand (the contrast this records)
-    val exactWide = phys(graft.ops.Profiler.metadataAgg(projected, cols, approxNdv = false))
-    assert(exactWide.contains("Expand"), exactWide.take(3000))
+    val exactNdv = phys(graft.ops.Profiler.ndvAgg(projected, names))
+    assert(exactNdv.contains("Expand"), exactNdv.take(3000))
+  }
+
+  test("exact profile: no SortAggregate above an Expand; the NDV aggregate is hashed") {
+    // string min/max buffers force a SortAggregate; sharing one
+    // aggregate with the distinct counts put that interpreted operator
+    // above the Expand, keyed on every column plus the group id
+    val (projected, names) = profiledOrders
+    val meta = phys(graft.ops.Profiler.metadataAgg(projected, names))
+    assert(!meta.contains("Expand"), meta.take(3000))
+    val ndv = phys(graft.ops.Profiler.ndvAgg(projected, names))
+    assert(ndv.contains("Expand"), ndv.take(3000))
+    assert(!ndv.contains("SortAggregate"), ndv.take(3000))
+    assert(ndv.linesIterator.count(_.contains("HashAggregate")) >= 2, ndv.take(3000))
+  }
+
+  private def phys(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.toString
+
+  /** Three of q132's projections over orders, string and numeric. */
+  private def profiledOrders = {
+    import org.apache.spark.sql.functions.col
+    val orders = graft.core.Tables.orders(spark, sf0001)
+    val cols = Seq("o_orderkey" -> col("o_orderkey"),
+      "o_custkey" -> col("o_custkey"), "o_orderstatus" -> col("o_orderstatus"))
+    (orders.select(cols.map { case (n, c) => c.as(n) }: _*), cols.map(_._1))
   }
 
   test("gopher rules and winnowing are map-only — no keyed exchange anywhere") {
@@ -355,7 +375,7 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(!p.contains("Scan parquet"), "no re-scan of raw documents")
   }
 
-  test("table profile unpivot reads the checkpointed 1-row aggregate, not the table") {
+  test("table profile result is driver-side: its plan never re-scans the table") {
     val p = plan("q132_table_profile")
     assert(!p.contains("Scan parquet"),
       "per-column legs must not re-scan the source table:\n" + p.take(2000))

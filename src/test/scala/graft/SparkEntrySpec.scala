@@ -5,6 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.GraftStreamBridge
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -67,5 +69,26 @@ class SparkEntrySpec extends SparkSpecBase {
     assert(!seen.isEmpty, "no stream start was observed")
     assert(seen.asScala.forall(_ == own), s"caller width during the stream: ${seen.asScala}")
     assert(spark.conf.get(key) == own)
+  }
+
+  test("q190 leaves the context's listener bus as it found it") {
+    val sc = spark.sparkContext
+    // streaming buses only: Spark's ContextCleaner removes a collected
+    // session's ExecutionListenerBus whenever a GC happens to run
+    def buses = GraftStreamBridge.contextListeners(sc).filter(_.isInstanceOf[StreamingQueryListenerBus])
+    // a stream on another session runs through q190 and must keep its bus
+    val other = spark.newSession()
+    val running = other.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").start()
+    try {
+      val otherBus = GraftStreamBridge.busOf(other)
+      val before = buses.size
+      assert(SparkEntry.queries("q190_stream_interval_join")(spark, sf0001).count() > 0)
+      assert(buses.size == before, s"streaming buses ${buses.size}, before q190 $before")
+      assert(buses.exists(_ eq otherBus), "the other session's stream lost its bus")
+    } finally {
+      running.stop()
+      GraftStreamBridge.releaseBuses(running)
+    }
   }
 }

@@ -77,7 +77,7 @@ class CutOwnershipSpec extends SparkSpecBase {
     assert(reads(bins).size == 1)
   }
 
-  test("the pinned 1-row aggregates of Profiler and Retrieval are caller-owned") {
+  test("Profiler keeps no cut; Retrieval's 1-row aggregate is caller-owned") {
     owns("profile")(Profiler.profile(docs, Seq("id" -> $"id", "text" -> $"text")))
     val ranked = Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "rank")
     owns("evaluateRanking")(Retrieval.evaluateRanking(ranked, Seq(2L).toDF("id"), Seq(1, 3)))

@@ -19,6 +19,10 @@ class ProfilerSpec extends SparkSpecBase {
     // min/max must be numeric order: 9 < 100 (string order would say "100" < "9")
     assert(byName("num") == ((4L, 1L, 2L, "9", "100")))
     assert(byName("str") == ((4L, 1L, 2L, "a", "b")))
+    // empty input: a row per column, no rows counted, null sums and bounds
+    val empty = Profiler.profile(df.limit(0), Seq("num" -> col("num"), "str" -> col("str")))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.get(2), r.getLong(3), r.get(4), r.get(5)))
+    assert(empty.toSeq == Seq(("num", 0L, null, 0L, null, null), ("str", 0L, null, 0L, null, null)))
   }
 
   test("profile accepts derived projections (quantized money)") {
