@@ -2,40 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{DeflateLen, DeflateRatioE3, NormalizeNfc, VecDot}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extensions entry point — the deployment-grade way to load the
-  * engine's native expressions on every session of a cluster:
+  * engine's SQL functions on every session of a cluster:
   *
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
-  * injects `vec_dot` (the codegen'd vector dot product backing the ANN
-  * and cosine-dedup operators) into the function registry at session
-  * build time, so SQL and DataFrame plans can call it with no per-query
-  * registration. `VecExpressions.register` remains as the programmatic
-  * fallback for sessions created without the config (the library calls
-  * it defensively before building vector plans).
+  * injects every name of [[graft.functions.SqlSurface.functions]] (the
+  * native kernels such as `vec_dot`, the composed text/vector/sampling
+  * library, `hmac_sha256`) into the function registry at session build
+  * time. `SqlSurface.register` registers the same table on a session
+  * created without the config. DataFrame plans need neither: the Scala
+  * builders wrap their expressions directly as Columns.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String) = new ExpressionInfo(classOf[VecDot].getName, name)
-    def builder(exprs: Seq[Expression]): Expression = VecDot(exprs.head, exprs(1))
-    ext.injectFunction((FunctionIdentifier("vec_dot"), info("vec_dot"), builder _))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NormalizeNfc].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NormalizeNfc(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      (exprs: Seq[Expression]) => DeflateLen(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("deflate_ratio_e3"),
-      new ExpressionInfo(classOf[DeflateRatioE3].getName, "deflate_ratio_e3"),
-      (exprs: Seq[Expression]) => DeflateRatioE3(exprs.head)))
-    // the composed text/vector/sampling library (SqlSurface): same
-    // Catalyst trees the Scala API builds, exposed by name to SQL
+  override def apply(ext: SparkSessionExtensions): Unit =
     graft.functions.SqlSurface.functions.foreach { case (name, fb) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.SqlSurface", name), fb))
     }
-  }
 }

@@ -136,7 +136,6 @@ object MultimodalQueries {
                            AND b2.doc_id < d.doc_id
                            AND bit_count(xor(d.dhash, b2.dhash)) <= 3)
          ORDER BY doc_id""")((s, dir) => {
-      graft.functions.ImageExpressions.register(s)
       val hashed = graft.ops.Multimodal.assetsFromBinary(
           t(s, dir, "documents"), "doc_id", "text", "image", "fake")
         .select(col("asset_id").as("doc_id"),

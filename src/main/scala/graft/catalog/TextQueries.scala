@@ -349,7 +349,6 @@ object TextQueries {
            CAST(length(nfc_normalize(text)) AS INTEGER) AS len_nfc,
            nfc_normalize(text) <> text AS changed
          FROM f ORDER BY c_custkey""")((s, dir) => {
-      graft.functions.TextExpressions.register(s)
       val ck = col("c_custkey")
       val decomposedE = decode(unbase64(lit("ZcyB")), "UTF-8") // 'e' + U+0301
       val text = concat(lit("caf"),

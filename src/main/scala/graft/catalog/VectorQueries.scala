@@ -394,7 +394,6 @@ object VectorQueries {
       """SELECT vec_id, CAST(len(embedding) AS INTEGER) AS dim,
          round(sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_norm
          FROM embeddings ORDER BY vec_id""")((s, dir) => {
-      graft.functions.VecExpressions.register(s)
       t(s, dir, "embeddings")
         .select(col("vec_id"), size(col("embedding")).as("dim"),
           round(VF.l2NormNative(col("embedding")), 6).as("l2_norm"))

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Haitsma–Kalker-style acoustic fingerprint for audio payloads — the
@@ -109,9 +108,6 @@ case class AudioFingerprint(child: Expression) extends UnaryExpression {
 }
 
 object AudioExpressions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_fingerprint", exprs => AudioFingerprint(exprs.head), "built-in")
-
-  def audioFingerprint(c: Column): Column = call_function("audio_fingerprint", c)
+  def audioFingerprint(c: Column): Column =
+    GraftColumnBridge.column(AudioFingerprint(GraftColumnBridge.expression(c)))
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** HMAC-SHA256 signature computation + verification
@@ -53,8 +53,4 @@ object Hmac {
       verifySignature(Option(b).getOrElse(""), s, secret))
     f(body, signature)
   }
-
-  /** SQL registration: `hmac_sha256(body, secret)`. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("hmac_sha256", (body: String, secret: String) => hmacSha256Hex(secret, body))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Real image decode for PNG/JPEG payloads via the stock-JDK
@@ -152,9 +151,6 @@ case class ImageDHash(child: Expression) extends UnaryExpression {
 }
 
 object ImageExpressions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_dhash", exprs => ImageDHash(exprs.head), "built-in")
-
-  def imageDHash(c: Column): Column = call_function("image_dhash", c)
+  def imageDHash(c: Column): Column =
+    GraftColumnBridge.column(ImageDHash(GraftColumnBridge.expression(c)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,9 +110,6 @@ object Md5WindowLongExpr {
 }
 
 object HllRegisterExpr {
-  private[functions] def litInt(e: Expression, name: String): Int =
-    WinnowMins.litInt(e, name)
-
   // MessageDigest is stateful; one per thread, digest() resets it.
   private val md5: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
@@ -140,9 +136,4 @@ object HllRegisterExpr {
     val rank = if (w == 0L) 61 else java.lang.Long.numberOfLeadingZeros(w) - 3
     new GenericInternalRow(Array[Any](bucket, rank))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_register", exprs => HllRegisterExpr(exprs.head,
-        litInt(exprs(1), "m")), "built-in")
 }

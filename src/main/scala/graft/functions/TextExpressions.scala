@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -220,14 +219,6 @@ case class WinnowMins(child: Expression, k: Int, w: Int) extends UnaryExpression
 }
 
 object WinnowMins {
-  /** k/w arrive as SQL literals through the function registry. */
-  private[functions] def litInt(e: Expression, name: String): Int = e match {
-    case lit: org.apache.spark.sql.catalyst.expressions.Literal =>
-      lit.value.asInstanceOf[Number].intValue()
-    case other =>
-      throw new IllegalArgumentException(s"winnow_mins $name must be an int literal, got $other")
-  }
-
   // MessageDigest is stateful; one per thread, digest() resets it.
   // No task-completion bookkeeping needed (unlike DeflateLen's native
   // Deflater): this is pure JVM heap, collected with the thread.
@@ -377,42 +368,23 @@ object CdcStarts {
 }
 
 object TextExpressions {
-  /** Register `nfc_normalize`/`deflate_len` for call_function access
-    * (same pattern as [[VecExpressions.register]]). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NormalizeNfc(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", exprs => DeflateLen(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_ratio_e3", exprs => DeflateRatioE3(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_mins", exprs => WinnowMins(exprs.head,
-        WinnowMins.litInt(exprs(1), "k"), WinnowMins.litInt(exprs(2), "w")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_starts", exprs => CdcStarts(exprs.head,
-        WinnowMins.litInt(exprs(1), "k"), WinnowMins.litInt(exprs(2), "bits")),
-      "built-in")
-  }
-
-  def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)
+  def nfcNormalize(text: Column): Column =
+    GraftColumnBridge.column(NormalizeNfc(GraftColumnBridge.expression(text)))
 
   /** Distinct winnowing window-min fingerprints of a token array —
-    * the [[WinnowMins]] kernel (register(spark) first). */
+    * the [[WinnowMins]] kernel. */
   def winnowMins(tokens: Column, k: Int, w: Int): Column =
-    call_function("winnow_mins", tokens,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
+    GraftColumnBridge.column(WinnowMins(GraftColumnBridge.expression(tokens), k, w))
 
   /** Content-defined chunk starts of a token array — the [[CdcStarts]]
-    * kernel (register(spark) first). */
+    * kernel. */
   def cdcStarts(tokens: Column, k: Int, bits: Int): Column =
-    call_function("cdc_starts", tokens,
-      org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(bits))
+    GraftColumnBridge.column(CdcStarts(GraftColumnBridge.expression(tokens), k, bits))
 
   /** Compression quality signal: (deflated_bytes ×1000) div raw_bytes
     * — integer milli-ratio; low = templated/repetitive, ~1000+ =
     * incompressible. Null-safe; empty strings yield null (no ratio).
     * One kernel call per row ([[DeflateRatioE3]]). */
-  def compressionRatioE3(c: Column): Column = call_function("deflate_ratio_e3", c)
+  def compressionRatioE3(text: Column): Column =
+    GraftColumnBridge.column(DeflateRatioE3(GraftColumnBridge.expression(text)))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for vector dot products over
@@ -99,21 +98,12 @@ object VecExpressions {
     * from a primitive array reads flat doubles instead. Bitwise the
     * SAME values — only the storage representation changes. */
   def litVec(cv: Seq[Double]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
+    GraftColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.Literal(
         org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(cv.toArray),
         ArrayType(DoubleType, containsNull = false)))
 
-  /** Register `vec_dot` in the session's function registry so plans
-    * can reference it via call_function (the public way to inject a
-    * custom Expression without internal Column constructors). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-    // legacy alias from round 1
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_f", exprs => VecDot(exprs.head, exprs(1)), "built-in")
-  }
-
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def vecDot(a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      VecDot(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

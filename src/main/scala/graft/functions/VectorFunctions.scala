@@ -28,7 +28,7 @@ object VectorFunctions {
 
   /** Codegen'd forms via the native VecDot expression (same fold order —
     * bit-identical to the HOF forms, minus the interpreted-lambda
-    * overhead). Requires VecExpressions.register on the session. */
+    * overhead). Plain Columns: no session registration needed. */
   def dotNative(a: Column, b: Column): Column = VecExpressions.vecDot(a, b)
 
   def l2NormNative(a: Column): Column = sqrt(VecExpressions.vecDot(a, a))
@@ -45,8 +45,7 @@ object VectorFunctions {
       case Some(ArrayType(FloatType, _)) | Some(ArrayType(DoubleType, _)) => true
       case _ => false
     }
-    if (isNum) { VecExpressions.register(df.sparkSession); cosineNative(a, b) }
-    else cosine(a, b)
+    if (isNum) cosineNative(a, b) else cosine(a, b)
   }
 
   /** The per-query top-k rank that ends every ANN search, as a
@@ -204,7 +203,6 @@ object VectorFunctions {
     * the 64KB JVM method limit). Either way: a per-row map, no shuffle. */
   def assignBuckets(df: DataFrame, vec: Column, centroids: DataFrame,
                     outCol: String): DataFrame = {
-    VecExpressions.register(df.sparkSession)
     quantizer(centroids) match {
       case Left(model) => df.withColumn(outCol, nearestBucketExpr(vec, model))
       case q @ Right(_) => df.withColumn(outCol, element_at(probesFor(q, vec, 1), 1))
@@ -218,7 +216,6 @@ object VectorFunctions {
     * probe set (the assignment is a per-row map, not a keyed window). */
   def assignProbes(df: DataFrame, vec: Column, centroids: DataFrame,
                    outCol: String, nprobe: Int): DataFrame = {
-    VecExpressions.register(df.sparkSession)
     df.withColumn(outCol, explode(probesFor(quantizer(centroids), vec, nprobe)))
   }
 
@@ -233,7 +230,6 @@ object VectorFunctions {
                                  queries: DataFrame, queryVec: Column,
                                  centroids: DataFrame, bucketCol: String,
                                  nprobe: Int): (DataFrame, DataFrame) = {
-    VecExpressions.register(corpus.sparkSession)
     val q = quantizer(centroids)
     val tagged = q match {
       case Left(model) => corpus.withColumn(bucketCol, nearestBucketExpr(corpusVec, model))
@@ -255,7 +251,6 @@ object VectorFunctions {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
               idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    VecExpressions.register(corpus.sparkSession)
     // run the centroid pipeline exactly once; small models inline into
     // codegen for both corpus tagging and query probes, large ones ride
     // one shared broadcast variable
@@ -288,7 +283,6 @@ object VectorFunctions {
     * map and the partitioned write hash-splits locally. */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     centroids: DataFrame, path: String): Unit = {
-    VecExpressions.register(corpus.sparkSession)
     assignBuckets(corpus.select(col(idCol), col(vecCol)), col(vecCol), centroids, "bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
     // a rebuild is a fresh generation line: the overwrite cleared any
@@ -328,7 +322,6 @@ object VectorFunctions {
     * in-place mutation. */
   def appendIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
                      centroids: DataFrame, path: String): Unit = {
-    VecExpressions.register(batch.sparkSession)
     val (fs, root) = fsRoot(batch.sparkSession, path)
     IvfManifest.runIntent(fs, root, ManifestRetain) // crashed pass lands first
     val before = IvfManifest.treeDataFiles(fs, root).toSet
@@ -349,7 +342,6 @@ object VectorFunctions {
     * directories at any depth, and the column is simply not selected. */
   def appendIvfIndexBatch(batch: DataFrame, batchId: Long, idCol: String,
                           vecCol: String, centroids: DataFrame, path: String): Unit = {
-    VecExpressions.register(batch.sparkSession)
     val (fs, root) = fsRoot(batch.sparkSession, path)
     IvfManifest.runIntent(fs, root, ManifestRetain) // crashed pass lands first
     assignBuckets(batch.select(col(idCol), col(vecCol)), col(vecCol), centroids, "bucket")
@@ -586,7 +578,6 @@ object VectorFunctions {
   def ivfIndexTopK(spark: SparkSession, path: String, queries: DataFrame,
                    centroids: DataFrame, idCol: String, vecCol: String,
                    k: Int, nprobe: Int): DataFrame = {
-    VecExpressions.register(spark)
     val q = quantizer(centroids)
     val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("bucket", explode(probesFor(q, col("__qv"), nprobe)))
@@ -645,7 +636,6 @@ object VectorFunctions {
                           centroids: DataFrame, idCol: String, vecCol: String,
                           k: Int, nprobe: Int, maxScans: Int = 0): DataFrame = {
     require(maxScans >= 0, s"maxScans must be >= 0 (0 = uncapped), got $maxScans")
-    VecExpressions.register(spark)
     val q = quantizer(centroids)
     val queriesIn = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     // driver-side probe plan: (query id, probe set), model-sized
@@ -798,7 +788,6 @@ object VectorFunctions {
                       k: Int, iters: Int = 3): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    VecExpressions.register(spark)
     val vecs = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
 
     def centroidDf(model: CentroidModel): DataFrame =
@@ -826,7 +815,6 @@ object VectorFunctions {
     * the convergence metric for kmeansCentroids (1 - mean similarity,
     * non-increasing under Lloyd's iterations). */
   def assignmentInertia(corpus: DataFrame, centroids: DataFrame, vecCol: String): Double = {
-    VecExpressions.register(corpus.sparkSession)
     val model = collectCentroids(centroids)
     // true cosine of the best centroid: scaled score back to cosine by
     // dividing out the row norm (constant across centroids)
@@ -927,7 +915,6 @@ object VectorFunctions {
     * surviving (id, own_milli) rows. */
   def semDedup(points: DataFrame, idCol: String, vecCol: String,
                centroids: DataFrame, minCosine: Double): DataFrame = {
-    VecExpressions.register(points.sparkSession)
     val pairs = graft.ops.Dedup.cosineNearDupsIVF(points, idCol, vecCol,
       centroids, minCosine, nprobe = 1)
     val model = collectCentroids(centroids)
@@ -1029,7 +1016,6 @@ object VectorFunctions {
     * clusters-sized. At 100 TB: a single pass over the corpus. */
   def silhouetteAudit(points: DataFrame, idCol: String, vecCol: String,
                       labelCol: String, centroids: DataFrame): DataFrame = {
-    VecExpressions.register(points.sparkSession)
     val model = collectCentroids(centroids)
     require(model.size >= 2, "silhouette needs at least 2 centroids")
     // true cosine to centroid c (scaled score / own norm, as inertia)

@@ -505,7 +505,6 @@ object Dedup {
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 4, w: Int = 5): DataFrame = {
     require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got $k/$w")
-    graft.functions.TextExpressions.register(docs.sparkSession)
     // Tokenization stays declarative SQL (split/lower/filter — the
     // oracle's exact semantics); hashing + window minima + distinct
     // run in ONE codegen'd kernel ([[graft.functions.WinnowMins]]):
@@ -587,7 +586,6 @@ object Dedup {
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
                 k: Int = 4, avgBits: Int = 5): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    graft.functions.TextExpressions.register(docs.sparkSession)
     ensureParallelism(docs)
       .select(col(idCol),
         expr(s"filter(split(lower($textCol), '\\\\s+'), t -> length(t) > 0)").as("__toks"))
@@ -1078,8 +1076,7 @@ object Dedup {
     */
   def cosineNearDups(vectors: DataFrame, idCol: String, vecCol: String,
                      minCosine: Double, maxHamming: Int = 11): DataFrame = {
-    import graft.functions.{VecExpressions, VectorFunctions}
-    VecExpressions.register(vectors.sparkSession)
+    import graft.functions.VectorFunctions
     // embedding width comes from the data (one-row probe) — a hardcoded
     // dim would silently zero every signature on a different corpus
     // (null-padded zip_with) and degrade candidates to the cross product
@@ -1141,8 +1138,7 @@ object Dedup {
   def cosineNearDupsIVF(vectors: DataFrame, idCol: String, vecCol: String,
                         centroids: DataFrame, minCosine: Double,
                         nprobe: Int = 2): DataFrame = {
-    import graft.functions.{VecExpressions, VectorFunctions}
-    VecExpressions.register(vectors.sparkSession)
+    import graft.functions.VectorFunctions
     val spark = vectors.sparkSession
     val v = ensureParallelism(vectors).select(col(idCol).as("id"), col(vecCol).as("v"))
     // Sub-block the within-bucket self-join (r16, the q50 dissection):

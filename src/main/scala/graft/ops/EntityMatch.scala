@@ -49,25 +49,6 @@ object EntityMatch {
         .filter(col("__bn") <= maxBlockRows).select(col("__k")),
       "__k")
 
-  /** Verify-before-shuffle (r17, the q144 dissection): candidates are
-    * scored and threshold-filtered MAP-SIDE, before the dedup exchange,
-    * instead of after a full-candidate distinct. The old shape shipped
-    * every candidate pair WITH ITS STRING PAYLOAD through the distinct
-    * exchange (4.2M wide rows at sf0.1 — 5+ s of the 6.6 s wall in the
-    * partial-aggregate stage, which also inherited the master scan's
-    * 2-task file-layout parallelism), then scored the survivors. Since
-    * the score is a pure per-row function and the accept filter
-    * commutes with distinct, scoring first and filtering early means
-    * only ACCEPTED matches ever reach an exchange — the §2.3 "shuffle
-    * keys, not payloads" rule. The trade: duplicate candidates from
-    * overlapping blocking passes are scored more than once (bounded by
-    * the pass count, measured ~6% at sf0.1) in exchange for never
-    * shuffling the rejected bulk — at 100 TB the rejected bulk is the
-    * whole quadratic candidate volume, the dominant term by orders of
-    * magnitude. */
-  private def ensureParallelism(df: DataFrame): DataFrame =
-    Dedup.ensureParallelism(df)
-
   /** Best master match per feed record within `maxDist` edits:
     * (feedId, masterId, dist). Feed records with no candidate within
     * the threshold are absent (callers left-join if they need the
@@ -190,7 +171,7 @@ object EntityMatch {
     // scan parallelism — which on a single-file master is 1-2 tasks (a
     // file-layout accident, the r16 ensureParallelism class). Spread it
     // once; all passes share the subtree. No-op on multi-split sources.
-    val m = ensureParallelism(
+    val m = Dedup.ensureParallelism(
       master.select(col(masterId).as("__mid") +:
           fi.map { case (fl, i) => col(fl.masterCol).as(s"__m$i") }: _*)
         .filter(col("__mid").isNotNull))
@@ -230,11 +211,25 @@ object EntityMatch {
     }.reduce(_ + _)
     val w = Window.partitionBy(col("__fid"))
       .orderBy(col("score_milli").desc, col("__mid").asc)
-    // score map-side, filter early, dedup ONLY the accepted survivors
-    // (see the verify-before-shuffle note above). dropDuplicates keys
-    // on the candidate identity columns; the score rides along — every
-    // duplicate carries the identical score (a pure function of those
-    // columns), so which survivor wins is value-indistinguishable.
+    // Verify-before-shuffle (r17, the q144 dissection): candidates are
+    // scored and threshold-filtered MAP-SIDE, before the dedup exchange,
+    // instead of after a full-candidate distinct. The old shape shipped
+    // every candidate pair WITH ITS STRING PAYLOAD through the distinct
+    // exchange (4.2M wide rows at sf0.1 — 5+ s of the 6.6 s wall in the
+    // partial-aggregate stage, which also inherited the master scan's
+    // 2-task file-layout parallelism), then scored the survivors. Since
+    // the score is a pure per-row function and the accept filter
+    // commutes with distinct, scoring first and filtering early means
+    // only ACCEPTED matches ever reach an exchange — the §2.3 "shuffle
+    // keys, not payloads" rule. The trade: duplicate candidates from
+    // overlapping blocking passes are scored more than once (bounded by
+    // the pass count, measured ~6% at sf0.1) in exchange for never
+    // shuffling the rejected bulk — at 100 TB the rejected bulk is the
+    // whole quadratic candidate volume, the dominant term by orders of
+    // magnitude. dropDuplicates keys on the candidate identity columns;
+    // the score rides along — every duplicate carries the identical
+    // score (a pure function of those columns), so which survivor wins
+    // is value-indistinguishable.
     val candCols = ("__fid" +: fi.map { case (_, i) => s"__f$i" }) ++
       ("__mid" +: fi.map { case (_, i) => s"__m$i" })
     cands

@@ -302,7 +302,6 @@ object Multimodal {
     * Returns (id_a, id_b, hamming). */
   def imageNearDups(assets: DataFrame, idCol: String = "asset_id",
                     payloadCol: String = "payload", maxHamming: Int = 3): DataFrame = {
-    graft.functions.ImageExpressions.register(assets.sparkSession)
     val hashed = assets.select(
       col(idCol).as("id"),
       graft.functions.ImageExpressions.imageDHash(col(payloadCol)).as("dhash"))
@@ -325,7 +324,6 @@ object Multimodal {
     * plan. Returns (id_a, id_b, hamming). */
   def audioNearDups(assets: DataFrame, idCol: String = "asset_id",
                     payloadCol: String = "payload", maxHamming: Int = 3): DataFrame = {
-    graft.functions.AudioExpressions.register(assets.sparkSession)
     val hashed = assets.select(
       col(idCol).as("id"),
       graft.functions.AudioExpressions.audioFingerprint(col(payloadCol)).as("afp"))

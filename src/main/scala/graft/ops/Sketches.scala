@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -31,11 +31,10 @@ object Sketches {
     * kernel — one md5 digest and a few shifts per value, bit-identical
     * to the hex-string derivation the oracle SQL keeps (the parity
     * argument lives on the expression; ApproxAggSpec pins it against
-    * this Column-chain's former output). Callers must have called
-    * [[graft.functions.HllRegisterExpr.register]] on the session
-    * first ([[hllDistinct]]/[[hllProfile]] do). */
+    * this Column-chain's former output). */
   def hllRegister(value: Column, m: Int): Column =
-    call_function("hll_register", value.cast("string"), lit(m))
+    GraftColumnBridge.column(graft.functions.HllRegisterExpr(
+      GraftColumnBridge.expression(value.cast("string")), m))
 
   /** Σ 2^(61−max_rank) over USED registers — the harmonic-sum term a
     * register aggregate carries into [[withHllEstimate]]. */
@@ -109,7 +108,6 @@ object Sketches {
   def hllDistinct(df: DataFrame, groupCols: Seq[String], value: Column,
                   p: Int = 8): DataFrame = {
     require(p >= 4 && p <= 8, s"p must be in [4,8] (m=16..256, overflow-proven), got $p")
-    graft.functions.HllRegisterExpr.register(df.sparkSession)
     val m = 1 << p
     val grp = groupCols.map(col)
     val regs = df
@@ -147,7 +145,6 @@ object Sketches {
     * is O(partitions · cols · m), independent of row count. */
   def hllProfile(df: DataFrame, cols: Seq[(Int, Column)], p: Int = 8): DataFrame = {
     require(p >= 4 && p <= 8, s"p must be in [4,8] (m=16..256, overflow-proven), got $p")
-    graft.functions.HllRegisterExpr.register(df.sparkSession)
     val m = 1 << p
     val regStructs = array(cols.map { case (i, c) =>
       struct(lit(i).as("cid"), hllRegister(c, m).as("r"))

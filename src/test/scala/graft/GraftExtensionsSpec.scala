@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * builder.withExtensions) performs at session build. A session-based
   * variant would have to clear/restore the JVM-global default session,
-  * racing concurrently-running suites that share TestSession. */
+  * racing concurrently-running suites that share TestSession. The name
+  * comparison with `SqlSurface.register` uses a `newSession()` of the
+  * shared session, so its registry stays untouched. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions injects vec_dot into the session function registry") {
@@ -35,5 +37,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
       Literal.create(Seq(3.0, 4.0), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
     assert(expr.isInstanceOf[graft.functions.VecDot])
     assert(expr.eval(null) == 11.0)
+
+    // one table: the extension resolves exactly the names SqlSurface.register registers
+    val session = TestSession.spark.newSession()
+    val before = session.sessionState.functionRegistry.listFunction().toSet
+    graft.functions.SqlSurface.register(session)
+    val registered = (session.sessionState.functionRegistry.listFunction().toSet -- before)
+      .map(_.funcName)
+    val injected = registry.listFunction().map(_.funcName).toSet
+    assert(injected == registered)
+    assert(!injected.contains("vec_dot_f") && !registered.contains("vec_dot_f"))
   }
 }

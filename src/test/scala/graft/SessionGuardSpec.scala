@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scans that keep session state in one place each: sessions are
   * built by the bench harness recipe (plus the three tools that must not
   * share it), session conf is written only by the table loaders' tuning
-  * and the stream width pin on q190's private session, no operator touches
+  * and the stream width pin on q190's private session, the session's
+  * function registry only by `SqlSurface` (operators wrap their kernels
+  * as Columns and never look a function up by name), no operator touches
   * AQE, lineage is cut only through the checkpoint arena, and the only
   * environment the engine reads is the bench's own three variables. */
 class SessionGuardSpec extends AnyFunSuite {
@@ -47,6 +49,13 @@ class SessionGuardSpec extends AnyFunSuite {
       "graft/catalog/StreamingQueries.scala"))
     assert(bad.isEmpty,
       s"carry a width in the plan (repartition(n, key), ShuffleSizing.partitionedCut): $bad")
+  }
+
+  test("the function registry is written and read by name only in SqlSurface") {
+    val bad = Seq("createOrReplaceTempFunction", "udf.register(", "call_function(")
+      .flatMap(n => offenders(n, Set("graft/functions/SqlSurface.scala")).map(o => s"$o: $n"))
+    assert(bad.isEmpty,
+      s"wrap the kernel with GraftColumnBridge.column; SQL names go in SqlSurface.functions: $bad")
   }
 
   test("no engine line names spark.sql.adaptive.enabled") {

@@ -33,7 +33,7 @@ class HmacSpec extends SparkSpecBase {
   }
 
   test("SQL registration") {
-    Hmac.register(spark)
+    SqlSurface.register(spark)
     val r = spark.sql("SELECT hmac_sha256('what do ya want for nothing?', 'Jefe') AS h")
       .head().getString(0)
     assert(r == "5bdcc146bf60754e6a042426089575c75a003f089d2739839dec58b964ec3843")

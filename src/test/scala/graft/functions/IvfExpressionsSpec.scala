@@ -52,7 +52,6 @@ class IvfExpressionsSpec extends SparkSpecBase {
     val rows = (0L until 50L).map(i =>
       (i, Array.tabulate(4)(d => ((i * 31 + d * 17) % 19).toFloat / 10f - 0.9f)))
     val df = rows.toDF("id", "v")
-    graft.functions.VecExpressions.register(spark)
     // the literal form this kernel replaced: per-centroid
     // (vecDot/norm)/||v||, greatest over centroids
     def l2(c: org.apache.spark.sql.Column) =

@@ -67,7 +67,6 @@ class ProjectionExpressionsSpec extends SparkSpecBase {
   // ---- SrpSignExpr ---------------------------------------------------------
 
   test("srpSign equals the when(vec_dot >= 0) power sum bitwise") {
-    VecExpressions.register(spark)
     val planes: Seq[Seq[Double]] = (0 until 7).map(b =>
       (0 until 5).map(i => if (((b * 31 + i * 7) % 3) == 0) 1.0 else -1.0))
     val rows = (0L until 60L).map(i =>

@@ -11,7 +11,6 @@ class TextExpressionsSpec extends SparkSpecBase {
   private val composed = "caf\u00e9"      // precomposed e-acute (4 code points)
 
   test("nfc_normalize composes decomposed sequences and is identity on NFC text") {
-    TextExpressions.register(spark)
     val df = Seq((1L, decomposed), (2L, composed), (3L, "ascii only"), (4L, null))
       .toDF("id", "t")
       .select($"id", TextExpressions.nfcNormalize($"t").as("n"))
@@ -24,7 +23,6 @@ class TextExpressionsSpec extends SparkSpecBase {
   }
 
   test("interpreted eval matches codegen output") {
-    TextExpressions.register(spark)
     val data = Seq(decomposed, composed, s"mixed $composed and $decomposed", "")
     // factoryMode=NO_CODEGEN forces InterpretedUnsafeProjection — the
     // nullSafeEval path; wholeStage alone still runs generated
@@ -40,13 +38,12 @@ class TextExpressionsSpec extends SparkSpecBase {
   test("nfc_normalize is callable from SQL and injectable via GraftExtensions") {
     // the extensions entry point must register without throwing
     new graft.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    TextExpressions.register(spark)
+    SqlSurface.register(spark)
     val out = spark.sql("SELECT nfc_normalize('cafe\\u0301') AS n").head().getString(0)
     assert(out == composed)
   }
 
   test("deflate_len: repetitive text compresses far below prose; noise barely") {
-    TextExpressions.register(spark)
     val rep = "the same line over and over " * 50
     val prose = "A reasonably varied sentence with many distinct words and shapes, " +
       "followed by different content entirely, numbers 12345 and punctuation!"
@@ -64,5 +61,18 @@ class TextExpressionsSpec extends SparkSpecBase {
     val again = Seq((1L, rep)).toDF("id", "t").repartition(3)
       .select(TextExpressions.compressionRatioE3($"t")).head().getLong(0)
     assert(rows(1L).get == again)
+  }
+
+  test("the text kernels evaluate on a session that registered no function") {
+    val toks = Seq("one", "two", "three", "four", "five", "six", "seven", "eight")
+    def run(s: org.apache.spark.sql.SparkSession) =
+      s.createDataFrame(Seq((decomposed, toks))).toDF("t", "toks").select(
+        TextExpressions.nfcNormalize($"t"),
+        TextExpressions.compressionRatioE3($"t"),
+        TextExpressions.winnowMins($"toks", 3, 2),
+        TextExpressions.cdcStarts($"toks", 3, 1)).head()
+    val fresh = run(spark.newSession())
+    assert(fresh.getString(0) == composed)
+    assert(fresh == run(spark))
   }
 }

@@ -8,7 +8,6 @@ class VecExpressionsSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("native vec_dot matches the HOF fold bit-for-bit on real embeddings") {
-    VecExpressions.register(spark)
     val emb = Tables.embeddings(spark, sf0001).limit(100)
     val pairs = emb.select($"vec_id".as("a_id"), $"embedding".as("a"))
       .crossJoin(emb.select($"vec_id".as("b_id"), $"embedding".as("b")))
@@ -21,7 +20,6 @@ class VecExpressionsSpec extends SparkSpecBase {
   }
 
   test("vec_dot stays inside whole-stage codegen") {
-    VecExpressions.register(spark)
     val emb = Tables.embeddings(spark, sf0001).limit(10)
     val plan = emb.select(VecExpressions.vecDot($"embedding", $"embedding").as("d"))
       .queryExecution.executedPlan.toString
@@ -31,7 +29,6 @@ class VecExpressionsSpec extends SparkSpecBase {
   }
 
   test("mixed float/double element types (corpus vs centroid model)") {
-    VecExpressions.register(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(0.5, 0.25))).toDF("f", "d")
     val out = df.select(
       VecExpressions.vecDot($"f", $"d").as("fd"),
@@ -43,7 +40,6 @@ class VecExpressionsSpec extends SparkSpecBase {
   }
 
   test("null and ragged inputs") {
-    VecExpressions.register(spark)
     val df = Seq(
       (Some(Array(1.0f, 2.0f)), Some(Array(3.0f, 4.0f))),
       (None, Some(Array(1.0f))),
@@ -53,5 +49,25 @@ class VecExpressionsSpec extends SparkSpecBase {
     assert(out(0).contains(11.0))
     assert(out(1).isEmpty)       // null input -> null
     assert(out(2).contains(3.0)) // ragged: min-length loop
+  }
+
+  test("vecDot evaluates on a session that registered no function") {
+    val fresh = spark.newSession()
+    val df = fresh.createDataFrame(Seq((Array(1.0f, 2.0f), Array(3.0, 4.0)))).toDF("a", "b")
+    assert(df.select(VecExpressions.vecDot($"a", $"b")).head().getDouble(0) == 11.0)
+  }
+
+  test("a caller's own vec_dot survives the vector operators") {
+    val s = spark.newSession()
+    s.udf.register("vec_dot", (_: Seq[Double], _: Seq[Double]) => -1.0)
+    def callers(): Double = s.sql("SELECT vec_dot(array(1D), array(1D))").head().getDouble(0)
+    assert(callers() == -1.0)
+    val vecs = s.createDataFrame(Seq(
+      (1L, Array(1.0f, 0.0f)), (2L, Array(0.99f, 0.1f)), (3L, Array(0.0f, 1.0f))))
+      .toDF("id", "v")
+    assert(VectorFunctions.bruteForceTopK(vecs, vecs, "id", "v", k = 1).count() == 3)
+    assert(callers() == -1.0)
+    graft.ops.Dedup.cosineNearDups(vecs, "id", "v", minCosine = 0.9).collect()
+    assert(callers() == -1.0)
   }
 }

@@ -102,7 +102,6 @@ class ApproxAggSpec extends SparkSpecBase {
 
   test("digest-byte register kernel is bit-identical to the hex-string derivation") {
     import spark.implicits._
-    graft.functions.HllRegisterExpr.register(spark)
     // the pre-codegen Column chain, kept verbatim as the parity pin —
     // this is also EXACTLY what the oracle SQL computes in DuckDB
     def hexRegister(value: org.apache.spark.sql.Column,
@@ -437,5 +436,11 @@ class ApproxAggSpec extends SparkSpecBase {
         .collect().map(r => (r.getString(0), r.getString(1)) ->
           ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     assert(run(hashed.repartition(1)) == run(hashed.repartition(23, col("h"))))
+  }
+
+  test("hllRegister evaluates on a session that registered no function") {
+    def run(s: org.apache.spark.sql.SparkSession) =
+      s.range(100).select(Sketches.hllRegister(col("id"), 256)).collect().toSeq
+    assert(run(spark.newSession()) == run(spark))
   }
 }

@@ -170,7 +170,6 @@ class MultimodalSpec extends SparkSpecBase {
     val got = Multimodal.imageNearDups(all, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // brute force from the same fingerprints
-    graft.functions.ImageExpressions.register(spark)
     val hs = all.select(col("asset_id"),
       graft.functions.ImageExpressions.imageDHash(col("payload")).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -183,7 +182,6 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("image_dhash stays inside whole-stage codegen") {
-    graft.functions.ImageExpressions.register(spark)
     val plan = assets.select(
       graft.functions.ImageExpressions.imageDHash(col("payload")).as("h"))
     // evaluating forces codegen; a doGenCode bug would fall back or throw
@@ -223,7 +221,6 @@ class MultimodalSpec extends SparkSpecBase {
       Tables.documents(spark, sf0001), "doc_id", "text", "audio", "fake")
     val got = Multimodal.audioNearDups(all, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    graft.functions.AudioExpressions.register(spark)
     val hs = all.select(col("asset_id"),
       graft.functions.AudioExpressions.audioFingerprint(col("payload")).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -236,7 +233,6 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("audio_fingerprint stays inside whole-stage codegen") {
-    graft.functions.AudioExpressions.register(spark)
     val audio = Multimodal.assetsFromBinary(
       Tables.documents(spark, sf0001).limit(50), "doc_id", "text", "audio", "fake")
     val plan = audio.select(
@@ -648,5 +644,15 @@ class MultimodalSpec extends SparkSpecBase {
     assert(probed(2L).duration_ms.contains(500L))
     assert(probed(3L).media_type == "unknown" && probed(3L).format == "bin")
     assert(probed(3L).duration_ms.isEmpty)
+  }
+
+  test("the media kernels evaluate on a session that registered no function") {
+    val bytes = Array.tabulate[Byte](3 * graft.functions.AudioFingerprintKernel.Cells)(i =>
+      ((i * 53 + 7) % 127).toByte)
+    val out = spark.newSession().createDataFrame(Seq(Tuple1(bytes))).toDF("payload").select(
+      graft.functions.ImageExpressions.imageDHash(col("payload")),
+      graft.functions.AudioExpressions.audioFingerprint(col("payload"))).head()
+    assert(out.getLong(0) == graft.functions.DHashKernel.hash(bytes))
+    assert(out.getLong(1) == graft.functions.AudioFingerprintKernel.hash(bytes))
   }
 }
