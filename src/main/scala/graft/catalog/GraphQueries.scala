@@ -195,7 +195,9 @@ object GraphQueries {
     // The graph family on ONE shared capture (GraphCapture, the r16
     // directive-#2 operator): label propagation, PageRank, and BFS hop
     // distance over the same co-purchase graph pay a single
-    // materialize+partition capture instead of three, and the
+    // materialize+partition capture instead of three (a graph within
+    // GraphCapture.DriverMaxEdges is collected once and all three run
+    // on the driver), and the
     // composite must be indistinguishable from the standalone gates'
     // math — the oracle recomputes all three ops from the raw tables
     // in one statement over one shared pairs CTE. (Connected

@@ -341,17 +341,26 @@ object VectorQueries {
          ORDER BY k"""
   }
 
-  /** One PQ fit per fixture dir — training is a pure deterministic
+  /** One PQ fit per embeddings file — training is a pure deterministic
     * function of the corpus (ProductQuantizerSpec pins bit-parity), so
     * q169/q170 share it the way a deployed index shares one trained
-    * codebook across all searches. */
-  private val pqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.functions.PqModel]()
-  private def pqModelFor(s: SparkSession, dir: String): graft.functions.PqModel =
-    pqModelCache.computeIfAbsent(dir, _ =>
-      graft.functions.ProductQuantizer.train(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 4, subDim = 16, k = 8, iters = 2))
+    * codebook across all searches. Keyed as the `Tables` schema memo
+    * is: per qualified file path, with the file's length and
+    * modification time, so a rewritten file is trained again; a
+    * directory is trained on every call. */
+  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Long, graft.functions.PqModel)]()
+  private[catalog] def pqModelFor(s: SparkSession, dir: String): graft.functions.PqModel = {
+    def train() = graft.functions.ProductQuantizer.train(
+      t(s, dir, "embeddings"), "vec_id", "embedding",
+      m = 4, subDim = 16, k = 8, iters = 2)
+    graft.core.Tables.stamp(s, s"$dir/embeddings.parquet").fold(train()) {
+      case (file, length, modified) =>
+        pqModelCache.compute(file, (_, old) =>
+          if (old != null && old._1 == length && old._2 == modified) old
+          else (length, modified, train()))._3
+    }
+  }
 
   val all: Seq[Q] = Seq(
     // Brute-force exact cosine top-k (ANN baseline).

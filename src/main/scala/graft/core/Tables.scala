@@ -86,30 +86,35 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.mergeSchema")
 
+  /** A file's qualified path, length and modification time — what a
+    * memo of something derived from the file is keyed by. None for a
+    * directory or a missing path. */
+  private[graft] def stamp(spark: SparkSession, file: String): Option[(String, Long, Long)] = {
+    val path = new Path(file)
+    Try(path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path))
+      .toOption.filter(_.isFile)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+  }
+
   /** `spark.read.parquet(file)`, given the memoized schema when this JVM
     * already inferred it for the same file under the same settings. The
     * file is stat'ed before Spark infers, so a rewrite during the read
     * leaves an entry the next stat no longer matches. */
-  private def readParquet(spark: SparkSession, file: String): DataFrame = {
-    val path = new Path(file)
-    val stat = Try(path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(path)).toOption.filter(_.isFile)
-    stat match {
+  private def readParquet(spark: SparkSession, file: String): DataFrame =
+    stamp(spark, file) match {
       case None => spark.read.parquet(file) // a directory, or Spark's own error
-      case Some(st) =>
-        val key = st.getPath.toString
+      case Some((key, length, modified)) =>
         val settings = inferenceConfs.map(spark.conf.getOption)
         val memo = schemaMemo.get(key)
-        if (memo != null && memo.length == st.getLen &&
-            memo.modified == st.getModificationTime && memo.settings == settings)
+        if (memo != null && memo.length == length &&
+            memo.modified == modified && memo.settings == settings)
           spark.read.schema(memo.schema).parquet(file)
         else {
           val df = spark.read.parquet(file)
-          schemaMemo.put(key, SchemaMemo(st.getLen, st.getModificationTime, settings, df.schema))
+          schemaMemo.put(key, SchemaMemo(length, modified, settings, df.schema))
           df
         }
     }
-  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)

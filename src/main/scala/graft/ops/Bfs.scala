@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Bounded multi-source BFS (shortest hop distance) over an edge list —
   * the graph-traversal primitive behind "documents within k citation
@@ -32,6 +33,11 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: pure integer set algebra — hop numbers are the
   * superstep index; min-hop per node is implied by first discovery.
+  *
+  * Small graphs: on a capture of at most [[GraphCapture.DriverMaxEdges]]
+  * edges, with long source ids, the supersteps run on the driver
+  * ([[LocalGraph]]); the result is then a local frame that holds no cut,
+  * and releasing it is a no-op.
   */
 object Bfs {
 
@@ -73,7 +79,13 @@ object Bfs {
     * a hop falls back to the prior shuffling join, exchanged at the
     * capture's width. */
   def hopDistance(g: GraphCapture, sources: DataFrame, maxHops: Int): DataFrame =
-    CacheHygiene.scope { ck => supersteps(ck, g.keyed("v", "u"), g.width, sources, maxHops) }
+    // the distributed result's id type widens from the sources' type
+    // only once a hop reaches a vertex, so only long sources go local
+    g.local.filter(_ => sources.schema.head.dataType == LongType) match {
+      case Some(local) => local.hopDistance(sources, maxHops)
+      case None =>
+        CacheHygiene.scope { ck => supersteps(ck, g.keyed("v", "u"), g.width, sources, maxHops) }
+    }
 
   /** The frontier-expansion supersteps over a v-partitioned undirected
     * edge relation cut `width` wide. */

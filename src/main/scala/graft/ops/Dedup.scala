@@ -830,16 +830,19 @@ object Dedup {
     * aggregate run as one job per round. The returned frame is a final
     * cut, caller-owned: dispose with [[CacheHygiene.release]].
     *
-    * Small-graph fast path: after the edge list is materialized (its
-    * count is then a free scan), an edge list at or under
-    * `driverMaxEdges` is solved by union-find on the driver — the same
-    * reasoning as a broadcast join threshold: iterating a whole cluster
-    * for a structure that fits in one JVM wastes rounds of scheduling.
-    * 1M edges is 16 MB collected; the distributed rounds only engage
-    * for graphs that genuinely need them (dedup at 100 TB: billions of
-    * pairs). Results are identical on either path. */
+    * Small-graph fast path, the graph family's one rule: after the
+    * edge list is materialized (its count is then a free scan), an
+    * edge list of at most `driverMaxEdges` long-id edges
+    * ([[GraphCapture.DriverMaxEdges]]) runs the same rounds on the
+    * driver ([[LocalGraph.components]]) — the same reasoning as a
+    * broadcast join threshold: iterating a whole cluster for a structure
+    * that fits in one JVM wastes rounds of scheduling. The distributed
+    * rounds only engage for graphs that genuinely need them (dedup at
+    * 100 TB: billions of pairs). Results are identical on either path;
+    * a driver result is a local frame that holds no cut, and releasing
+    * it is a no-op. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          driverMaxEdges: Long = 1000000L,
+                          driverMaxEdges: Long = GraphCapture.DriverMaxEdges,
                           assumeSymmetric: Boolean = false): DataFrame =
     CacheHygiene.scope { ck =>
       // materialize the edge list once — every propagation round joins
@@ -855,8 +858,7 @@ object Dedup {
       // honoring input the flag is purely a plan choice. VIOLATED
       // symmetry narrows the vertex set: labels initialize from the
       // s column only, so a vertex appearing solely in t is dropped —
-      // both paths below honor that same s-only contract (the driver
-      // fast path filters to s-seen vertices), keeping the output
+      // the driver path runs the same rounds, keeping the output
       // identical across driverMaxEdges.
       // r18: flat-cut the PAIR list once before the symmetrize union —
       // the union's two branches otherwise re-execute the whole
@@ -877,40 +879,37 @@ object Dedup {
           e
         }
       val edgeCount = edges.count()
-      if (edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
-          edgeCount <= driverMaxEdges)
-        // a collected result: the scope releases the edge blocks
-        driverComponents(edges, sOnlyVertices = assumeSymmetric)
-      else {
-        // distributed rounds: one partitioned cut, at the width the
-        // edge count above derives ([[ShuffleSizing.boundedWidth]])
-        val width = ShuffleSizing.boundedWidth(edgeCount,
-          ShuffleSizing.sessionWidth(pairs.sparkSession))
-        val parted = ShuffleSizing.partitionedCut(ck, edges, "s", width)
-        // the unpartitioned first cut is dead once the capture is
-        // materialized — releasing it halves the standing edge
-        // footprint for the whole round loop (sf10 drill: two
-        // 240M-row block sets otherwise live simultaneously)
-        ck.free(edges)
-        ccRounds(ck, parted, width, maxIter)
+      val local = if (edgeCount <= driverMaxEdges) LocalGraph.collect(edges, "s", "t") else None
+      local match {
+        // a local result: the scope releases the edge blocks
+        case Some(g) => g.components(maxIter)
+        case None =>
+          // distributed rounds: one partitioned cut, at the width the
+          // edge count above derives ([[ShuffleSizing.boundedWidth]])
+          val width = ShuffleSizing.boundedWidth(edgeCount,
+            ShuffleSizing.sessionWidth(pairs.sparkSession))
+          val parted = ShuffleSizing.partitionedCut(ck, edges, "s", width)
+          // the unpartitioned first cut is dead once the capture is
+          // materialized — releasing it halves the standing edge
+          // footprint for the whole round loop (sf10 drill: two
+          // 240M-row block sets otherwise live simultaneously)
+          ck.free(edges)
+          ccRounds(ck, parted, width, maxIter)
       }
     }
 
   /** [[connectedComponents]] over a SHARED [[GraphCapture]] — the
     * capture (symmetrize + materialize + s-partition) is paid once by
     * the caller and reused across the graph family; this call is
-    * rounds-only, and the capture blocks stay caller-owned. The capture
-    * satisfies the symmetric contract by construction, so the driver
-    * fast path uses the same s-only vertex set as the rounds.
+    * rounds-only, and the capture blocks stay caller-owned. A local
+    * capture ([[GraphCapture.DriverMaxEdges]]) runs the same rounds on
+    * the driver and returns a local frame that holds no cut.
     * Bit-identical to the direct form on the same graph (spec-pinned). */
-  def connectedComponents(g: GraphCapture, maxIter: Int,
-                          driverMaxEdges: Long): DataFrame =
-    if (g.longIds && g.edgeCount <= driverMaxEdges)
-      driverComponents(g.keyed("s", "t"), sOnlyVertices = true)
-    else CacheHygiene.scope(ccRounds(_, g.keyed("s", "t"), g.width, maxIter))
+  def connectedComponents(g: GraphCapture, maxIter: Int): DataFrame =
+    g.local.fold(CacheHygiene.scope(ccRounds(_, g.keyed("s", "t"), g.width, maxIter)))(
+      _.components(maxIter))
 
-  def connectedComponents(g: GraphCapture): DataFrame =
-    connectedComponents(g, maxIter = 50, driverMaxEdges = 1000000L)
+  def connectedComponents(g: GraphCapture): DataFrame = connectedComponents(g, maxIter = 50)
 
   /** The neighbor-min + pointer-jump rounds over an s-partitioned
     * symmetric edge relation cut `width` wide: returns the converged
@@ -964,37 +963,6 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds")
     // self-contained result BEFORE the round intermediates are released
     ck.cut(labels.select(col("v").as("doc_id"), col("comp").as("component_id")))
-  }
-
-  /** Driver union-find fast path. `sOnlyVertices` mirrors the
-    * distributed rounds' vertex contract under `assumeSymmetric`:
-    * labels initialize from the s column, so a vertex appearing only
-    * in t is not emitted — on contract-honoring (symmetric) input the
-    * filter is a no-op, and on violated input both paths return the
-    * same (s-only) vertex set instead of silently diverging at the
-    * driverMaxEdges boundary. */
-  private def driverComponents(edges: DataFrame, sOnlyVertices: Boolean): DataFrame = {
-    val spark = edges.sparkSession
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    val sSeen = scala.collection.mutable.HashSet.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.select(col("s"), col("t")).collect().foreach { row =>
-      val a = row.getLong(0); val b = row.getLong(1)
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      if (sOnlyVertices) sSeen += a
-      val ra = find(a); val rb = find(b)
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-    }
-    import spark.implicits._
-    parent.keys.toSeq.filter(v => !sOnlyVertices || sSeen(v)).sorted
-      .map(v => (v, find(v)))
-      .toDF("doc_id", "component_id")
   }
 
   /** End-to-end near-dup corpus dedup: given candidate pairs from ANY

@@ -32,6 +32,15 @@ import org.apache.spark.sql.functions._
   * node set = distinct(s) (complete, by symmetry), degree(v) =
   * count per s group (out-degree = in-degree).
   *
+  * Small graphs stay on the driver: the capture counts its edges once,
+  * and a graph of at most [[GraphCapture.DriverMaxEdges]] long-id edges
+  * is collected into a [[LocalGraph]] that every consumer shares — one
+  * collect between them, and no checkpoint blocks kept. Each consumer
+  * then computes on the driver and returns a local frame with the same
+  * schema and values as its distributed rounds; a local result holds no
+  * cut, so [[CacheHygiene.release]] on it is a no-op. Past the bound the
+  * capture is the partitioned cut below.
+  *
   * Hygiene: the capture's checkpoint blocks are CALLER-owned — the
   * operators release only their own per-round intermediates (each in
   * its own [[CacheHygiene.scope]]) and never the shared relation; call
@@ -40,11 +49,21 @@ import org.apache.spark.sql.functions._
   * persisted RDDs are never mistaken for its own. Its plan carries
   * its `width` ([[ShuffleSizing.partitionedCut]]), which the rounds
   * inherit. */
-final class GraphCapture private[graft] (
-    private[graft] val edges: DataFrame,
-    val edgeCount: Long,
-    private[graft] val width: Int,
+final class GraphCapture private (
+    placed: Either[LocalGraph, (DataFrame, Long, Int)],
     ck: CacheHygiene.Arena) {
+
+  /** The graph on the driver, when it fits ([[GraphCapture.DriverMaxEdges]]). */
+  private[graft] val local: Option[LocalGraph] = placed.left.toOption
+
+  val edgeCount: Long = placed.fold(_.edgeCount, _._2)
+
+  /** The width the distributed rounds run at (1 for a local capture). */
+  private[graft] val width: Int = placed.fold(_ => 1, _._3)
+
+  /** The captured (s, t) rows: the partitioned cut, or a local frame of
+    * a local capture's rows. */
+  private[graft] lazy val edges: DataFrame = placed.fold(_.edgeFrame, _._1)
 
   /** The captured relation with the consumer's column names; the FIRST
     * name lands on the partition column (the consumer's aggregation
@@ -52,10 +71,6 @@ final class GraphCapture private[graft] (
     * exchange-free layout. */
   private[graft] def keyed(keyName: String, otherName: String): DataFrame =
     edges.select(col("s").as(keyName), col("t").as(otherName))
-
-  /** All ids are integral longs — the driver union-find precondition. */
-  private[graft] def longIds: Boolean =
-    edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
 
   /** Release the capture's checkpoint blocks. Consumers planned but not
     * yet executed against this capture become invalid — release LAST. */
@@ -80,6 +95,12 @@ object GraphCapture {
   /** Any pair list: union both directions, drop self-loops, distinct. */
   case object Pairs extends Shape
 
+  /** The most edges a graph operator solves on the driver: 1M long
+    * pairs are 16 MB collected, and below that a cluster's per-round
+    * scheduling costs more than the rounds' work ("Scalability! But at
+    * what COST?", McSherry et al. 2015). */
+  val DriverMaxEdges = 1000000L
+
   /** Capture `pairs` as a shared symmetric edge relation — the one
     * symmetrize-and-capture path of the graph family (the direct forms
     * of [[LabelProp]] and [[Bfs]] run through it too).
@@ -89,10 +110,18 @@ object GraphCapture {
     * twice — the CC/BFS double-read finding; skipped for `Symmetric`),
     * one s-partitioned materialization that also counts the edges
     * ([[ShuffleSizing.partitionedMaterializeCounted]]), flat blocks
-    * released as soon as the capture exists. Everything after is
-    * rounds-only for every consumer. */
+    * released as soon as the capture exists. A graph of at most
+    * [[DriverMaxEdges]] long-id edges is then collected once and its
+    * blocks released; everything after is rounds-only, or driver-only,
+    * for every consumer. */
   def capture(pairs: DataFrame, aCol: String, bCol: String,
-              shape: Shape = Pairs): GraphCapture = {
+              shape: Shape = Pairs): GraphCapture =
+    capture(pairs, aCol, bCol, shape, DriverMaxEdges)
+
+  /** [[capture]] with its driver bound: 0 keeps every non-empty graph
+    * distributed, a negative bound every graph. */
+  private[graft] def capture(pairs: DataFrame, aCol: String, bCol: String,
+                             shape: Shape, driverMaxEdges: Long): GraphCapture = {
     val ck = new CacheHygiene.Arena
     try {
       // guarded rename: a redundant self-alias here would erase the
@@ -103,10 +132,9 @@ object GraphCapture {
         val both = d0.unionByName(d0.select(col("t").as("s"), col("s").as("t")))
         if (shape == OneWay) both else both.filter(col("s") =!= col("t")).distinct()
       }
-      val (parted, n, width) =
-        ShuffleSizing.partitionedMaterializeCounted(ck, sym, "s")
+      val placed = ShuffleSizing.partitionedMaterializeCounted(ck, sym, "s", "t", driverMaxEdges)
       flat.foreach(ck.free)
-      new GraphCapture(parted, n, width, ck)
+      new GraphCapture(placed, ck)
     } catch { case e: Throwable => ck.close(); throw e }
   }
 }

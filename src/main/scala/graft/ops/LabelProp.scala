@@ -24,7 +24,11 @@ import org.apache.spark.sql.functions._
   * label" in one struct comparison, so no per-round window sort ever
   * runs (a row_number argmax costs a full sort of the (node, label)
   * table every round; the struct-max partial-aggregates map-side).
-  * Label lineage cut each round, the q93 PageRank discipline. */
+  * Label lineage cut each round, the q93 PageRank discipline.
+  *
+  * Small graphs: on a capture of at most [[GraphCapture.DriverMaxEdges]]
+  * edges the same rounds run on the driver ([[LocalGraph]]) and the
+  * result is a local frame holding no cut. */
 object LabelProp {
 
   /** (id, label) after `iterations` synchronous rounds over the
@@ -58,10 +62,13 @@ object LabelProp {
     *
     * Every per-round label checkpoint is released on exit; only the
     * returned frame stays persisted, self-contained behind one final
-    * cut (r15 advice). */
+    * cut (r15 advice). A local capture's result is a local frame and
+    * holds no cut. */
   def labelPropagation(g: GraphCapture, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    CacheHygiene.scope { ck => ck.cut(rounds(ck, g.keyed("src", "dst"), g.width, iterations)) }
+    g.local.fold(CacheHygiene.scope { ck =>
+      ck.cut(rounds(ck, g.keyed("src", "dst"), g.width, iterations))
+    })(_.labelPropagation(iterations))
   }
 
   /** The synchronous rounds over a src-partitioned edge relation cut

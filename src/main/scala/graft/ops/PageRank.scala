@@ -37,14 +37,25 @@ import org.apache.spark.sql.types.DecimalType
   * big join's width). The edge capture is partitioned by `__dst`, the
   * round aggregate's key, into a width derived from the measured edge
   * count ([[ShuffleSizing.partitionedCut]]); the rounds inherit that
-  * width from the capture's plan. Rank lineage is cut per iteration. */
+  * width from the capture's plan. Rank lineage is cut per iteration.
+  *
+  * Small graphs: once the edge count is known, a graph of at most
+  * [[GraphCapture.DriverMaxEdges]] long-id edges runs the same rounds on
+  * the driver ([[LocalGraph]]), in exact long arithmetic; the result is
+  * a local frame that holds no cut, and releasing it is a no-op. */
 object PageRank {
 
   /** Per-node scaled PageRank after `iterations` rounds. Output:
     * (id, pr) where pr ≈ rank·10^12 as a long. Edges are directed;
     * pass both directions for an undirected graph. */
   def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
-               iterations: Int): DataFrame = {
+               iterations: Int): DataFrame =
+    pageRank(edges0, srcCol, dstCol, iterations, GraphCapture.DriverMaxEdges)
+
+  /** [[pageRank]] with its driver bound: 0 keeps every non-empty graph
+    * distributed, a negative bound every graph. */
+  private[graft] def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
+                              iterations: Int, driverMaxEdges: Long): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // every intermediate (the dst-partitioned edge checkpoint, degrees,
     // nodes, per-iteration rank checkpoints) is released on exit; only
@@ -66,26 +77,35 @@ object PageRank {
       // aggregates). Beyond the broadcast bound the op falls back to
       // the pre-r15 shuffling plan, its join exchanged at the capture's
       // width.
-      val (parted, _, width) = ShuffleSizing.partitionedMaterializeCounted(ck,
+      ShuffleSizing.partitionedMaterializeCounted(ck,
         ShuffleSizing.renameForCapture(edges0, srcCol, "__src", dstCol, "__dst"),
-        "__dst")
-      // |V|-sized relations only beyond the edge list itself: the r14
-      // sf10 dissection found the old edges⋈degrees MATERIALIZATION
-      // (an |E|-row copy carrying the degree) was the single biggest
-      // stage (220 s of 584 at 240M edges) and the per-round join then
-      // divided rank by degree once per EDGE row. The contribution
-      // (r·85) DIV (100·deg) is constant per SOURCE, so it is computed
-      // on the |V|-sized ranks⋈degrees relation and the big join ships
-      // one ready decimal per edge — bit-identical values (the same
-      // floor division, evaluated once instead of per edge), half the
-      // big-join width, no |E|-row materialization at all.
-      val degrees = ShuffleSizing.partitionedCut(ck,
-        parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")),
-        "__src", width)
-      val nodes = ck.cut(parted.select(col("__src").as("id"))
-        .union(parted.select(col("__dst"))).distinct())
-      ck.cut(rounds(ck, parted, width, degrees, nodes, iterations))
+        "__dst", "__src", driverMaxEdges) match {
+        case Left(local) => local.pageRank(iterations, directed = true)
+        case Right((parted, _, width)) => distributed(ck, parted, width, iterations)
+      }
     }
+  }
+
+  /** The direct form's degrees and node set over its __dst-partitioned
+    * capture, then the rounds. */
+  private def distributed(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
+                          iterations: Int): DataFrame = {
+    // |V|-sized relations only beyond the edge list itself: the r14
+    // sf10 dissection found the old edges⋈degrees MATERIALIZATION
+    // (an |E|-row copy carrying the degree) was the single biggest
+    // stage (220 s of 584 at 240M edges) and the per-round join then
+    // divided rank by degree once per EDGE row. The contribution
+    // (r·85) DIV (100·deg) is constant per SOURCE, so it is computed
+    // on the |V|-sized ranks⋈degrees relation and the big join ships
+    // one ready decimal per edge — bit-identical values (the same
+    // floor division, evaluated once instead of per edge), half the
+    // big-join width, no |E|-row materialization at all.
+    val degrees = ShuffleSizing.partitionedCut(ck,
+      parted.groupBy(col("__src")).agg(count(lit(1)).as("__deg")),
+      "__src", width)
+    val nodes = ck.cut(parted.select(col("__src").as("id"))
+      .union(parted.select(col("__dst"))).distinct())
+    ck.cut(rounds(ck, parted, width, degrees, nodes, iterations))
   }
 
   /** [[pageRank]] over a SHARED [[GraphCapture]] (an UNDIRECTED rank:
@@ -95,10 +115,11 @@ object PageRank {
     * degrees and the node set PARTITION-LOCALLY from the capture
     * (degree(v) = |s-group v|, nodes = distinct s — both complete and
     * exact by symmetry) and runs rounds-only. Bit-identical to the
-    * direct form on the same symmetric edge list (spec-pinned). */
+    * direct form on the same symmetric edge list (spec-pinned). A local
+    * capture's result is a local frame and holds no cut. */
   def pageRank(g: GraphCapture, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    CacheHygiene.scope { ck =>
+    g.local.fold(CacheHygiene.scope { ck =>
       // the round aggregate keys on __dst — land the partition
       // column there (symmetry makes the rename a relabeling of the
       // same edge set, so values are unchanged)
@@ -108,7 +129,7 @@ object PageRank {
         "__src", g.width)
       val nodes = ck.cut(parted.select(col("__dst").as("id")).distinct())
       ck.cut(rounds(ck, parted, g.width, degrees, nodes, iterations))
-    }
+    })(_.pageRank(iterations, directed = false))
   }
 
   /** The damped-rank rounds over a __dst-partitioned edge relation cut

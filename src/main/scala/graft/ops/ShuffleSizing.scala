@@ -143,29 +143,35 @@ private[graft] object ShuffleSizing {
   def sessionWidth(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** [[partitionedCut]] + the edge count in ONE materialization (r17):
-    * the count is only needed to decide whether the session width
-    * fits, so: cut at the session width, count the result (a free
-    * scan), and re-cut at [[boundedWidth]] ONLY when that differs from
-    * the session width. Returns (parted, edgeRows, width); both cuts
-    * are recorded in `ck`, and the first is freed as soon as a re-cut
+  /** [[partitionedCut]] + the edge count in ONE materialization (r17),
+    * then the graph's placement from that count: cut at the session
+    * width and count the result (a free scan). A graph of at most
+    * `driverMaxEdges` long-id rows is collected into a [[LocalGraph]]
+    * CSR-ordered by `key`, and the cut is freed. Otherwise the cut is
+    * re-cut at [[boundedWidth]] ONLY when that differs from the session
+    * width, and (parted, edgeRows, width) returned; both cuts are
+    * recorded in `ck`, and the first is freed as soon as a re-cut
     * replaces it. */
-  def partitionedMaterializeCounted(ck: CacheHygiene.Arena, df: DataFrame,
-                                    key: String): (DataFrame, Long, Int) = {
+  def partitionedMaterializeCounted(ck: CacheHygiene.Arena, df: DataFrame, key: String,
+                                    other: String, driverMaxEdges: Long)
+      : Either[LocalGraph, (DataFrame, Long, Int)] = {
     val session = sessionWidth(df.sparkSession)
     val first = partitionedCut(ck, df, key, session)
     val n = first.count()
     val width = boundedWidth(n, session)
+    val local = if (n <= driverMaxEdges) LocalGraph.collect(first, key, other) else None
     // r18: the re-cut fires in BOTH directions — wider when the
     // session width risks spill (the r17 behavior), NARROWER when the
     // session over-fans a small graph (the cap mirror; the re-cut is
     // an |E|-row exchange of a by-construction-small relation, paid
     // once, against per-round fixed costs paid every iteration).
-    if (width == session) (first, n, width)
-    else {
-      val recut = partitionedCut(ck, first, key, width)
-      ck.free(first)
-      (recut, n, width)
+    local match {
+      case Some(g) => ck.free(first); Left(g)
+      case None if width == session => Right((first, n, width))
+      case None =>
+        val recut = partitionedCut(ck, first, key, width)
+        ck.free(first)
+        Right((recut, n, width))
     }
   }
 

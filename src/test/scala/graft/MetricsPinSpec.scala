@@ -1,6 +1,8 @@
 package graft
 
 import graft.bench.QueryMetricsListener
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Metrics-pinned adjudication (r14 verdict directive #1): wall time on
   * this box carries a ±40–70% run-context band on the big-shuffle
@@ -75,5 +77,40 @@ class MetricsPinSpec extends SparkSpecBase {
       assert(first._1 > 0 || first._2 > 0,
         s"$q shuffled zero rows at sf0.001 — pin has no signal")
     }
+  }
+
+  /** Stages `name` completes at sf0.001 on the session as it is (AQE
+    * on, as Bench runs it) — like rows, a plan-determined figure. */
+  private def stagesOf(name: String): Int = {
+    val group = "metrics-pin-stages"
+    val tagged = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageIds.foreach(id => tagged.add(id))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (tagged.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, name, interruptOnCancel = false)
+    try SparkEntry.queries(name)(spark, sf0001).count()
+    finally {
+      sc.clearJobGroup()
+      assert(ListenerDrain.waitUntilEmpty(sc, 10000L))
+      sc.removeSparkListener(listener)
+    }
+    stages.get
+  }
+
+  // q205's 3 label rounds, 2 rank rounds and BFS hops ran as 57 one-task
+  // stages on its 17,798 sf0.001 edges; under GraphCapture.DriverMaxEdges
+  // the capture collects once and every round runs on the driver
+  test("q205_graph_family_shared solves its small captured graph on the driver: at most 20 stages") {
+    val q = "q205_graph_family_shared"
+    stagesOf(q) // warm run, as above
+    val n = stagesOf(q)
+    assert(n > 0 && n <= 20, s"$q completed $n stages at sf0.001")
   }
 }

@@ -329,7 +329,9 @@ class PlanShapeSpec extends SparkSpecBase {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    try graft.ops.CacheHygiene.release(graft.ops.PageRank.pageRank(edges, "src", "dst", 2))
+    // the distributed rounds, forced past the driver bound
+    try graft.ops.CacheHygiene.release(
+      graft.ops.PageRank.pageRank(edges, "src", "dst", 2, driverMaxEdges = 0))
     finally {
       assert(org.apache.spark.graftbridge.ListenerDrain.waitUntilEmpty(sc, 10000L))
       sc.removeSparkListener(listener)

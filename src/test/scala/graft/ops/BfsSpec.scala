@@ -39,10 +39,13 @@ class BfsSpec extends SparkSpecBase {
     // run 46 empty supersteps or accumulate 50 cached frontiers;
     // the returned frame is checkpoint-backed, so disposal goes
     // through CacheHygiene.release (Dataset.unpersist is a no-op)
-    val out = Bfs.hopDistance(edges, Seq(1L).toDF("id"), "src", "dst", maxHops = 50)
+    // — the distributed supersteps, forced past the driver bound
+    val g = GraphCapture.capture(edges, "src", "dst", GraphCapture.Pairs, driverMaxEdges = 0)
+    val out = Bfs.hopDistance(g, Seq(1L).toDF("id"), maxHops = 50)
     assert(out.as[(Long, Int)].collect().toMap ==
       Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3, 5L -> 4))
     CacheHygiene.release(out)
+    g.release()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"Bfs leaked cached RDDs: $leaked")
   }

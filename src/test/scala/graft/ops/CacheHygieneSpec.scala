@@ -84,7 +84,8 @@ class CacheHygieneSpec extends SparkSpecBase {
     })
     persister.start()
     try {
-      val g = GraphCapture.capture(pairs, "a", "b")
+      // the distributed rounds: their cuts race the persister
+      val g = GraphCapture.capture(pairs, "a", "b", GraphCapture.Pairs, driverMaxEdges = 0)
       val outs = Seq(LabelProp.labelPropagation(g, 3), PageRank.pageRank(g, 2),
         Bfs.hopDistance(g, Seq(1L, 20L).toDF("id"), maxHops = 4))
       val direct = LabelProp.labelPropagation(pairs, "a", "b", 3)

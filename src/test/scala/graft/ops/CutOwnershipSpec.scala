@@ -123,11 +123,22 @@ class CutOwnershipSpec extends SparkSpecBase {
 
   test("the graph operators' results are their only surviving cuts") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L)).toDF("a", "b")
-    owns("labelPropagation")(LabelProp.labelPropagation(pairs, "a", "b", 2))
-    owns("pageRank")(PageRank.pageRank(pairs, "a", "b", 2))
-    owns("hopDistance")(Bfs.hopDistance(pairs, Seq(1L).toDF("id"), "a", "b", maxHops = 3))
+    // the distributed rounds, forced past the driver bound
+    def onCapture[T](op: GraphCapture => T): T = {
+      val g = GraphCapture.capture(pairs, "a", "b", GraphCapture.Pairs, driverMaxEdges = 0)
+      try op(g) finally g.release()
+    }
+    owns("labelPropagation")(onCapture(LabelProp.labelPropagation(_, 2)))
+    owns("pageRank")(PageRank.pageRank(pairs, "a", "b", 2, driverMaxEdges = 0))
+    owns("hopDistance")(onCapture(Bfs.hopDistance(_, Seq(1L).toDF("id"), maxHops = 3)))
     owns("connectedComponents") {
       Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), driverMaxEdges = 0)
     }
+    // the driver path: a local result reads no cut, and none survives
+    for (out <- Seq(LabelProp.labelPropagation(pairs, "a", "b", 2),
+                    PageRank.pageRank(pairs, "a", "b", 2),
+                    Bfs.hopDistance(pairs, Seq(1L).toDF("id"), "a", "b", maxHops = 3),
+                    Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))))
+      assert(reads(owns("driver path")(out)).isEmpty)
   }
 }

@@ -34,9 +34,11 @@ class GraphConfSpec extends SparkSpecBase {
     sc.addSparkListener(listener)
     try {
       val sources = Seq(1L, 20L).toDF("id")
-      val g = GraphCapture.capture(pairs, "a", "b")
+      // the shared forms on a distributed capture; the direct forms
+      // take the driver path at this size, except CC's forced one
+      val g = GraphCapture.capture(pairs, "a", "b", GraphCapture.Pairs, driverMaxEdges = 0)
       val shared = Seq(
-        Dedup.connectedComponents(g, maxIter = 50, driverMaxEdges = 0),
+        Dedup.connectedComponents(g, maxIter = 50),
         LabelProp.labelPropagation(g, iterations = 2),
         PageRank.pageRank(g, iterations = 2),
         Bfs.hopDistance(g, sources, maxHops = 3))

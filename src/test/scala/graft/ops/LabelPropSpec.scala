@@ -36,9 +36,12 @@ class LabelPropSpec extends SparkSpecBase {
 
   test("labelPropagation leaves only the returned frame persisted (r15 advice)") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = LabelProp.labelPropagation(bridged, "src", "dst", iterations = 3)
+    // the distributed rounds, forced past the driver bound
+    val g = GraphCapture.capture(bridged, "src", "dst", GraphCapture.Pairs, driverMaxEdges = 0)
+    val out = LabelProp.labelPropagation(g, iterations = 3)
     assert(out.count() == 6)
     CacheHygiene.release(out)
+    g.release()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"labelPropagation leaked cached RDDs: $leaked")
   }

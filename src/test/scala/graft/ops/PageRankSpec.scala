@@ -53,7 +53,8 @@ class PageRankSpec extends SparkSpecBase {
   test("pageRank leaves only the returned frame persisted (r15 advice)") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = PageRank.pageRank(edges, "src", "dst", iterations = 2)
+    // the distributed rounds, forced past the driver bound
+    val out = PageRank.pageRank(edges, "src", "dst", iterations = 2, driverMaxEdges = 0)
     assert(out.count() == 3)
     CacheHygiene.release(out)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

@@ -8,7 +8,8 @@
 #
 # Exit 0 = the Scala answer matches the oracle on this machine (a red
 # driver row is then a harness/environment divergence); exit 1 = real
-# mismatch, with the differing columns/rows printed.
+# mismatch, with the differing columns/rows printed. Runs local[nproc]
+# unless SPARK_GRAFT_CPUS says otherwise.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 rx="${1:?usage: tools/adjudicate.sh <queryRegex> [sfDir]}"
@@ -20,7 +21,7 @@ trap 'rm -rf "$out"' EXIT
 # "no query matched" under pipefail.
 runlog="$out/verify.log"
 st=0
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" ./run_local.sh \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" ./run_local.sh \
     graft.Verify "$sf" "$out" "$rx" >"$runlog" 2>&1 || st=$?
 if [ "$st" -ne 0 ]; then
   echo "Verify FAILED (exit $st); last 30 lines:"; tail -30 "$runlog"; exit 3
