@@ -331,6 +331,8 @@ object EltQueries {
         lit("simple").as("type"),
         (col("p_size") * 10).cast("string").as("stock_quantity"),
         when(pk % 2 === 0, lit("1")).otherwise(lit("")).as("backorders_allowed"),
+        lit(null).cast("string").as("downloadable"),
+        lit(null).cast("string").as("virtual"),
         array(
           struct(lit("free_shipping").as("key"),
             when(pk % 3 === 0, lit("1")).when(pk % 3 === 1, lit("0"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, StringType, StructType}
+import org.apache.spark.sql.types.{DecimalType, StringType, StructType}
 
 /** Nested-JSON flattening + EAV lookup operators, shaped on the
   * reference's order pipeline (SURVEY.md §2 P1/P2/P4):
@@ -20,8 +20,57 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, StringType,
   * Everything is a single `select` over codegen'd higher-order
   * functions: on parquet/JSON sources Catalyst prunes unused struct
   * fields into the reader, so flattening 70 of 500 fields reads 70.
+  *
+  * Input contract: a frame carrying every path of the declared
+  * document — [[OrderDoc]], [[ProductDoc]] or [[RefundDoc]], which is
+  * what `RestPager.toDf(spark, bodies, doc)` returns. A key a page
+  * leaves out reads as null there, so no operator branches on which
+  * paths a batch happened to contain.
   */
 object NestedFlatten {
+
+  private val Meta = "ARRAY<STRUCT<key: STRING, value: STRING>>"
+
+  /** The woo order document as [[flattenOrders]] and
+    * [[explodeLineItems]] read it (the reference's table schema,
+    * woo-sync/main.py:189-264). Containers are typed; every scalar leaf
+    * is STRING, which holds any JSON token as its text, so each value
+    * meets the operators' own casts. */
+  val OrderDoc: StructType = StructType.fromDDL(
+    "id STRING, order_key STRING, status STRING, currency STRING, date_created STRING, " +
+      "date_modified STRING, date_paid STRING, total STRING, total_tax STRING, " +
+      "shipping_total STRING, customer_id STRING, " +
+      "billing STRUCT<city: STRING, country: STRING, email: STRING>, " +
+      "shipping STRUCT<city: STRING, country: STRING>, " +
+      "cru_data STRUCT<agent: STRUCT<email: STRING>, ordered_by: STRUCT<email: STRING>, " +
+      "shipping: STRUCT<date_shipped: STRING>, customer_role: STRING, " +
+      "discounts: ARRAY<STRUCT<amount: STRING>>>, " +
+      s"meta_data $Meta, " +
+      "line_items ARRAY<STRUCT<id: STRING, product_id: STRING, name: STRING, sku: STRING, " +
+      "bundled_by: STRING, price: STRING, quantity: STRING, total_tax: STRING>>")
+
+  /** The woo product document as [[flattenProducts]] and the three
+    * child explodes read it (woo-sync/main.py:352-391). */
+  val ProductDoc: StructType = StructType.fromDDL(
+    "id STRING, date_created STRING, date_modified STRING, name STRING, " +
+      "short_description STRING, backorders_allowed STRING, downloadable STRING, " +
+      "virtual STRING, status STRING, msrp_price STRING, price STRING, " +
+      "regular_price STRING, sku STRING, weight STRING, type STRING, stock_quantity STRING, " +
+      s"meta_data $Meta, " +
+      "bundled_items ARRAY<STRUCT<bundled_item_id: STRING, product_id: STRING, " +
+      "quantity_default: STRING>>, " +
+      "categories ARRAY<STRUCT<id: STRING, name: STRING, slug: STRING>>, " +
+      "attributes ARRAY<STRUCT<id: STRING, name: STRING, slug: STRING, options: ARRAY<STRING>>>")
+
+  /** The woo refund document as [[flattenRefunds]] and
+    * [[flattenRefundItems]] read it (woo-sync/main.py:499-516). */
+  val RefundDoc: StructType = StructType.fromDDL(
+    "id STRING, parent_id STRING, amount STRING, date_created STRING, " +
+      "cru_data STRUCT<agent_email: STRING, agent_name: STRING, subtotal: STRING, " +
+      "subtotal_tax: STRING>, " +
+      "shipping_lines ARRAY<STRUCT<total: STRING, total_tax: STRING>>, " +
+      "line_items ARRAY<STRUCT<id: STRING, product_id: STRING, name: STRING, price: STRING, " +
+      s"quantity: STRING, sku: STRING, total_tax: STRING, meta_data: $Meta>>")
 
   /** Money columns: BIGNUMERIC(76,38) in the reference narrowed to
     * Spark's max DecimalType(38,18) — documented deviation
@@ -49,65 +98,33 @@ object NestedFlatten {
     * try_cast never throws under ANSI mode. */
   def money(c: Column): Column = coalesce(c.try_cast(Money), lit(0).cast(Money))
 
-  /** Resolve a dotted path against the schema; None when absent. */
-  private def pathType(schema: StructType, path: String): Option[DataType] =
-    path.split('.').foldLeft(Option(schema: DataType)) {
-      case (Some(st: StructType), name) => st.fields.find(_.name == name).map(_.dataType)
-      case _ => None
-    }
-
-  /** Nested path column that degrades to a typed null when the path is
-    * absent from this batch — API pages are ragged (the reference's
-    * .get() chains default to None); a batch where every order lacks a
-    * subtree must still conform. */
-  private def optPath(df: DataFrame, path: String): Column =
-    if (pathType(df.schema, path).isDefined) col(path) else lit(null).cast(StringType)
-
-  /** First discount amount, tolerating both the absent-path case and
-    * json inference collapsing an all-empty array to array<string>. */
-  private def firstDiscountAmount(df: DataFrame): Column =
-    pathType(df.schema, "cru_data.discounts") match {
-      case Some(ArrayType(et: StructType, _)) if et.fieldNames.contains("amount") =>
-        try_element_at(col("cru_data.discounts"), lit(1)).getField("amount")
-      case _ => lit(null).cast(StringType)
-    }
-
   /** Flatten an order document to the reference's scalar projection
-    * shape: nested paths, EAV lookups, typed money/dates. Input is the
-    * result of spark.read.json on order bodies. */
+    * shape: nested paths, EAV lookups, typed money/dates. */
   def flattenOrders(orders: DataFrame): DataFrame =
     orders.select(
       col("id").cast("long").as("order_id"),
-      optPath(orders, "order_key").as("order_key"),
-      optPath(orders, "status").as("status"),
-      optPath(orders, "currency").as("currency"),
-      coercedTimestamp(optPath(orders, "date_created")).as("date_created"),
-      coercedTimestamp(optPath(orders, "date_modified")).as("date_modified"),
-      coercedTimestamp(optPath(orders, "date_paid")).as("date_paid"),
-      money(optPath(orders, "total")).as("total"),
-      money(optPath(orders, "total_tax")).as("total_tax"),
-      money(optPath(orders, "shipping_total")).as("shipping_total"),
-      optPath(orders, "customer_id").cast("long").as("customer_id"),
-      optPath(orders, "billing.city").as("billing_city"),
-      optPath(orders, "billing.country").as("billing_country"),
-      optPath(orders, "billing.email").as("billing_email"),
-      optPath(orders, "shipping.city").as("shipping_city"),
-      optPath(orders, "shipping.country").as("shipping_country"),
-      optPath(orders, "cru_data.agent.email").as("agent_email"),
-      optPath(orders, "cru_data.ordered_by.email").as("ordered_by_email"),
-      coercedTimestamp(optPath(orders, "cru_data.shipping.date_shipped")).as("date_shipped"),
-      initcap(optPath(orders, "cru_data.customer_role")).as("customer_role"),
+      col("order_key"),
+      col("status"),
+      col("currency"),
+      coercedTimestamp(col("date_created")).as("date_created"),
+      coercedTimestamp(col("date_modified")).as("date_modified"),
+      coercedTimestamp(col("date_paid")).as("date_paid"),
+      money(col("total")).as("total"),
+      money(col("total_tax")).as("total_tax"),
+      money(col("shipping_total")).as("shipping_total"),
+      col("customer_id").cast("long").as("customer_id"),
+      col("billing.city").as("billing_city"),
+      col("billing.country").as("billing_country"),
+      col("billing.email").as("billing_email"),
+      col("shipping.city").as("shipping_city"),
+      col("shipping.country").as("shipping_country"),
+      col("cru_data.agent.email").as("agent_email"),
+      col("cru_data.ordered_by.email").as("ordered_by_email"),
+      coercedTimestamp(col("cru_data.shipping.date_shipped")).as("date_shipped"),
+      initcap(col("cru_data.customer_role")).as("customer_role"),
       eavLast(col("meta_data"), "event_code", lit("")).as("event_code"),
       eavLast(col("meta_data"), "cru_order_origin", lit("WEB")).as("order_origin"),
-      firstDiscountAmount(orders).as("discount_amount"))
-
-  /** Whether the line_items element struct carries `field` in this
-    * batch's inferred schema. */
-  private def lineItemHasField(df: DataFrame, field: String): Boolean =
-    df.schema.fields.find(_.name == "line_items").map(_.dataType) match {
-      case Some(ArrayType(st: StructType, _)) => st.fieldNames.contains(field)
-      case _ => false
-    }
+      try_element_at(col("cru_data.discounts"), lit(1)).getField("amount").as("discount_amount"))
 
   /** Explode order line items, carrying the order key — the generator/
     * UDTF surface of the reference (woo-sync/main.py:679-819) realised
@@ -121,20 +138,19 @@ object NestedFlatten {
     * (O(n²) over an order's own items, which number in the dozens)
     * rather than a window, so the explode stays shuffle-free. */
   def explodeLineItems(orders: DataFrame): DataFrame = {
-    // absent bundled_by (older API shape) -> every item is its own parent.
-    // A JSON-null bundled_by stays a CHILD: the reference's
+    // An order none of whose items carries a bundled_by (the older API
+    // shape) has no bundles: every item is its own parent. In a newer-
+    // shape order a JSON-null bundled_by stays a CHILD: the reference's
     // `li['bundled_by'] == ""` (woo-sync/main.py:683-688) is False for
     // None, so only a literally-empty string marks a parent. `=== ""`
     // is null for null input and the filter HOF drops null-predicate
     // elements, giving exactly that semantics.
-    val isParent: Column => Column =
-      if (lineItemHasField(orders, "bundled_by"))
-        x => x.getField("bundled_by").cast(StringType) === ""
-      else _ => lit(true)
+    val isParent: Column => Column = x => !col("__bundled") || x.getField("bundled_by") === ""
     orders.select(
       col("id").cast("long").as("order_id"),
       posexplode(col("line_items")).as(Seq("__pos", "li")),
-      col("line_items").as("__items"))
+      col("line_items").as("__items"),
+      exists(col("line_items"), _.getField("bundled_by").isNotNull).as("__bundled"))
       .select(
         col("order_id"),
         col("li.id").cast("long").as("line_item_id"),
@@ -206,14 +222,14 @@ object NestedFlatten {
     products.select(
       col("id").cast("long").as("product_id"),
       // date_created falls back to date_modified when null (main.py:897-900)
-      coalesce(coercedTimestamp(optPath(products, "date_created")),
-        coercedTimestamp(optPath(products, "date_modified"))).as("date_created"),
-      coercedTimestamp(optPath(products, "date_modified")).as("date_modified"),
-      optPath(products, "name").as("name"),
-      optPath(products, "short_description").as("short_description"),
-      boolish(optPath(products, "backorders_allowed")).as("backorders_allowed"),
-      boolish(optPath(products, "downloadable")).as("downloadable"),
-      boolish(optPath(products, "virtual")).as("virtual"),
+      coalesce(coercedTimestamp(col("date_created")),
+        coercedTimestamp(col("date_modified"))).as("date_created"),
+      coercedTimestamp(col("date_modified")).as("date_modified"),
+      col("name"),
+      col("short_description"),
+      boolish(col("backorders_allowed")).as("backorders_allowed"),
+      boolish(col("downloadable")).as("downloadable"),
+      boolish(col("virtual")).as("virtual"),
       // -- the six "1"-flags of the meta_data map (main.py:846-865, 881-883)
       eavFlag(meta, "exclude_from_all_discounting").as("exclude_from_all_discounting"),
       eavFlag(meta, "free_shipping").as("free_shipping"),
@@ -229,31 +245,22 @@ object NestedFlatten {
       eavLast(meta, "impact", lit("")).as("impact"),
       eavLast(meta, "product_language", lit("")).as("product_language"),
       eavLast(meta, "sub_brand", lit("")).as("sub_brand"),
-      initcap(optPath(products, "status")).as("status"),
+      initcap(col("status")).as("status"),
       // -- money with non-empty guard, '0.00' default (:866-868, 941-942)
       money(eavLastNonEmpty(meta, "_alg_wc_cog_cost", lit("0.00"))).as("alg_wc_cog_cost"),
       money(eavLastNonEmpty(meta, "fl_staff_price_field", lit("0.00"))).as("fl_staff_price_field"),
-      money(optPath(products, "msrp_price")).as("msrp_price"),
-      money(optPath(products, "price")).as("price"),
-      money(optPath(products, "regular_price")).as("regular_price"),
-      optPath(products, "sku").as("sku"),
-      money(optPath(products, "weight")).as("weight"),
-      optPath(products, "type").as("type"),
-      optPath(products, "stock_quantity").try_cast("long").as("stock_quantity"),
+      money(col("msrp_price")).as("msrp_price"),
+      money(col("price")).as("price"),
+      money(col("regular_price")).as("regular_price"),
+      col("sku"),
+      money(col("weight")).as("weight"),
+      col("type"),
+      col("stock_quantity").try_cast("long").as("stock_quantity"),
       // -- ints with non-empty guard, 0 default (:869-875, 891-893)
       eavIntNonEmpty(meta, "case_qty").as("case_qty"),
       eavIntNonEmpty(meta, "product_page_count").as("product_page_count"),
       eavIntNonEmpty(meta, "total_manuals").as("total_manuals"))
   }
-
-  /** Array column that degrades to a typed null (explode -> zero rows)
-    * when ABSENT from the batch schema — a page where no product had
-    * the key at all leaves the column out of the inferred schema
-    * entirely (the page-level form of the reference's `if key in p`
-    * guard). */
-  private def optArray(df: DataFrame, name: String, elemSchema: String): Column =
-    if (df.columns.contains(name)) col(name)
-    else lit(null).cast(s"array<struct<$elemSchema>>")
 
   /** Explode a product's bundled items (woo-sync/main.py:976-993,
     * declared schema :414-423): absent `bundled_items` -> no rows (the
@@ -262,8 +269,7 @@ object NestedFlatten {
   def explodeProductBundles(products: DataFrame): DataFrame =
     products.select(
       col("id").cast(Money).as("product_id"),
-      explode(optArray(products, "bundled_items",
-        "bundled_item_id:long,product_id:long,quantity_default:long")).as("bi"))
+      explode(col("bundled_items")).as("bi"))
       .select(
         col("product_id"),
         col("bi.bundled_item_id").cast(Money).as("bundled_item_id"),
@@ -275,7 +281,7 @@ object NestedFlatten {
   def explodeProductCategories(products: DataFrame): DataFrame =
     products.select(
       col("id").cast("long").as("product_id"),
-      explode(optArray(products, "categories", "id:long,name:string,slug:string")).as("c"))
+      explode(col("categories")).as("c"))
       .select(
         col("product_id"),
         col("c.id").cast("long").as("category_id"),
@@ -287,8 +293,7 @@ object NestedFlatten {
   def explodeProductAttributes(products: DataFrame): DataFrame =
     products.select(
       col("id").cast("long").as("product_id"),
-      explode(optArray(products, "attributes",
-        "id:long,name:string,slug:string,options:array<string>")).as("a"))
+      explode(col("attributes")).as("a"))
       .select(
         col("product_id"),
         col("a.id").cast("long").as("attribute_id"),
@@ -304,20 +309,18 @@ object NestedFlatten {
   def flattenRefunds(refunds: DataFrame): DataFrame =
     refunds.select(
       col("id").cast("long").as("refund_number"),
-      optPath(refunds, "cru_data.agent_email").as("agent_email"),
-      optPath(refunds, "cru_data.agent_name").as("agent_name"),
-      coercedTimestamp(optPath(refunds, "date_created")).as("date_created"),
+      col("cru_data.agent_email").as("agent_email"),
+      col("cru_data.agent_name").as("agent_name"),
+      coercedTimestamp(col("date_created")).as("date_created"),
       // date_modified is a copy of date_created in the reference (:1057)
-      coercedTimestamp(optPath(refunds, "date_created")).as("date_modified"),
+      coercedTimestamp(col("date_created")).as("date_modified"),
       col("parent_id").cast("long").as("order_number"),
       col("parent_id").cast("long").as("parent_id"),
-      money(try_element_at(optArray(refunds, "shipping_lines", "total:string,total_tax:string"),
-        lit(-1)).getField("total")).as("shipping"),
-      money(try_element_at(optArray(refunds, "shipping_lines", "total:string,total_tax:string"),
-        lit(-1)).getField("total_tax")).as("shipping_tax"),
-      money(optPath(refunds, "cru_data.subtotal")).as("subtotal"),
-      money(optPath(refunds, "cru_data.subtotal_tax")).as("subtotal_tax"),
-      negateMoney(optPath(refunds, "amount")).as("total"))
+      money(try_element_at(col("shipping_lines"), lit(-1)).getField("total")).as("shipping"),
+      money(try_element_at(col("shipping_lines"), lit(-1)).getField("total_tax")).as("shipping_tax"),
+      money(col("cru_data.subtotal")).as("subtotal"),
+      money(col("cru_data.subtotal_tax")).as("subtotal_tax"),
+      negateMoney(col("amount")).as("total"))
 
   /** Explode refund line items (woo-sync/main.py:1083-1129, declared
     * schema :538-556): per-item EAV lookups `_refunded_item_id` (int,
@@ -329,9 +332,7 @@ object NestedFlatten {
       col("id").cast("long").as("refund_number"),
       coercedTimestamp(col("date_created")).as("date_created"),
       col("parent_id").cast("long").as("order_number"),
-      explode(optArray(refunds, "line_items",
-        "id:long,product_id:long,name:string,price:string,quantity:long,sku:string," +
-          "total_tax:string,meta_data:array<struct<key:string,value:string>>")).as("li"))
+      explode(col("line_items")).as("li"))
       .select(
         col("refund_number"),
         col("li.id").cast("long").as("refund_item_id"),

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.SchemaConform
@@ -39,6 +39,12 @@ object OktaRefresh {
     StructField("_links", StringType),
     StructField("transitioningToStatus", StringType)))
 
+  /** How user pages are read: [[UsersSchema]] with every leaf STRING,
+    * so an object-valued `profile`/`credentials`/`_links` lands as its
+    * JSON text and each timestamp meets the conform cast. */
+  private val UserPage: StructType =
+    StructType(UsersSchema.fields.map(_.copy(dataType = StringType)))
+
   /** Dedup key config per table (okta-sync/main.py:24-30): users by id,
     * membership tables by composite key. */
   val DedupKeys: Map[String, Seq[String]] = Map(
@@ -74,12 +80,13 @@ object OktaRefresh {
 
     // driver-side fan-out at this scale (page counts ≪ rows; see
     // RestPager scale note); each child page is tagged with its parent.
+    // No group to fetch still yields the members columns.
     val ids = toFetch.collect().map(_.getString(0)).toSeq
     val tagged = RestPager.lateral(transport, ids, urlFor, limit = 1000).toSeq
     val members = tagged.groupBy(_._1).map { case (gid, pages) =>
-      RestPager.toDf(spark, pages.map(_._2)).withColumn("group_id", lit(gid))
-    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .getOrElse(spark.emptyDataFrame)
+      RestPager.toDf(spark, pages.map(_._2), UserPage).withColumn("group_id", lit(gid))
+    }.reduceOption(_.union(_)).getOrElse(
+      spark.createDataFrame(java.util.List.of[Row](), UserPage.add("group_id", StringType)))
     (members, everyone)
   }
 
@@ -93,10 +100,8 @@ object OktaRefresh {
                    activePages: Seq[String],
                    deprovisionedPages: Seq[String],
                    root: String): Boolean = {
-    val active = RestPager.toDf(spark, activePages)
-    val deprov = RestPager.toDf(spark, deprovisionedPages)
-    val unioned = active.unionByName(deprov, allowMissingColumns = true)
-    val deduped = conformAndDedup(unioned, UsersSchema, DedupKeys("users"))
+    val pages = RestPager.toDf(spark, activePages ++ deprovisionedPages, UserPage)
+    val deduped = conformAndDedup(pages, UsersSchema, DedupKeys("users"))
     refreshTables(spark, Map("users" -> deduped), root)("users")
   }
 

@@ -21,7 +21,9 @@ import graft.sources.RestPager
   *      instead would skip the failed sync's line items forever). No
   *      record means no watermark: a full extract;
   *   2. extract — page-number REST scan with the watermark pushed as
-  *      the `modified_after` query param (S1 + P5);
+  *      the `modified_after` query param (S1 + P5), read against the
+  *      declared [[NestedFlatten.OrderDoc]]: no inference job, and an
+  *      all-`[]` scan returns before any job;
   *   3. transform — nested flatten + EAV + typed money/dates (P1/P2/P4)
   *      and line-item explode;
   *   4. load — append to the target, stamping sync_timestamp (K1, T8:
@@ -57,8 +59,8 @@ object WooIncremental {
     // 2. extract with pushed watermark predicate
     val params = watermark.map(w => Map("modified_after" -> w)).getOrElse(Map.empty)
     val pages = RestPager.pageNumber(transport, url, perPage, params).toSeq
-    val raw = RestPager.toDf(spark, pages)
-    if (RestPager.noRows(raw)) return SyncResult(0, 0, watermark)
+    if (RestPager.allEmpty(pages)) return SyncResult(0, 0, watermark)
+    val raw = RestPager.toDf(spark, pages, NestedFlatten.OrderDoc)
 
     // 3+4. transform + versioned append (landBatch: stamp, observe the
     // write for the batch count — no re-read of the accumulated table)
@@ -130,8 +132,9 @@ object WooIncremental {
   def syncProducts(spark: SparkSession, transport: RestPager.Transport, url: String,
                    targetRoot: String, syncTimestamp: String,
                    perPage: Int = 100): ProductSyncResult = {
-    val raw = RestPager.toDf(spark, RestPager.pageNumber(transport, url, perPage).toSeq)
-    if (RestPager.noRows(raw)) return ProductSyncResult(0, 0, 0, 0)
+    val pages = RestPager.pageNumber(transport, url, perPage).toSeq
+    if (RestPager.allEmpty(pages)) return ProductSyncResult(0, 0, 0, 0)
+    val raw = RestPager.toDf(spark, pages, NestedFlatten.ProductDoc)
     def land(df: DataFrame, name: String): Long =
       landBatch(df, targetRoot, name, syncTimestamp)
     ProductSyncResult(
@@ -182,8 +185,9 @@ object WooIncremental {
   def syncRefunds(spark: SparkSession, transport: RestPager.Transport, url: String,
                   targetRoot: String, syncTimestamp: String,
                   perPage: Int = 100): RefundSyncResult = {
-    val raw = RestPager.toDf(spark, RestPager.pageNumber(transport, url, perPage).toSeq)
-    if (RestPager.noRows(raw)) return RefundSyncResult(0, 0)
+    val pages = RestPager.pageNumber(transport, url, perPage).toSeq
+    if (RestPager.allEmpty(pages)) return RefundSyncResult(0, 0)
+    val raw = RestPager.toDf(spark, pages, NestedFlatten.RefundDoc)
     def land(df: DataFrame, name: String): Long =
       landBatch(df, targetRoot, name, syncTimestamp)
     RefundSyncResult(

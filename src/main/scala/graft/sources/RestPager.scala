@@ -1,6 +1,8 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.util.{Failure, Success, Try}
 
 /** Paginated REST extraction — the reference's three scan protocols
@@ -14,10 +16,9 @@ import scala.util.{Failure, Success, Try}
   *    tagged with the parent id (reference: okta-sync/main.py:359-510).
   *
   * Extraction is driver-side by design at this scale (page counts ≪
-  * row counts; the API is the bottleneck). The 100 TB path is the same
-  * protocol moved into a DataSourceV2 with one InputPartition per page
-  * range so executors fetch in parallel — the transport/retry/paging
-  * logic here is exactly what those partitions would run.
+  * row counts; the API is the bottleneck). Past the driver, executors
+  * would fetch page ranges with the same transport/retry/paging logic
+  * and parse them with the same declared-schema read as [[toDf]].
   */
 object RestPager {
 
@@ -138,17 +139,34 @@ object RestPager {
   private[graft] def stripBom(s: String): String =
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
 
-  /** Parse a batch of JSON-array bodies into a DataFrame. */
+  /** Parse a batch of JSON-array bodies into a DataFrame, inferring
+    * the schema with a Spark job. */
   def toDf(spark: SparkSession, bodies: Seq[String]): DataFrame = {
     import spark.implicits._
     spark.read.json(bodies.map(stripBom).toDS)
   }
 
-  /** Whether a [[toDf]] batch has no rows. Schema inference reads every
-    * row, so a non-empty inferred schema already proves a row exists;
-    * the emptiness job runs only when the schema is empty (all-`[]`
-    * pages, or rows that are all `{}`). */
-  def noRows(raw: DataFrame): Boolean = raw.schema.isEmpty && raw.isEmpty
+  /** Parse a batch of JSON-array bodies against a declared schema: no
+    * inference job, an absent key reads as null, and a `STRING` leaf
+    * holds any JSON token as its JSON text (an object stays JSON). */
+  def toDf(spark: SparkSession, bodies: Seq[String], schema: StructType): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(schema).json(bodies.map(stripBom).toDS)
+  }
+
+  private val json = new JsonFactory()
+
+  /** Whether a batch holds no rows, decided on the driver: every body
+    * is an empty JSON array (or blank). Reads at most two tokens of
+    * each body. */
+  def allEmpty(bodies: Seq[String]): Boolean = bodies.forall { body =>
+    val p = json.createParser(stripBom(body))
+    try p.nextToken() match {
+      case null => true
+      case JsonToken.START_ARRAY => p.nextToken() == JsonToken.END_ARRAY
+      case _ => false
+    } finally p.close()
+  }
 
   /** S3 — lateral fan-out: for each parent id fetch its (cursor-
     * paginated) children, tagging rows with the parent id. Returns

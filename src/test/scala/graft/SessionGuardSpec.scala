@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the stream width pin on q190's private session, the session's
   * function registry only by `SqlSurface` (operators wrap their kernels
   * as Columns and never look a function up by name), no operator touches
-  * AQE, lineage is cut only through the checkpoint arena, and the only
-  * environment the engine reads is the bench's own three variables. */
+  * AQE, lineage is cut only through the checkpoint arena, page JSON is
+  * parsed only by `RestPager`, and the only environment the engine reads
+  * is the bench's own three variables. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -68,6 +69,11 @@ class SessionGuardSpec extends AnyFunSuite {
     val bad = Seq("localCheckpoint(", ".checkpoint(", "getCheckpointDir", "materialize:")
       .flatMap(n => offenders(n, allowed).map(o => s"$o: $n"))
     assert(bad.isEmpty, s"cut in a CacheHygiene.scope arena (ck.cut): $bad")
+  }
+
+  test("page JSON is parsed only in RestPager") {
+    val bad = offenders("read.json(", Set("graft/sources/RestPager.scala"))
+    assert(bad.isEmpty, s"read pages with RestPager.toDf(spark, bodies, declaredSchema): $bad")
   }
 
   test("sessions are built only by the harness recipe, Smoke, GenSf and CodegenLint") {

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.commons.io.FileUtils
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM (suites would
@@ -34,7 +40,41 @@ object TestSession {
   }
 }
 
-abstract class SparkSpecBase extends AnyFunSuite {
+abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d.toFile)
+    d
+  }
+
+  /** Spark jobs `body` starts, counted by its own job group. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"${getClass.getSimpleName}-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, getClass.getSimpleName, interruptOnCancel = false)
+    try body
+    finally {
+      sc.clearJobGroup()
+      assert(ListenerDrain.waitUntilEmpty(sc, 30000L), "listener bus did not drain")
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 }

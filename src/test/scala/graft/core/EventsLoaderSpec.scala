@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -25,11 +23,7 @@ import graft.SparkSpecBase
   */
 class EventsLoaderSpec extends SparkSpecBase {
 
-  private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"events-shape-$tag").toFile
-    d.deleteOnExit()
-    d.getPath
-  }
+  private def tmpDir(tag: String): String = tempDir(s"events-shape-$tag").toString
 
   // Two instants with sub-second parts that survive µs truncation.
   private val microsFixture = Seq(

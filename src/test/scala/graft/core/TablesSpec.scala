@@ -1,8 +1,6 @@
 package graft.core
 
 import java.io.File
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
@@ -11,8 +9,6 @@ import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -22,28 +18,6 @@ import graft.SparkSpecBase
   * unchanged file read again starts no schema-inference job, and a
   * changed file or different inference settings infer afresh. */
 class TablesSpec extends SparkSpecBase {
-
-  private def sc = spark.sparkContext
-
-  /** Spark jobs `body` starts, counted by its own job group. */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec", interruptOnCancel = false)
-    try body
-    finally {
-      sc.clearJobGroup()
-      assert(ListenerDrain.waitUntilEmpty(sc, 30000L), "listener bus did not drain")
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   /** Writes `file` as plain parquet, without Spark's schema metadata, so
     * Spark infers its schema from the parquet types alone. */
@@ -59,8 +33,6 @@ class TablesSpec extends SparkSpecBase {
     } finally writer.close()
   }
 
-  private def tempDir() = Files.createTempDirectory("graft-tables").toFile
-
   test("a second read of an unchanged fixture file runs no Spark job") {
     val orders = Tables.table(spark, sf0001, "orders")
     val events = Tables.events(spark, sf0001)
@@ -71,7 +43,7 @@ class TablesSpec extends SparkSpecBase {
   }
 
   test("a file rewritten with another schema is re-inferred") {
-    val dir = tempDir()
+    val dir = tempDir("graft-tables").toFile
     val file = new File(dir, "t.parquet")
     writeParquet(file, "message t { required int64 k; }", 2)((g, i) => g.append("k", i.toLong))
     assert(Tables.table(spark, dir.getPath, "t").columns.toSeq == Seq("k"))
@@ -84,7 +56,7 @@ class TablesSpec extends SparkSpecBase {
   }
 
   test("a session with another binaryAsString is not served this session's schema") {
-    val dir = tempDir()
+    val dir = tempDir("graft-tables").toFile
     writeParquet(new File(dir, "t.parquet"), "message t { required binary b; }", 1) { (g, _) =>
       g.append("b", Binary.fromString("hi"))
     }

@@ -270,7 +270,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("ivfIndexTopK == ivfTopK and the scan prunes to the probed bucket partitions") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-index-spec").toString
+    val idx = tempDir("graft-ivf-index-spec").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, idx)
     val queries = emb.filter(col("vec_id") < 5)
     val viaIndex = VectorFunctions.ivfIndexTopK(spark, idx, queries, centroids,
@@ -295,8 +295,8 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("appendIvfIndex: build-then-append == build-once; old files untouched") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val once = java.nio.file.Files.createTempDirectory("graft-ivf-once").toString
-    val grown = java.nio.file.Files.createTempDirectory("graft-ivf-grown").toString
+    val once = tempDir("graft-ivf-once").toString
+    val grown = tempDir("graft-ivf-grown").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, once)
     VectorFunctions.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", centroids, grown)
@@ -325,7 +325,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("ivfIndexTopK with an empty query set returns an empty, well-typed result") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+    val idx = tempDir("graft-ivf-empty").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, idx)
     val out = VectorFunctions.ivfIndexTopK(spark, idx, emb.filter(col("vec_id") < 0),
       centroids, "vec_id", "embedding", k = 3, nprobe = 2)
@@ -336,8 +336,8 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("appendIvfIndexBatch is replay-idempotent; batched layout searches like build-once") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val once = java.nio.file.Files.createTempDirectory("graft-ivf-once2").toString
-    val streamed = java.nio.file.Files.createTempDirectory("graft-ivf-batched").toString
+    val once = tempDir("graft-ivf-once2").toString
+    val streamed = tempDir("graft-ivf-batched").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, once)
     VectorFunctions.appendIvfIndexBatch(emb.filter(col("vec_id") % 2 === 0), 0L,
       "vec_id", "embedding", centroids, streamed)
@@ -383,8 +383,8 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("compactIvfIndex (batched): folds closed batches, protects the newest, search-identical") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val once = java.nio.file.Files.createTempDirectory("graft-ivf-c-once").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-c-batched").toString
+    val once = tempDir("graft-ivf-c-once").toString
+    val idx = tempDir("graft-ivf-c-batched").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, once)
     // repartition(2): each batch lands ~2 files per bucket, so the fold
     // provably shrinks the file count
@@ -436,8 +436,8 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("compactIvfIndex (flat): live view shrinks to ~one file per fat bucket, search-identical, no-op below threshold") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val once = java.nio.file.Files.createTempDirectory("graft-ivf-f-once").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-f-flat").toString
+    val once = tempDir("graft-ivf-f-once").toString
+    val idx = tempDir("graft-ivf-f-flat").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, once)
     VectorFunctions.writeIvfIndex(emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", centroids, idx)
@@ -475,7 +475,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("a search planned against a manifest snapshot stays exact while a compaction rewrites underneath") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-snap").toString
+    val idx = tempDir("graft-ivf-snap").toString
     (0 to 2).foreach(i => VectorFunctions.appendIvfIndexBatch(
       emb.filter(col("vec_id") % 3 === i).repartition(2), i.toLong,
       "vec_id", "embedding", centroids, idx))
@@ -500,7 +500,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("a crashed compaction replays its intent log at the next writer entry (no duplication, no loss)") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-crash").toString
+    val idx = tempDir("graft-ivf-crash").toString
     (0 to 1).foreach(i => VectorFunctions.appendIvfIndexBatch(
       emb.filter(col("vec_id") % 2 === i).repartition(2), i.toLong,
       "vec_id", "embedding", centroids, idx))
@@ -551,7 +551,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
     for (crashAfter <- 1 to 3) {
-      val idx = java.nio.file.Files.createTempDirectory(s"graft-ivf-crash$crashAfter").toString
+      val idx = tempDir(s"graft-ivf-crash$crashAfter").toString
       (0 to 1).foreach(i => VectorFunctions.appendIvfIndexBatch(
         emb.filter(col("vec_id") % 2 === i).repartition(2), i.toLong,
         "vec_id", "embedding", centroids, idx))
@@ -594,7 +594,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("ivfIndexTopKGrouped == ivfIndexTopK; every group scans a strict file subset") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-grouped").toString
+    val idx = tempDir("graft-ivf-grouped").toString
     VectorFunctions.writeIvfIndex(emb.repartition(3), "vec_id", "embedding", centroids, idx)
     val queries = emb.filter(col("vec_id") < 16)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -635,7 +635,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
     // totalFiles from the manifest (not a directory listing).
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-gatepoint").toString
+    val idx = tempDir("graft-ivf-gatepoint").toString
     VectorFunctions.writeIvfIndex(emb, "vec_id", "embedding", centroids, idx)
     val grouped = VectorFunctions.ivfIndexTopKGrouped(spark, idx,
       emb.filter(col("vec_id") < 32), centroids, "vec_id", "embedding", k = 5, nprobe = 1)
@@ -668,7 +668,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("ivfIndexTopKGrouped maxScans caps the scan count; results stay identical") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-maxscans").toString
+    val idx = tempDir("graft-ivf-maxscans").toString
     VectorFunctions.writeIvfIndex(emb.repartition(3), "vec_id", "embedding", centroids, idx)
     val queries = emb.filter(col("vec_id") < 24)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -703,7 +703,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("legacy pre-manifest tree: search falls back to listing; compaction adopts it and deletes folds inline") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-legacy").toString
+    val idx = tempDir("graft-ivf-legacy").toString
     // a foreign tree: bucket-partitioned parquet written WITHOUT the
     // library (no manifest anywhere)
     VectorFunctions.assignBuckets(emb.select(col("vec_id"), col("embedding")),
@@ -726,7 +726,7 @@ class VectorFunctionsSpec extends SparkSpecBase {
   test("maintainIvfIndexStream with compactEvery: long-lived index stays bounded, search-identical") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")
     val centroids = VectorFunctions.centroidsByLabel(emb, "label", "embedding")
-    val base = java.nio.file.Files.createTempDirectory("graft-ivf-policy").toFile
+    val base = tempDir("graft-ivf-policy").toFile
     val topic = new java.io.File(base, "topic").toString
     emb.repartition(12).write.mode("overwrite").parquet(topic)
     val src = spark.readStream.schema(emb.schema)

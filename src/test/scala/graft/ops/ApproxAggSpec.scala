@@ -336,8 +336,8 @@ class ApproxAggSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-kmv").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-kmv-ckpt").toString
+    val root = tempDir("graft-kmv").toString
+    val ckpt = tempDir("graft-kmv-ckpt").toString
     val src = MemoryStream[(String, Long)]
     val q = Sketches.maintainKmvStream(src.toDF().toDF("g", "v"), Seq("g"), "v",
       k = 32, stateRoot = root, checkpointDir = ckpt)
@@ -406,8 +406,8 @@ class ApproxAggSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-cms").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cms-ckpt").toString
+    val root = tempDir("graft-cms").toString
+    val ckpt = tempDir("graft-cms-ckpt").toString
     val src = MemoryStream[Long]
     val q = Sketches.maintainCmsStream(src.toDF().toDF("v"), "v",
       depth = 4, width = 64, stateRoot = root, checkpointDir = ckpt)

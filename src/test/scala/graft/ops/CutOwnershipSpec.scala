@@ -98,7 +98,7 @@ class CutOwnershipSpec extends SparkSpecBase {
   }
 
   test("CorpusIngest.landBatch keeps no cut per landed batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft-own-ingest").toString
+    val root = tempDir("graft-own-ingest").toString
     val landed = owns("landBatch") {
       CorpusIngest.landBatch(docs.withColumnRenamed("id", "doc_id"), 0L,
         s"$root/corpus", s"$root/index", "doc_id", "text")

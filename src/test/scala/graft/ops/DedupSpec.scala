@@ -387,7 +387,7 @@ class DedupSpec extends SparkSpecBase {
   test("connectedComponents cuts executor-locally even with a session checkpoint dir set") {
     val sc = spark.sparkContext
     val prev = sc.getCheckpointDir
-    val dir = java.nio.file.Files.createTempDirectory("cc-session-ckpt")
+    val dir = tempDir("cc-session-ckpt")
     sc.setCheckpointDir(dir.toString)
     try {
       val before = sc.getPersistentRDDs.keySet.toSet
@@ -400,13 +400,7 @@ class DedupSpec extends SparkSpecBase {
       CacheHygiene.release(cc)
       val left = sc.getPersistentRDDs.keySet.toSet -- before
       assert(left.isEmpty, s"persisted after release: $left")
-    } finally {
-      if (prev.isEmpty) sc.setCheckpointDir(null)
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(dir)
-      val all = try walk.iterator().asScala.toList finally walk.close()
-      all.sortBy(-_.getNameCount).foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    } finally if (prev.isEmpty) sc.setCheckpointDir(null)
   }
 
   test("sourceOverlapMatrix: shared 4-gram counts and floor-jaccard per source pair") {

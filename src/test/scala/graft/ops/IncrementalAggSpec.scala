@@ -102,8 +102,8 @@ class IncrementalAggSpec extends SparkSpecBase {
   test("streaming maintenance: per-batch IVM equals batch recompute; replay idempotent") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-ivm").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivm-ckpt").toString
+    val root = tempDir("graft-ivm").toString
+    val ckpt = tempDir("graft-ivm-ckpt").toString
     val src = MemoryStream[(String, Long, String)]
     val cdc = src.toDF().toDF("g", "v", "op")
     val q = IncrementalAgg.maintainStream(cdc, Seq("g"), "v", "op", root, ckpt)
@@ -258,8 +258,8 @@ class IncrementalAggSpec extends SparkSpecBase {
   test("streaming join-view maintenance: two-sided batches land idempotently") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-jv").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-jv-ckpt").toString
+    val root = tempDir("graft-jv").toString
+    val ckpt = tempDir("graft-jv-ckpt").toString
     val src = MemoryStream[(String, String, String)]
     val cdc = src.toDF().toDF("k", "op", "side")
     val q = IncrementalAgg.maintainJoinViewStream(cdc, Seq("k"), "op", "side", root, ckpt)

@@ -120,8 +120,8 @@ class IncrementalMinMaxSpec extends SparkSpecBase {
   test("streaming maintenance: reserve IVM equals batch recompute; replay idempotent") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-ivmmm").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivmmm-ckpt").toString
+    val root = tempDir("graft-ivmmm").toString
+    val ckpt = tempDir("graft-ivmmm-ckpt").toString
     val src = MemoryStream[(String, Long, String)]
     val cdc = src.toDF().toDF("g", "v", "op")
     val q = IncrementalMinMax.maintainStream(cdc, Seq("g"), "v", "op", root, ckpt, k = 4)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpecBase
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
 /** Crash-anywhere / atomicity cases for the manifest-pointer publish.
@@ -15,7 +14,7 @@ class ManifestSwapSpec extends SparkSpecBase {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("multi-table publish flips all tables atomically and reads back") {
-    val root = Files.createTempDirectory("graft-mswap").toString
+    val root = tempDir("graft-mswap").toString
     val r1 = ManifestSwap.publish(spark, root,
       Map("a" -> Seq(1, 2).toDF("x"), "b" -> Seq("p").toDF("s")))
     assert(r1 == Map("a" -> true, "b" -> true))
@@ -33,7 +32,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("a crash before the manifest rename leaves readers on the old generation") {
-    val root = Files.createTempDirectory("graft-mswap-crash").toString
+    val root = tempDir("graft-mswap-crash").toString
     ManifestSwap.publish(spark, root,
       Map("a" -> Seq(1).toDF("x"), "b" -> Seq(2).toDF("x")))
     val (seq1, _) = ManifestSwap.currentMapping(spark, root)
@@ -60,7 +59,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("empty-input guard carries the old generation forward per table") {
-    val root = Files.createTempDirectory("graft-mswap-empty").toString
+    val root = tempDir("graft-mswap-empty").toString
     ManifestSwap.publish(spark, root, Map("a" -> Seq(1, 2).toDF("x")))
     // a: empty refused (old data stays current); b: brand-new empty table is fine
     val r = ManifestSwap.publish(spark, root,
@@ -71,7 +70,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("retention keeps prior generations readable until swept") {
-    val root = Files.createTempDirectory("graft-mswap-retain").toString
+    val root = tempDir("graft-mswap-retain").toString
     ManifestSwap.publish(spark, root, Map("t" -> Seq(1).toDF("x")))
     val gen1 = ManifestSwap.resolvePath(spark, root, "t").get
     ManifestSwap.publish(spark, root, Map("t" -> Seq(2).toDF("x")))
@@ -86,7 +85,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("a stolen seq (contract violation) degrades to a retried commit, never a torn pointer") {
-    val root = Files.createTempDirectory("graft-mswap-race").toString
+    val root = tempDir("graft-mswap-race").toString
     ManifestSwap.publish(spark, root, Map("t" -> Seq(1).toDF("x")))
     val (seq1, _) = ManifestSwap.currentMapping(spark, root)
     val gen1Name = new Path(ManifestSwap.resolvePath(spark, root, "t").get).getName
@@ -101,7 +100,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("commit's rename-collision retry lands at a higher seq, never a torn pointer") {
-    val root = Files.createTempDirectory("graft-mswap-retry").toString
+    val root = tempDir("graft-mswap-retry").toString
     ManifestSwap.publish(spark, root, Map("t" -> Seq(1).toDF("x")))
     val (seq1, mapping) = ManifestSwap.currentMapping(spark, root)
     // occupy the EXACT seqs commit will try first (seq+1, then the
@@ -118,7 +117,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("a pinned seq keeps reading its own generation across publishes") {
-    val root = Files.createTempDirectory("graft-mswap-pin").toString
+    val root = tempDir("graft-mswap-pin").toString
     ManifestSwap.publish(spark, root, Map("t" -> Seq(1, 2).toDF("x")))
     val (pinned, _) = ManifestSwap.currentMapping(spark, root)
     ManifestSwap.publish(spark, root, Map("t" -> Seq(9).toDF("x")))
@@ -134,7 +133,7 @@ class ManifestSwapSpec extends SparkSpecBase {
   }
 
   test("unchanged tables are carried into the new generation") {
-    val root = Files.createTempDirectory("graft-mswap-carry").toString
+    val root = tempDir("graft-mswap-carry").toString
     ManifestSwap.publish(spark, root,
       Map("users" -> Seq(1).toDF("x"), "groups" -> Seq(2, 3).toDF("x")))
     // later sync touches only users; groups must remain resolvable

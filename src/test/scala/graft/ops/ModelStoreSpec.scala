@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class ModelStoreSpec extends SparkSpecBase {
 
   private def freshRoot() =
-    java.nio.file.Files.createTempDirectory("graft-modelstore").toString
+    tempDir("graft-modelstore").toString
 
   test("PQ model round-trips bit-exactly and the reloaded model encodes identically") {
     val emb = graft.core.Tables.table(spark, sf0001, "embeddings")

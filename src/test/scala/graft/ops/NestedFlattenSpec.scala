@@ -1,9 +1,15 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import graft.sources.RestPager
+import org.apache.spark.sql.types.StructType
 
 class NestedFlattenSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** Documents read as the pipelines read their pages: against the
+    * declared schema. */
+  private def read(doc: StructType, json: String*) = RestPager.toDf(spark, json, doc)
 
   /** Fixture order shaped on FIXTURES.md §2 / woo order JSON. */
   private val orderJson =
@@ -30,7 +36,7 @@ class NestedFlattenSpec extends SparkSpecBase {
          {"id": 7002, "product_id": 556, "name": "Pen", "sku": "PN-9",
           "price": "", "quantity": 1, "total_tax": "0.00"}]}""".replaceAll("\n\\s*", " ")
 
-  private lazy val orders = spark.read.json(Seq(orderJson).toDS)
+  private lazy val orders = read(NestedFlatten.OrderDoc, orderJson)
 
   test("flattenOrders: nested paths, EAV last-match, sentinel dates, money decimals") {
     val r = NestedFlatten.flattenOrders(orders).head()
@@ -74,7 +80,7 @@ class NestedFlattenSpec extends SparkSpecBase {
            {"id": 6, "product_id": 75, "name": "Null child", "sku": "N-1",
             "bundled_by": null, "price": "0.00", "quantity": 1, "total_tax": "0"}]}"""
         .replaceAll("\n\\s*", " ")
-    val items = NestedFlatten.explodeLineItems(spark.read.json(Seq(orderWithBundle).toDS))
+    val items = NestedFlatten.explodeLineItems(read(NestedFlatten.OrderDoc, orderWithBundle))
       .collect().map(r => r.getAs[Long]("line_item_id") -> r.getAs[String]("sku")).toMap
     assert(items(1L) == "")        // child before any parent -> initial ''
     assert(items(2L) == "BNDL-1")  // parent keeps its own
@@ -121,7 +127,7 @@ class NestedFlattenSpec extends SparkSpecBase {
          {"key": "next_receipt_date", "value": "2026-09-01"}]}""".replaceAll("\n\\s*", " ")
 
   test("flattenProducts: 17-key flag map semantics + coercions") {
-    val r = NestedFlatten.flattenProducts(spark.read.json(Seq(productJson).toDS)).head()
+    val r = NestedFlatten.flattenProducts(read(NestedFlatten.ProductDoc, productJson)).head()
     assert(r.getAs[Boolean]("free_shipping"))                  // "1" then "0": stays set
     assert(!r.getAs[Boolean]("gift_card"))                     // "0" never sets
     assert(!r.getAs[Boolean]("royalty"))                       // "" never sets
@@ -157,8 +163,7 @@ class NestedFlattenSpec extends SparkSpecBase {
                         "options": ["L", "XL"]}]}""".replaceAll("\n\\s*", " ")
 
   test("product child-table explodes: bundles, categories, attributes(option[0])") {
-    import org.apache.spark.sql.functions.lit
-    val p = spark.read.json(Seq(productWithChildrenJson).toDS)
+    val p = read(NestedFlatten.ProductDoc, productWithChildrenJson)
     val bundles = NestedFlatten.explodeProductBundles(p).collect()
     assert(bundles.length == 1)
     assert(bundles.head.getAs[java.math.BigDecimal]("bundled_product_id").longValue() == 99L)
@@ -174,13 +179,7 @@ class NestedFlattenSpec extends SparkSpecBase {
 
     // a product without the child arrays yields no child rows (the
     // reference's `if key in p` guard)
-    val bare = spark.read.json(Seq("""{"id": 32}""").toDS)
-      .withColumn("bundled_items",
-        lit(null).cast("array<struct<bundled_item_id:long,product_id:long,quantity_default:long>>"))
-      .withColumn("categories",
-        lit(null).cast("array<struct<id:long,name:string,slug:string>>"))
-      .withColumn("attributes",
-        lit(null).cast("array<struct<id:long,name:string,slug:string,options:array<string>>>"))
+    val bare = read(NestedFlatten.ProductDoc, """{"id": 32}""")
     assert(NestedFlatten.explodeProductBundles(bare).count() == 0)
     assert(NestedFlatten.explodeProductCategories(bare).count() == 0)
     assert(NestedFlatten.explodeProductAttributes(bare).count() == 0)
@@ -206,7 +205,7 @@ class NestedFlattenSpec extends SparkSpecBase {
           "meta_data": [{"key": "_alg_wc_cog_item_cost", "value": "garbage"}]}]}"""
       .replaceAll("\n\\s*", " ")
 
-  private lazy val refunds = spark.read.json(Seq(refundJson).toDS)
+  private lazy val refunds = read(NestedFlatten.RefundDoc, refundJson)
 
   test("flattenRefunds: negated total, last shipping line, cru_data subtotals") {
     val r = NestedFlatten.flattenRefunds(refunds).head()

@@ -1,13 +1,12 @@
 package graft.ops
 
 import graft.SparkSpecBase
-import java.nio.file.Files
 
 class TableSwapSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("stageAndSwap publishes atomically-by-rename and refuses empty overwrite") {
-    val root = Files.createTempDirectory("graft-swap").toString
+    val root = tempDir("graft-swap").toString
     val v1 = Seq(1, 2, 3).toDF("x")
     assert(TableSwap.stageAndSwap(spark, v1, root, "t"))
     assert(spark.read.parquet(s"$root/t").count() == 3)
@@ -24,7 +23,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("stageAndSwap sweeps its trash copy after a successful publish") {
-    val root = Files.createTempDirectory("graft-swap-trash").toString
+    val root = tempDir("graft-swap-trash").toString
     assert(TableSwap.stageAndSwap(spark, Seq(1).toDF("x"), root, "t"))
     assert(TableSwap.stageAndSwap(spark, Seq(2, 3).toDF("x"), root, "t"))
     val trash = new java.io.File(s"$root/_trash")
@@ -33,7 +32,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("recoverSwap restores the newest trashed copy when a swap died between renames") {
-    val root = Files.createTempDirectory("graft-swap-crash").toString
+    val root = tempDir("graft-swap-crash").toString
     assert(TableSwap.stageAndSwap(spark, Seq(1, 2, 3).toDF("x"), root, "t"))
     // simulate the crash window: the swap moved the live table to _trash
     // (step 1) and died before publishing staging (step 2)
@@ -59,7 +58,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("recoverSwap never touches a sibling table whose name extends the recovered one") {
-    val root = Files.createTempDirectory("graft-swap-sibling").toString
+    val root = tempDir("graft-swap-sibling").toString
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // "users-archive" died between renames; its trash entry is the ONLY copy
@@ -81,7 +80,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("recoverSwap also restores pre-uniquifier trash entries (old stamp format)") {
-    val root = Files.createTempDirectory("graft-swap-oldfmt").toString
+    val root = tempDir("graft-swap-oldfmt").toString
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_trash"))
@@ -92,7 +91,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("swaps heal a crashed predecessor automatically and never collide in _trash") {
-    val root = Files.createTempDirectory("graft-swap-heal").toString
+    val root = tempDir("graft-swap-heal").toString
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(TableSwap.stageAndSwap(spark, Seq(1).toDF("x"), root, "t"))
@@ -110,7 +109,7 @@ class TableSwapSpec extends SparkSpecBase {
   }
 
   test("writeBatch truncate-then-append protocol") {
-    val path = Files.createTempDirectory("graft-batch").toString + "/t"
+    val path = tempDir("graft-batch").toString + "/t"
     TableSwap.writeBatch(Seq(1).toDF("x"), path, firstBatch = true)
     TableSwap.writeBatch(Seq(2, 3).toDF("x"), path, firstBatch = false)
     assert(spark.read.parquet(path).count() == 3)

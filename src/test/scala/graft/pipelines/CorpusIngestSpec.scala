@@ -2,7 +2,6 @@ package graft.pipelines
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class CorpusIngestSpec extends SparkSpecBase {
   import spark.implicits._
@@ -17,10 +16,10 @@ class CorpusIngestSpec extends SparkSpecBase {
       .write.parquet(s"$topic/$part")
 
   test("streaming intake: quality gate, in-flight + cross-run dedup, idempotent landing") {
-    val topic = Files.createTempDirectory("graft-ingest-topic").toString
-    val corpus = Files.createTempDirectory("graft-ingest-corpus").toString + "/c"
-    val index = Files.createTempDirectory("graft-ingest-index").toString + "/i"
-    val ckpt = Files.createTempDirectory("graft-ingest-ckpt").toString
+    val topic = tempDir("graft-ingest-topic").toString
+    val corpus = tempDir("graft-ingest-corpus").toString + "/c"
+    val index = tempDir("graft-ingest-index").toString + "/i"
+    val ckpt = tempDir("graft-ingest-ckpt").toString
 
     def run(): Unit = {
       val stream = spark.readStream
@@ -85,8 +84,8 @@ class CorpusIngestSpec extends SparkSpecBase {
     s"unique spark document number $i with enough words to clear the quality gate easily"
 
   test("compact folds committed dirs into one gen with identical contents and bounded listing") {
-    val corpus = Files.createTempDirectory("graft-compact-corpus").toString + "/c"
-    val index = Files.createTempDirectory("graft-compact-index").toString + "/i"
+    val corpus = tempDir("graft-compact-corpus").toString + "/c"
+    val index = tempDir("graft-compact-index").toString + "/i"
 
     for (b <- 0L until 4L)
       CorpusIngest.landBatch(Seq((b, docText(b))).toDF("doc_id", "text"),
@@ -132,8 +131,8 @@ class CorpusIngestSpec extends SparkSpecBase {
   }
 
   test("a crashed compaction (gen committed, absorbed dirs not yet deleted) never double-counts") {
-    val corpus = Files.createTempDirectory("graft-compact-crash").toString + "/c"
-    val index = Files.createTempDirectory("graft-compact-crashi").toString + "/i"
+    val corpus = tempDir("graft-compact-crash").toString + "/c"
+    val index = tempDir("graft-compact-crashi").toString + "/i"
     for (b <- 0L until 3L)
       CorpusIngest.landBatch(Seq((b, docText(b))).toDF("doc_id", "text"),
         b, corpus, index, "doc_id", "text")
@@ -159,8 +158,8 @@ class CorpusIngestSpec extends SparkSpecBase {
 
   test("fail-closed expectation gate: a violating batch is refused, standing state unchanged") {
     import graft.ops.Expectations
-    val corpus = Files.createTempDirectory("graft-exp-corpus").toString + "/c"
-    val index = Files.createTempDirectory("graft-exp-index").toString + "/i"
+    val corpus = tempDir("graft-exp-corpus").toString + "/c"
+    val index = tempDir("graft-exp-index").toString + "/i"
     val rules: org.apache.spark.sql.DataFrame => Seq[org.apache.spark.sql.DataFrame] =
       b => Seq(
         Expectations.expectUnique("unique_doc_id", b, Seq("doc_id")),
@@ -192,8 +191,8 @@ class CorpusIngestSpec extends SparkSpecBase {
     // streaming composition: the gate rides foreachBatch — a violating
     // micro-batch fails the query (fail-closed, checkpoint does not
     // advance) and state is untouched
-    val topic = Files.createTempDirectory("graft-exp-topic").toString
-    val ckpt = Files.createTempDirectory("graft-exp-ckpt").toString
+    val topic = tempDir("graft-exp-topic").toString
+    val ckpt = tempDir("graft-exp-ckpt").toString
     writeDocs(topic, "r1", Seq(9L -> docText(9), 9L -> docText(10)))
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING, event_ts TIMESTAMP")

@@ -52,9 +52,9 @@ class GeoIngestSpec extends SparkSpecBase {
   }
 
   test("config-driven geo refresh: skiprows, Namibia NA, zip regex, append mode, date stamp") {
-    val dir = Files.createTempDirectory("geo-fixtures")
+    val dir = tempDir("geo-fixtures")
     fixtures(dir)
-    val root = Files.createTempDirectory("geo-out").toString
+    val root = tempDir("geo-out").toString
     val today = java.sql.Date.valueOf("2026-08-12")
 
     val counts = GeoIngest.run(spark, f => dir.resolve(f).toString, root, today)
@@ -101,7 +101,7 @@ class GeoIngestSpec extends SparkSpecBase {
 
     // empty-truncation guard: a run over empty extracts must NOT wipe
     // the published overwrite tables (TableSwap.stageAndSwap refuses)
-    val empty = Files.createTempDirectory("geo-empty")
+    val empty = tempDir("geo-empty")
     fixtures(empty)
     write(empty, "countryInfo.txt", (1 to 50).map(i => s"# only comments $i"))
     val counts3 = GeoIngest.run(spark, f => empty.resolve(f).toString, root, today)

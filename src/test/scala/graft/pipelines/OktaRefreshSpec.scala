@@ -1,7 +1,6 @@
 package graft.pipelines
 
 import graft.SparkSpecBase
-import java.nio.file.Files
 
 /** End-to-end integration of the reference's flagship chain on fixture
   * pages (FIXTURES.md §1 cases: ragged pages, duplicate ids across
@@ -25,7 +24,7 @@ class OktaRefreshSpec extends SparkSpecBase {
     s"""[${userJson("u3", "DEPROVISIONED", "2026-05-01T10:00:00.000Z")}]""")
 
   test("refresh: conform + union + keep-latest dedup + swap") {
-    val root = Files.createTempDirectory("graft-okta").toString
+    val root = tempDir("graft-okta").toString
     assert(OktaRefresh.refreshUsers(spark, activePages, deprovPages, root))
 
     val out = graft.ops.ManifestSwap.read(spark, root, "users")
@@ -40,10 +39,25 @@ class OktaRefreshSpec extends SparkSpecBase {
     assert(graft.ops.ManifestSwap.read(spark, root, "users").count() == 3)
   }
 
+  test("object-valued profile and credentials land as their JSON text") {
+    val root = tempDir("graft-okta-nested").toString
+    val profile = """{"login":"u9@x.org","tags":["a","b"],"manager":{"id":"u1"}}"""
+    val credentials = """{"provider":{"type":"OKTA","name":"OKTA"}}"""
+    val page = s"""[{"id":"u9","status":"ACTIVE","created":"2026-01-01T00:00:00.000Z",
+      "lastUpdated":"2026-06-01T10:00:00.000Z","profile":$profile,
+      "credentials":$credentials}]""".replaceAll("\n\\s*", "")
+    assert(OktaRefresh.refreshUsers(spark, Seq(page), Seq("[]"), root))
+
+    val u9 = graft.ops.ManifestSwap.read(spark, root, "users").head()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(json.readTree(u9.getAs[String]("profile")) == json.readTree(profile))
+    assert(json.readTree(u9.getAs[String]("credentials")) == json.readTree(credentials))
+  }
+
   test("multi-table refresh publishes one atomic generation across tables") {
     import spark.implicits._
     import graft.ops.ManifestSwap
-    val root = Files.createTempDirectory("graft-okta-multi").toString
+    val root = tempDir("graft-okta-multi").toString
     // sync 1: users + groups land together
     val r1 = OktaRefresh.refreshTables(spark, Map(
       "users" -> Seq(("u1", "ACTIVE")).toDF("id", "status"),

@@ -30,4 +30,18 @@ class SyncMembersSpec extends SparkSpecBase {
     assert(rows.contains(("g1", "m-g/g1-1")))
     assert(rows.size == 4)
   }
+
+  test("member fan-out with every group excluded returns the members columns and no rows") {
+    val t = new RestPager.Transport {
+      def get(url: String, params: Map[String, String]): RestPager.Response =
+        fail(s"an excluded group was fetched: $url")
+    }
+    val (members, everyone) = OktaRefresh.syncGroupMembers(
+      spark, Seq("g1", "g2").toDF("id"), Seq("g1").toDF("id"),
+      Seq(("g1", 5L), ("g2", 900001L)).toDF("id", "n_members"), everyoneThreshold = 800000L,
+      t, id => s"g/$id")
+
+    assert(everyone.as[String].collect().toSet == Set("g1", "g2"))
+    assert(members.select("group_id", "id").as[(String, String)].collect().isEmpty)
+  }
 }

@@ -3,12 +3,15 @@ package graft.pipelines
 import graft.SparkSpecBase
 import graft.sources.RestPager
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import scala.collection.mutable
 
 class WooIncrementalSpec extends SparkSpecBase {
 
-  private def order(id: Int, modified: String, total: String) =
+  private def order(id: Int, modified: String, total: String): String =
+    order(id, modified, total, s"""[{"id": ${id}01, "product_id": 9, "name": "P", "sku": "S",
+      "price": "5.00", "quantity": 2, "total_tax": "0.10"}]""")
+
+  private def order(id: Int, modified: String, total: String, lineItems: String): String =
     s"""{"id": $id, "order_key": "wc_$id", "status": "completed", "currency": "USD",
         "date_created": "2026-06-01T10:00:00", "date_modified": "$modified",
         "date_paid": "2026-06-01T10:05:00",
@@ -22,8 +25,7 @@ class WooIncrementalSpec extends SparkSpecBase {
                       "customer_role": "retail",
                       "discounts": []},
         "meta_data": [{"key": "event_code", "value": "E$id"}],
-        "line_items": [{"id": ${id}01, "product_id": 9, "name": "P", "sku": "S",
-                         "price": "5.00", "quantity": 2, "total_tax": "0.10"}]}"""
+        "line_items": $lineItems}"""
       .replaceAll("\n\\s*", " ")
 
   /** Serves orders modified after the param; records requests. */
@@ -33,13 +35,13 @@ class WooIncrementalSpec extends SparkSpecBase {
       calls += params
       val after = params.get("modified_after")
       val live = orders.filter { case (_, m, _) => after.forall(m > _) }
-      RestPager.Response(200, live.map((order _).tupled).mkString("[", ",", "]"),
+      RestPager.Response(200, live.map { case (i, m, t) => order(i, m, t) }.mkString("[", ",", "]"),
         headers = Map("X-WP-TotalPages" -> "1"))
     }
   }
 
   test("incremental sync: full extract then watermark-pushed delta, versioned append") {
-    val root = Files.createTempDirectory("graft-woo").toString
+    val root = tempDir("graft-woo").toString
     val api = new Api(Seq(
       (1, "2026-06-02T00:00:00", "10.00"),
       (2, "2026-06-03T00:00:00", "20.00")))
@@ -75,7 +77,7 @@ class WooIncrementalSpec extends SparkSpecBase {
     // a `file:`-scheme root is invisible to java.io.File (the old probe),
     // which would silently degrade every sync to a full extract on any
     // non-local filesystem; the Hadoop FileSystem probe must find it
-    val root = "file:" + Files.createTempDirectory("graft-woo-fs").toString
+    val root = "file:" + tempDir("graft-woo-fs").toString
     val api = new Api(Seq((1, "2026-06-02T00:00:00", "10.00")))
     val r1 = WooIncremental.sync(spark, api, "http://api/orders", root, "2026-06-03T00:00:00")
     assert(r1.watermark.isEmpty && r1.ordersAppended == 1)
@@ -86,13 +88,29 @@ class WooIncrementalSpec extends SparkSpecBase {
     assert(api2.calls.head("modified_after") == "2026-06-03T00:00:00")
   }
 
+  test("an older-shape order keeps its skus on a page with bundled orders") {
+    // order 1's items carry no bundled_by (the older API shape), so each
+    // is its own parent; order 2's carry it, so its child inherits
+    val root = tempDir("graft-woo-mixed").toString
+    val bundled = order(2, "2026-06-02T00:00:00", "20.00",
+      """[{"id": 201, "sku": "KIT", "bundled_by": "", "price": "20.00", "quantity": 1},
+          {"id": 202, "sku": "PART", "bundled_by": "201", "price": "0.00", "quantity": 1}]""")
+    val page = Seq(order(1, "2026-06-02T00:00:00", "10.00"), bundled).mkString("[", ",", "]")
+    val r = WooIncremental.sync(spark, new FullApi(page), "http://api/orders", root,
+      "2026-06-03T00:00:00")
+    assert(r.ordersAppended == 2 && r.itemsAppended == 3)
+    val skus = spark.read.parquet(s"$root/order_items").collect()
+      .map(i => i.getAs[Long]("line_item_id") -> i.getAs[String]("sku")).toMap
+    assert(skus == Map(101L -> "S", 201L -> "KIT", 202L -> "KIT"))
+  }
+
   /** Commit-record names under `_events` (not the local-FS .crc sidecars). */
   private def doneRecords(root: String): Seq[String] =
     Option(new java.io.File(s"$root/_events").list()).toSeq.flatten
       .filter(f => f.startsWith("done-") && f.endsWith(".json")).sorted
 
   test("a sync that fails after landing orders does not advance the watermark; the next one re-lands its items") {
-    val root = Files.createTempDirectory("graft-woo-partial").toString
+    val root = tempDir("graft-woo-partial").toString
     val t1 = "2026-06-04T00:00:00"
     WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
       "http://api/orders", root, t1)
@@ -122,30 +140,18 @@ class WooIncrementalSpec extends SparkSpecBase {
   }
 
   test("a delta sync runs at most 3 Spark jobs; an all-[] delta lands nothing and commits nothing") {
-    val root = Files.createTempDirectory("graft-woo-jobs").toString
+    val root = tempDir("graft-woo-jobs").toString
     WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
       "http://api/orders", root, "2026-06-03T00:00:00")
 
-    val group = s"woo-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val r2 = try {
-      sc.setJobGroup(group, "delta sync")
-      try WooIncremental.sync(spark, new Api(Seq((2, "2026-06-04T00:00:00", "20.00"))),
+    var r2: WooIncremental.SyncResult = null
+    val jobs = jobsDuring {
+      r2 = WooIncremental.sync(spark, new Api(Seq((2, "2026-06-04T00:00:00", "20.00"))),
         "http://api/orders", root, "2026-06-05T00:00:00")
-      finally sc.clearJobGroup()
-    } finally {
-      assert(org.apache.spark.graftbridge.ListenerDrain.waitUntilEmpty(sc, 10000L))
-      sc.removeSparkListener(listener)
     }
     assert(r2.ordersAppended == 1 && r2.itemsAppended == 1)
-    assert(jobs.get() <= 3, s"delta sync ran ${jobs.get()} Spark jobs")
+    // one job per landed table, none to infer the page schema
+    assert(jobs <= 2, s"delta sync ran $jobs Spark jobs")
 
     // every page `[]`: nothing appended, no commit record, watermark kept
     val empty = new Api(Seq.empty)
@@ -156,7 +162,7 @@ class WooIncrementalSpec extends SparkSpecBase {
   }
 
   test("the commit record is real JSON: a stamp with quotes and backslashes round-trips") {
-    val root = Files.createTempDirectory("graft-woo-json").toString
+    val root = tempDir("graft-woo-json").toString
     val stamp = "2026-06-03T00:00:00 \"q\" \\ \\\""
     WooIncremental.sync(spark, new Api(Seq((1, "2026-06-02T00:00:00", "10.00"))),
       "http://api/orders", root, stamp)
@@ -178,7 +184,7 @@ class WooIncrementalSpec extends SparkSpecBase {
   }
 
   test("product sync lands all four tables; ragged pages without child arrays land zero child rows") {
-    val root = Files.createTempDirectory("graft-woo-prod").toString
+    val root = tempDir("graft-woo-prod").toString
     val withChildren =
       """{"id": 1, "name": "Bundle", "short_description": "b", "status": "publish",
           "type": "bundle", "price": "30.00", "regular_price": "30.00", "sku": "B-1",
@@ -232,7 +238,7 @@ class WooIncrementalSpec extends SparkSpecBase {
       }
     }
     def run(hour: Int): (WooIncremental.FullSyncResult, Seq[String]) = {
-      val root = Files.createTempDirectory(s"graft-woo-full-$hour").toString
+      val root = tempDir(s"graft-woo-full-$hour").toString
       val api = new RecordingApi
       val r = WooIncremental.fullSync(spark, api, "http://api/orders",
         "http://api/refunds", "http://api/products", root,
@@ -252,8 +258,38 @@ class WooIncrementalSpec extends SparkSpecBase {
     }
   }
 
+  test("product and refund syncs run one Spark job per landed table; an all-[] refund batch lands nothing") {
+    val root = tempDir("graft-woo-full-jobs").toString
+    val product = """{"id": 1, "name": "Kit", "meta_data": [{"key": "brand", "value": "B"}],
+      "categories": [{"id": 4, "name": "Kits", "slug": "kits"}]}""".replaceAll("\n\\s*", " ")
+    val refund = """{"id": 9, "parent_id": 7, "amount": "1.00", "date_created": "2026-07-01T09:00:00",
+      "line_items": [{"id": 5, "meta_data": [{"key": "_refunded_item_id", "value": "3"}]}]}"""
+      .replaceAll("\n\\s*", " ")
+    var products: WooIncremental.ProductSyncResult = null
+    val productJobs = jobsDuring {
+      products = WooIncremental.syncProducts(spark, new FullApi(s"[$product]"),
+        "http://api/products", root, "2026-07-02T00:00:00")
+    }
+    assert(products == WooIncremental.ProductSyncResult(1, 0, 1, 0))
+    assert(productJobs == 4, s"product sync ran $productJobs Spark jobs")
+
+    var refunds: WooIncremental.RefundSyncResult = null
+    val refundJobs = jobsDuring {
+      refunds = WooIncremental.syncRefunds(spark, new FullApi(s"[$refund]"),
+        "http://api/refunds", root, "2026-07-02T00:00:00")
+    }
+    assert(refunds == WooIncremental.RefundSyncResult(1, 1))
+    assert(refundJobs == 2, s"refund sync ran $refundJobs Spark jobs")
+
+    val empty = WooIncremental.syncRefunds(spark, new FullApi("[]"),
+      "http://api/refunds", root, "2026-07-03T00:00:00")
+    assert(empty == WooIncremental.RefundSyncResult(0, 0))
+    assert(spark.read.parquet(s"$root/refunds").count() == 1)
+    assert(spark.read.parquet(s"$root/refund_items").count() == 1)
+  }
+
   test("refund sync lands headers and exploded items with negated totals") {
-    val root = Files.createTempDirectory("graft-woo-ref").toString
+    val root = tempDir("graft-woo-ref").toString
     val refund =
       """{"id": 9001, "parent_id": 777, "amount": "25.00",
           "date_created": "2026-07-01T09:00:00",

@@ -11,7 +11,7 @@ class FileIngestSpec extends SparkSpecBase {
     ("population", "integer"), ("elevation", "float"))
 
   private def writeTsv(lines: Seq[String]): String = {
-    val f = Files.createTempFile("graft-geo", ".txt")
+    val f = Files.createTempFile(tempDir("graft-geo"), "geo", ".txt")
     // explicit UTF-8: the platform default charset may be ASCII under a
     // bare locale, which would mangle the BOM fixture into '?' bytes
     Files.write(f, lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -60,7 +60,7 @@ class FileIngestSpec extends SparkSpecBase {
   }
 
   test("zip member extraction: single member, regex pick, and no-match error") {
-    val dir = Files.createTempDirectory("graft-zip-src")
+    val dir = tempDir("graft-zip-src")
     val zipPath = dir.resolve("bundle.zip")
     val zos = new ZipOutputStream(Files.newOutputStream(zipPath))
     for ((name, content) <- Seq("readme.txt" -> "ignore me", "US.txt" -> "5\tNYC\tUS\t8000000\t10.0")) {
@@ -68,12 +68,12 @@ class FileIngestSpec extends SparkSpecBase {
     }
     zos.close()
 
-    val member = FileIngest.extractZipMember(zipPath.toString, Some("US\\.txt"))
+    val member = FileIngest.extractZipMember(zipPath.toString, Some("US\\.txt"), dir)
     val df = FileIngest.readDelimited(spark, member, geoSchema)
     assert(df.head().getAs[String]("name") == "NYC")
 
     intercept[IllegalArgumentException] {
-      FileIngest.extractZipMember(zipPath.toString, Some("ZZ\\.txt"))
+      FileIngest.extractZipMember(zipPath.toString, Some("ZZ\\.txt"), dir)
     }
   }
 }

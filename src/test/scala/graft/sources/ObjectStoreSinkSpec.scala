@@ -10,10 +10,10 @@ class ObjectStoreSinkSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("uploadFile copies to the destination URI, overwriting like the reference") {
-    val src = Files.createTempDirectory("graft-oss-src")
+    val src = tempDir("graft-oss-src")
     val f = src.resolve("report.csv")
     Files.write(f, "a,b\n1,2\n".getBytes)
-    val bucket = Files.createTempDirectory("graft-oss-bucket")
+    val bucket = tempDir("graft-oss-bucket")
     val dest = s"file://$bucket/exports/report.csv"
 
     val out = ObjectStoreSink.uploadFile(spark, f.toString, dest)
@@ -29,8 +29,8 @@ class ObjectStoreSinkSpec extends SparkSpecBase {
   }
 
   test("uploadFile refuses a directory and a missing source") {
-    val dir = Files.createTempDirectory("graft-oss-dir")
-    val bucket = Files.createTempDirectory("graft-oss-bucket2")
+    val dir = tempDir("graft-oss-dir")
+    val bucket = tempDir("graft-oss-bucket2")
     intercept[IllegalArgumentException] {
       ObjectStoreSink.uploadFile(spark, dir.toString, s"file://$bucket/x")
     }
@@ -40,9 +40,9 @@ class ObjectStoreSinkSpec extends SparkSpecBase {
   }
 
   test("uploadResultDir ships data files of a written result, skipping job markers") {
-    val out = Files.createTempDirectory("graft-oss-result").toString + "/res"
+    val out = tempDir("graft-oss-result").toString + "/res"
     Seq(1, 2, 3).toDF("x").coalesce(1).write.parquet(out)
-    val bucket = Files.createTempDirectory("graft-oss-bucket3")
+    val bucket = tempDir("graft-oss-bucket3")
 
     val shipped = ObjectStoreSink.uploadResultDir(spark, out, s"file://$bucket/res")
     assert(shipped.nonEmpty)
@@ -52,9 +52,9 @@ class ObjectStoreSinkSpec extends SparkSpecBase {
   }
 
   test("uploadResultDir recurses partitioned layouts and refuses an empty result") {
-    val out = Files.createTempDirectory("graft-oss-part").toString + "/res"
+    val out = tempDir("graft-oss-part").toString + "/res"
     Seq((1, "a"), (2, "b")).toDF("x", "p").write.partitionBy("p").parquet(out)
-    val bucket = Files.createTempDirectory("graft-oss-bucket4")
+    val bucket = tempDir("graft-oss-bucket4")
     val shipped = ObjectStoreSink.uploadResultDir(spark, out, s"file://$bucket/res")
     assert(shipped.nonEmpty) // partition subdir files found, markers skipped
     val back = spark.read.parquet(s"$bucket/res")
@@ -62,7 +62,7 @@ class ObjectStoreSinkSpec extends SparkSpecBase {
     assert(back.columns.contains("p")) // partition dirs preserved in relative paths
 
     // a dir holding only markers must throw, not silently ship nothing
-    val empty = Files.createTempDirectory("graft-oss-empty")
+    val empty = tempDir("graft-oss-empty")
     Files.write(empty.resolve("_SUCCESS"), Array.empty[Byte])
     intercept[java.io.IOException] {
       ObjectStoreSink.uploadResultDir(spark, empty.toString, s"file://$bucket/none")

@@ -22,7 +22,7 @@ class EventStreamSpec extends SparkSpecBase {
     s"""{"eventType":"job.run.completed","accountId":"a","data":{"jobId":"84393","runId":"$runId","runStatus":"$status","runStatusCode":$code}}"""
 
   test("file-topic stream routes and dedups at-least-once deliveries") {
-    val topic = Files.createTempDirectory("graft-topic").toString
+    val topic = tempDir("graft-topic").toString
     writeTopic(topic, Seq(
       (webhook("r1", 20, "Error"), "2026-01-01 00:00:00"),
       (webhook("r1", 20, "Error"), "2026-01-01 00:00:30"), // duplicate delivery
@@ -40,7 +40,7 @@ class EventStreamSpec extends SparkSpecBase {
   }
 
   test("windowed route counts aggregate by event time") {
-    val topic = Files.createTempDirectory("graft-topic2").toString
+    val topic = tempDir("graft-topic2").toString
     writeTopic(topic, Seq(
       (webhook("r1", 20, "Error"), "2026-01-01 00:00:10"),
       (webhook("r2", 20, "Error"), "2026-01-01 00:01:10"),
@@ -58,7 +58,7 @@ class EventStreamSpec extends SparkSpecBase {
   }
 
   test("streaming document dedup drops same-fingerprint arrivals within the watermark") {
-    val topic = Files.createTempDirectory("graft-docdedup").toString
+    val topic = tempDir("graft-docdedup").toString
     def doc(id: Long, text: String, ts: String) =
       s"""{"doc_id":$id,"text":"$text","event_ts":"$ts"}"""
     Files.write(java.nio.file.Paths.get(topic, "b1.json"),
@@ -93,7 +93,7 @@ class EventStreamSpec extends SparkSpecBase {
   }
 
   test("session_window sessionization merges gap-close events, splits gap-far ones") {
-    val topic = Files.createTempDirectory("graft-sess").toString
+    val topic = tempDir("graft-sess").toString
     def ev(user: String, ts: String) = s"""{"user_id":"$user","event_ts":"$ts"}"""
     Files.write(java.nio.file.Paths.get(topic, "b1.json"),
       Seq(
@@ -119,7 +119,7 @@ class EventStreamSpec extends SparkSpecBase {
   }
 
   test("delayedRetries end-to-end: timer fires once per job after the delay") {
-    val topic = Files.createTempDirectory("graft-retry").toString
+    val topic = tempDir("graft-retry").toString
     def failure(job: String, run: String, ts: String) =
       s"""{"job_id":"$job","run_id":"$run","event_ts":"$ts"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(topic, "b1.json"),
@@ -172,7 +172,7 @@ class EventStreamSpec extends SparkSpecBase {
 
   test("dedupDocumentsStream == batch exact dedup (q25 twin) at sf0.1, state bounded") {
     import org.apache.spark.sql.functions._
-    val topic = Files.createTempDirectory("graft-docs-topic").toString
+    val topic = tempDir("graft-docs-topic").toString
     val docs = graft.core.Tables.table(spark, "/root/testdata/sf0.1", "documents")
       .select($"doc_id", $"text",
         lit("2026-01-01 00:00:00").cast("timestamp").as("event_ts"))
@@ -214,7 +214,7 @@ class EventStreamSpec extends SparkSpecBase {
 
   test("sessionized == batch lag+cumsum sessionization (q34 twin) at sf0.1, state bounded") {
     import org.apache.spark.sql.functions._
-    val topic = Files.createTempDirectory("graft-events-topic").toString
+    val topic = tempDir("graft-events-topic").toString
     val ev = graft.core.Tables.table(spark, "/root/testdata/sf0.1", "events")
       .select($"user_id", $"ts")
     // sentinel straggler one day past the corpus: advances the watermark
@@ -274,8 +274,8 @@ class EventStreamSpec extends SparkSpecBase {
     val ev = graft.core.Tables.table(spark, "/root/testdata/sf0.1", "events")
     val trig = ev.filter($"event_type" === "view").select($"user_id", $"ts".as("t_ts"))
     val resp = ev.filter($"event_type" === "click").select($"user_id", $"ts".as("r_ts"))
-    val trigTopic = Files.createTempDirectory("graft-trig-topic").toString
-    val respTopic = Files.createTempDirectory("graft-resp-topic").toString
+    val trigTopic = tempDir("graft-trig-topic").toString
+    val respTopic = tempDir("graft-resp-topic").toString
     trig.repartition(6).write.mode("overwrite").parquet(trigTopic)
     resp.repartition(6).write.mode("overwrite").parquet(respTopic)
 

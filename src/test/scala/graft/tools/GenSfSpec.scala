@@ -16,7 +16,7 @@ class GenSfSpec extends SparkSpecBase {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("gensf_spec").toString
+    val d = tempDir("gensf_spec").toString
     GenSf.writeAll(spark, d, 0.001)
     d
   }
@@ -40,7 +40,7 @@ class GenSfSpec extends SparkSpecBase {
   }
 
   test("generation is deterministic: same bytes on a second run") {
-    val d2 = java.nio.file.Files.createTempDirectory("gensf_spec2").toString
+    val d2 = tempDir("gensf_spec2").toString
     GenSf.writeAll(spark, d2, 0.001)
     for (t <- AllTables) {
       val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$t.parquet"))
@@ -77,7 +77,7 @@ class GenSfSpec extends SparkSpecBase {
   }
 
   test("documents carry planted exact-dup clones of the previous row") {
-    val d2 = java.nio.file.Files.createTempDirectory("gensf_dup").toString
+    val d2 = tempDir("gensf_dup").toString
     GenSf.writeAll(spark, d2, 0.1) // 5000 docs — enough for ~8 dup pairs
     val docs = spark.read.parquet(s"$d2/documents.parquet")
     val dups = docs.groupBy("text").count().filter(col("count") > 1).count()
