@@ -803,100 +803,35 @@ object Dedup {
   }
 
   /** Connected components over a near-dup pair list — the step that
-    * turns pairwise matches into duplicate CLUSTERS with a canonical id
-    * (min doc id of the component). Min-label propagation with POINTER
-    * JUMPING: each round a vertex takes the min label among itself and
-    * its neighbours, then additionally jumps through the label table
-    * (comp(v) := comp(comp(v))), which doubles the propagation distance
-    * per round — convergence in O(log diameter) rounds instead of
-    * O(diameter), so even a path-shaped component of length 2^40 settles
-    * within the iteration cap. Each round's lineage cut replaces the
-    * previous one so storage stays O(|V|), not O(|V| * rounds).
+    * turns pairwise matches into duplicate CLUSTERS with a canonical id.
     *
-    * Exchange-free rounds (r16, the LabelProp/PageRank recipe): the
-    * neighbor-min aggregate keys on `s`, so the edge relation is
-    * captured hash-partitioned on `s`
-    * ([[ShuffleSizing.partitionedCut]]) and the |V|-row label
-    * table rides the round's join as an explicit broadcast (bounded by
-    * [[ShuffleSizing.BroadcastNodeLimit]], counted once off r0) — the
-    * per-round |E|-row join + aggregate then plans NO exchange at all;
-    * only the |V|-sized stepped/jumped label joins move. At a real
-    * cluster this is per-round |V| broadcast traffic instead of
-    * per-round |E| shuffle traffic. Past the broadcast bound each
-    * round falls back to the prior shuffling plan.
+    * Contract: one (doc_id, component_id) row per vertex of some pair
+    * (`id_a` or `id_b`; a vertex whose only pair is (v, v) is its own
+    * component), labelled with the smallest id of its component.
+    * `assumeSymmetric` declares that the list already holds both
+    * directions of every edge; a vertex only ever in `id_b` is then
+    * dropped. Duplicate and reversed pairs change nothing, since the
+    * label is a min. The result is caller-owned: dispose with
+    * [[CacheHygiene.release]] (a no-op on a driver result).
     *
-    * Lineage cuts come from the call's [[CacheHygiene.scope]]: each
-    * round's cut is LAZY, so its block write and the convergence
-    * aggregate run as one job per round. The returned frame is a final
-    * cut, caller-owned: dispose with [[CacheHygiene.release]].
-    *
-    * Small-graph fast path, the graph family's one rule: after the
-    * edge list is materialized (its count is then a free scan), an
-    * edge list of at most `driverMaxEdges` long-id edges
-    * ([[GraphCapture.DriverMaxEdges]]) runs the same rounds on the
-    * driver ([[LocalGraph.components]]) — the same reasoning as a
-    * broadcast join threshold: iterating a whole cluster for a structure
-    * that fits in one JVM wastes rounds of scheduling. The distributed
-    * rounds only engage for graphs that genuinely need them (dedup at
-    * 100 TB: billions of pairs). Results are identical on either path;
-    * a driver result is a local frame that holds no cut, and releasing
-    * it is a no-op. */
+    * One call of the graph family's capture ([[GraphCapture.capture]]:
+    * `OneWay`, both directions with no dedup shuffle, is exact for ANY
+    * pair list here, or `Symmetric`), the rounds over it, then the
+    * capture's release; the capture decides between driver and
+    * distributed rounds. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          driverMaxEdges: Long = GraphCapture.DriverMaxEdges,
                           assumeSymmetric: Boolean = false): DataFrame =
-    CacheHygiene.scope { ck =>
-      // materialize the edge list once — every propagation round joins
-      // against it, and without the cut each round would re-run the
-      // whole upstream pair-generation pipeline
-      // assumeSymmetric (the LabelProp contract, r16): near-dup PAIR
-      // lists carry each edge once and need the symmetrize+distinct,
-      // but graph-shaped callers (e.g. BasketEdges output) already
-      // hold both directions distinct — for them the union+distinct is
-      // a pure |E|-row shuffle of redundant work, the largest one-time
-      // stage of the sf1 basket drill. Duplicate edges cannot change
-      // results (min-aggregation is idempotent), so for contract-
-      // honoring input the flag is purely a plan choice. VIOLATED
-      // symmetry narrows the vertex set: labels initialize from the
-      // s column only, so a vertex appearing solely in t is dropped —
-      // the driver path runs the same rounds, keeping the output
-      // identical across driverMaxEdges.
-      // r18: flat-cut the PAIR list once before the symmetrize union —
-      // the union's two branches otherwise re-execute the whole
-      // upstream pair-generation plan twice (exchange reuse shares the
-      // shuffle write, but both branches re-read it and re-run every
-      // post-shuffle stage: q44's sf1 shuffle read rows ran 75.1M
-      // against q26's 46.2M for the same 38.2M written — the +29M is
-      // the pair-count aggregate executed a second time). The cut is
-      // |pairs|-sized (tiny next to the candidate shuffle) and is
-      // dropped as soon as the edge cut lands.
-      val directed = pairs.select(col("id_a").as("s"), col("id_b").as("t"))
-      val edges =
-        if (assumeSymmetric) ck.cut(directed)
-        else {
-          val p0 = ck.cut(directed)
-          val e = ck.cut(p0.unionByName(p0.select(col("t").as("s"), col("s").as("t"))).distinct())
-          ck.free(p0)
-          e
-        }
-      val edgeCount = edges.count()
-      val local = if (edgeCount <= driverMaxEdges) LocalGraph.collect(edges, "s", "t") else None
-      local match {
-        // a local result: the scope releases the edge blocks
-        case Some(g) => g.components(maxIter)
-        case None =>
-          // distributed rounds: one partitioned cut, at the width the
-          // edge count above derives ([[ShuffleSizing.boundedWidth]])
-          val width = ShuffleSizing.boundedWidth(edgeCount,
-            ShuffleSizing.sessionWidth(pairs.sparkSession))
-          val parted = ShuffleSizing.partitionedCut(ck, edges, "s", width)
-          // the unpartitioned first cut is dead once the capture is
-          // materialized — releasing it halves the standing edge
-          // footprint for the whole round loop (sf10 drill: two
-          // 240M-row block sets otherwise live simultaneously)
-          ck.free(edges)
-          ccRounds(ck, parted, width, maxIter)
-      }
-    }
+    connectedComponents(pairs, maxIter, assumeSymmetric, GraphCapture.DriverMaxEdges)
+
+  /** [[connectedComponents]] with its driver bound: 0 keeps every
+    * non-empty graph distributed, a negative bound every graph. */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int,
+                                         assumeSymmetric: Boolean,
+                                         driverMaxEdges: Long): DataFrame = {
+    val g = GraphCapture.capture(pairs, "id_a", "id_b",
+      if (assumeSymmetric) GraphCapture.Symmetric else GraphCapture.OneWay, driverMaxEdges)
+    try connectedComponents(g, maxIter) finally g.release()
+  }
 
   /** [[connectedComponents]] over a SHARED [[GraphCapture]] — the
     * capture (symmetrize + materialize + s-partition) is paid once by
@@ -915,7 +850,14 @@ object Dedup {
     * symmetric edge relation cut `width` wide: returns the converged
     * (doc_id, component_id) labels behind a final cut in `ck`, read by
     * nothing else (throws past `maxIter`). Each round's cut is freed as
-    * soon as the next round lands. */
+    * soon as the next round lands.
+    *
+    * Each round a vertex takes the min label of itself and its
+    * neighbours, then jumps through the label table (comp(comp(v))),
+    * which doubles the propagation distance: O(log diameter) rounds.
+    * The |V|-row label side rides the round's join as a broadcast
+    * (up to [[ShuffleSizing.BroadcastNodeLimit]]), so the |E|-row join
+    * and neighbor-min plan no exchange on the s-partitioned capture. */
   private def ccRounds(ck: CacheHygiene.Arena, parted: DataFrame, width: Int,
                        maxIter: Int): DataFrame = {
     // initial labels fuse round 1: starting from identity, the first

@@ -103,7 +103,8 @@ object GraphCapture {
 
   /** Capture `pairs` as a shared symmetric edge relation — the one
     * symmetrize-and-capture path of the graph family (the direct forms
-    * of [[LabelProp]] and [[Bfs]] run through it too).
+    * of [[Dedup]]'s components, [[LabelProp]] and [[Bfs]] run through
+    * it too).
     *
     * Cost: one flat cut of the directed list before the union (r18: the
     * union's two branches otherwise re-execute the caller's pair plan

@@ -1,7 +1,9 @@
 package graft.pipelines
 
+import java.nio.file.Files
 import java.sql.Date
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.TableSwap
@@ -65,13 +67,16 @@ object GeoIngest {
     * overwrite-vs-append mode. Returns per-table published row counts;
     * the caller emits the completion event (CompletionJobId) downstream.
     * `today` is injected so the modification-date stamp is testable
-    * (reference stamps `date.today()`, main.py:461). */
+    * (reference stamps `date.today()`, main.py:461). Zip members land in
+    * one scratch dir per run, deleted after the last table is published
+    * and counted (Spark reads an extracted file lazily). */
   def run(spark: SparkSession, resolve: String => String, root: String,
           today: Date = Date.valueOf(java.time.LocalDate.now)): Map[String, Long] = {
-    Tables.filter(_.enabled).map { t =>
+    val scratch = Files.createTempDirectory("graft-zip")
+    try Tables.filter(_.enabled).map { t =>
       val local = resolve(t.file)
       val path =
-        if (t.file.endsWith(".zip")) FileIngest.extractZipMember(local, t.memberRegex)
+        if (t.file.endsWith(".zip")) FileIngest.extractZipMember(local, t.memberRegex, scratch)
         else local
       var df = FileIngest.readDelimited(spark, path, t.schema, skipRows = t.skipRows)
       if (t.stampModificationDate) df = df.withColumn("modification_date", lit(today))
@@ -83,5 +88,6 @@ object GeoIngest {
       else TableSwap.writeBatch(df, s"$root/${t.name}", firstBatch = false)
       t.name -> spark.read.parquet(s"$root/${t.name}").count()
     }.toMap
+    finally FileUtils.deleteQuietly(scratch.toFile)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.io.{BufferedOutputStream, FileOutputStream}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
 
@@ -101,10 +101,11 @@ object FileIngest {
 
   /** Zip member selection by regex: single-member archives take that
     * member; otherwise the first regex match wins; no match is an error
-    * (process-geography/main.py:168-200). Extracts to a scratch dir and
-    * returns the extracted path for spark.read. */
+    * (process-geography/main.py:168-200). Extracts into `scratchDir` and
+    * returns the extracted path for spark.read; the caller owns the dir
+    * and deletes it once every read of the file has run. */
   def extractZipMember(zipPath: String, memberRegex: Option[String],
-                       scratchDir: Path = Files.createTempDirectory("graft-zip")): String = {
+                       scratchDir: Path): String = {
     val zf = new ZipFile(zipPath)
     try {
       val names = zf.entries().asScala.map(_.getName).toSeq

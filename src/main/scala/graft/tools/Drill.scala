@@ -16,11 +16,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   [drill] wall, result rows, completed stages, shuffle rows and MB,
   *           spill MB, peak task MB (the BENCH record's figures);
   *   [plan]  exchanges and reused exchanges in the AQE-final plan;
-  *   [stage] the five slowest stages: wall, tasks, spill, call site.
+  *   [stage] every completed stage in id order: wall, tasks, shuffle
+  *           records read and written, spill, call site.
   *
   * Stage counts separate "went super-linear" into more stages (the plan
   * changed with scale: AQE fallback, broadcast threshold crossed) vs
-  * bigger stages (data volume only).
+  * bigger stages (data volume only). The per-stage shuffle records name
+  * the exchange behind a change in the total: two drills of the same
+  * query line up stage by stage.
   *
   *   ./run_local.sh graft.tools.Drill <sfDir> <query...>
   */
@@ -70,9 +73,11 @@ object Drill extends AdaptiveSparkPlanHelper {
             val reused = collectWithSubqueries(p) { case e: ReusedExchangeExec => e }.size
             println(s"[plan]  exchanges=$exchanges reused=$reused")
           }
-          st.sortBy(si => -stageSec(si)).take(5).foreach { si =>
+          st.sortBy(_.stageId).foreach { si =>
+            val tm = si.taskMetrics
             println(f"[stage] id=${si.stageId}%-4d ${stageSec(si)}%7.2fs tasks=${si.numTasks}%-4d " +
-              f"spillMB=${si.taskMetrics.diskBytesSpilled / 1e6}%.0f  ${si.name.takeWhile(_ != '\n').take(90)}")
+              f"shufR=${tm.shuffleReadMetrics.recordsRead}%-9d shufW=${tm.shuffleWriteMetrics.recordsWritten}%-9d " +
+              f"spillMB=${tm.diskBytesSpilled / 1e6}%.0f  ${si.name.takeWhile(_ != '\n').take(90)}")
           }
       }
     }

@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the stream width pin on q190's private session, the session's
   * function registry only by `SqlSurface` (operators wrap their kernels
   * as Columns and never look a function up by name), no operator touches
-  * AQE, lineage is cut only through the checkpoint arena, page JSON is
-  * parsed only by `RestPager`, and the only environment the engine reads
-  * is the bench's own three variables. */
+  * AQE, lineage is cut only through the checkpoint arena, graph edges
+  * are placed only through `ShuffleSizing`'s one capture primitive, page
+  * JSON is parsed only by `RestPager`, and the only environment the
+  * engine reads is the bench's own three variables. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -74,6 +75,13 @@ class SessionGuardSpec extends AnyFunSuite {
   test("page JSON is parsed only in RestPager") {
     val bad = offenders("read.json(", Set("graft/sources/RestPager.scala"))
     assert(bad.isEmpty, s"read pages with RestPager.toDf(spark, bodies, declaredSchema): $bad")
+  }
+
+  test("graph edges are placed only through ShuffleSizing's one capture primitive") {
+    val bad = offenders("partitionedMaterializeCounted(", Set("graft/ops/ShuffleSizing.scala",
+      "graft/ops/GraphCapture.scala", "graft/ops/PageRank.scala")) ++
+      Seq("boundedWidth(", "sessionWidth(").flatMap(offenders(_, Set("graft/ops/ShuffleSizing.scala")))
+    assert(bad.isEmpty, s"capture a graph with GraphCapture.capture: $bad")
   }
 
   test("sessions are built only by the harness recipe, Smoke, GenSf and CodegenLint") {

@@ -132,7 +132,7 @@ class CutOwnershipSpec extends SparkSpecBase {
     owns("pageRank")(PageRank.pageRank(pairs, "a", "b", 2, driverMaxEdges = 0))
     owns("hopDistance")(onCapture(Bfs.hopDistance(_, Seq(1L).toDF("id"), maxHops = 3)))
     owns("connectedComponents") {
-      Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), driverMaxEdges = 0)
+      Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), 50, false, driverMaxEdges = 0)
     }
     // the driver path: a local result reads no cut, and none survives
     for (out <- Seq(LabelProp.labelPropagation(pairs, "a", "b", 2),

@@ -263,13 +263,28 @@ class DedupSpec extends SparkSpecBase {
   test("driver fast path and distributed rounds produce identical components") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("id_a", "id_b")
-    val fast = Dedup.connectedComponents(pairs) // 12 edges -> driver union-find
+    val fast = Dedup.connectedComponents(pairs) // 12 edges -> driver rounds (LocalGraph)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.connectedComponents(pairs, driverMaxEdges = 0)
+    val dist = Dedup.connectedComponents(pairs, 50, false, driverMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == dist)
     assert(fast == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+  }
+
+  test("connectedComponents keeps every pair's vertices, self-pair-only ones included, on both paths") {
+    // a duplicate pair, a reversed pair and a vertex (5) whose only pair
+    // is (5, 5): duplicates and orientation change no min label, and 5
+    // stays its own component
+    val pairs = Seq((1L, 2L), (1L, 2L), (3L, 2L), (5L, 5L), (7L, 8L), (8L, 7L))
+      .toDF("id_a", "id_b")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, 8L -> 7L)
+    for (driverMax <- Seq(1000000L, 0L)) {
+      val out = Dedup.connectedComponents(pairs, 50, false, driverMaxEdges = driverMax)
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected,
+        s"driverMaxEdges=$driverMax")
+      CacheHygiene.release(out)
+    }
   }
 
   test("connectedComponents assumeSymmetric on pre-symmetrized edges equals the default path") {
@@ -277,10 +292,10 @@ class DedupSpec extends SparkSpecBase {
       .toDF("id_a", "id_b")
     val sym = pairs.unionByName(
       pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")))
-    for (driverMax <- Seq(0L, 1000000L)) { // distributed AND union-find paths
-      val fast = Dedup.connectedComponents(sym, driverMaxEdges = driverMax,
-        assumeSymmetric = true).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val slow = Dedup.connectedComponents(pairs, driverMaxEdges = driverMax)
+    for (driverMax <- Seq(0L, 1000000L)) { // distributed AND driver paths
+      val fast = Dedup.connectedComponents(sym, 50, assumeSymmetric = true,
+        driverMaxEdges = driverMax).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val slow = Dedup.connectedComponents(pairs, 50, false, driverMaxEdges = driverMax)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast == slow, s"driverMaxEdges=$driverMax")
     }
@@ -292,8 +307,8 @@ class DedupSpec extends SparkSpecBase {
     // what must NOT happen is the answer changing with driverMaxEdges.
     val asym = Seq((1L, 2L), (21L, 22L)).toDF("id_a", "id_b")
     val results = Seq(0L, 1000000L).map { driverMax =>
-      Dedup.connectedComponents(asym, driverMaxEdges = driverMax,
-        assumeSymmetric = true).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Dedup.connectedComponents(asym, 50, assumeSymmetric = true,
+        driverMaxEdges = driverMax).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     assert(results(0) == results(1),
       s"driver and distributed paths diverged: ${results(0)} vs ${results(1)}")
@@ -307,7 +322,7 @@ class DedupSpec extends SparkSpecBase {
     // cuts) must be released; the returned frame is checkpoint-backed
     // and disposed through CacheHygiene.release (r15/r16 hygiene rule)
     val pairs = (1L to 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.connectedComponents(pairs, driverMaxEdges = 0)
+    val out = Dedup.connectedComponents(pairs, 50, false, driverMaxEdges = 0)
     assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (1L to 10L).map(_ -> 1L).toMap)
     CacheHygiene.release(out)
@@ -392,7 +407,7 @@ class DedupSpec extends SparkSpecBase {
     try {
       val before = sc.getPersistentRDDs.keySet.toSet
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      val cc = Dedup.connectedComponents(pairs, driverMaxEdges = 0)
+      val cc = Dedup.connectedComponents(pairs, 50, false, driverMaxEdges = 0)
       assert(cc.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
         s"the result is not a cut:\n${cc.queryExecution.analyzed}")
       val out = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -44,7 +44,7 @@ class GraphCaptureSpec extends SparkSpecBase {
 
     // CC — the distributed path on both sides, AND the driver path
     val ccDirect = mr(Dedup.connectedComponents(pairs.select(col("a").as("id_a"), col("b").as("id_b")),
-      driverMaxEdges = 0))
+      50, false, driverMaxEdges = 0))
     assert(mr(Dedup.connectedComponents(g, maxIter = 50)) == ccDirect)
     val gLocal = GraphCapture.capture(pairs, "a", "b")
     assert(mr(Dedup.connectedComponents(gLocal)) == ccDirect) // driver path
@@ -84,7 +84,7 @@ class GraphCaptureSpec extends SparkSpecBase {
     val g = GraphCapture.capture(sym, "a", "b", GraphCapture.Symmetric, driverMaxEdges = 0)
     assert(g.edgeCount == 26L)
     val ccDirect = m(Dedup.connectedComponents(
-      pairs.select(col("a").as("id_a"), col("b").as("id_b")), driverMaxEdges = 0))
+      pairs.select(col("a").as("id_a"), col("b").as("id_b")), 50, false, driverMaxEdges = 0))
     assert(m(Dedup.connectedComponents(g, maxIter = 50)) == ccDirect)
     g.release()
   }
@@ -159,7 +159,7 @@ class GraphCaptureSpec extends SparkSpecBase {
     for (assumeSymmetric <- Seq(false, true))
       same(s"cc(assumeSymmetric=$assumeSymmetric)",
         Dedup.connectedComponents(asPairs, assumeSymmetric = assumeSymmetric),
-        Dedup.connectedComponents(asPairs, driverMaxEdges = -1, assumeSymmetric = assumeSymmetric))
+        Dedup.connectedComponents(asPairs, 50, assumeSymmetric, driverMaxEdges = -1))
   }
 
   /** A seeded random multigraph over sparse ids: duplicates, self-loops

@@ -49,7 +49,7 @@ class GraphConfSpec extends SparkSpecBase {
         PageRank.pageRank(pairs, "a", "b", iterations = 2),
         Bfs.hopDistance(pairs, sources, "a", "b", maxHops = 3),
         Dedup.connectedComponents(pairs.select(col("a").as("id_a"), col("b").as("id_b")),
-          driverMaxEdges = 0))
+          50, false, driverMaxEdges = 0))
       direct.foreach(_.count())
       (shared ++ direct).foreach(CacheHygiene.release)
     } finally {

@@ -3,6 +3,8 @@ package graft.pipelines
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
@@ -106,5 +108,20 @@ class GeoIngestSpec extends SparkSpecBase {
     write(empty, "countryInfo.txt", (1 to 50).map(i => s"# only comments $i"))
     val counts3 = GeoIngest.run(spark, f => empty.resolve(f).toString, root, today)
     assert(counts3("geo_country_info") == 2) // previous publish intact
+  }
+
+  test("a zip refresh leaves no extraction scratch dir behind") {
+    val dir = tempDir("geo-zip-fixtures")
+    fixtures(dir)
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("graft-zip")).toSet
+      finally ls.close()
+    }
+    val before = scratchDirs()
+    GeoIngest.run(spark, f => dir.resolve(f).toString, tempDir("geo-zip-out").toString)
+    val left = scratchDirs() -- before
+    assert(left.isEmpty, s"zip refresh left scratch dirs in $tmp: $left")
   }
 }
